@@ -2562,6 +2562,7 @@ class Engine:
         `VacuumTableHandler`, parser entries in `parserImpls.ftl`)."""
         from .sources import delta as D
         from .sources import iceberg as I
+        from .sources import lake_dml
 
         m = re.match(
             r"\s*create\s+table\s+'([^']+)'"
@@ -2618,9 +2619,8 @@ class Engine:
             fmt = self._lake_format(path)
             if fmt is None:
                 return None
-            fn = (D.delete_from_delta if fmt == "delta"
-                  else I.delete_from_iceberg)
-            return self._status("DELETE", fn(self.spark, path, pred))
+            return self._status("DELETE", lake_dml.delete(
+                lake_dml.codec(fmt), self.spark, path, pred))
 
         m = re.match(
             r"\s*update\s+'([^']+)'\s+set\s+(.+?)(?:\s+where\s+(.+?))?\s*$",
@@ -2634,18 +2634,18 @@ class Engine:
             for part in _split_top_level(sets, ","):
                 c, _, e = part.partition("=")
                 set_exprs[c.strip()] = e.strip()
-            fn = D.update_delta if fmt == "delta" else I.update_iceberg
-            return self._status(
-                "UPDATE", fn(self.spark, path, set_exprs, pred))
+            return self._status("UPDATE", lake_dml.update(
+                lake_dml.codec(fmt), self.spark, path, set_exprs, pred))
 
         # the grammar's three clause shapes (SqlMergeIntoTable:
         # updateCall [+ insertCall] | insertCall alone): matched-only,
         # insert-only, or both.  USING accepts any TableRef: a view
-        # name, a quoted lake path, or a parenthesized subquery
+        # name, a quoted lake path, or a parenthesized subquery, with an
+        # optional alias that qualifies source columns (default `s`)
         m = re.match(
             r"\s*merge\s+into\s+'([^']+)'\s+using\s+"
-            r"(?:'(?P<spath>[^']+)'|\((?P<subq>.+?)\)(?:\s+(?:as\s+)?\w+)?"
-            r"|(?P<sview>\w+))\s+"
+            r"(?:'(?P<spath>[^']+)'|\((?P<subq>.+?)\)|(?P<sview>\w+))"
+            r"(?:\s+(?:as\s+)?(?!on\b)(?P<alias>\w+))?\s+"
             r"on\s+(?P<cond>.+?)\s+"
             r"(?:when\s+matched\s+then\s+update\s+set\s+(?P<sets>.+?))?"
             r"(?:\s*when\s+not\s+matched\s+then\s+insert\s+\*)?\s*$",
@@ -2681,13 +2681,11 @@ class Engine:
                 source = self.sql(m.group("subq"))
             else:
                 source = self.spark.table(m.group("sview"))
-            fn = (D.merge_into_delta if fmt == "delta"
-                  else I.merge_into_iceberg)
-            return self._status(
-                "MERGE", fn(self.spark, path, source, on=keys,
-                            update_set=update_set,
-                            insert_not_matched=insert_nm,
-                            update_matched=sets is not None))
+            return self._status("MERGE", lake_dml.merge(
+                lake_dml.codec(fmt), self.spark, path, source, on=keys,
+                update_set=update_set, insert_not_matched=insert_nm,
+                update_matched=sets is not None,
+                alias=m.group("alias") or "s"))
 
         m = re.match(r"\s*truncate\s+(?:table\s+)?'([^']+)'\s*$",
                      query, re.I)

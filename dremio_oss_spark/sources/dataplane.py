@@ -535,14 +535,15 @@ def delete_where(spark: SparkSession, root: str, branch: str, key: str,
     """DELETE FROM <source>.<key> AT BRANCH <branch> WHERE <pred> —
     copy-on-write against the BRANCH's snapshot, committed detached;
     hit-file pruning matches the unversioned COW path."""
-    from .iceberg import cow_rewrite_detached
+    from . import lake_dml
+    from .iceberg import DML
 
     head = _load_refs(root)["branches"][branch]
     content = dict(_table_content(root, branch, key))
     loc = os.path.join(root, content["location"])
-    sid = cow_rewrite_detached(
-        spark, loc, content["snapshot_id"], "delete", predicate)
-    if sid is None:  # no rows hit: no new snapshot, no commit
+    sid = lake_dml.delete(DML, spark, loc, predicate,
+                          parent_snapshot=content["snapshot_id"])
+    if sid == content["snapshot_id"]:  # no rows hit: no commit
         return head
     content["snapshot_id"] = sid
     return commit(root, branch, {key: content},
@@ -570,6 +571,8 @@ def merge_into(spark: SparkSession, root: str, branch: str, key: str,
         insert_not_matched=insert_not_matched,
         update_matched=update_matched,
         parent_snapshot=content["snapshot_id"])
+    if sid == content["snapshot_id"]:  # nothing matched or inserted
+        return head
     content["snapshot_id"] = sid
     return commit(root, branch, {key: content}, f"merge into {key}",
                   author=author, expect_head=head)
@@ -699,15 +702,16 @@ def update_where(spark: SparkSession, root: str, branch: str, key: str,
                  author: str = "$dremio$") -> str:
     """UPDATE <source>.<key> AT BRANCH <branch> SET ... WHERE ... —
     copy-on-write against the branch snapshot, detached commit."""
-    from .iceberg import cow_rewrite_detached
+    from . import lake_dml
+    from .iceberg import DML
 
     head = _load_refs(root)["branches"][branch]
     content = dict(_table_content(root, branch, key))
     loc = os.path.join(root, content["location"])
-    sid = cow_rewrite_detached(
-        spark, loc, content["snapshot_id"], "update", predicate,
-        assignments=assignments)
-    if sid is None:
+    sid = lake_dml.update(DML, spark, loc, assignments,
+                          predicate or "true",
+                          parent_snapshot=content["snapshot_id"])
+    if sid == content["snapshot_id"]:
         return head
     content["snapshot_id"] = sid
     return commit(root, branch, {key: content}, f"update {key}",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from ..localframe import meta_df
+from . import lake_dml
 
 _LOG_DIR = "_delta_log"
 
@@ -339,16 +340,26 @@ def read_delta(spark: SparkSession, path: str,
         if version is not None:
             raise ValueError("give version OR timestamp_ms, not both")
         version = resolve_version_at(path, timestamp_ms)
-    snap = resolve_snapshot(spark, path, version)
-    if not snap.files:
-        if snap.schema is None:
-            raise ValueError(f"Delta table {path} has no schema action")
-        return meta_df(spark, [], snap.schema)
-    has_dv = bool(snap.dvs)
+    return _live_rows(spark, path, resolve_snapshot(spark, path, version))
+
+
+def _live_rows(spark: SparkSession, table: str, snap: "DeltaSnapshot",
+               identity: bool = False,
+               files: list[str] | None = None) -> DataFrame:
+    """Live rows of `snap` (of its data `files` only, when given) with
+    the deletion vectors applied: the reader and the `lake_dml` codec's
+    `live`.  `identity` keeps each row's (`__file`, `__pos`), the input
+    every DML plan needs (touch exactly the rows it matches, never
+    resurrect a row an earlier deletion vector killed)."""
+    if not snap.files and snap.schema is None:
+        raise ValueError(f"Delta table {table} has no schema action")
+    keep = identity or bool(snap.dvs)
     df = _scan_with_partition_values(
-        spark, path, snap.schema, snap.partition_cols, snap.files,
-        keep_file=has_dv, keep_pos=has_dv)
-    return _apply_deletion_vectors(spark, df, path, snap)
+        spark, table, snap.schema, snap.partition_cols,
+        snap.files if files is None else {r: snap.files[r] for r in files},
+        keep_file=keep, keep_pos=keep)
+    return _apply_deletion_vectors(spark, df, table, snap,
+                                   drop_identity=not identity)
 
 
 def _dv_positions(table: str, desc: dict) -> list[int]:
@@ -537,6 +548,13 @@ def _scan_with_partition_values(
     of truth for partition values (delta.io PROTOCOL.md), so this never
     trusts hive-style paths.  The mapping is one row per file: bounded
     by live-file count, i.e. the same metadata the driver already holds."""
+    from pyspark.sql.types import LongType, StringType, StructField
+
+    if not files:  # nothing live: an empty frame with the same columns
+        return meta_df(spark, [], StructType(
+            list(schema.fields)
+            + [StructField("__file", StringType())] * keep_file
+            + [StructField("__pos", LongType())] * keep_pos))
     data_fields = [
         f for f in (schema.fields if schema else [])
         if f.name not in part_cols
@@ -559,8 +577,6 @@ def _scan_with_partition_values(
     # across the scanned set — guarded below.  The canonical decoded
     # path (`__file`) and the partition values both come from the
     # mapping side of the join.
-    from pyspark.sql.types import StringType, StructField
-
     by_base: dict[str, str] = {}
     for rel in files:
         base = os.path.basename(rel)
@@ -1267,36 +1283,6 @@ def write_delta(spark: SparkSession, df: DataFrame, table: str,
     return version
 
 
-def _live_with_file(spark: SparkSession, table: str):
-    """Current-version scan carrying a `__file` column taken at the scan
-    (not via input_file_name() after joins, whose value is undefined)."""
-    snap = resolve_snapshot(spark, table)
-    return _scan_with_partition_values(
-        spark, table, snap.schema, snap.partition_cols, snap.files,
-        keep_file=True)
-
-
-def _src_expr(expr: str) -> str:
-    """Rewrite `s.`-qualified source references in a MERGE SET
-    expression to the joined plan's `__s_` aliases.  Word-boundary
-    anchored so a column whose name merely ends in `s` followed by a
-    dotted reference (`prices.amount`) is left alone — a plain
-    substring replace corrupted it to `price__s_amount`."""
-    import re as _re
-
-    return _re.sub(r"\bs\.", "__s_", expr)
-
-
-def _mark_hit_files(table: str, marked: DataFrame) -> list[str]:
-    """Distinct `__file`s behind `marked`'s rows, as table-relative
-    paths.  The collect is bounded by file count (metadata-sized),
-    never by row count."""
-    return sorted(
-        os.path.relpath(r[0], os.path.realpath(table))
-        for r in marked.select("__file").distinct().collect()
-    )
-
-
 def _cdf_enabled(snap: DeltaSnapshot) -> bool:
     return snap.config.get("delta.enableChangeDataFeed") == "true"
 
@@ -1317,8 +1303,11 @@ def _stage_cdc(spark: SparkSession, changes: DataFrame, table: str,
     out: list[dict] = []
     for i, part in enumerate(sorted(glob.glob(
             os.path.join(stage, "*.parquet")))):
+        # unique per transaction: a writer that loses the version claim
+        # deletes its own cdc files, never the winner's
         rel = os.path.join(
-            "_change_data", f"cdc-{version:020d}-{i:05d}.parquet")
+            "_change_data",
+            f"cdc-{version:020d}-{i:05d}-{uuid.uuid4().hex[:8]}.parquet")
         os.replace(part, os.path.join(table, rel))
         out.append({"cdc": {"path": rel, "partitionValues": {},
                             "size": os.path.getsize(
@@ -1328,34 +1317,29 @@ def _stage_cdc(spark: SparkSession, changes: DataFrame, table: str,
     return out
 
 
-def _cow_commit(spark: SparkSession, table: str, operation: str,
-                hit_rel: list[str], rewrite, inserts: DataFrame | None,
-                data_change: bool = True,
-                changes: DataFrame | None = None) -> int:
-    """Shared copy-on-write commit: re-stage `hit_rel` through
-    `rewrite(hits_df)`, optionally stage `inserts` as brand-new files,
-    and log removes+adds as one version.
+def _cow_commit(spark: SparkSession, table: str, snap: DeltaSnapshot,
+                operation: str, hit_rel: list[str], rewrite,
+                inserts: DataFrame | None,
+                changes: DataFrame | None = None,
+                data_change: bool = True) -> int:
+    """Copy-on-write commit against `snap` (the `lake_dml` codec's
+    `rewrite`): re-stage `hit_rel` through `rewrite(hits_df)`,
+    optionally stage `inserts` as brand-new files, and log removes +
+    adds (+ `changes` as cdc files) as the version after `snap`.
+    Removing and adding nothing commits nothing.
 
     Scale shape: ONE scan over the hit files (file-level skipping — the
     same pruning `DeltaLakeScanPrel` relies on; untouched files are
     never rewritten), plan construction O(1) in file count.
     """
-    snap = resolve_snapshot(spark, table)
     version = snap.version + 1
     part_cols = snap.partition_cols
     actions: list[dict] = [
         {"commitInfo": {"operation": operation, "timestamp": _commit_ts()}}
     ]
-    staged: list[tuple[str, dict]] = []
     to_stage: DataFrame | None = None
     if hit_rel:
-        has_dv = bool(snap.dvs)
-        hits_df = _scan_with_partition_values(
-            spark, table, snap.schema, part_cols,
-            {rel: snap.files[rel] for rel in hit_rel},
-            keep_file=has_dv, keep_pos=has_dv)
-        hits_df = _apply_deletion_vectors(spark, hits_df, table, snap)
-        to_stage = rewrite(hits_df)
+        to_stage = rewrite(_live_rows(spark, table, snap, files=hit_rel))
         actions.extend(
             {"remove": {"path": rel, "deletionTimestamp": version,
                         "dataChange": data_change}}
@@ -1369,15 +1353,15 @@ def _cow_commit(spark: SparkSession, table: str, operation: str,
         # write job bought nothing but fixed cost
         to_stage = ins if to_stage is None else (
             to_stage.unionByName(ins.select(*to_stage.columns)))
-    if to_stage is not None:
-        staged += _stage_files(spark, to_stage, table, version, part_cols)
-    hit_set = set(hit_rel)
+    staged = ([] if to_stage is None else
+              _stage_files(spark, to_stage, table, version, part_cols))
+    if not hit_rel and not staged:
+        return snap.version
     stats_map = _collect_stats(spark, table, staged, snap.schema,
                                part_cols)
     actions.extend(
         _add_action(rel, pv, version, stats_map, data_change)
         for rel, pv in staged
-        if rel not in hit_set
     )
     if changes is not None:
         actions.extend(_stage_cdc(spark, changes, table, version))
@@ -1420,133 +1404,13 @@ def set_delta_properties(spark: SparkSession, table: str,
     return version
 
 
-def _delta_dml_mode(spark: SparkSession, table: str,
-                    mode: str | None) -> str:
-    """Explicit mode wins; else `delta.enableDeletionVectors = true`
-    routes DML merge-on-read (delta-spark\'s own property); default
-    copy-on-write."""
-    if mode is not None:
-        return mode
-    try:
-        snap = resolve_snapshot(spark, table)
-    except FileNotFoundError:
-        return "copy-on-write"
-    return ("merge-on-read"
-            if snap.config.get("delta.enableDeletionVectors") == "true"
-            else "copy-on-write")
-
-
-def delete_from_delta(spark: SparkSession, table: str, predicate: str,
-                      mode: str | None = None) -> int:
-    """DELETE FROM <delta table> WHERE <predicate>.
-
-    copy-on-write (default): rewrite only the files containing matches.
-
-    merge-on-read: DELETION VECTORS (PROTOCOL.md "Deletion Vectors") —
-    record the matching rows' indexes per file as roaring bitmaps in a
-    DV file and re-add the data files with deletionVector descriptors;
-    no data rewritten, readers anti-join the positions away, OPTIMIZE
-    (any COW rewrite of the file) folds them in.  The position gather
-    is driver-side and bounded by rows deleted this statement plus any
-    still-live DV positions (compaction resets the bound) — the same
-    in-memory budget every DV-aware reader already carries.  mode=None
-    reads `delta.enableDeletionVectors`."""
-    mode = _delta_dml_mode(spark, table, mode)
-    if mode == "merge-on-read":
-        return _dv_delete(spark, table, predicate)
-    if mode != "copy-on-write":
-        raise ValueError(f"unknown DELETE mode {mode!r}; "
-                         "use 'copy-on-write' or 'merge-on-read'")
-    snap = resolve_snapshot(spark, table)
-    live = _live_with_file(spark, table)
-    hit_rel = _mark_hit_files(table, live.where(predicate))
-    changes = None
-    if _cdf_enabled(snap):
-        changes = (live.where(predicate).drop("__file")
-                   .withColumn("_change_type", F.lit("delete")))
-    return _cow_commit(
-        spark, table, "DELETE", hit_rel,
-        lambda hits: hits.where(f"not ({predicate})"), None,
-        changes=changes)
-
-
-def _dv_delete(spark: SparkSession, table: str, predicate: str) -> int:
-    return _dv_mark(spark, table, predicate, set_exprs=None)
-
-
-def _dv_mark(spark: SparkSession, table: str, predicate: str,
-             set_exprs: dict[str, str] | None) -> int:
-    """Shared merge-on-read core: DV-mark the rows matching `predicate`.
-
-    set_exprs=None is MOR DELETE (mark only).  A dict is MOR UPDATE —
-    delta-spark's deletion-vector update shape: the matching rows are
-    DV-marked in their original files AND re-appended as new files with
-    the SET expressions applied, so no existing data file is rewritten
-    (PROTOCOL.md Deletion Vectors; the COW `update_delta` remains the
-    compacting path)."""
-    operation = "DELETE" if set_exprs is None else "UPDATE"
-    snap = resolve_snapshot(spark, table)
-    live = _live_dv_with_identity(spark, table, snap)
-    # persist: the marked set feeds the bitmap encode, the post-image
-    # staging, and the CDC staging — without it each action re-runs the
-    # scan + DV anti-join lineage (the iceberg MOR paths persist the
-    # same way)
-    marked = live.where(predicate).persist()
-    try:
-        table_cols = [f.name for f in snap.schema.fields]
-        post = None
-        if set_exprs is not None:
-            # MOR UPDATE: append the post-image of the marked rows as
-            # new files (their old copies become DV-dead); all SETs
-            # evaluate against the pre-image together
-            post = _apply_set_exprs(marked.select(*table_cols),
-                                    set_exprs)
-        changes = None
-        if _cdf_enabled(snap):
-            # a MOR mark is still a data change: stage the changed rows
-            # as cdc files (delta-spark does the same), else any CDF
-            # read over this commit raises and CDC consumers are broken
-            # for the range
-            pre = marked.select(*table_cols)
-            if set_exprs is None:
-                changes = pre.withColumn("_change_type",
-                                         F.lit("delete"))
-            else:
-                changes = (
-                    pre.withColumn("_change_type",
-                                   F.lit("update_preimage"))
-                    .unionByName(post.withColumn(
-                        "_change_type", F.lit("update_postimage"))))
-        return _dv_commit_marked(spark, table, snap, marked, operation,
-                                 post, changes)
-    finally:
-        marked.unpersist()
-
-
-def _live_dv_with_identity(spark: SparkSession, table: str,
-                           snap: DeltaSnapshot) -> DataFrame:
-    """Current live rows with existing DVs applied, KEEPING the
-    (__file, __pos) identity columns — the input every DV write plan
-    needs (mark exactly the rows it touches, never resurrect rows an
-    earlier DV killed)."""
-    live = _scan_with_partition_values(
-        spark, table, snap.schema, snap.partition_cols, snap.files,
-        keep_file=True, keep_pos=True)
-    return _apply_deletion_vectors(spark, live, table, snap,
-                                   drop_identity=False)
-
-
 def _dv_commit_marked(spark: SparkSession, table: str,
-                      snap: DeltaSnapshot, marked: DataFrame,
-                      operation: str, post: DataFrame | None,
+                      snap: DeltaSnapshot, operation: str,
+                      marked: DataFrame, post: DataFrame | None,
                       changes: DataFrame | None) -> int:
-    """Commit a merge-on-read write: DV-mark `marked`'s (file, pos)
-    rows dead, optionally append `post` rows as new files and `changes`
-    as CDC.  Shared by MOR DELETE / UPDATE / MERGE."""
-    import struct
-    import uuid
-    import zlib
-
+    """Merge-on-read commit against `snap` (the `lake_dml` codec's
+    `mark`): DV-mark `marked`'s (__file, __pos) rows dead, optionally
+    append `post` rows as new files and `changes` as CDC."""
     import pandas as pd
 
     from .roaring import encode_rbm_array
@@ -1685,148 +1549,34 @@ def _dv_finish_commit(spark: SparkSession, table: str,
     return version
 
 
-def _apply_set_exprs(df: DataFrame, set_exprs: dict[str, str],
-                     predicate: str | None = None) -> DataFrame:
-    """SQL UPDATE SET semantics: every SET expression AND the WHERE
-    predicate evaluate against the PRE-update row, in ONE projection.
-    The old sequential withColumn loop was wrong twice over: a later
-    SET's predicate re-tested an already-updated value, and
-    cross-column SETs (SET a = b, b = a) read their co-assignee's
-    post-image.  Found by the DML differential fuzzer (seed 5:
-    `SET val = val - 12, cat = 'y' WHERE val > 75` left cat untouched
-    on every row the val assignment had already dropped below the
-    threshold).  `predicate=None` means the input is pre-filtered to
-    matching rows (MOR post-image paths) — assignments still must
-    evaluate against the pre-image together.
+def delete_from_delta(spark: SparkSession, table: str, predicate: str,
+                      mode: str | None = None) -> int:
+    """DELETE FROM <delta table> WHERE <predicate> (`lake_dml.delete`).
 
-    SET targets resolve CASE-INSENSITIVELY like the rest of Spark SQL
-    (the engine passes raw statement identifiers through); an
-    assignment matching no column raises instead of silently adding
-    one."""
-    by_lower = {c.lower(): c for c in df.columns}
-    resolved: dict[str, str] = {}
-    for k, e in set_exprs.items():
-        c = by_lower.get(k.lower())
-        if c is None:
-            raise ValueError(
-                f"UPDATE SET references unknown column {k!r}")
-        resolved[c] = e
-    types = {f.name: f.dataType for f in df.schema.fields}
-    cond = None if predicate is None else F.expr(predicate)
-    cols = []
-    for c in df.columns:
-        if c in resolved:
-            val = F.expr(resolved[c]).cast(types[c])
-            cols.append((val if cond is None else
-                         F.when(cond, val).otherwise(F.col(c)))
-                        .alias(c))
-        else:
-            cols.append(F.col(c))
-    return df.select(*cols)
+    copy-on-write (default): rewrite only the files containing matches.
+
+    merge-on-read: DELETION VECTORS (PROTOCOL.md "Deletion Vectors") —
+    record the matching rows' indexes per file as roaring bitmaps in a
+    DV file and re-add the data files with deletionVector descriptors;
+    no data rewritten, readers anti-join the positions away, OPTIMIZE
+    (any COW rewrite of the file) folds them in.  mode=None reads
+    `delta.enableDeletionVectors`."""
+    return lake_dml.delete(DML, spark, table, predicate, mode)
 
 
 def update_delta(spark: SparkSession, table: str,
                  set_exprs: dict[str, str], predicate: str = "true",
                  mode: str | None = None) -> int:
-    """UPDATE <delta table> SET col = expr, ... [WHERE predicate].
+    """UPDATE <delta table> SET col = expr, ... [WHERE predicate]
+    (`lake_dml.update`).
 
     copy-on-write (default): only files containing matching rows are
     rewritten; within them, non-matching rows pass through unchanged.
-
     merge-on-read: deletion-vector update (delta-spark's DV-enabled
     UPDATE): matching rows are DV-marked dead in place and re-appended
-    with the SET expressions applied — no existing file rewritten; any
-    later COW op or OPTIMIZE folds the DVs in.
-
-    Reference DML surface: dremio-oss UPDATE on Iceberg tables
-    (`planner/sql/handlers/query/UpdateHandler.java`); same semantics
-    here on the Delta log.  mode=None reads
+    with the SET expressions applied.  mode=None reads
     `delta.enableDeletionVectors`."""
-    mode = _delta_dml_mode(spark, table, mode)
-    if mode == "merge-on-read":
-        return _dv_mark(spark, table, predicate, set_exprs=set_exprs)
-    if mode != "copy-on-write":
-        raise ValueError(f"unknown UPDATE mode {mode!r}; "
-                         "use 'copy-on-write' or 'merge-on-read'")
-    snap = resolve_snapshot(spark, table)
-    live = _live_with_file(spark, table)
-    hit_rel = _mark_hit_files(table, live.where(predicate))
-
-    def rewrite(hits: DataFrame) -> DataFrame:
-        return _apply_set_exprs(hits, set_exprs, predicate)
-
-    changes = None
-    if _cdf_enabled(snap):
-        pre = live.where(predicate).drop("__file")
-        post = _apply_set_exprs(pre, set_exprs)
-        changes = (
-            pre.withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(
-                post.withColumn("_change_type",
-                                F.lit("update_postimage"))))
-    return _cow_commit(spark, table, "UPDATE", hit_rel, rewrite, None,
-                       changes=changes)
-
-
-# Plan-shape probe: the last MERGE rewrite join, kept so tests can
-# assert its physical strategy (broadcast only when the source is
-# small) without re-plumbing the commit path.  A bare reference — no
-# extra computation.
-_last_merge_join: DataFrame | None = None
-
-
-def _mor_merge_delta(spark: SparkSession, table: str, source: DataFrame,
-                     on: list[str], update_set: dict[str, str] | None,
-                     insert_not_matched: bool) -> int:
-    """Merge-on-read MERGE: DV-mark the MATCHED target rows dead and
-    append their post-image together with the not-matched inserts —
-    delta-spark's DV-enabled MERGE shape; no existing data file
-    rewritten.  Source-side joins stay unhinted (AQE costs them)."""
-    snap = resolve_snapshot(spark, table)
-    live = _live_dv_with_identity(spark, table, snap)
-    src_cols = list(source.columns)
-    s = source.select(
-        *[F.col(c).alias(c if c in on else f"__s_{c}") for c in src_cols])
-    # persist: matched feeds the bitmap encode, the post-image staging,
-    # and the CDC staging — without it each action re-runs the
-    # scan + DV anti-join + source join (the iceberg MOR merge persists
-    # the same way)
-    matched = live.join(s, on, "inner").persist()
-    try:
-        table_cols = [f.name for f in snap.schema.fields]
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        out_cols = []
-        for c in table_cols:
-            if update_set is not None:
-                val = (F.expr(_src_expr(update_set[c]))
-                       if c in update_set else None)
-            else:
-                val = (F.col(f"__s_{c}")
-                       if c not in on and f"__s_{c}" in matched.columns
-                       else None)
-            out_cols.append(F.col(c) if val is None
-                            else val.cast(types[c]).alias(c))
-        post = matched.select(*out_cols)
-        if insert_not_matched:
-            ins = (source.join(live.select(*on).distinct(), on,
-                               "left_anti")
-                   .select(*[F.col(c).cast(types[c]).alias(c)
-                             for c in table_cols]))
-            post = post.unionByName(ins)
-        changes = None
-        if _cdf_enabled(snap):
-            pre = matched.select(*table_cols)
-            changes = (
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(matched.select(*out_cols).withColumn(
-                    "_change_type", F.lit("update_postimage"))))
-            if insert_not_matched:
-                changes = changes.unionByName(
-                    ins.withColumn("_change_type", F.lit("insert")))
-        return _dv_commit_marked(spark, table, snap, matched, "MERGE",
-                                 post, changes)
-    finally:
-        matched.unpersist()
+    return lake_dml.update(DML, spark, table, set_exprs, predicate, mode)
 
 
 def merge_into_delta(spark: SparkSession, table: str, source: DataFrame,
@@ -1835,107 +1585,13 @@ def merge_into_delta(spark: SparkSession, table: str, source: DataFrame,
                      insert_not_matched: bool = True,
                      mode: str | None = None,
                      update_matched: bool = True) -> int:
-    """MERGE INTO <delta table> USING <source> ON <key equality> —
-    WHEN MATCHED THEN UPDATE [SET col = expr over s.*], WHEN NOT MATCHED
-    THEN INSERT *.  `source` must be unique on the key columns (the SQL
-    MERGE cardinality rule; violations would duplicate target rows).
-    mode="merge-on-read" routes to `_mor_merge_delta` (DV-mark matched
-    rows + append post-image and inserts, no file rewrite).
-
-    Scale shape: hit files come from ONE semi join of the target scan
-    against the source key set — file-level skipping exactly as
-    DELETE/UPDATE; the rewrite is a left join of only the hit files
-    against the source; inserts are an anti join of the source against
-    the live key set.  None of the source-side joins carry a broadcast
-    hint: a small CDC batch still broadcasts (AQE costs the build side)
-    while a multi-GB backfill source shuffles instead of OOMing every
-    executor — the reference likewise costs DIST vs BROADCAST join
-    instances and never forces one (`HashJoinPrule`,
-    `PlannerPhase.java:719-725`).  Reference: MERGE on Iceberg tables
-    via `MergeHandler` / dremio-oss DML plans.  mode=None reads
-    `delta.enableDeletionVectors`.
-    """
-    if not update_matched:
-        # INSERT-ONLY MERGE (the grammar\'s WhenNotMatched-only form,
-        # SqlMergeIntoTable with insertCall alone): matched target rows
-        # are untouched, so NO file is rewritten or marked in either
-        # mode — one anti-join append commit
-        snap = resolve_snapshot(spark, table)
-        live_keys = read_delta(spark, table).select(*on).distinct()
-        inserts = source.join(live_keys, on, "left_anti")
-        changes = None
-        if _cdf_enabled(snap):
-            cols = [f.name for f in snap.schema.fields]
-            changes = (inserts.select(*cols)
-                       .withColumn("_change_type", F.lit("insert")))
-        return _cow_commit(spark, table, "MERGE", [], lambda h: h,
-                           inserts, changes=changes)
-    mode = _delta_dml_mode(spark, table, mode)
-    if mode == "merge-on-read":
-        return _mor_merge_delta(spark, table, source, on, update_set,
-                                insert_not_matched)
-    if mode != "copy-on-write":
-        raise ValueError(f"unknown MERGE mode {mode!r}; "
-                         "use 'copy-on-write' or 'merge-on-read'")
-    keys = source.select(*on).distinct()
-    snap = resolve_snapshot(spark, table)
-    live = _live_with_file(spark, table)
-    hit_rel = _mark_hit_files(table, live.join(keys, on, "left_semi"))
-    src_cols = [c for c in source.columns]
-
-    def _apply_source(hits: DataFrame) -> tuple[DataFrame, "Column"]:
-        """hits left-joined to the aliased source + the matched flag;
-        shared by the rewrite and the CDF postimage capture."""
-        tgt_fields = {f.name: f.dataType for f in hits.schema.fields}
-        s = source.select(
-            *[F.col(c).alias(c if c in on else f"__s_{c}")
-              for c in src_cols],
-            F.lit(True).alias("__s_matched"),
-        )
-        joined = hits.join(s, on, "left")
-        global _last_merge_join
-        _last_merge_join = joined
-        matched = F.col("__s_matched").isNotNull()
-        out_cols = []
-        for c in hits.columns:
-            if update_set is not None:
-                val = (F.expr(_src_expr(update_set[c]))
-                       if c in update_set else None)
-            else:
-                val = (F.col(f"__s_{c}")
-                       if c not in on and f"__s_{c}" in joined.columns
-                       else None)
-            if val is None:
-                out_cols.append(F.col(c))
-            else:
-                out_cols.append(
-                    F.when(matched, val.cast(tgt_fields[c]))
-                    .otherwise(F.col(c)).alias(c))
-        return joined.select(*out_cols), joined, matched
-
-    def rewrite(hits: DataFrame) -> DataFrame:
-        return _apply_source(hits)[0]
-
-    inserts = (
-        source.join(live.select(*on).distinct(), on, "left_anti")
-        if insert_not_matched else None
-    )
-    changes = None
-    if _cdf_enabled(snap):
-        pre = (live.join(keys, on, "left_semi")
-               .drop("__file"))
-        post = _apply_source(pre)[0]
-        changes = (
-            pre.withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(post.withColumn(
-                "_change_type", F.lit("update_postimage"))))
-        if inserts is not None:
-            cols = [f.name for f in snap.schema.fields]
-            changes = changes.unionByName(
-                inserts.select(*cols)
-                .withColumn("_change_type", F.lit("insert")))
-    return _cow_commit(spark, table, "MERGE", hit_rel, rewrite, inserts,
-                       changes=changes)
+    """MERGE INTO <delta table> USING <source> ON <key equality>
+    (`lake_dml.merge`): WHEN MATCHED THEN UPDATE [SET col = expr over
+    s.*], WHEN NOT MATCHED THEN INSERT *.  merge-on-read DV-marks the
+    matched rows and appends their post-image with the inserts.
+    mode=None reads `delta.enableDeletionVectors`."""
+    return lake_dml.merge(DML, spark, table, source, on, update_set,
+                          insert_not_matched, mode, update_matched)
 
 
 def _zorder_rewrite(zorder_by: list[str], n_files: int, bits: int = 16):
@@ -2028,8 +1684,8 @@ def optimize_delta(spark: SparkSession, table: str,
     if where is None:
         hit_rel = sorted(snap.files)
     else:
-        live = _live_with_file(spark, table)
-        hit_rel = _mark_hit_files(table, live.where(where))
+        hit_rel = lake_dml.hit_files(
+            table, _live_rows(spark, table, snap, True).where(where))
     rewrite = (_zorder_rewrite(zorder_by, zorder_files)
                if zorder_by else (lambda hits: hits))
     if options:
@@ -2039,9 +1695,8 @@ def optimize_delta(spark: SparkSession, table: str,
         hit_rel, n_out = got
         if not zorder_by:
             rewrite = lambda hits: hits.repartition(n_out)  # noqa: E731
-    return _cow_commit(
-        spark, table, "OPTIMIZE", hit_rel, rewrite, None,
-        data_change=False)
+    return _cow_commit(spark, table, snap, "OPTIMIZE", hit_rel, rewrite,
+                       None, data_change=False)
 
 
 def truncate_delta(spark: SparkSession, table: str) -> int:
@@ -2419,3 +2074,18 @@ def read_delta_incremental(spark: SparkSession, table: str,
         return meta_df(spark, [], snap_to.schema)
     return _scan_with_partition_values(
         spark, table, snap_to.schema, snap_to.partition_cols, new_files)
+
+
+# The lake_dml codec: what Delta alone decides for DELETE/UPDATE/MERGE.
+DML = lake_dml.Codec(
+    resolve=lambda spark, table, _parent: resolve_snapshot(spark, table),
+    mode=lambda snap, _verb: (
+        lake_dml.MOR
+        if snap.config.get("delta.enableDeletionVectors") == "true"
+        else lake_dml.COW),
+    live=_live_rows,
+    rewrite=_cow_commit,
+    mark=_dv_commit_marked,
+    cdf=_cdf_enabled,
+    ops={"delete": "DELETE", "update": "UPDATE", "merge": "MERGE"},
+)

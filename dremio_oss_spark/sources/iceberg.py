@@ -38,8 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .avro_codec import read_avro_file
-from .delta import ConcurrentWriteError, _apply_set_exprs, _src_expr
+from .delta import ConcurrentWriteError
 from ..localframe import meta_df
+from . import lake_dml
 
 _STATUS_DELETED = 2
 
@@ -144,6 +145,10 @@ class IcebergSnapshot:
         ]
         self.default_spec_id = 0  # set by resolve_snapshot
         self.schema_id = 0  # the schema this snapshot pinned (spec v2)
+        # the metadata JSON it was resolved from: DML commits the next
+        # version of THIS state (one snapshot per statement)
+        self.meta: dict = {}
+        self.detached = False  # commits leave table refs alone (_dml_snapshot)
 
 
 def _snapshot_ts_ms(meta: dict) -> int:
@@ -312,6 +317,7 @@ def resolve_snapshot(table: str, snapshot_id: int | None = None,
     out.delete_seq = delete_seq
     out.default_spec_id = sm.default_spec_id
     out.properties = sm.meta.get("properties") or {}
+    out.meta = sm.meta
     return out
 
 
@@ -325,20 +331,8 @@ def read_iceberg(spark: SparkSession, table: str,
         if snapshot_id is not None:
             raise ValueError("give snapshot_id OR timestamp_ms, not both")
         snapshot_id = resolve_snapshot_at(table, timestamp_ms)
-    snap = resolve_snapshot(table, snapshot_id, ref=ref)
-    if not snap.files:
-        return meta_df(spark, [], snap.schema)
-    # one multi-path scan + broadcast file→partitionValues join — the
-    # same O(1)-in-file-count plan the Delta reader uses (manifests, not
-    # directory layout, are the partition-value source of truth)
-    from .delta import _scan_with_partition_values
-
-    has_pos = bool(snap.pos_deletes)
-    df = _scan_with_partition_values(
-        spark, table, snap.schema, snap.partition_cols,
-        {p: pv for p, pv in snap.files},
-        keep_file=has_pos or _eq_seq_aware(snap), keep_pos=has_pos)
-    return _apply_mor_deletes(spark, df, snap)
+    return _live_rows(spark, table,
+                      resolve_snapshot(table, snapshot_id, ref=ref))
 
 
 def read_iceberg_changes(spark: SparkSession, table: str,
@@ -736,10 +730,11 @@ def _commit_snapshot(table: str, meta: dict, operation: str,
     version hint.  Fresh-per-snapshot manifests are the spec's
     rewrite-manifests form; metadata stays KB-scale and the reader never
     replays history."""
+    import uuid
+
     from .avro_codec import write_avro_file
 
-    sid = max((s["snapshot-id"] for s in meta.get("snapshots") or []),
-              default=0) + 1
+    sid = _next_sid(meta)
     # table-wide DATA SEQUENCE NUMBER (spec v2 last-sequence-number):
     # strictly increasing per commit; entries added by this commit carry
     # it, carried-forward entries keep the sequence stamped in their pv
@@ -798,13 +793,16 @@ def _commit_snapshot(table: str, meta: dict, operation: str,
                     "equality_ids": (list(cols) if cols is not None
                                      else None)}}
 
-    manifest = os.path.join(md, f"m{sid}.avro")
+    # unique names: a writer that loses the version claim below must
+    # not overwrite the winner's manifests on its way to the error
+    tag = uuid.uuid4().hex[:8]
+    manifest = os.path.join(md, f"m{sid}-{tag}.avro")
     write_avro_file(manifest, _entry_schema(partition_cols),
                     [_rec(1, rel, pv) for rel, pv in live]
                     + [_del_rec(*d) for d in (deletes or [])]
                     + [_rec(_STATUS_DELETED, rel, pv)
                        for rel, pv in removed])
-    mlist = os.path.join(md, f"snap-{sid}.avro")
+    mlist = os.path.join(md, f"snap-{sid}-{tag}.avro")
     write_avro_file(mlist, _LIST_SCHEMA, [
         {"manifest_path": manifest, "manifest_length": 1,
          "partition_spec_id": 0, "added_snapshot_id": sid}])
@@ -1268,8 +1266,6 @@ def write_iceberg(spark: SparkSession, df: DataFrame, table: str,
     owns the metadata location and the table's own pointer is not
     authority (reference `plugins/dataplane/.../DataplanePlugin.java`).
     """
-    from .delta import _stage_files
-
     if parent_snapshot is not None and branch is not None:
         raise ValueError("give parent_snapshot OR branch, not both")
     if sort_by:
@@ -1355,16 +1351,11 @@ def write_iceberg(spark: SparkSession, df: DataFrame, table: str,
             }] if sort_by else []),
             "snapshots": [],
         }
-    sid_next = max((s["snapshot-id"] for s in meta.get("snapshots") or []),
-                   default=0) + 1
     from .delta import _collect_stats
 
     staged_df, part_names = _apply_transforms(df, spec_fields)
-    staged = _stage_files(spark, staged_df, os.path.join(table, "data"),
-                          sid_next, part_names)
-    cur_spec = str(meta.get("default-spec-id", 0))
-    staged = [(os.path.join("data", rel), {**pv, "__spec_id": cur_spec})
-              for rel, pv in staged]
+    staged = _stage_data(spark, table, meta, staged_df, _next_sid(meta),
+                         part_names)
     stats = _collect_stats(spark, table, staged, df.schema,
                            [pf["source"] for pf in spec_fields
                             if pf["transform"] == "identity"])
@@ -1374,11 +1365,7 @@ def write_iceberg(spark: SparkSession, df: DataFrame, table: str,
         removed: list[tuple[str, dict]] = []
         stats.update({os.path.relpath(p, table): st
                       for p, st in prev.stats.items()})
-        carried_deletes = (
-            [(os.path.relpath(p, table), cols, prev.delete_seq.get(p))
-             for p, cols in prev.deletes]
-            + [(os.path.relpath(p, table), None, None)
-               for p in prev.pos_deletes])
+        carried_deletes = _carried_deletes(table, prev)
     else:
         live = staged
         removed = prev_files
@@ -1417,46 +1404,82 @@ def last_iceberg_txn_version(table: str, app_id: str) -> int | None:
     return best
 
 
-def _cow_commit_iceberg(spark: SparkSession, table: str, operation: str,
-                        hit_abs: set[str], rewrite,
-                        inserts: DataFrame | None = None,
-                        parent_snapshot: int | None = None) -> int:
-    """Shared copy-on-write snapshot commit: re-stage the hit files
-    through `rewrite(hits_df)`, optionally stage `inserts` as new files,
-    carry every untouched file forward, and commit one snapshot.
+def _next_sid(meta: dict) -> int:
+    """Snapshot id (and metadata version) of the next commit."""
+    return max((s["snapshot-id"] for s in meta.get("snapshots") or []),
+               default=0) + 1
 
-    `parent_snapshot` rewrites against THAT snapshot's state and commits
-    DETACHED (no table-level ref advances) — the versioned-catalog DML
-    path (`sources/dataplane.py`), where the catalog commit owns the
-    resulting snapshot id.
+
+def _part_names(spec_fields: list[dict]) -> list[str]:
+    """Partition record field names of a spec (`_apply_transforms`'s
+    partitionBy names, without a frame)."""
+    return [pf["source"] if pf["transform"] == "identity" else pf["name"]
+            for pf in spec_fields]
+
+
+def _carried_deletes(table: str, snap: "IcebergSnapshot") -> list[tuple]:
+    """`snap`'s delete files as `_commit_snapshot` carries them forward:
+    equality deletes keep their original sequence (or its absence),
+    position deletes stay unstamped."""
+    return ([(os.path.relpath(p, table), cols, snap.delete_seq.get(p))
+             for p, cols in snap.deletes]
+            + [(os.path.relpath(p, table), None, None)
+               for p in snap.pos_deletes])
+
+
+def _stage_data(spark: SparkSession, table: str, meta: dict,
+                df: DataFrame, sid: int,
+                part_names: list[str]) -> list[tuple[str, dict]]:
+    """Stage `df` as data files of snapshot `sid` under data/: their
+    table-relative paths and partition values, stamped with the spec id
+    they were written under."""
+    from .delta import _stage_files
+
+    spec = str(meta.get("default-spec-id", 0))
+    return [(os.path.join("data", rel), {**pv, "__spec_id": spec})
+            for rel, pv in _stage_files(spark, df,
+                                        os.path.join(table, "data"),
+                                        sid, part_names)]
+
+
+def _dml_snapshot(spark: SparkSession, table: str,
+                  parent_snapshot: int | None) -> "IcebergSnapshot":
+    """The snapshot a DML or OPTIMIZE statement plans and commits
+    against.  `parent_snapshot` is a versioned catalog's branch
+    snapshot (`sources/dataplane.py`): the commit is then DETACHED — no
+    table-level ref advances, the catalog commit owns the new id."""
+    snap = resolve_snapshot(table, parent_snapshot)
+    snap.detached = parent_snapshot is not None
+    return snap
+
+
+def _cow_commit_iceberg(spark: SparkSession, table: str,
+                        snap: "IcebergSnapshot", operation: str,
+                        hit_rel: list[str], rewrite,
+                        inserts: DataFrame | None = None,
+                        changes: None = None) -> int:
+    """Copy-on-write snapshot commit against `snap` (the `lake_dml`
+    codec's `rewrite`, and OPTIMIZE's): re-stage the data files
+    `hit_rel` through `rewrite(hits_df)`, optionally stage `inserts` as
+    new files, carry every untouched file forward, and commit one
+    snapshot, detached when `snap` is (`_dml_snapshot`).  Removing and
+    adding nothing commits nothing.  Iceberg's changelog comes from
+    snapshot diffs (`read_iceberg_changes`), so `changes` is None.
 
     Scale shape mirrors the Delta path: ONE scan over the hit files
     (file-level skipping), plan construction O(1) in file count; the
     manifest rewrite is metadata-sized."""
-    from .delta import _scan_with_partition_values, _stage_files
+    from .delta import _collect_stats
 
-    snap = resolve_snapshot(table, parent_snapshot)
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    all_files = [(os.path.relpath(p, table), pv, os.path.realpath(p))
-                 for p, pv in snap.files]
-    keep = [(rel, pv) for rel, pv, rp in all_files if rp not in hit_abs]
-    hits = [(rel, pv) for rel, pv, rp in all_files if rp in hit_abs]
-    sid_next = max((s["snapshot-id"] for s in meta.get("snapshots") or []),
-                   default=0) + 1
-    staged: list[tuple[str, dict]] = []
-    part_names = [pf["source"] if pf["transform"] == "identity"
-                  else pf["name"] for pf in snap.spec_fields]
+    hit = set(hit_rel)
+    files = [(os.path.relpath(p, table), pv) for p, pv in snap.files]
+    sid_next = _next_sid(snap.meta)
+    part_names = _part_names(snap.spec_fields)
     to_stage: DataFrame | None = None
-    if hits:
-        has_pos = bool(snap.pos_deletes)
-        hits_df = _scan_with_partition_values(
-            spark, table, snap.schema, snap.partition_cols,
-            {os.path.join(table, rel): pv for rel, pv in hits},
-            keep_file=has_pos or _eq_seq_aware(snap), keep_pos=has_pos)
-        hits_df = _apply_mor_deletes(spark, hits_df, snap)
-        to_stage, part_names = _apply_transforms(rewrite(hits_df),
-                                                 snap.spec_fields)
+    if hit:
+        to_stage, part_names = _apply_transforms(
+            rewrite(_live_rows(spark, table, snap, files=hit)),
+            snap.spec_fields)
     if inserts is not None:
         cols = [f.name for f in snap.schema.fields]
         out, part_names = _apply_transforms(inserts.select(*cols),
@@ -1465,91 +1488,65 @@ def _cow_commit_iceberg(spark: SparkSession, table: str, operation: str,
         # spec) — a second write job is pure fixed cost
         to_stage = out if to_stage is None else (
             to_stage.unionByName(out.select(*to_stage.columns)))
-    if to_stage is not None:
-        staged += _stage_files(spark, to_stage,
-                               os.path.join(table, "data"),
-                               sid_next, part_names)
-    cur_spec = str(meta.get("default-spec-id", 0))
-    staged = [(os.path.join("data", rel), {**pv, "__spec_id": cur_spec})
-              for rel, pv in staged]
-    from .delta import _collect_stats
-
+    staged = ([] if to_stage is None else
+              _stage_data(spark, table, snap.meta, to_stage, sid_next,
+                          part_names))
+    if not hit and not staged:
+        return snap.snapshot_id
     stats = _collect_stats(spark, table, staged, snap.schema,
                            snap.partition_cols)
     stats.update({os.path.relpath(p, table): st
                   for p, st in snap.stats.items()
-                  if os.path.realpath(p) not in hit_abs})
+                  if os.path.relpath(p, table) not in hit})
     # OPTIMIZE ("replace") rewrites every data file with deletes applied,
     # so the delete files fold away; other COW ops carry them (equality
     # deletes are idempotent on the already-rewritten hit files;
     # position-delete rows for rewritten files go inert — the staged
     # files have fresh basenames)
-    carried = ([] if operation == "replace" else
-               [(os.path.relpath(p, table), cols, snap.delete_seq.get(p))
-                for p, cols in snap.deletes]
-               + [(os.path.relpath(p, table), None, None)
-                  for p in snap.pos_deletes])
-    return _commit_snapshot(table, meta, operation, keep + staged, hits,
-                            part_names, stats, carried,
-                            added={rel for rel, _ in staged},
-                            detached=parent_snapshot is not None,
-                            schema_id=(snap.schema_id
-                                       if parent_snapshot is not None
-                                       else None))
+    carried = [] if operation == "replace" else _carried_deletes(table, snap)
+    return _commit_snapshot(
+        table, snap.meta, operation,
+        [f for f in files if f[0] not in hit] + staged,
+        [f for f in files if f[0] in hit], part_names, stats, carried,
+        added={rel for rel, _ in staged}, detached=snap.detached,
+        schema_id=snap.schema_id if snap.detached else None)
 
 
-def cow_rewrite_detached(spark: SparkSession, table: str,
-                         parent_snapshot: int, op: str,
-                         predicate: str | None,
-                         assignments: dict[str, str] | None = None
-                         ) -> int | None:
-    """DELETE/UPDATE against an explicit parent snapshot, committed
-    DETACHED — the versioned-catalog (Nessie) DML path, where
-    `sources/dataplane.py` records the returned snapshot id as the
-    branch's pointer.  Same hit-file pruning as the unversioned COW
-    path: only files containing matches are rewritten.  Returns None
-    when no file matched (no snapshot created)."""
-    pred = predicate or "true"
-    live = _live_iceberg_with_file(spark, table, parent_snapshot)
-    hit_abs = {r[0] for r in
-               live.where(pred).select("__file").distinct().collect()}
-    if not hit_abs:
-        return None
-    if op == "delete":
-        rewrite = lambda hits: hits.where(f"not ({pred})")  # noqa: E731
-        operation = "delete"
-    else:
-        def rewrite(hits: DataFrame) -> DataFrame:
-            return _apply_set_exprs(hits, assignments or {}, pred)
-        operation = "overwrite"
-    return _cow_commit_iceberg(spark, table, operation, hit_abs, rewrite,
-                               parent_snapshot=parent_snapshot)
-
-
-def _scan_with_partition_values_iceberg(
-        spark: SparkSession, table: str, snap: "IcebergSnapshot",
-        keep_file: bool = False, keep_pos: bool = False) -> DataFrame:
+def _live_rows(spark: SparkSession, table: str, snap: "IcebergSnapshot",
+               identity: bool = False,
+               files: set[str] | None = None) -> DataFrame:
+    """Live rows of `snap` (of its table-relative data `files` only,
+    when given) with position and equality deletes applied: the reader
+    and the `lake_dml` codec's `live`.  `identity` keeps each row's
+    (`__file`, `__pos`), the input every DML plan needs (position-delete
+    exactly the rows it touches, never resurrect a row an earlier delete
+    killed).  One multi-path scan + broadcast file→partitionValues join
+    — the same O(1)-in-file-count plan the Delta reader uses (manifests,
+    not directory layout, are the partition-value source of truth)."""
     from .delta import _scan_with_partition_values
 
-    return _scan_with_partition_values(
+    has_pos = bool(snap.pos_deletes)
+    df = _scan_with_partition_values(
         spark, table, snap.schema, snap.partition_cols,
-        {p: pv for p, pv in snap.files},
-        keep_file=keep_file, keep_pos=keep_pos)
-
-
-def _live_iceberg_with_file(spark: SparkSession, table: str,
-                            snapshot_id: int | None = None) -> DataFrame:
-    return _scan_with_partition_values_iceberg(
-        spark, table, resolve_snapshot(table, snapshot_id),
-        keep_file=True)
+        {p: pv for p, pv in snap.files
+         if files is None or os.path.relpath(p, table) in files},
+        keep_file=identity or has_pos or _eq_seq_aware(snap),
+        keep_pos=identity or has_pos)
+    if not identity:
+        return _apply_mor_deletes(spark, df, snap)
+    # shared with the read path: small delete sets become a row-local
+    # inline filter, large ones the distributed anti-join
+    df = _apply_position_deletes(spark, df, snap, keep_file=True,
+                                 keep_pos=True)
+    return _apply_equality_deletes(spark, df, snap)
 
 
 def delete_from_iceberg(spark: SparkSession, table: str,
                         predicate: str, mode: str | None = None,
                         equality_cols: list[str] | None = None) -> int:
-    """DELETE FROM <iceberg table> WHERE <predicate>.  mode=None reads
-    the table's `write.delete.mode` property (spec default:
-    copy-on-write).
+    """DELETE FROM <iceberg table> WHERE <predicate> (`lake_dml.delete`).
+    mode=None reads the table's `write.delete.mode` property (spec
+    default: copy-on-write).
 
     copy-on-write (default): one scan carrying `__file` bounds the
     rewrite to files that actually contain matches — same hit-file
@@ -1565,75 +1562,74 @@ def delete_from_iceberg(spark: SparkSession, table: str,
       the reference's own MOR plan
       (`DmlPositionalMergeOnReadPlanGenerator.java` emits filePath +
       rowIndex tuples exactly like this).
-    - EQUALITY (`equality_cols=[...]`): write an EQUALITY DELETE file
-      (spec content=2) holding the distinct key tuples of the matching
-      rows; stamped with this commit's data sequence number, so it
-      applies only to data files with a strictly lower sequence —
-      re-inserting the key later survives (spec v2 commit-order
-      semantics; see `_apply_equality_deletes`).
+    - EQUALITY (`equality_cols=[...]`, Iceberg's own; not part of the
+      shared core): write an EQUALITY DELETE file (spec content=2)
+      holding the distinct key tuples of the matching rows; stamped
+      with this commit's data sequence number, so it applies only to
+      data files with a strictly lower sequence — re-inserting the key
+      later survives (spec v2 commit-order semantics; see
+      `_apply_equality_deletes`).
 
     OPTIMIZE compacts either style away.
     """
-    mode = _dml_mode(table, "delete", mode)
-    if mode == "merge-on-read":
-        snap = resolve_snapshot(table)
-        with open(_metadata_file(table)) as f:
-            meta = json.load(f)
-        if equality_cols:
-            keys = (read_iceberg(spark, table)
-                    .where(predicate).select(*equality_cols).distinct())
-            prefix, cols_entry = "eq-delete", list(equality_cols)
-        else:
-            live = _scan_with_partition_values_iceberg(
-                spark, table, snap, keep_file=True, keep_pos=True)
-            from .delta import _distributed_threshold
+    if equality_cols:
+        snap = _dml_snapshot(spark, table, None)
+        if (mode or DML.mode(snap, "delete")) == lake_dml.MOR:
+            return _mark_commit(
+                spark, table, snap, "delete",
+                _live_rows(spark, table, snap).where(predicate), None,
+                equality_cols=equality_cols)
+    return lake_dml.delete(DML, spark, table, predicate, mode)
 
-            rel_of = meta_df(spark, 
-                [(os.path.realpath(p), os.path.relpath(p, table))
-                 for p, _ in snap.files], "__file string, file_path string")
-            if len(snap.files) < _distributed_threshold(spark):
-                rel_of = F.broadcast(rel_of)  # file-count bounded
-            # no orderBy here: the pos-delete branch below imposes the
-            # spec's sorted-within-file order via repartitionByRange +
-            # sortWithinPartitions — a global sort first would be a
-            # second, redundant range shuffle
-            keys = (live.where(predicate)
-                    .select("__file", F.col("__pos").alias("pos"))
-                    .join(rel_of, "__file")
-                    .select("file_path", "pos"))
-            prefix, cols_entry = "pos-delete", None
 
-        sid_next = max((s["snapshot-id"]
-                        for s in meta.get("snapshots") or []),
-                       default=0) + 1
-        new_delete_rels = _write_delete_files(
-            spark, table, keys, sid_next, prefix)
-        if not new_delete_rels:
-            return snap.snapshot_id  # nothing matched; no commit
-        live_entries = [(os.path.relpath(p, table), pv)
-                        for p, pv in snap.files]
-        part_names = [pf["source"] if pf["transform"] == "identity"
-                      else pf["name"] for pf in snap.spec_fields]
-        stats = {os.path.relpath(p, table): st
-                 for p, st in snap.stats.items()}
-        deletes = ([(os.path.relpath(p, table), cols,
-                     snap.delete_seq.get(p))
-                    for p, cols in snap.deletes]
-                   + [(os.path.relpath(p, table), None, None)
-                      for p in snap.pos_deletes]
-                   + [(rel, cols_entry) for rel in new_delete_rels])
-        return _commit_snapshot(table, meta, "delete", live_entries, [],
-                                part_names, stats, deletes, added=set())
+def _mark_commit(spark: SparkSession, table: str, snap: "IcebergSnapshot",
+                 operation: str, marked: DataFrame,
+                 post: DataFrame | None, changes: None = None,
+                 equality_cols: list[str] | None = None) -> int:
+    """Merge-on-read commit against `snap` (the `lake_dml` codec's
+    `mark`): write `marked`'s (__file, __pos) rows as a position-delete
+    file, or its distinct `equality_cols` tuples as an equality-delete
+    file, append `post` as new data files, and commit one snapshot.
+    New data files take this commit's sequence number, so older
+    sequence-stamped equality deletes do not swallow them.  Marking and
+    adding nothing commits nothing."""
+    from .delta import _collect_stats, _distributed_threshold
 
-    if mode != "copy-on-write":
-        raise ValueError(f"unknown DELETE mode {mode!r}; "
-                         "use 'copy-on-write' or 'merge-on-read'")
-    live = _live_iceberg_with_file(spark, table)
-    hit_abs = {r[0] for r in
-               live.where(predicate).select("__file").distinct().collect()}
-    return _cow_commit_iceberg(
-        spark, table, "delete", hit_abs,
-        lambda hits: hits.where(f"not ({predicate})"))
+    if equality_cols:
+        keys, prefix = marked.select(*equality_cols).distinct(), "eq-delete"
+    else:
+        rel_of = meta_df(spark,
+            [(os.path.realpath(p), os.path.relpath(p, table))
+             for p, _ in snap.files], "__file string, file_path string")
+        if len(snap.files) < _distributed_threshold(spark):
+            rel_of = F.broadcast(rel_of)  # file-count bounded
+        # no orderBy here: _write_delete_files imposes the spec's
+        # sorted-within-file order itself
+        keys = (marked.select("__file", F.col("__pos").alias("pos"))
+                .join(rel_of, "__file")
+                .select("file_path", "pos"))
+        prefix = "pos-delete"
+    sid_next = _next_sid(snap.meta)
+    new_deletes = _write_delete_files(spark, table, keys, sid_next, prefix)
+    part_names = _part_names(snap.spec_fields)
+    staged: list[tuple[str, dict]] = []
+    if post is not None:
+        out, part_names = _apply_transforms(post, snap.spec_fields)
+        staged = _stage_data(spark, table, snap.meta, out, sid_next,
+                             part_names)
+    if not new_deletes and not staged:
+        return snap.snapshot_id
+    stats = _collect_stats(spark, table, staged, snap.schema,
+                           snap.partition_cols)
+    stats.update({os.path.relpath(p, table): st
+                  for p, st in snap.stats.items()})
+    return _commit_snapshot(
+        table, snap.meta, operation,
+        [(os.path.relpath(p, table), pv) for p, pv in snap.files] + staged,
+        [], part_names, stats,
+        _carried_deletes(table, snap)
+        + [(rel, equality_cols or None) for rel in new_deletes],
+        added={rel for rel, _ in staged})
 
 
 def _write_delete_files(spark: SparkSession, table: str,
@@ -1712,136 +1708,17 @@ def set_iceberg_properties(table: str,
     return cur
 
 
-def _dml_mode(table: str, verb: str, mode: str | None) -> str:
-    """Resolve a DML mode: an explicit argument wins; otherwise the
-    spec's `write.<verb>.mode` table property; default copy-on-write
-    (the spec's own default)."""
-    if mode is not None:
-        return mode
-    try:
-        with open(_metadata_file(table)) as f:
-            props = json.load(f).get("properties") or {}
-    except FileNotFoundError:
-        return "copy-on-write"
-    return props.get(f"write.{verb}.mode", "copy-on-write")
-
-
-def _live_mor_with_identity(spark: SparkSession, table: str,
-                            snap: "IcebergSnapshot") -> DataFrame:
-    """Current live rows with existing MOR deletes applied, KEEPING the
-    (__file, __pos) identity columns — the input every MOR write plan
-    needs (position-delete the rows it touches, never resurrect rows an
-    earlier delete killed)."""
-    live = _scan_with_partition_values_iceberg(
-        spark, table, snap, keep_file=True, keep_pos=True)
-    if snap.pos_deletes:
-        # shared with the read path: small delete sets become a
-        # row-local inline filter, large ones the distributed anti-join
-        live = _apply_position_deletes(spark, live, snap,
-                                       keep_file=True, keep_pos=True)
-    return _apply_equality_deletes(spark, live, snap)
-
-
-def _mor_update_iceberg(spark: SparkSession, table: str,
-                        set_exprs: dict[str, str],
-                        predicate: str) -> int:
-    """Merge-on-read UPDATE: position-delete the matching rows and
-    append their post-image as new data files — the reference's own
-    Iceberg UPDATE plan (`DmlPositionalMergeOnReadPlanGenerator.java`
-    emits exactly this filePath+rowIndex delete + insert pair).  No
-    existing data file is rewritten; OPTIMIZE compacts later.
-
-    Existing MOR deletes are applied BEFORE the post-image is computed,
-    so an already-dead row can never be resurrected as an updated copy.
-    New data files take this commit's sequence number, so older
-    sequence-stamped equality deletes do not swallow them."""
-    from .delta import (_collect_stats, _distributed_threshold,
-                        _stage_files)
-
-    snap = resolve_snapshot(table)
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    live = _live_mor_with_identity(spark, table, snap)
-    hits = live.where(predicate).persist()
-    try:
-        sid_next = max((s["snapshot-id"]
-                        for s in meta.get("snapshots") or []),
-                       default=0) + 1
-        rel_of = meta_df(spark, 
-            [(os.path.realpath(p), os.path.relpath(p, table))
-             for p, _ in snap.files], "__file string, file_path string")
-        if len(snap.files) < _distributed_threshold(spark):
-            rel_of = F.broadcast(rel_of)  # file-count bounded
-        keys = (hits.select("__file", F.col("__pos").alias("pos"))
-                .join(rel_of, "__file")
-                .select("file_path", "pos"))
-        new_delete_rels = _write_delete_files(
-            spark, table, keys, sid_next, "pos-delete")
-        if not new_delete_rels:
-            hits.unpersist()
-            return snap.snapshot_id  # nothing matched; no commit
-
-        table_cols = [f.name for f in snap.schema.fields]
-        # all SETs evaluate against the pre-image together (see
-        # delta._apply_set_exprs — DML-fuzzer finding)
-        post = _apply_set_exprs(hits.select(*table_cols), set_exprs)
-        out, part_names = _apply_transforms(post, snap.spec_fields)
-        staged = _stage_files(spark, out, os.path.join(table, "data"),
-                              sid_next, part_names)
-        cur_spec = str(meta.get("default-spec-id", 0))
-        staged = [(os.path.join("data", rel), {**pv, "__spec_id": cur_spec})
-                  for rel, pv in staged]
-        stats = _collect_stats(spark, table, staged, snap.schema,
-                               snap.partition_cols)
-        stats.update({os.path.relpath(p, table): st
-                      for p, st in snap.stats.items()})
-        live_entries = ([(os.path.relpath(p, table), pv)
-                         for p, pv in snap.files] + staged)
-        deletes = ([(os.path.relpath(p, table), cols,
-                     snap.delete_seq.get(p))
-                    for p, cols in snap.deletes]
-                   + [(os.path.relpath(p, table), None, None)
-                      for p in snap.pos_deletes]
-                   + [(rel, None) for rel in new_delete_rels])
-        return _commit_snapshot(table, meta, "overwrite", live_entries,
-                                [], part_names, stats, deletes,
-                                added={rel for rel, _ in staged})
-    finally:
-        hits.unpersist()
-
-
 def update_iceberg(spark: SparkSession, table: str,
                    set_exprs: dict[str, str],
                    predicate: str = "true",
                    mode: str | None = None) -> int:
-    """UPDATE <iceberg table> SET col = expr [WHERE predicate].
-
-    copy-on-write (default): rewrite only the files containing matches.
-    merge-on-read: position-delete the matching rows + append their
-    post-image (`_mor_update_iceberg` — the reference's MOR UPDATE
-    plan, `DmlPositionalMergeOnReadPlanGenerator.java`).
-
-    Reference: dremio-oss UPDATE on Iceberg tables
-    (`planner/sql/handlers/query/UpdateHandler.java`); mode=None reads
-    the table\'s `write.update.mode` property."""
-    mode = _dml_mode(table, "update", mode)
-    if mode == "merge-on-read":
-        return _mor_update_iceberg(spark, table, set_exprs, predicate)
-    if mode != "copy-on-write":
-        raise ValueError(f"unknown UPDATE mode {mode!r}; "
-                         "use 'copy-on-write' or 'merge-on-read'")
-    live = _live_iceberg_with_file(spark, table)
-    hit_abs = {r[0] for r in
-               live.where(predicate).select("__file").distinct().collect()}
-
-    def rewrite(hits: DataFrame) -> DataFrame:
-        return _apply_set_exprs(hits, set_exprs, predicate)
-
-    return _cow_commit_iceberg(spark, table, "overwrite", hit_abs, rewrite)
-
-
-# Plan-shape probe: last MERGE rewrite join (see delta._last_merge_join).
-_last_merge_join: DataFrame | None = None
+    """UPDATE <iceberg table> SET col = expr [WHERE predicate]
+    (`lake_dml.update`).  copy-on-write (default) rewrites only the
+    files containing matches; merge-on-read position-deletes the
+    matching rows and appends their post-image (the reference's MOR
+    UPDATE plan, `DmlPositionalMergeOnReadPlanGenerator.java`).
+    mode=None reads the table's `write.update.mode` property."""
+    return lake_dml.update(DML, spark, table, set_exprs, predicate, mode)
 
 
 def merge_into_iceberg(spark: SparkSession, table: str, source: DataFrame,
@@ -1851,167 +1728,16 @@ def merge_into_iceberg(spark: SparkSession, table: str, source: DataFrame,
                        mode: str | None = None,
                        update_matched: bool = True,
                        parent_snapshot: int | None = None) -> int:
-    """MERGE INTO <iceberg table> USING <source> ON <key equality> —
-    WHEN MATCHED THEN UPDATE, WHEN NOT MATCHED THEN INSERT *.  `source`
-    must be unique on the keys (SQL MERGE cardinality rule).
-    mode="merge-on-read" routes to `_mor_merge_iceberg` (position-delete
-    matched rows + append post-image and inserts, no file rewrite).  The
-    source-side joins carry no broadcast hint — AQE broadcasts a small
-    CDC batch and shuffles a multi-GB backfill, matching the reference's
-    costed DIST/BROADCAST join instances (`HashJoinPrule`,
-    `PlannerPhase.java:719-725`; a forced broadcast never appears
-    there).  Reference: MERGE on Iceberg tables (dremio-oss
-    `MergeHandler`); mode=None reads the table\'s `write.merge.mode`
+    """MERGE INTO <iceberg table> USING <source> ON <key equality>
+    (`lake_dml.merge`): WHEN MATCHED THEN UPDATE, WHEN NOT MATCHED THEN
+    INSERT *.  merge-on-read position-deletes the matched rows and
+    appends their post-image with the inserts.  `parent_snapshot`
+    merges copy-on-write into a versioned catalog's branch snapshot and
+    commits detached.  mode=None reads the table's `write.merge.mode`
     property."""
-    if not update_matched:
-        # INSERT-ONLY MERGE: matched rows untouched — one anti-join
-        # append snapshot, no rewrite/marking in either mode
-        live_keys = (read_iceberg(spark, table,
-                                  snapshot_id=parent_snapshot)
-                     .select(*on).distinct())
-        inserts = source.join(live_keys, on, "left_anti")
-        return _cow_commit_iceberg(spark, table, "overwrite", set(),
-                                   lambda h: h, inserts,
-                                   parent_snapshot=parent_snapshot)
-    if parent_snapshot is not None:
-        mode = "copy-on-write"  # detached (catalog-branch) MERGE is COW
-    else:
-        mode = _dml_mode(table, "merge", mode)
-    if mode == "merge-on-read":
-        return _mor_merge_iceberg(spark, table, source, on, update_set,
-                                  insert_not_matched)
-    if mode != "copy-on-write":
-        raise ValueError(f"unknown MERGE mode {mode!r}; "
-                         "use 'copy-on-write' or 'merge-on-read'")
-    keys = source.select(*on).distinct()
-    live = _live_iceberg_with_file(spark, table, parent_snapshot)
-    hit_abs = {r[0] for r in
-               live.join(keys, on, "left_semi")
-               .select("__file").distinct().collect()}
-    src_cols = list(source.columns)
-
-    def rewrite(hits: DataFrame) -> DataFrame:
-        types = {f.name: f.dataType for f in hits.schema.fields}
-        s = source.select(
-            *[F.col(c).alias(c if c in on else f"__s_{c}")
-              for c in src_cols],
-            F.lit(True).alias("__s_matched"),
-        )
-        joined = hits.join(s, on, "left")
-        global _last_merge_join
-        _last_merge_join = joined
-        matched = F.col("__s_matched").isNotNull()
-        out_cols = []
-        for c in hits.columns:
-            if update_set is not None:
-                val = (F.expr(_src_expr(update_set[c]))
-                       if c in update_set else None)
-            else:
-                val = (F.col(f"__s_{c}")
-                       if c not in on and f"__s_{c}" in joined.columns
-                       else None)
-            out_cols.append(
-                F.col(c) if val is None else
-                F.when(matched, val.cast(types[c]))
-                .otherwise(F.col(c)).alias(c))
-        return joined.select(*out_cols)
-
-    inserts = (
-        source.join(read_iceberg(spark, table,
-                                 snapshot_id=parent_snapshot)
-                    .select(*on).distinct(), on, "left_anti")
-        if insert_not_matched else None
-    )
-    return _cow_commit_iceberg(spark, table, "overwrite", hit_abs,
-                               rewrite, inserts,
-                               parent_snapshot=parent_snapshot)
-
-
-def _mor_merge_iceberg(spark: SparkSession, table: str,
-                       source: DataFrame, on: list[str],
-                       update_set: dict[str, str] | None,
-                       insert_not_matched: bool) -> int:
-    """Merge-on-read MERGE: position-delete the MATCHED target rows and
-    append their post-image together with the not-matched inserts — the
-    reference's MOR MERGE plan (the same
-    `DmlPositionalMergeOnReadPlanGenerator.java` filePath+rowIndex
-    delete + insert pair as UPDATE).  No existing data file rewritten.
-    Source-side joins stay unhinted (AQE costs broadcast vs shuffle)."""
-    from .delta import (_collect_stats, _distributed_threshold,
-                        _stage_files)
-
-    snap = resolve_snapshot(table)
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    live = _live_mor_with_identity(spark, table, snap)
-    src_cols = list(source.columns)
-    s = source.select(
-        *[F.col(c).alias(c if c in on else f"__s_{c}") for c in src_cols])
-    matched = live.join(s, on, "inner").persist()
-    try:
-        sid_next = max((s2["snapshot-id"]
-                        for s2 in meta.get("snapshots") or []),
-                       default=0) + 1
-        rel_of = meta_df(spark, 
-            [(os.path.realpath(p), os.path.relpath(p, table))
-             for p, _ in snap.files], "__file string, file_path string")
-        if len(snap.files) < _distributed_threshold(spark):
-            rel_of = F.broadcast(rel_of)  # file-count bounded
-        keys = (matched.select("__file", F.col("__pos").alias("pos"))
-                .join(rel_of, "__file")
-                .select("file_path", "pos"))
-        new_delete_rels = _write_delete_files(
-            spark, table, keys, sid_next, "pos-delete")
-
-        table_cols = [f.name for f in snap.schema.fields]
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        out_cols = []
-        for c in table_cols:
-            if update_set is not None:
-                val = (F.expr(_src_expr(update_set[c]))
-                       if c in update_set else None)
-            else:
-                val = (F.col(f"__s_{c}")
-                       if c not in on and f"__s_{c}" in matched.columns
-                       else None)
-            out_cols.append(F.col(c) if val is None
-                            else val.cast(types[c]).alias(c))
-        post = matched.select(*out_cols)
-        if insert_not_matched:
-            live_keys = live.select(*on).distinct()
-            ins = (source.join(live_keys, on, "left_anti")
-                   .select(*[F.col(c).cast(types[c]).alias(c)
-                             for c in table_cols]))
-            post = post.unionByName(ins)
-        out, part_names = _apply_transforms(post, snap.spec_fields)
-        staged = _stage_files(spark, out, os.path.join(table, "data"),
-                              sid_next, part_names)
-        cur_spec = str(meta.get("default-spec-id", 0))
-        staged = [(os.path.join("data", rel),
-                   {**pv, "__spec_id": cur_spec})
-                  for rel, pv in staged]
-        stats = _collect_stats(spark, table, staged, snap.schema,
-                               snap.partition_cols)
-        stats.update({os.path.relpath(p, table): st
-                      for p, st in snap.stats.items()})
-        if not new_delete_rels and not staged:
-            # no matched rows AND no inserts: a commit here would be a
-            # pure no-op snapshot (Delta's _dv_commit_marked early-
-            # returns the same way)
-            return snap.snapshot_id
-        live_entries = ([(os.path.relpath(p, table), pv)
-                         for p, pv in snap.files] + staged)
-        deletes = ([(os.path.relpath(p, table), cols,
-                     snap.delete_seq.get(p))
-                    for p, cols in snap.deletes]
-                   + [(os.path.relpath(p, table), None, None)
-                      for p in snap.pos_deletes]
-                   + [(rel, None) for rel in new_delete_rels])
-        return _commit_snapshot(table, meta, "overwrite", live_entries,
-                                [], part_names, stats, deletes,
-                                added={rel for rel, _ in staged})
-    finally:
-        matched.unpersist()
+    return lake_dml.merge(DML, spark, table, source, on, update_set,
+                          insert_not_matched, mode, update_matched,
+                          parent_snapshot)
 
 
 def optimize_iceberg(spark: SparkSession, table: str,
@@ -2037,30 +1763,25 @@ def optimize_iceberg(spark: SparkSession, table: str,
     # DETACHED — the versioned-catalog maintenance path
     # (OptimizeHandler.java:129 versioned-table support), where the
     # dataplane commit owns the resulting snapshot id
-    snap = resolve_snapshot(table, parent_snapshot)
+    snap = _dml_snapshot(spark, table, parent_snapshot)
+    all_rel = sorted(os.path.relpath(p, table) for p, _ in snap.files)
     if where is None:
-        hit_abs = {os.path.realpath(p) for p, _ in snap.files}
+        hit_rel = all_rel
         operation = "replace"
     else:
-        live = _live_iceberg_with_file(spark, table, parent_snapshot)
-        hit_abs = {r[0] for r in
-                   live.where(where).select("__file").distinct()
-                   .collect()}
+        hit_rel = lake_dml.hit_files(
+            table, _live_rows(spark, table, snap, True).where(where))
         # not "replace": deletes must survive for the untouched files
         operation = "replace-partial"
     rewrite = lambda hits: hits  # noqa: E731
     n_binpack = None
     if options:
-        got = _binpack_select(
-            table, [os.path.relpath(p, table) for p in hit_abs],
-            options)
+        got = _binpack_select(table, hit_rel, options)
         if got is None:
             return snap.snapshot_id  # below MIN_INPUT_FILES: no-op
-        cand, n_out = got
+        hit_rel, n_out = got
         n_binpack = int(n_out)
-        hit_abs = {os.path.realpath(os.path.join(table, rel))
-                   for rel in cand}
-        if hit_abs != {os.path.realpath(p) for p, _ in snap.files}:
+        if sorted(hit_rel) != all_rel:
             operation = "replace-partial"  # subset: carry deletes
         rewrite = lambda hits: hits.repartition(n_out)  # noqa: E731
     # declared LOCALSORT (ALTER TABLE ... LOCALSORT BY,
@@ -2079,13 +1800,13 @@ def optimize_iceberg(spark: SparkSession, table: str,
             # repartitionByRange count, keeping one file per range)
             n_range = max(1, min(
                 int(spark.conf.get("spark.sql.shuffle.partitions")),
-                len(hit_abs)))
+                len(hit_rel)))
 
         def rewrite(hits, _n=n_range, _c=sort_cols):  # noqa: E731
             return (hits.repartitionByRange(_n, *_c)
                     .sortWithinPartitions(*_c))
-    return _cow_commit_iceberg(spark, table, operation, hit_abs, rewrite,
-                               parent_snapshot=parent_snapshot)
+    return _cow_commit_iceberg(spark, table, snap, operation, hit_rel,
+                               rewrite)
 
 
 def truncate_iceberg(table: str) -> int:
@@ -2100,8 +1821,7 @@ def truncate_iceberg(table: str) -> int:
     if not snap.files and not snap.deletes and not snap.pos_deletes:
         return snap.snapshot_id  # already empty: no-op
     removed = [(os.path.relpath(p, table), pv) for p, pv in snap.files]
-    part_names = [pf["source"] if pf["transform"] == "identity"
-                  else pf["name"] for pf in snap.spec_fields]
+    part_names = _part_names(snap.spec_fields)
     return _commit_snapshot(table, meta, "delete", [], removed,
                             part_names, {}, [], added=set())
 
@@ -2118,8 +1838,7 @@ def rewrite_manifests_iceberg(table: str) -> int:
         meta = json.load(f)
     snap = resolve_snapshot(table)
     live = [(os.path.relpath(p, table), pv) for p, pv in snap.files]
-    part_names = [pf["source"] if pf["transform"] == "identity"
-                  else pf["name"] for pf in snap.spec_fields]
+    part_names = _part_names(snap.spec_fields)
     stats = {os.path.relpath(p, table): st
              for p, st in snap.stats.items()}
     carried = ([(os.path.relpath(p, table), cols,
@@ -2335,8 +2054,7 @@ def alter_iceberg_detached(table: str, parent_snapshot: int,
                     "fields": fields})
     meta["schemas"] = schemas  # current-schema-id NOT moved
     live = [(os.path.relpath(p, table), pv) for p, pv in prev.files]
-    part_names = [pf["source"] if pf["transform"] == "identity"
-                  else pf["name"] for pf in prev.spec_fields]
+    part_names = _part_names(prev.spec_fields)
     stats = {os.path.relpath(p, table): st
              for p, st in prev.stats.items()}
     carried = ([(os.path.relpath(p, table), cols,
@@ -2518,3 +2236,16 @@ def read_iceberg_incremental(spark: SparkSession, table: str,
         spark, table, snap_to.schema, snap_to.partition_cols, new_files,
         keep_file=has_pos or _eq_seq_aware(snap_to), keep_pos=has_pos)
     return _apply_mor_deletes(spark, df, snap_to)
+
+
+# The lake_dml codec: what Iceberg alone decides for DELETE/UPDATE/MERGE.
+DML = lake_dml.Codec(
+    resolve=_dml_snapshot,
+    mode=lambda snap, verb: snap.properties.get(f"write.{verb}.mode",
+                                                lake_dml.COW),
+    live=_live_rows,
+    rewrite=_cow_commit_iceberg,
+    mark=_mark_commit,
+    cdf=lambda snap: False,
+    ops={"delete": "delete", "update": "overwrite", "merge": "overwrite"},
+)

@@ -635,9 +635,10 @@ def test_vacuum_grace_protects_inflight_artifacts(eng):
     # commit not yet landed
     c = dp.state_at(root, "main")["nat"]
     loc = _os.path.join(root, c["location"])
-    from dremio_oss_spark.sources.iceberg import cow_rewrite_detached
-    sid = cow_rewrite_detached(eng.spark, loc, c["snapshot_id"],
-                               "delete", "n_nationkey = 0")
+    from dremio_oss_spark.sources import lake_dml
+    from dremio_oss_spark.sources.iceberg import DML
+    sid = lake_dml.delete(DML, eng.spark, loc, "n_nationkey = 0",
+                          parent_snapshot=c["snapshot_id"])
     assert sid is not None and sid != c["snapshot_id"]
     # graceful VACUUM spares the young unreferenced snapshot
     eng.sql("VACUUM TABLE dpsrc.nat EXPIRE SNAPSHOTS OLDER_THAN 1 HOUR")

@@ -1279,6 +1279,16 @@ def test_tblproperties_route_dml_modes(spark, tmp_path):
     assert files0 <= set(rs_d(spark, td).files)
     cur = read_delta(spark, td)
     assert cur.count() == 35 and cur.where("k = 0").collect()[0]["v"] == 1.0
+    # UNSET restores COW, and a COW MERGE sees the DV-deleted keys as
+    # gone: k = 36 is re-inserted, not treated as a live match
+    eng.sql(f"ALTER TABLE '{td}' UNSET TBLPROPERTIES "
+            "('delta.enableDeletionVectors')")
+    eng.sql(f"MERGE INTO '{td}' USING (select 36 as k, 3.5 as v) ON k = k "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *")
+    cur = read_delta(spark, td)
+    assert cur.count() == 36
+    assert cur.where("k = 36").collect()[0]["v"] == 3.5
 
 
 def test_merge_clause_variants_sql(spark, tmp_path):
@@ -1371,6 +1381,37 @@ def test_merge_using_path_and_subquery(spark, tmp_path):
     assert cur.count() == 11
     assert cur.where("k = 2").collect()[0]["v"] == 220.0
     assert cur.where("k = 50").collect()[0]["v"] == 5000.0
+
+
+def test_merge_user_source_alias(spark, tmp_path):
+    """MERGE with a user-chosen source alias (`USING (...) src` or
+    `USING view AS u`) qualifies SET expressions with that alias, on
+    both lake formats; `s` stays the default."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources.delta import read_delta, write_delta
+    from dremio_oss_spark.sources.iceberg import read_iceberg, write_iceberg
+
+    eng = Engine(spark)
+    df = spark.range(5).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
+    spark.createDataFrame([(4, 0.5), (9, 9.0)], "k long, v double") \
+        .createOrReplaceTempView("alias_src")
+    for write, read in ((write_delta, read_delta),
+                        (write_iceberg, read_iceberg)):
+        t = str(tmp_path / write.__name__)
+        write(spark, df, t)
+        eng.sql(f"MERGE INTO '{t}' USING (select k, v * 10 as v from "
+                "alias_src where k < 5) src ON t.k = src.k "
+                "WHEN MATCHED THEN UPDATE SET v = src.v + 1")
+        assert read(spark, t).where("k = 4").first()["v"] == 6.0
+        eng.sql(f"MERGE INTO '{t}' USING alias_src AS u ON t.k = u.k "
+                "WHEN MATCHED THEN UPDATE SET v = u.v * 2 + 1 "
+                "WHEN NOT MATCHED THEN INSERT *")
+        got = sorted((r["k"], r["v"]) for r in read(spark, t).collect())
+        assert got == [(0, 0.0), (1, 1.0), (2, 2.0), (3, 3.0), (4, 2.0),
+                       (9, 9.0)], write.__name__
 
 
 def test_alter_ftl_remaining_productions(spark, tmp_path):

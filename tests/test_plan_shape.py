@@ -198,7 +198,7 @@ def test_merge_hit_detection_broadcasts_keys(spark, tmp_path):
     """MERGE hit-file detection semi-joins the target scan against the
     broadcast source key set — no target shuffle for file marking."""
     from dremio_oss_spark.sources.delta import (
-        _live_with_file, write_delta)
+        _live_rows, resolve_snapshot, write_delta)
 
     t = str(tmp_path / "t")
     df = spark.createDataFrame(
@@ -206,7 +206,7 @@ def test_merge_hit_detection_broadcasts_keys(spark, tmp_path):
         "k long, p long, v double")
     write_delta(spark, df, t, partition_by=["p"])
     keys = spark.createDataFrame([(1,), (2,)], "k long")
-    live = _live_with_file(spark, t)
+    live = _live_rows(spark, t, resolve_snapshot(spark, t), True)
     plan = _plan(live.join(F.broadcast(keys), ["k"], "left_semi"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -365,6 +365,7 @@ def test_merge_source_join_is_costed_not_forced(spark, tmp_path):
 
     from dremio_oss_spark.sources import delta as D
     from dremio_oss_spark.sources import iceberg as I
+    from dremio_oss_spark.sources import lake_dml as L
 
     # source-level guard: no forced broadcast anywhere in the MERGE or
     # MOR-delete paths of either lake format.  A broadcast is allowed
@@ -375,7 +376,8 @@ def test_merge_source_join_is_costed_not_forced(spark, tmp_path):
     # occurrence must sit inside such a gate.
     for fn in (D.merge_into_delta, D._apply_deletion_vectors,
                I.merge_into_iceberg, I._apply_position_deletes,
-               I._apply_equality_deletes):
+               I._apply_equality_deletes, L.merge, L._write,
+               D._dv_commit_marked, I._mark_commit):
         src_txt = inspect.getsource(fn)
         n_bcast = src_txt.count("F.broadcast")
         if n_bcast:
@@ -392,8 +394,8 @@ def test_merge_source_join_is_costed_not_forced(spark, tmp_path):
                                 "k long, v double")
 
     D.merge_into_delta(spark, t, src, on=["k"])
-    D._last_merge_join.collect()  # finalize the adaptive plan
-    small_plan = (D._last_merge_join._jdf.queryExecution()
+    L._last_merge_join.collect()  # finalize the adaptive plan
+    small_plan = (L._last_merge_join._jdf.queryExecution()
                   .executedPlan().toString())
     assert "BroadcastHashJoin" in small_plan
 
@@ -403,8 +405,8 @@ def test_merge_source_join_is_costed_not_forced(spark, tmp_path):
         src2 = spark.createDataFrame([(2, -3.0), (300, -4.0)],
                                      "k long, v double")
         D.merge_into_delta(spark, t, src2, on=["k"])
-        D._last_merge_join.collect()
-        big_plan = (D._last_merge_join._jdf.queryExecution()
+        L._last_merge_join.collect()
+        big_plan = (L._last_merge_join._jdf.queryExecution()
                     .executedPlan().toString())
         assert "BroadcastHashJoin" not in big_plan
     finally:

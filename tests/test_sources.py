@@ -1573,8 +1573,9 @@ def test_iceberg_sort_order_metadata_recorded(spark, tmp_path):
 def test_delta_change_data_feed(spark, tmp_path):
     """Change Data Feed (PROTOCOL.md change data files): DML on a
     CDF-enabled table emits cdc files with delete / update pre+post /
-    insert rows; appends derive as inserts; the table_changes TVF reads
-    a version range; pre-CDF rewrites in range error."""
+    insert rows, in copy-on-write and merge-on-read alike; appends
+    derive as inserts; the table_changes TVF reads a version range;
+    pre-CDF rewrites in range error."""
     from pyspark.sql import functions as F
 
     from dremio_oss_spark.engine import Engine
@@ -1586,43 +1587,45 @@ def test_delta_change_data_feed(spark, tmp_path):
         write_delta,
     )
 
-    t = str(tmp_path / "t")
-    write_delta(spark,
-                spark.range(10).select(F.col("id").alias("k"),
-                                       (F.col("id") * 1.0).alias("v")),
-                t, enable_cdf=True)
-    write_delta(spark, spark.createDataFrame([(100, 1.0)],
-                                             "k long, v double"),
-                t, mode="append")
-    delete_from_delta(spark, t, "k >= 8 and k < 100")
-    update_delta(spark, t, {"v": "v + 0.5"}, "k < 2")
-    merge_into_delta(
-        spark, t,
-        spark.createDataFrame([(0, 9.9), (500, 5.0)], "k long, v double"),
-        on=["k"])
-
-    rows = read_delta_cdf(spark, t, 1).collect()
-    by = {}
-    for r in rows:
-        by.setdefault((r["_commit_version"], r["_change_type"]), set()).add(
-            r["k"])
-    assert by[(1, "insert")] == {100}
-    assert by[(2, "delete")] == {8, 9}
-    assert by[(3, "update_preimage")] == {0, 1}
-    assert by[(3, "update_postimage")] == {0, 1}
-    assert by[(4, "insert")] == {500}
-    assert by[(4, "update_preimage")] == {0}
-    # post image carries the merged value
-    post = [r for r in rows if r["_commit_version"] == 4
-            and r["_change_type"] == "update_postimage"]
-    assert post[0]["v"] == 9.9
-
-    # range narrowing via the TVF through engine SQL
     eng = Engine(spark)
-    n = eng.sql(
-        f"select count(*) as n from table(table_changes('{t}', 2, 2))"
-    ).first()["n"]
-    assert n == 2  # the two deletes
+    for mode in ("copy-on-write", "merge-on-read"):
+        t = str(tmp_path / mode)
+        write_delta(spark,
+                    spark.range(10).select(F.col("id").alias("k"),
+                                           (F.col("id") * 1.0).alias("v")),
+                    t, enable_cdf=True)
+        write_delta(spark, spark.createDataFrame([(100, 1.0)],
+                                                 "k long, v double"),
+                    t, mode="append")
+        delete_from_delta(spark, t, "k >= 8 and k < 100", mode=mode)
+        update_delta(spark, t, {"v": "v + 0.5"}, "k < 2", mode=mode)
+        merge_into_delta(
+            spark, t,
+            spark.createDataFrame([(0, 9.9), (500, 5.0)],
+                                  "k long, v double"),
+            on=["k"], mode=mode)
+
+        rows = read_delta_cdf(spark, t, 1).collect()
+        by = {}
+        for r in rows:
+            by.setdefault((r["_commit_version"], r["_change_type"]),
+                          set()).add(r["k"])
+        assert by[(1, "insert")] == {100}, mode
+        assert by[(2, "delete")] == {8, 9}, mode
+        assert by[(3, "update_preimage")] == {0, 1}, mode
+        assert by[(3, "update_postimage")] == {0, 1}, mode
+        assert by[(4, "insert")] == {500}, mode
+        assert by[(4, "update_preimage")] == {0}, mode
+        # post image carries the merged value
+        post = [r for r in rows if r["_commit_version"] == 4
+                and r["_change_type"] == "update_postimage"]
+        assert post[0]["v"] == 9.9, mode
+
+        # range narrowing via the TVF through engine SQL
+        n = eng.sql(
+            f"select count(*) as n from table(table_changes('{t}', 2, 2))"
+        ).first()["n"]
+        assert n == 2, mode  # the two deletes
 
     # a pre-CDF table errors
     t2 = str(tmp_path / "nocdf")
@@ -2541,43 +2544,162 @@ def test_iceberg_legacy_table_seq_preserved_through_carry_forward(
 
 
 def test_iceberg_mor_dml_no_match_no_commit(spark, tmp_path):
-    """A MOR UPDATE/MERGE/DELETE matching zero rows must not commit a
-    snapshot (Spark writes one empty part file for an empty DataFrame;
-    the zero-row part must not count as a delete file)."""
+    """An UPDATE/MERGE/DELETE matching zero rows and inserting none
+    must not commit a snapshot, in either mode (Spark writes one empty
+    part file for an empty DataFrame; the zero-row part must not count
+    as a delete or data file)."""
     from pyspark.sql import functions as F
 
     from dremio_oss_spark.sources.iceberg import (
         delete_from_iceberg, merge_into_iceberg, read_iceberg,
         resolve_snapshot, update_iceberg, write_iceberg)
 
-    t = str(tmp_path / "t")
     df = spark.range(10).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
-    write_iceberg(spark, df, t)
-    sid0 = resolve_snapshot(t).snapshot_id
-
-    assert update_iceberg(spark, t, {"v": "v + 1"}, "k > 1000",
-                          mode="merge-on-read") == sid0
-    assert resolve_snapshot(t).snapshot_id == sid0
-
     empty_src = spark.createDataFrame([], "k long, v double")
-    assert merge_into_iceberg(spark, t, empty_src, ["k"],
-                              mode="merge-on-read") == sid0
-    assert resolve_snapshot(t).snapshot_id == sid0
+    for mode in ("copy-on-write", "merge-on-read"):
+        t = str(tmp_path / mode)
+        write_iceberg(spark, df, t)
+        sid0 = resolve_snapshot(t).snapshot_id
 
-    assert delete_from_iceberg(spark, t, "k > 1000",
-                               mode="merge-on-read") == sid0
-    assert delete_from_iceberg(spark, t, "k > 1000",
-                               mode="merge-on-read",
-                               equality_cols=["k"]) == sid0
-    assert resolve_snapshot(t).snapshot_id == sid0
-    assert read_iceberg(spark, t).count() == 10
+        assert update_iceberg(spark, t, {"v": "v + 1"}, "k > 1000",
+                              mode=mode) == sid0
+        assert merge_into_iceberg(spark, t, empty_src, ["k"],
+                                  mode=mode) == sid0
+        assert merge_into_iceberg(spark, t, df.where("k < 3"), ["k"],
+                                  mode=mode, update_matched=False) == sid0
+        assert delete_from_iceberg(spark, t, "k > 1000", mode=mode) == sid0
+        assert delete_from_iceberg(spark, t, "k > 1000", mode=mode,
+                                   equality_cols=["k"]) == sid0
+        assert resolve_snapshot(t).snapshot_id == sid0, mode
+        assert read_iceberg(spark, t).count() == 10
 
-    # a matching MOR update still commits normally
-    update_iceberg(spark, t, {"v": "v + 1"}, "k = 1",
-                   mode="merge-on-read")
-    assert resolve_snapshot(t).snapshot_id != sid0
-    assert read_iceberg(spark, t).where("k = 1").collect()[0]["v"] == 2.0
+        # a matching update still commits normally
+        update_iceberg(spark, t, {"v": "v + 1"}, "k = 1", mode=mode)
+        assert resolve_snapshot(t).snapshot_id != sid0
+        assert read_iceberg(spark, t).where("k = 1").collect()[0]["v"] == 2.0
+
+
+def test_delta_dml_no_match_no_commit(spark, tmp_path):
+    """Delta counterpart of the no-match rule: no version is written by
+    a DELETE/UPDATE/MERGE that matches no row and inserts none, in
+    either mode; the current version is returned."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.sources.delta import (
+        delete_from_delta, merge_into_delta, read_delta, resolve_snapshot,
+        update_delta, write_delta)
+
+    df = spark.range(10).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
+    empty_src = spark.createDataFrame([], "k long, v double")
+    for mode in ("copy-on-write", "merge-on-read"):
+        t = str(tmp_path / mode)
+        v0 = write_delta(spark, df, t)
+        assert update_delta(spark, t, {"v": "v + 1"}, "k > 1000",
+                            mode=mode) == v0
+        assert merge_into_delta(spark, t, empty_src, ["k"],
+                                mode=mode) == v0
+        assert merge_into_delta(spark, t, df.where("k < 3"), ["k"],
+                                mode=mode, update_matched=False) == v0
+        assert delete_from_delta(spark, t, "k > 1000", mode=mode) == v0
+        assert resolve_snapshot(spark, t).version == v0, mode
+        assert delete_from_delta(spark, t, "k = 1", mode=mode) == v0 + 1
+        assert read_delta(spark, t).count() == 9
+
+
+def test_dml_after_mor_delete_sees_only_live_rows(spark, tmp_path):
+    """A copy-on-write statement after a merge-on-read DELETE must treat
+    the deleted rows as gone, on both formats: a MERGE re-inserts the
+    deleted key (the insert anti-join runs against live keys only), and
+    Delta's change-feed pre-images of a copy-on-write UPDATE hold no
+    dead row."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.sources import delta as D
+    from dremio_oss_spark.sources import iceberg as I
+
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)],
+                               "k long, v double")
+    src = spark.createDataFrame([(1, 10.0), (4, 40.0)], "k long, v double")
+    want = [(1, 10.0), (2, 2.0), (3, 3.0), (4, 40.0)]
+    for write, delete, merge, read in (
+            (D.write_delta, D.delete_from_delta, D.merge_into_delta,
+             D.read_delta),
+            (I.write_iceberg, I.delete_from_iceberg, I.merge_into_iceberg,
+             I.read_iceberg)):
+        t = str(tmp_path / write.__name__)
+        write(spark, df, t)
+        delete(spark, t, "k = 1", mode="merge-on-read")
+        merge(spark, t, src, on=["k"])
+        got = sorted((r["k"], r["v"]) for r in read(spark, t).collect())
+        assert got == want, write.__name__
+
+    t = str(tmp_path / "cdf")
+    D.write_delta(spark, df, t, enable_cdf=True)
+    D.delete_from_delta(spark, t, "k = 1", mode="merge-on-read")
+    v = D.update_delta(spark, t, {"v": "v + 1"}, "k <= 2")
+    pre = D.read_delta_cdf(spark, t, v, v).where(
+        F.col("_change_type") == "update_preimage")
+    assert [r["k"] for r in pre.collect()] == [2]
+
+
+def test_delete_keeps_rows_where_predicate_is_null(spark, tmp_path):
+    """SQL DELETE removes only the rows whose predicate is TRUE: a row
+    where it is NULL stays, in both modes on both formats (copy-on-write
+    used to drop it from every rewritten file)."""
+    from dremio_oss_spark.sources import delta as D
+    from dremio_oss_spark.sources import iceberg as I
+
+    df = spark.createDataFrame([(1, 1.0), (2, None), (3, 3.0)],
+                               "k long, v double").coalesce(1)
+    for write, delete, read in (
+            (D.write_delta, D.delete_from_delta, D.read_delta),
+            (I.write_iceberg, I.delete_from_iceberg, I.read_iceberg)):
+        for mode in ("copy-on-write", "merge-on-read"):
+            t = str(tmp_path / f"{write.__name__}_{mode}")
+            write(spark, df, t)
+            delete(spark, t, "v > 2", mode=mode)
+            got = sorted(r["k"] for r in read(spark, t).collect())
+            assert got == [1, 2], (write.__name__, mode)
+
+
+def test_dml_commit_after_concurrent_commit_raises(spark, tmp_path,
+                                                   monkeypatch):
+    """One snapshot per statement: a commit that lands between planning
+    and commit makes the statement raise ConcurrentWriteError on both
+    formats, instead of committing over a state it never read (Iceberg
+    used to report success with the deleted row still present; Delta
+    failed with a KeyError)."""
+    from dremio_oss_spark.sources import delta as D
+    from dremio_oss_spark.sources import iceberg as I
+    from dremio_oss_spark.sources import lake_dml
+
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)],
+                               "k long, v double")
+    plan = lake_dml.hit_files
+    for write, delete, update, read in (
+            (D.write_delta, D.delete_from_delta, D.update_delta,
+             D.read_delta),
+            (I.write_iceberg, I.delete_from_iceberg, I.update_iceberg,
+             I.read_iceberg)):
+        t = str(tmp_path / write.__name__)
+        write(spark, df, t)
+        raced = []
+
+        def plan_then_race(table, rows):
+            hits = plan(table, rows)
+            if not raced:
+                raced.append(True)
+                update(spark, t, {"v": "v * 10"}, "k = 2")
+            return hits
+
+        monkeypatch.setattr(lake_dml, "hit_files", plan_then_race)
+        with pytest.raises(D.ConcurrentWriteError):
+            delete(spark, t, "k = 1")
+        monkeypatch.setattr(lake_dml, "hit_files", plan)
+        got = sorted((r["k"], r["v"]) for r in read(spark, t).collect())
+        assert got == [(1, 1.0), (2, 20.0), (3, 3.0)], write.__name__
 
 
 def test_copy_into_skip_file_and_copy_errors(spark, tmp_path):
