@@ -2596,17 +2596,29 @@ class Engine:
             if fmt is None:
                 return None
             df = self.sql(select)
-            # SQL INSERT semantics: columns align by position
-            if fmt == "delta":
-                cols = [f.name for f in
-                        D.resolve_snapshot(self.spark, path).schema.fields]
-            else:
-                cols = [f.name for f in
-                        I.resolve_snapshot(path).schema.fields]
-            if len(df.columns) != len(cols):
+            fields = lake_dml.codec(fmt).at(self.spark, path,
+                                            None).schema.fields
+            if len(df.columns) != len(fields):
                 raise ValueError(
-                    f"INSERT arity {len(df.columns)} != table {len(cols)}")
-            df = df.toDF(*cols)
+                    f"INSERT arity {len(df.columns)} != table {len(fields)}")
+            # SQL INSERT semantics: columns align by position, and a
+            # column of another type casts to the table's where Spark's
+            # ANSI store assignment allows it; any other mismatch
+            # reaches the writer's type check and raises
+            df = df.toDF(*[f.name for f in fields])
+
+            def assignable(src, dst) -> bool:
+                parse = self.spark._jsparkSession.parseDataType
+                return (self.spark._jvm.org.apache.spark.sql.catalyst
+                        .expressions.Cast.canANSIStoreAssign(
+                            parse(src.json()), parse(dst.json())))
+            casts = {f.name: f.dataType
+                     for f, have in zip(fields, df.schema.fields)
+                     if have.dataType != f.dataType
+                     and assignable(have.dataType, f.dataType)}
+            if casts:
+                df = df.select(*[F.col(c).cast(casts[c]).alias(c)
+                                 if c in casts else c for c in df.columns])
             fn = D.write_delta if fmt == "delta" else I.write_iceberg
             return self._status(
                 "INSERT INTO", fn(self.spark, df, path, mode="append"))
@@ -2700,9 +2712,8 @@ class Engine:
                     dml.truncate(self.spark, path)
                     return self._status("TRUNCATE TABLE", path)
                 return None
-            out = (D.truncate_delta(self.spark, path)
-                   if fmt == "delta" else I.truncate_iceberg(path))
-            return self._status("TRUNCATE TABLE", out)
+            return self._status("TRUNCATE TABLE", lake_dml.truncate(
+                lake_dml.codec(fmt), self.spark, path))
 
         m = re.match(
             r"\s*rollback\s+table\s+'([^']+)'\s+to\s+snapshot\s+"
@@ -2712,9 +2723,8 @@ class Engine:
             fmt = self._lake_format(path)
             if fmt is None:
                 return None
-            out = (D.rollback_delta(self.spark, path, snap)
-                   if fmt == "delta" else I.rollback_iceberg(path, snap))
-            return self._status("ROLLBACK", out)
+            return self._status("ROLLBACK", lake_dml.rollback(
+                lake_dml.codec(fmt), self.spark, path, snap))
 
         m = re.match(r"\s*optimize\s+table\s+'([^']+)'"
                      r"\s+rewrite\s+manifests\s*$", query, re.I)
@@ -2756,27 +2766,15 @@ class Engine:
                                  "max_file_size_mb"):
                         raise ValueError(f"unknown OPTIMIZE option {k!r}")
                     options[k] = float(v.strip())
-            if not zcols and fmt == "delta":
-                # declared clustering key (ALTER TABLE CLUSTER BY,
-                # SqlAlterTableClusterKey): OPTIMIZE without an
-                # explicit ZORDER applies it
-                ck = D.delta_properties(self.spark, path).get(
-                    "dremio.cluster_by")
-                if ck:
-                    zcols = ck
-            if zcols:
-                if fmt != "delta":
-                    raise ValueError(
-                        "ZORDER BY is implemented for Delta tables")
-                out = D.optimize_delta(
-                    self.spark, path, where=where,
-                    zorder_by=[c.strip() for c in zcols.split(",")],
-                    options=options)
-                return self._status("OPTIMIZE ZORDER", out)
-            fn = D.optimize_delta if fmt == "delta" else I.optimize_iceberg
-            return self._status("OPTIMIZE", fn(self.spark, path,
-                                               where=where,
-                                               options=options))
+            codec = lake_dml.codec(fmt)
+            zorder_by = zcols and [c.strip() for c in zcols.split(",")]
+            kind, _ = lake_dml.layout(
+                codec.properties(codec.at(self.spark, path, None)),
+                zorder_by)
+            return self._status(
+                "OPTIMIZE ZORDER" if kind == "zorder" else "OPTIMIZE",
+                lake_dml.optimize(codec, self.spark, path, where=where,
+                                  zorder_by=zorder_by, options=options))
 
         m = re.match(
             r"\s*vacuum\s+table\s+'([^']+)'"
@@ -2800,21 +2798,15 @@ class Engine:
                     return None
                 return int(_dt.datetime.fromisoformat(s).timestamp()
                            * 1000)
+            codec = lake_dml.codec(fmt)
             if m.group(4):  # REMOVE ORPHAN FILES
-                cutoff = _ms(m.group(5))
-                out = (D.remove_orphan_delta_files(self.spark, path,
-                                                   cutoff)
-                       if fmt == "delta"
-                       else I.remove_orphan_iceberg_files(path, cutoff))
+                out = lake_dml.remove_orphan_files(
+                    codec, self.spark, path, _ms(m.group(5)))
                 return self._status("VACUUM REMOVE ORPHAN FILES",
                                     f"{len(out)} files removed")
-            keep = int(m.group(3)) if m.group(3) else 1
-            cutoff = _ms(m.group(2))
-            out = (D.vacuum_delta(self.spark, path, keep_last=keep,
-                                  older_than_ms=cutoff)
-                   if fmt == "delta"
-                   else I.expire_iceberg_snapshots(
-                       path, keep_last=keep, older_than_ms=cutoff))
+            out = lake_dml.vacuum(
+                codec, self.spark, path, keep_last=int(m.group(3) or 1),
+                older_than_ms=_ms(m.group(2)))
             return self._status("VACUUM", f"{len(out)} files removed")
 
         # VACUUM CATALOG '<root>' [RETAIN <n> SNAPSHOTS]: catalog-wide
@@ -2858,24 +2850,12 @@ class Engine:
                    if fmt == "delta" else I.alter_iceberg(path, drop=[col]))
             return self._status("ALTER TABLE DROP COLUMN", out)
 
+        # RENAME COLUMN c TO newname, and CHANGE/ALTER/MODIFY COLUMN c
+        # newname newtype (SqlAlterTableChangeColumn, alter.ftl:152):
+        # widening type promotion and/or rename; a rename keeps the type
         m = re.match(
             r"\s*alter\s+table\s+'([^']+)'\s+rename\s+column\s+"
-            r"(\w+)\s+to\s+(\w+)\s*$", query, re.I)
-        if m:
-            path, old, new = m.groups()
-            fmt = self._lake_format(path)
-            if fmt is None:
-                return None
-            out = (D.rename_delta_column(self.spark, path, old, new)
-                   if fmt == "delta"
-                   else I.rename_iceberg_column(self.spark, path, old, new))
-            return self._status("ALTER TABLE RENAME COLUMN",
-                                f"{old} -> {new} @ {out}")
-
-        # CHANGE/ALTER/MODIFY COLUMN c [newname] newtype
-        # (SqlAlterTableChangeColumn, alter.ftl:152): widening type
-        # promotion and/or rename
-        m = re.match(
+            r"(\w+)\s+to\s+(\w+)()\s*$", query, re.I) or re.match(
             r"\s*alter\s+table\s+'([^']+)'\s+(?:change|modify|alter)\s+"
             r"column\s+(\w+)\s+(\w+)\s+([\w(),]+)\s*$", query, re.I)
         if m:
@@ -2883,11 +2863,12 @@ class Engine:
             fmt = self._lake_format(path)
             if fmt is None:
                 return None
-            out = (D.change_delta_column(self.spark, path, col,
-                                         new_name, new_type)
-                   if fmt == "delta"
-                   else I.change_iceberg_column(self.spark, path, col,
-                                                new_name, new_type))
+            change = {"delta": D.change_delta_column,
+                      "iceberg": I.change_iceberg_column}[fmt]
+            out = change(self.spark, path, col, new_name, new_type or None)
+            if not new_type:
+                return self._status("ALTER TABLE RENAME COLUMN",
+                                    f"{col} -> {new_name} @ {out}")
             return self._status(
                 "ALTER TABLE CHANGE COLUMN",
                 f"{col} -> {new_name} {new_type} @ {out}")
@@ -3043,8 +3024,7 @@ class Engine:
         directory walk here; against a real catalog service this is the
         table-listing API, and per-table expiry is embarrassingly
         parallel (independent tables, metadata-sized work each)."""
-        from .sources import delta as D
-        from .sources import iceberg as I
+        from .sources import lake_dml
 
         rows: list[tuple[str, str, int]] = []
         for dirpath, dirnames, _ in os.walk(root):
@@ -3056,11 +3036,8 @@ class Engine:
             if fmt is None:
                 continue
             dirnames[:] = []  # a table is a leaf; don't recurse inside
-            removed = (D.vacuum_delta(self.spark, dirpath,
-                                      keep_last=keep_last)
-                       if fmt == "delta"
-                       else I.expire_iceberg_snapshots(
-                           dirpath, keep_last=keep_last))
+            removed = lake_dml.vacuum(lake_dml.codec(fmt), self.spark,
+                                      dirpath, keep_last=keep_last)
             rows.append((dirpath, fmt, len(removed)))
         return self._local_df(
             rows, "table_path string, format string, files_removed int")
@@ -3274,13 +3251,11 @@ class Engine:
             # flips this dataset's ANALYZE to exact NDV
             path = target.strip("'")
             fmt = self._lake_format(path)
-            from .sources import delta as D
-            from .sources import iceberg as I
+            from .sources import lake_dml
             try:
-                props = ({} if fmt is None else
-                         D.delta_properties(self.spark, path)
-                         if fmt == "delta" else
-                         I.resolve_snapshot(path).properties)
+                codec = fmt and lake_dml.codec(fmt)
+                props = (codec.properties(codec.at(self.spark, path, None))
+                         if codec else {})
             except Exception:  # noqa: BLE001
                 props = {}
             exact = props.get("dremio.approximate_stats") == "false"

@@ -586,14 +586,14 @@ def alter_table(root: str, branch: str, key: str,
     COLUMN — branch-scoped schema evolution: the new schema rides a
     detached snapshot pinned to the branch's catalog pointer; every
     other ref keeps its schema (per-snapshot schema-id resolution,
-    `iceberg.alter_iceberg_detached`)."""
-    from .iceberg import alter_iceberg_detached
+    `iceberg.alter_iceberg` with a parent snapshot)."""
+    from .iceberg import alter_iceberg
 
     head = _load_refs(root)["branches"][branch]
     content = dict(_table_content(root, branch, key))
     loc = os.path.join(root, content["location"])
-    sid = alter_iceberg_detached(loc, content["snapshot_id"],
-                                 add=add, drop=drop)
+    sid = alter_iceberg(loc, add=add, drop=drop,
+                        parent_snapshot=content["snapshot_id"])
     content["snapshot_id"] = sid
     return commit(root, branch, {key: content}, f"alter {key}",
                   author=author, expect_head=head)

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1320,13 +1321,14 @@ def _stage_cdc(spark: SparkSession, changes: DataFrame, table: str,
 def _cow_commit(spark: SparkSession, table: str, snap: DeltaSnapshot,
                 operation: str, hit_rel: list[str], rewrite,
                 inserts: DataFrame | None,
-                changes: DataFrame | None = None,
-                data_change: bool = True) -> int:
+                changes: DataFrame | None = None) -> int:
     """Copy-on-write commit against `snap` (the `lake_dml` codec's
-    `rewrite`): re-stage `hit_rel` through `rewrite(hits_df)`,
-    optionally stage `inserts` as brand-new files, and log removes +
-    adds (+ `changes` as cdc files) as the version after `snap`.
-    Removing and adding nothing commits nothing.
+    `rewrite`): re-stage `hit_rel` through `rewrite(hits_df)` (nothing
+    when `rewrite` is None), optionally stage `inserts` as brand-new
+    files, and log removes + adds (+ `changes` as cdc files) as the
+    version after `snap`.  Removing and adding nothing commits nothing.
+    OPTIMIZE commits dataChange=false: readers of its version see
+    identical rows and streams don't reprocess them.
 
     Scale shape: ONE scan over the hit files (file-level skipping — the
     same pruning `DeltaLakeScanPrel` relies on; untouched files are
@@ -1334,17 +1336,18 @@ def _cow_commit(spark: SparkSession, table: str, snap: DeltaSnapshot,
     """
     version = snap.version + 1
     part_cols = snap.partition_cols
+    data_change = operation != "OPTIMIZE"
     actions: list[dict] = [
         {"commitInfo": {"operation": operation, "timestamp": _commit_ts()}}
     ]
     to_stage: DataFrame | None = None
-    if hit_rel:
+    if hit_rel and rewrite is not None:
         to_stage = rewrite(_live_rows(spark, table, snap, files=hit_rel))
-        actions.extend(
-            {"remove": {"path": rel, "deletionTimestamp": version,
-                        "dataChange": data_change}}
-            for rel in hit_rel
-        )
+    actions.extend(
+        {"remove": {"path": rel, "deletionTimestamp": version,
+                    "dataChange": data_change}}
+        for rel in hit_rel
+    )
     if inserts is not None:
         cols = [f.name for f in snap.schema.fields] if snap.schema else None
         ins = inserts.select(*cols) if cols else inserts
@@ -1368,11 +1371,6 @@ def _cow_commit(spark: SparkSession, table: str, snap: DeltaSnapshot,
     version = _commit_with_cdc_cleanup(table, version, actions)
     _maybe_checkpoint(spark, table, version)
     return version
-
-
-def delta_properties(spark: SparkSession, table: str) -> dict:
-    """Current metaData.configuration (table properties) map."""
-    return dict(resolve_snapshot(spark, table).config)
 
 
 def set_delta_properties(spark: SparkSession, table: str,
@@ -1594,136 +1592,6 @@ def merge_into_delta(spark: SparkSession, table: str, source: DataFrame,
                           insert_not_matched, mode, update_matched)
 
 
-def _zorder_rewrite(zorder_by: list[str], n_files: int, bits: int = 16):
-    """Rewrite hook clustering rows along a Z-curve over `zorder_by`.
-
-    Each column linearly quantizes to `bits` levels between its min and
-    max (two driver scalars per column — no global-ordering window, so
-    nothing funnels through one partition at 100 TB); the z-value
-    interleaves the columns' bits, and a range repartition + sort on it
-    yields `n_files` files whose min/max stats are tight on EVERY
-    z-ordered column — multidimensional file skipping, where a linear
-    sort only serves its leading column."""
-    def rw(hits: DataFrame) -> DataFrame:
-        lo_hi = hits.agg(*[f(c) for c in zorder_by
-                           for f in (F.min, F.max)]).first()
-        df = hits
-        for i, c in enumerate(zorder_by):
-            lo = float(lo_hi[2 * i] or 0)
-            hi = float(lo_hi[2 * i + 1] or 0)
-            span = (hi - lo) or 1.0
-            q = F.least(
-                F.floor((F.col(c).cast("double") - F.lit(lo))
-                        / F.lit(span) * (1 << bits)),
-                F.lit((1 << bits) - 1),
-            ).cast("bigint")
-            df = df.withColumn(f"__q_{i}", F.greatest(q, F.lit(0)))
-        z = None
-        for k in range(bits):
-            for i in range(len(zorder_by)):
-                bit = (F.shiftright(F.col(f"__q_{i}"), k)
-                       .bitwiseAND(F.lit(1)))
-                term = bit * F.lit(2 ** (k * len(zorder_by) + i))
-                z = term if z is None else z + term
-        return (df.withColumn("__z", z.cast("bigint"))
-                .repartitionByRange(n_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z", *[f"__q_{i}" for i in range(len(zorder_by))]))
-
-    return rw
-
-
-def _binpack_select(table: str, hit_rel: list[str],
-                    options: dict) -> tuple[list[str], int] | None:
-    """Bin-pack candidate selection per the reference's OPTIMIZE
-    options (`parserImpls.ftl` ParseOptimizeOptions,
-    OptimizeHandler.java): files smaller than MIN_FILE_SIZE_MB or
-    larger than MAX_FILE_SIZE_MB qualify; fewer than MIN_INPUT_FILES
-    qualifying files → no-op (None).  Returns (candidates, n_output)
-    with n_output sized so rewritten files land near
-    TARGET_FILE_SIZE_MB.  Sizes come from the snapshot's file listing
-    (driver-side getsize — file-count bounded, the same metadata the
-    commit already walks)."""
-    import math
-
-    tgt_mb = float(options.get("target_file_size_mb", 256))
-    mn = float(options.get("min_file_size_mb", 0.75 * tgt_mb)) * 2**20
-    mx = float(options.get("max_file_size_mb", 1.8 * tgt_mb)) * 2**20
-    min_in = int(options.get("min_input_files", 5))
-    sizes = {rel: os.path.getsize(os.path.join(table, rel))
-             for rel in hit_rel}
-    cand = [rel for rel in hit_rel
-            if sizes[rel] < mn or sizes[rel] > mx]
-    if len(cand) < max(1, min_in):
-        return None
-    n_out = max(1, math.ceil(sum(sizes[r] for r in cand)
-                             / (tgt_mb * 2**20)))
-    return cand, n_out
-
-
-def optimize_delta(spark: SparkSession, table: str,
-                   where: str | None = None,
-                   zorder_by: list[str] | None = None,
-                   zorder_files: int = 8,
-                   options: dict | None = None) -> int:
-    """OPTIMIZE <delta table> [REWRITE DATA USING BIN_PACK]
-    [FOR PARTITIONS <pred>] [ZORDER BY cols] [(options)]:
-    bin-pack live files (dataChange=false — readers of this version see
-    identical rows, streams don't reprocess).  With `where`, only files
-    containing matching rows compact (their deletion vectors fold in;
-    untouched files keep theirs).  With `zorder_by`, rewritten rows
-    cluster along a Z-curve so min/max file skipping works on every
-    listed column.  With `options` (the reference's MIN_INPUT_FILES /
-    TARGET_FILE_SIZE_MB / MIN_FILE_SIZE_MB / MAX_FILE_SIZE_MB,
-    ParseOptimizeOptions), only out-of-band-sized files rewrite, into
-    outputs near the target size; fewer than MIN_INPUT_FILES qualifying
-    files is a no-op commit-free return.  Reference: dremio-oss
-    OPTIMIZE TABLE (`parserImpls.ftl` OPTIMIZE, `OptimizeHandler.java`);
-    Z-curve layout follows the public Delta OPTIMIZE ZORDER design."""
-    snap = resolve_snapshot(spark, table)
-    if where is None:
-        hit_rel = sorted(snap.files)
-    else:
-        hit_rel = lake_dml.hit_files(
-            table, _live_rows(spark, table, snap, True).where(where))
-    rewrite = (_zorder_rewrite(zorder_by, zorder_files)
-               if zorder_by else (lambda hits: hits))
-    if options:
-        got = _binpack_select(table, hit_rel, options)
-        if got is None:
-            return snap.version  # below MIN_INPUT_FILES: no-op
-        hit_rel, n_out = got
-        if not zorder_by:
-            rewrite = lambda hits: hits.repartition(n_out)  # noqa: E731
-    return _cow_commit(spark, table, snap, "OPTIMIZE", hit_rel, rewrite,
-                       None, data_change=False)
-
-
-def truncate_delta(spark: SparkSession, table: str) -> int:
-    """TRUNCATE TABLE (reference SqlTruncateTable,
-    `TruncateTableHandler.java`): remove every live row in one commit.
-    Metadata-only — the commit lists a `remove` per live file, no scan,
-    no rewrite (time travel to prior versions still works; VACUUM
-    reclaims the files later).  On a CDF-enabled table the change rows
-    must be staged, so it routes through the scan-based DELETE
-    instead."""
-    snap = resolve_snapshot(spark, table)
-    if _cdf_enabled(snap):
-        return delete_from_delta(spark, table, "true",
-                                 mode="copy-on-write")
-    if not snap.files:
-        return snap.version  # already empty: no-op
-    version = snap.version + 1
-    actions = [{"commitInfo": {"operation": "TRUNCATE",
-                               "timestamp": _commit_ts()}}]
-    actions += [{"remove": {"path": rel, "deletionTimestamp": version,
-                            "dataChange": True}}
-                for rel in sorted(snap.files)]
-    version = _commit_with_cdc_cleanup(table, version, actions)
-    _maybe_checkpoint(spark, table, version)
-    return version
-
-
 def rewrite_manifests_delta(spark: SparkSession, table: str) -> int:
     """OPTIMIZE TABLE ... REWRITE MANIFESTS on a Delta table: metadata
     compaction without touching data — materialize a CHECKPOINT of the
@@ -1734,76 +1602,6 @@ def rewrite_manifests_delta(spark: SparkSession, table: str) -> int:
     snap = resolve_snapshot(spark, table)
     checkpoint_delta(spark, table, snap.version)
     return snap.version
-
-
-def vacuum_delta(spark: SparkSession, table: str,
-                 keep_last: int = 1,
-                 older_than_ms: int | None = None) -> list[str]:
-    """VACUUM <delta table>: physically delete data files no longer
-    referenced by the retained versions (default: current only —
-    delta.io VACUUM semantics; RETAIN n keeps time travel to the last
-    n versions working; `older_than_ms` additionally retains every
-    version committed at-or-after the cutoff).  Returns deleted
-    table-relative paths."""
-    commits = [v for v, _ in _commit_files(table)]
-    keep_versions = commits[-max(1, keep_last):]
-    if older_than_ms is not None:
-        by_v = dict(_commit_files(table))
-        keep_versions = sorted(set(keep_versions) | {
-            v for v in commits
-            if os.path.getmtime(by_v[v]) * 1000 >= older_than_ms})
-    live: set[str] = set()
-    snap = None
-    for v in keep_versions:
-        snap = resolve_snapshot(spark, table, v)
-        live |= {os.path.realpath(os.path.join(table, rel))
-                 for rel in snap.files}
-    removed: list[str] = []
-    for root, dirs, files in os.walk(table):
-        # never vacuum the log or the change feed: cdc files are not
-        # live DATA files but ARE the CDF history (delta-spark retains
-        # them on the same retention clock as the log, not the live set)
-        if _LOG_DIR in root or "_change_data" in root:
-            continue
-        for fn in files:
-            p = os.path.join(root, fn)
-            if fn.endswith(".parquet") and os.path.realpath(p) not in live:
-                os.remove(p)
-                removed.append(os.path.relpath(p, table))
-    return sorted(removed)
-
-
-def remove_orphan_delta_files(spark: SparkSession, table: str,
-                              older_than_ms: int | None = None
-                              ) -> list[str]:
-    """VACUUM TABLE ... REMOVE ORPHAN FILES [older_than = 'ts'] on a
-    Delta table: delete parquet files under the table referenced by NO
-    version of the log (aborted writes, leftover staging) — time travel
-    stays intact, unlike retention VACUUM.  The mtime cutoff protects
-    files an in-flight commit wrote but has not referenced yet.
-    Returns deleted table-relative paths."""
-    referenced: set[str] = set()
-    for v, _ in _commit_files(table):
-        snap = resolve_snapshot(spark, table, v)
-        referenced.update(os.path.realpath(os.path.join(table, rel))
-                          for rel in snap.files)
-    removed: list[str] = []
-    for root, dirs, files in os.walk(table):
-        # the log, CDF files, and DV sidecars are never data orphans
-        if _LOG_DIR in root or "_change_data" in root:
-            continue
-        for fn in files:
-            p = os.path.join(root, fn)
-            if not fn.endswith(".parquet"):
-                continue
-            if os.path.realpath(p) in referenced:
-                continue
-            if (older_than_ms is not None
-                    and os.path.getmtime(p) * 1000 >= older_than_ms):
-                continue
-            os.remove(p)
-            removed.append(os.path.relpath(p, table))
-    return sorted(removed)
 
 
 def read_delta_cdf(spark: SparkSession, table: str, start_version: int,
@@ -1882,14 +1680,12 @@ def read_delta_cdf(spark: SparkSession, table: str, start_version: int,
     return out
 
 
-def rollback_delta(spark: SparkSession, table: str, version: int) -> int:
-    """ROLLBACK TABLE ... TO SNAPSHOT: commit a new version whose live
-    file set (and schema) is exactly that of `version` — history is
-    preserved (roll-forward is itself a commit), no files are copied.
-    Reference: dremio-oss ROLLBACK TABLE (`parserImpls.ftl:1211`,
-    `SqlRollbackTable`)."""
-    target = resolve_snapshot(spark, table, version)
-    cur = resolve_snapshot(spark, table)
+def _restore(spark: SparkSession, table: str, cur: DeltaSnapshot,
+             target: DeltaSnapshot) -> int:
+    """The `lake_dml` codec's `restore` (ROLLBACK): one commit after
+    `cur` restating `target`'s metaData (schema, partitioning, table
+    properties), its files and their deletion vectors; no data file is
+    copied."""
     new_v = cur.version + 1
     actions: list[dict] = [
         {"commitInfo": {"operation": "ROLLBACK", "timestamp": _commit_ts()}},
@@ -1979,28 +1775,6 @@ def delta_history(path: str) -> list[dict]:
     return out
 
 
-def rename_delta_column(spark: SparkSession, table: str,
-                        old: str, new: str) -> int:
-    """ALTER TABLE ... RENAME COLUMN, as a copy-on-write rewrite.
-
-    Stated deviation: the protocol's metadata-only rename needs column
-    mapping (name -> physical id) which this name-based reader doesn't
-    implement; rewriting the data keeps every reader correct at the cost
-    of one full-table write — the tradeoff delta tables without
-    columnMapping make too.  Partition columns can't be renamed (their
-    values live in the log keyed by name across history)."""
-    snap = resolve_snapshot(spark, table)
-    if old in snap.partition_cols:
-        raise ValueError(f"cannot rename partition column {old!r}")
-    if old not in [f.name for f in snap.schema.fields]:
-        raise ValueError(f"no column {old!r}")
-    if new in [f.name for f in snap.schema.fields]:
-        raise ValueError(f"column {new!r} already exists")
-    df = read_delta(spark, table).withColumnRenamed(old, new)
-    return write_delta(spark, df, table, mode="overwrite",
-                       partition_by=snap.partition_cols)
-
-
 _LEGAL_PROMOTIONS = {
     # Iceberg's legal type promotions (spec "Schema Evolution") — the
     # widenings every reader of old data can apply losslessly
@@ -2029,13 +1803,19 @@ def _check_promotion(old_t: str, new_t: str) -> None:
 
 
 def change_delta_column(spark: SparkSession, table: str, col: str,
-                        new_name: str, new_type: str) -> int:
+                        new_name: str, new_type: str | None = None) -> int:
     """ALTER TABLE ... CHANGE/MODIFY COLUMN c [newname] newtype
-    (reference SqlAlterTableChangeColumn, alter.ftl:152): rename and/or
-    a WIDENING type promotion, validated against Iceberg's legal
-    promotions.  Same stated deviation as RENAME COLUMN: applied as a
-    copy-on-write rewrite (cast + rename) so every reader stays
-    correct without column-mapping metadata."""
+    (reference SqlAlterTableChangeColumn, alter.ftl:152) and RENAME
+    COLUMN (`new_type=None`: the type stays): rename and/or a WIDENING
+    type promotion, validated against Iceberg's legal promotions.
+
+    Stated deviation: the protocol's metadata-only change needs column
+    mapping (name -> physical id), which this name-based reader doesn't
+    implement; a copy-on-write rewrite (cast + rename) keeps every
+    reader correct at the cost of one full-table write — the tradeoff
+    Delta tables without columnMapping make too.  Partition columns
+    can't change (their values live in the log keyed by name across
+    history)."""
     snap = resolve_snapshot(spark, table)
     if col in snap.partition_cols:
         raise ValueError(f"cannot change partition column {col!r}")
@@ -2044,9 +1824,10 @@ def change_delta_column(spark: SparkSession, table: str, col: str,
         raise ValueError(f"no column {col!r}")
     if new_name != col and new_name in types:
         raise ValueError(f"column {new_name!r} already exists")
-    _check_promotion(types[col], new_type.lower())
     df = read_delta(spark, table)
-    df = df.withColumn(col, F.col(col).cast(new_type))
+    if new_type is not None:
+        _check_promotion(types[col], new_type.lower())
+        df = df.withColumn(col, F.col(col).cast(new_type))
     if new_name != col:
         df = df.withColumnRenamed(col, new_name)
     return write_delta(spark, df, table, mode="overwrite",
@@ -2076,7 +1857,17 @@ def read_delta_incremental(spark: SparkSession, table: str,
         spark, table, snap_to.schema, snap_to.partition_cols, new_files)
 
 
-# The lake_dml codec: what Delta alone decides for DELETE/UPDATE/MERGE.
+def _referenced(spark: SparkSession, table: str, version: int) -> set[str]:
+    """Realpaths of the data files and deletion-vector files `version`
+    reads (the `lake_dml` codec's `referenced`)."""
+    snap = resolve_snapshot(spark, table, version)
+    return {os.path.realpath(os.path.join(table, rel))
+            for rel in list(snap.files)
+            + [dv["pathOrInlineDv"] for dv in snap.dvs.values()
+               if dv.get("storageType") == "p"]}
+
+
+# The lake_dml codec: what Delta alone decides for DML and maintenance.
 DML = lake_dml.Codec(
     resolve=lambda spark, table, _parent: resolve_snapshot(spark, table),
     mode=lambda snap, _verb: (
@@ -2087,5 +1878,22 @@ DML = lake_dml.Codec(
     rewrite=_cow_commit,
     mark=_dv_commit_marked,
     cdf=_cdf_enabled,
-    ops={"delete": "DELETE", "update": "UPDATE", "merge": "MERGE"},
+    ops={"delete": "DELETE", "update": "UPDATE", "merge": "MERGE",
+         "optimize": "OPTIMIZE", "truncate": "TRUNCATE"},
+    at=resolve_snapshot,
+    files=lambda _table, snap: sorted(snap.files),
+    properties=lambda snap: snap.config,
+    # a commit's age is its log file's mtime
+    versions=lambda _spark, table: [
+        (v, int(os.path.getmtime(fp) * 1000))
+        for v, fp in _commit_files(table)],
+    referenced=_referenced,
+    pins=lambda _table: set(),
+    expire=lambda _table, _kept: None,
+    restore=_restore,
+    log_dirs=(_LOG_DIR, "_change_data"),
 )
+
+optimize_delta = partial(lake_dml.optimize, DML)
+vacuum_delta = partial(lake_dml.vacuum, DML)
+rollback_delta = partial(lake_dml.rollback, DML)

@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +67,19 @@ def _metadata_file(path: str) -> str:
     if best is None:
         raise FileNotFoundError(f"no Iceberg metadata json under {md}")
     return best
+
+
+def _load_meta(table: str) -> dict:
+    with open(_metadata_file(table)) as f:
+        return json.load(f)
+
+
+def _overwrite_meta(table: str, meta: dict) -> None:
+    """Rewrite the CURRENT metadata file in place: the metadata-only
+    changes (properties, schema, partition spec, refs, expiry) take no
+    version claim, unlike `_commit_snapshot`."""
+    with open(_metadata_file(table), "w") as f:
+        json.dump(meta, f)
 
 
 def _local(path: str, table: str) -> str:
@@ -150,6 +164,10 @@ class IcebergSnapshot:
         self.meta: dict = {}
         self.detached = False  # commits leave table refs alone (_dml_snapshot)
 
+    @property
+    def version(self) -> int:
+        return self.snapshot_id
+
 
 def _snapshot_ts_ms(meta: dict) -> int:
     """Wall-clock snapshot timestamp (epoch ms), kept strictly
@@ -166,8 +184,7 @@ def resolve_snapshot_at(table: str, timestamp_ms: int) -> int:
     """TIMESTAMP AS OF: snapshot-id of the last snapshot whose
     timestamp-ms is <= `timestamp_ms` (reference:
     `TimeTravelTableMacro` AT TIMESTAMP over snapshot history)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     best, running = None, 0
     for s in sorted(meta.get("snapshots") or [],
                     key=lambda s: s["snapshot-id"]):
@@ -184,8 +201,7 @@ def resolve_ref(table: str, ref: str) -> int:
     """Snapshot id behind a named ref (spec `refs` map: branches and
     tags).  Reference: Nessie-style AT BRANCH/AT TAG refs
     (`parserImpls.ftl:943`) over the Iceberg refs map."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     r = (meta.get("refs") or {}).get(ref)
     if r is None:
         raise FileNotFoundError(f"no ref {ref!r} in {table}")
@@ -216,8 +232,7 @@ def _snapshot_meta(table: str, snapshot_id: int | None = None,
         if snapshot_id is not None:
             raise ValueError("give snapshot_id OR ref, not both")
         snapshot_id = resolve_ref(table, ref)
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     snaps = meta.get("snapshots") or []
     if not snaps:
         raise FileNotFoundError(f"Iceberg table {table} has no snapshots")
@@ -1134,8 +1149,7 @@ def create_iceberg_ref(table: str, name: str, kind: str = "branch",
     `parserImpls.ftl:943`).  Branches record their fork base so
     MERGE BRANCH can check fast-forward safety; tags are immutable
     pointers (and VACUUM retains whatever any ref points at)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     sid = (snapshot_id if snapshot_id is not None
            else meta["current-snapshot-id"])
     refs = meta.setdefault("refs", {})
@@ -1145,8 +1159,7 @@ def create_iceberg_ref(table: str, name: str, kind: str = "branch",
     if kind == "branch":
         entry["base-snapshot"] = sid
     refs[name] = entry
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    _overwrite_meta(table, meta)
     return sid
 
 
@@ -1158,8 +1171,7 @@ def assign_iceberg_ref(table: str, name: str, to_kind: str,
     snapshot id.  A reassigned BRANCH also resets its fork base — the
     reassignment is a new lineage start, so a later MERGE BRANCH
     fast-forward check measures from here."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     refs = meta.get("refs") or {}
     if name not in refs:
         raise FileNotFoundError(f"no ref {name!r} in {table}")
@@ -1179,20 +1191,17 @@ def assign_iceberg_ref(table: str, name: str, to_kind: str,
     refs[name]["snapshot-id"] = sid
     if refs[name].get("type") == "branch":
         refs[name]["base-snapshot"] = sid
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    _overwrite_meta(table, meta)
     return sid
 
 
 def drop_iceberg_ref(table: str, name: str) -> None:
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     if name == "main":
         raise ValueError("cannot drop ref 'main'")
     if (meta.get("refs") or {}).pop(name, None) is None:
         raise FileNotFoundError(f"no ref {name!r} in {table}")
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    _overwrite_meta(table, meta)
 
 
 def merge_iceberg_branch(table: str, source: str,
@@ -1201,8 +1210,7 @@ def merge_iceberg_branch(table: str, source: str,
     the target has not moved since the source forked (otherwise the two
     histories diverged and a rebase is required — same contract as the
     engine's snapshot store and Nessie's fast-forward merge)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     refs = meta.setdefault("refs", {})
     src = refs.get(source)
     if src is None:
@@ -1220,8 +1228,7 @@ def merge_iceberg_branch(table: str, source: str,
         refs["main"] = {"snapshot-id": sid, "type": "branch"}
     else:
         refs[target]["snapshot-id"] = sid
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    _overwrite_meta(table, meta)
     return sid
 
 
@@ -1276,8 +1283,7 @@ def write_iceberg(spark: SparkSession, df: DataFrame, table: str,
               .sortWithinPartitions(*sort_by))
     os.makedirs(os.path.join(table, "data"), exist_ok=True)
     if branch is not None and branch != "main":
-        with open(_metadata_file(table)) as f:
-            r = (json.load(f).get("refs") or {}).get(branch)
+        r = (_load_meta(table).get("refs") or {}).get(branch)
         if r is None:
             raise FileNotFoundError(
                 f"no branch {branch!r} in {table}; CREATE BRANCH first")
@@ -1286,8 +1292,7 @@ def write_iceberg(spark: SparkSession, df: DataFrame, table: str,
     try:
         prev = resolve_snapshot(table, snapshot_id=parent_snapshot,
                                 ref=branch)
-        with open(_metadata_file(table)) as f:
-            meta = json.load(f)
+        meta = _load_meta(table)
         prev_files = [
             (os.path.relpath(p, table), pv) for p, pv in prev.files
         ]
@@ -1391,8 +1396,7 @@ def last_iceberg_txn_version(table: str, app_id: str) -> int | None:
     expiring every stamped snapshot forfeits replay protection — the same
     contract as Iceberg's own streaming dedup)."""
     try:
-        with open(_metadata_file(table)) as f:
-            meta = json.load(f)
+        meta = _load_meta(table)
     except FileNotFoundError:
         return None
     best = None
@@ -1459,12 +1463,14 @@ def _cow_commit_iceberg(spark: SparkSession, table: str,
                         inserts: DataFrame | None = None,
                         changes: None = None) -> int:
     """Copy-on-write snapshot commit against `snap` (the `lake_dml`
-    codec's `rewrite`, and OPTIMIZE's): re-stage the data files
-    `hit_rel` through `rewrite(hits_df)`, optionally stage `inserts` as
-    new files, carry every untouched file forward, and commit one
-    snapshot, detached when `snap` is (`_dml_snapshot`).  Removing and
-    adding nothing commits nothing.  Iceberg's changelog comes from
-    snapshot diffs (`read_iceberg_changes`), so `changes` is None.
+    codec's `rewrite`): re-stage the data files `hit_rel` through
+    `rewrite(hits_df)` (nothing when `rewrite` is None), optionally
+    stage `inserts` as new files, carry every untouched file forward,
+    and commit one snapshot, detached when `snap` is (`_dml_snapshot`).
+    Removing and adding nothing commits nothing.  Delete files fold
+    away exactly when every live data file is removed (`lake_dml` fold
+    rule).  Iceberg's changelog comes from snapshot diffs
+    (`read_iceberg_changes`), so `changes` is None.
 
     Scale shape mirrors the Delta path: ONE scan over the hit files
     (file-level skipping), plan construction O(1) in file count; the
@@ -1476,7 +1482,7 @@ def _cow_commit_iceberg(spark: SparkSession, table: str,
     sid_next = _next_sid(snap.meta)
     part_names = _part_names(snap.spec_fields)
     to_stage: DataFrame | None = None
-    if hit:
+    if hit and rewrite is not None:
         to_stage, part_names = _apply_transforms(
             rewrite(_live_rows(spark, table, snap, files=hit)),
             snap.spec_fields)
@@ -1498,12 +1504,11 @@ def _cow_commit_iceberg(spark: SparkSession, table: str,
     stats.update({os.path.relpath(p, table): st
                   for p, st in snap.stats.items()
                   if os.path.relpath(p, table) not in hit})
-    # OPTIMIZE ("replace") rewrites every data file with deletes applied,
-    # so the delete files fold away; other COW ops carry them (equality
-    # deletes are idempotent on the already-rewritten hit files;
-    # position-delete rows for rewritten files go inert — the staged
-    # files have fresh basenames)
-    carried = [] if operation == "replace" else _carried_deletes(table, snap)
+    # carried deletes are idempotent on the rewritten hit files
+    # (equality deletes match no live row there; position deletes name
+    # the old basenames), so only the untouched files need them
+    carried = ([] if hit >= {rel for rel, _ in files}
+               else _carried_deletes(table, snap))
     return _commit_snapshot(
         table, snap.meta, operation,
         [f for f in files if f[0] not in hit] + staged,
@@ -1694,8 +1699,7 @@ def set_iceberg_properties(table: str,
     resulting map.  `write.delete.mode` / `write.update.mode` /
     `write.merge.mode` here govern the DML routing the spec defines
     (copy-on-write | merge-on-read)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     cur = dict(meta.get("properties") or {})
     for k, v in props.items():
         if v is None:
@@ -1703,8 +1707,7 @@ def set_iceberg_properties(table: str,
         else:
             cur[k] = str(v)
     meta["properties"] = cur
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    _overwrite_meta(table, meta)
     return cur
 
 
@@ -1740,90 +1743,16 @@ def merge_into_iceberg(spark: SparkSession, table: str, source: DataFrame,
                           parent_snapshot)
 
 
-def optimize_iceberg(spark: SparkSession, table: str,
-                     where: str | None = None,
-                     options: dict | None = None,
-                     parent_snapshot: int | None = None) -> int:
-    """OPTIMIZE TABLE [REWRITE DATA USING BIN_PACK]
-    [FOR PARTITIONS <pred>] [(options)] — bin-pack data files into
-    one per partition (`replace` snapshot: same rows, fewer files).
-    With `where`, only files containing matching rows compact
-    (partition-scoped maintenance: the 100 TB pattern is compacting the
-    hot recent partitions without touching cold history); delete files
-    are carried for the untouched remainder.  With `options` (the
-    reference's MIN_INPUT_FILES / TARGET_FILE_SIZE_MB /
-    MIN_FILE_SIZE_MB / MAX_FILE_SIZE_MB, ParseOptimizeOptions), only
-    out-of-band-sized files rewrite, into outputs near the target size;
-    below MIN_INPUT_FILES is a commit-free no-op.  Reference:
-    dremio-oss OPTIMIZE TABLE (`OptimizeHandler.java`,
-    `parserImpls.ftl` OPTIMIZE with FOR PARTITIONS)."""
-    from .delta import _binpack_select
-
-    # parent_snapshot: compact THAT snapshot's file set and commit
-    # DETACHED — the versioned-catalog maintenance path
-    # (OptimizeHandler.java:129 versioned-table support), where the
-    # dataplane commit owns the resulting snapshot id
-    snap = _dml_snapshot(spark, table, parent_snapshot)
-    all_rel = sorted(os.path.relpath(p, table) for p, _ in snap.files)
-    if where is None:
-        hit_rel = all_rel
-        operation = "replace"
-    else:
-        hit_rel = lake_dml.hit_files(
-            table, _live_rows(spark, table, snap, True).where(where))
-        # not "replace": deletes must survive for the untouched files
-        operation = "replace-partial"
-    rewrite = lambda hits: hits  # noqa: E731
-    n_binpack = None
-    if options:
-        got = _binpack_select(table, hit_rel, options)
-        if got is None:
-            return snap.snapshot_id  # below MIN_INPUT_FILES: no-op
-        hit_rel, n_out = got
-        n_binpack = int(n_out)
-        if sorted(hit_rel) != all_rel:
-            operation = "replace-partial"  # subset: carry deletes
-        rewrite = lambda hits: hits.repartition(n_out)  # noqa: E731
-    # declared LOCALSORT (ALTER TABLE ... LOCALSORT BY,
-    # SqlAlterTableSortOrder): the compaction rewrite range-clusters
-    # on the declared keys, so the rewritten files cover disjoint key
-    # ranges and manifest column bounds prune point lookups — the
-    # reference's sort-on-OPTIMIZE behavior
-    sort_cols = [c.strip() for c in
-                 (snap.properties.get("dremio.localsort") or "").split(",")
-                 if c.strip()]
-    if sort_cols:
-        n_range = n_binpack
-        if n_range is None:
-            # default bin-pack emits one file per range slice; bound
-            # by the session shuffle width (AQE respects an explicit
-            # repartitionByRange count, keeping one file per range)
-            n_range = max(1, min(
-                int(spark.conf.get("spark.sql.shuffle.partitions")),
-                len(hit_rel)))
-
-        def rewrite(hits, _n=n_range, _c=sort_cols):  # noqa: E731
-            return (hits.repartitionByRange(_n, *_c)
-                    .sortWithinPartitions(*_c))
-    return _cow_commit_iceberg(spark, table, snap, operation, hit_rel,
-                               rewrite)
-
-
-def truncate_iceberg(table: str) -> int:
-    """TRUNCATE TABLE (reference SqlTruncateTable,
-    `TruncateTableHandler.java`): one metadata-only `delete` snapshot
-    with an EMPTY live set — every data file tombstones, every
-    merge-on-read delete file drops (nothing left to apply to).  No
-    scan, no rewrite; prior snapshots stay time-travelable."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    snap = resolve_snapshot(table)
-    if not snap.files and not snap.deletes and not snap.pos_deletes:
-        return snap.snapshot_id  # already empty: no-op
-    removed = [(os.path.relpath(p, table), pv) for p, pv in snap.files]
-    part_names = _part_names(snap.spec_fields)
-    return _commit_snapshot(table, meta, "delete", [], removed,
-                            part_names, {}, [], added=set())
+def _restate(table: str, meta: dict, operation: str,
+             snap: "IcebergSnapshot", removed=(), **commit) -> int:
+    """Commit one snapshot onto `meta` whose live data files, stats and
+    delete files are exactly `snap`'s, tombstoning `removed`."""
+    return _commit_snapshot(
+        table, meta, operation,
+        [(os.path.relpath(p, table), pv) for p, pv in snap.files],
+        list(removed), _part_names(snap.spec_fields),
+        {os.path.relpath(p, table): st for p, st in snap.stats.items()},
+        _carried_deletes(table, snap), added=set(), **commit)
 
 
 def rewrite_manifests_iceberg(table: str) -> int:
@@ -1834,236 +1763,154 @@ def rewrite_manifests_iceberg(table: str) -> int:
     writes one consolidated manifest per commit, so the rewrite is a
     re-consolidation: it exists for surface parity and for tables whose
     metadata was produced elsewhere."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
     snap = resolve_snapshot(table)
-    live = [(os.path.relpath(p, table), pv) for p, pv in snap.files]
-    part_names = _part_names(snap.spec_fields)
-    stats = {os.path.relpath(p, table): st
-             for p, st in snap.stats.items()}
-    carried = ([(os.path.relpath(p, table), cols,
-                 snap.delete_seq.get(p)) for p, cols in snap.deletes]
-               + [(os.path.relpath(p, table), None, None)
-                  for p in snap.pos_deletes])
-    return _commit_snapshot(table, meta, "rewrite-manifests", live, [],
-                            part_names, stats, carried, added=set())
+    return _restate(table, snap.meta, "rewrite-manifests", snap)
 
 
-def expire_iceberg_snapshots(table: str, keep_last: int = 1,
-                             older_than_ms: int | None = None,
-                             keep_ids: set[int] | None = None
-                             ) -> list[str]:
-    """VACUUM TABLE EXPIRE SNAPSHOTS [older_than = 'ts']
-    [retain_last = n] — expire snapshots strictly older than the cutoff
-    (default: everything but the newest), always retaining at least the
-    `keep_last` most recent regardless of age; then physically delete
-    data files referenced only by expired snapshots.  Returns deleted
-    table-relative paths.  Reference: dremio-oss VACUUM TABLE ...
-    EXPIRE SNAPSHOTS (`VacuumTableHandler.java`, options grammar
-    VacuumTableExpireSnapshotOptions, parserImpls.ftl:1264)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    snaps = sorted(meta.get("snapshots") or [],
-                   key=lambda s: s["snapshot-id"])
-    if keep_ids is not None:
-        # explicit keep-set (the versioned-catalog VACUUM: every
-        # snapshot any catalog commit references survives, so AT
-        # COMMIT time travel over live history keeps working)
-        retained = [s for s in snaps if s["snapshot-id"] in keep_ids]
-    else:
-        retained = snaps[-keep_last:] if keep_last > 0 else snaps
-    if older_than_ms is not None:
-        # age-based retention composes with retain_last: keep anything
-        # at-or-after the cutoff PLUS the retain_last newest
-        kept_ids = {s["snapshot-id"] for s in retained}
-        retained = retained + [
-            s for s in snaps
-            if s.get("timestamp-ms", 0) >= older_than_ms
-            and s["snapshot-id"] not in kept_ids]
-        retained.sort(key=lambda s: s["snapshot-id"])
-    # any snapshot a ref (branch/tag) points at stays alive — tags pin
-    # history against expiry, the spec's retention contract
-    ref_sids = {int(r["snapshot-id"])
-                for r in (meta.get("refs") or {}).values()}
-    kept_ids = {s["snapshot-id"] for s in retained}
-    retained = retained + [s for s in snaps
-                           if s["snapshot-id"] in ref_sids - kept_ids]
-    retained.sort(key=lambda s: s["snapshot-id"])
-    referenced: set[str] = set()
-    for s in retained:
-        snap = resolve_snapshot(table, s["snapshot-id"])
-        referenced.update(os.path.realpath(p) for p, _ in snap.files)
-        # merge-on-read delete files are live references too
-        referenced.update(os.path.realpath(p) for p, _ in snap.deletes)
-        referenced.update(os.path.realpath(p) for p in snap.pos_deletes)
-    removed: list[str] = []
-    data_dir = os.path.join(table, "data")
-    for root, _, files in os.walk(data_dir):
-        for fn in files:
-            p = os.path.join(root, fn)
-            if fn.endswith(".parquet") and os.path.realpath(p) not in referenced:
-                os.remove(p)
-                removed.append(os.path.relpath(p, table))
-    meta["snapshots"] = retained
-    mf = _metadata_file(table)
-    with open(mf, "w") as f:
-        json.dump(meta, f)
-    return sorted(removed)
+def _restore(_spark, table: str, cur: "IcebergSnapshot",
+             target: "IcebergSnapshot") -> int:
+    """The `lake_dml` codec's `restore` (ROLLBACK): one snapshot after
+    `cur`, claimed by `_commit_snapshot`, whose data files, delete
+    files and schema are `target`'s; the target's schema becomes the
+    table's current schema."""
+    kept = {p for p, _ in target.files}
+    cur.meta["current-schema-id"] = target.schema_id
+    return _restate(table, cur.meta, "rollback", target,
+                    [(os.path.relpath(p, table), pv)
+                     for p, pv in cur.files if p not in kept],
+                    schema_id=target.schema_id)
 
 
-def remove_orphan_iceberg_files(table: str,
-                                older_than_ms: int | None = None
-                                ) -> list[str]:
-    """VACUUM TABLE ... REMOVE ORPHAN FILES [older_than = 'ts']:
-    delete parquet files under the table directory referenced by NO
-    snapshot at all (aborted writes, leftover staging) — history stays
-    intact, unlike EXPIRE SNAPSHOTS.  `older_than` guards against
-    deleting files an IN-FLIGHT commit just wrote but has not yet
-    referenced (the reference applies the same mtime cutoff,
-    VacuumTableRemoveOrphanFilesOptions).  Returns deleted
-    table-relative paths."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    referenced: set[str] = set()
-    for s in meta.get("snapshots") or []:
-        snap = resolve_snapshot(table, s["snapshot-id"])
-        referenced.update(os.path.realpath(p) for p, _ in snap.files)
-        referenced.update(os.path.realpath(p) for p, _ in snap.deletes)
-        referenced.update(os.path.realpath(p) for p in snap.pos_deletes)
-    removed: list[str] = []
-    data_dir = os.path.join(table, "data")
-    for root, _, files in os.walk(data_dir):
-        for fn in files:
-            p = os.path.join(root, fn)
-            if not fn.endswith(".parquet"):
-                continue
-            if os.path.realpath(p) in referenced:
-                continue
-            if (older_than_ms is not None
-                    and os.path.getmtime(p) * 1000 >= older_than_ms):
-                continue  # too fresh: may belong to an in-flight commit
-            os.remove(p)
-            removed.append(os.path.relpath(p, table))
-    return sorted(removed)
+def _referenced(_spark, table: str, snapshot_id: int) -> set[str]:
+    """Realpaths of the data and delete files a snapshot reads (the
+    `lake_dml` codec's `referenced`)."""
+    snap = resolve_snapshot(table, snapshot_id)
+    return {os.path.realpath(p) for p in
+            [p for p, _ in snap.files + snap.deletes] + snap.pos_deletes}
 
 
-def rollback_iceberg(table: str, snapshot_id: int) -> int:
-    """ROLLBACK TABLE ... TO SNAPSHOT: append a snapshot whose manifest
-    list IS the target's (metadata-only — no files move), and point
-    current-snapshot-id at it.  Reference: dremio-oss ROLLBACK TABLE on
-    Iceberg (`SqlRollbackTable`)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    target = next(s for s in meta.get("snapshots") or []
-                  if s["snapshot-id"] == snapshot_id)
-    sid = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    meta["snapshots"].append({
-        "snapshot-id": sid, "timestamp-ms": _snapshot_ts_ms(meta),
-        "summary": {"operation": "rollback"},
-        "manifest-list": target["manifest-list"],
-    })
-    meta["current-snapshot-id"] = sid
-    md = os.path.join(table, "metadata")
-    with open(os.path.join(md, f"v{sid}.metadata.json"), "w") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(md, "version-hint.text"), "w") as fh:
-        fh.write(str(sid))
-    return sid
+def _expire(table: str, kept: set[int]) -> None:
+    """The `lake_dml` codec's `expire`: drop every snapshot outside
+    `kept` from the snapshot list."""
+    meta = _load_meta(table)
+    meta["snapshots"] = [s for s in meta.get("snapshots") or []
+                         if s["snapshot-id"] in kept]
+    _overwrite_meta(table, meta)
 
 
-def alter_iceberg(table: str, add: dict[str, str] | None = None,
-                  drop: list[str] | None = None) -> int:
-    """ALTER TABLE ADD COLUMNS (name → DDL type) / DROP COLUMN on an
-    Iceberg table: append a new schema with a bumped schema-id and point
-    current-schema-id at it — pure metadata, no data files touched
-    (Iceberg schema evolution).  Old files null-fill added columns and
-    project away dropped ones at scan time.  Reference: dremio-oss
-    ALTER TABLE on Iceberg (`SqlAlterTableAddColumns` et al.)."""
-    from .delta import _ddl_type
+def _schema_fields(meta: dict, schema_id: int) -> list[dict]:
+    return next(s for s in meta.get("schemas") or [meta["schema"]]
+                if s.get("schema-id", 0) == schema_id)["fields"]
 
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    cur_id = meta.get("current-schema-id", 0)
+
+def _append_schema(meta: dict, fields: list[dict],
+                   current: bool = True) -> int:
+    """Append a schema holding `fields` to the metadata (field ids
+    carried by the caller) and, when `current`, make it the table's
+    current schema.  Returns its schema-id."""
     schemas = meta.get("schemas") or [meta["schema"]]
-    cur = next(s for s in schemas if s.get("schema-id", 0) == cur_id)
-    dropped = set(drop or [])
-    spec_sources = set()
-    for spec in meta.get("partition-specs", []):
-        if spec.get("spec-id") == meta.get("default-spec-id", 0):
-            ids = {f["id"]: f["name"] for f in cur["fields"]}
-            spec_sources = {ids.get(pf.get("source-id"))
-                            for pf in spec.get("fields", [])}
-    bad = dropped & spec_sources
-    if bad:
-        raise ValueError(
-            f"cannot drop partition source column(s) {sorted(bad)}")
-    fields = [dict(f) for f in cur["fields"] if f["name"] not in dropped]
-    next_fid = max((f["id"] for f in cur["fields"]), default=0) + 1
-    for name, ddl in (add or {}).items():
-        if any(f["name"] == name for f in fields):
-            raise ValueError(f"column {name!r} already exists")
-        fields.append({"id": next_fid, "name": name, "required": False,
-                       "type": _iceberg_type(_ddl_type(ddl))})
-        next_fid += 1
     new_id = max((s.get("schema-id", 0) for s in schemas), default=0) + 1
     schemas.append({"type": "struct", "schema-id": new_id,
                     "fields": fields})
     meta["schemas"] = schemas
-    meta["current-schema-id"] = new_id
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    if current:
+        meta["current-schema-id"] = new_id
     return new_id
 
 
-def alter_iceberg_detached(table: str, parent_snapshot: int,
-                           add: dict[str, str] | None = None,
-                           drop: list[str] | None = None) -> int:
-    """Branch-scoped schema evolution (the Nessie dataplane model:
-    `ALTER TABLE <src>.<t> AT BRANCH b ADD COLUMNS ...`): append a new
-    schema entry WITHOUT moving current-schema-id, then commit a
-    DETACHED metadata-only snapshot that carries the parent's live file
-    set under the new schema-id.  Only readers resolving THIS snapshot
-    (the catalog branch) see the evolved schema — main and every other
-    ref keep theirs, because schema resolution is per-snapshot (spec v2
-    snapshot schema-id).  Returns the new snapshot id."""
+def alter_iceberg(table: str, add: dict[str, str] | None = None,
+                  drop: list[str] | None = None,
+                  parent_snapshot: int | None = None) -> int:
+    """ALTER TABLE ADD COLUMNS (name → DDL type) / DROP COLUMN on an
+    Iceberg table: append a new schema with a bumped schema-id and point
+    current-schema-id at it — pure metadata, no data files touched
+    (Iceberg schema evolution).  Old files null-fill added columns and
+    project away dropped ones at scan time.  Returns the new schema-id.
+    Reference: dremio-oss ALTER TABLE on Iceberg
+    (`SqlAlterTableAddColumns` et al.).
+
+    `parent_snapshot` is the branch-scoped form (the Nessie dataplane
+    model: `ALTER TABLE <src>.<t> AT BRANCH b ADD COLUMNS ...`): the
+    new schema evolves that snapshot's schema, current-schema-id stays,
+    and a DETACHED metadata-only snapshot carries the parent's files
+    under the new schema-id.  Only readers resolving THAT snapshot (the
+    catalog branch) see the evolved schema, because schema resolution
+    is per-snapshot (spec v2 snapshot schema-id).  Returns the new
+    snapshot id."""
     from .delta import _ddl_type
 
-    prev = resolve_snapshot(table, parent_snapshot)
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    schemas = meta.get("schemas") or [meta["schema"]]
-    base = next(s for s in schemas
-                if s.get("schema-id", 0) == prev.schema_id)
+    if parent_snapshot is None:
+        meta = _load_meta(table)
+        base_id = meta.get("current-schema-id", 0)
+    else:
+        prev = resolve_snapshot(table, parent_snapshot)
+        meta, base_id = prev.meta, prev.schema_id
+    base = _schema_fields(meta, base_id)
+    ids = {f["id"]: f["name"] for f in base}
+    spec = next((sp for sp in meta.get("partition-specs", [])
+                 if sp.get("spec-id") == meta.get("default-spec-id", 0)),
+                {})
     dropped = set(drop or [])
-    spec_sources = {pf["source"] for pf in prev.spec_fields}
-    bad = dropped & spec_sources
+    bad = dropped & {ids.get(pf.get("source-id"))
+                     for pf in spec.get("fields", [])}
     if bad:
         raise ValueError(
             f"cannot drop partition source column(s) {sorted(bad)}")
-    fields = [dict(f) for f in base["fields"] if f["name"] not in dropped]
-    next_fid = max((f["id"] for s in schemas for f in s["fields"]),
-                   default=0) + 1
+    fields = [dict(f) for f in base if f["name"] not in dropped]
+    next_fid = max((f["id"] for s in meta.get("schemas") or [meta["schema"]]
+                    for f in s["fields"]), default=0) + 1
     for name, ddl in (add or {}).items():
         if any(f["name"] == name for f in fields):
             raise ValueError(f"column {name!r} already exists")
         fields.append({"id": next_fid, "name": name, "required": False,
                        "type": _iceberg_type(_ddl_type(ddl))})
         next_fid += 1
-    new_id = max((s.get("schema-id", 0) for s in schemas), default=0) + 1
-    schemas.append({"type": "struct", "schema-id": new_id,
-                    "fields": fields})
-    meta["schemas"] = schemas  # current-schema-id NOT moved
-    live = [(os.path.relpath(p, table), pv) for p, pv in prev.files]
-    part_names = _part_names(prev.spec_fields)
-    stats = {os.path.relpath(p, table): st
-             for p, st in prev.stats.items()}
-    carried = ([(os.path.relpath(p, table), cols,
-                 prev.delete_seq.get(p)) for p, cols in prev.deletes]
-               + [(os.path.relpath(p, table), None, None)
-                  for p in prev.pos_deletes])
-    return _commit_snapshot(table, meta, "alter", live, [], part_names,
-                            stats, carried, added=set(),
-                            detached=True, schema_id=new_id)
+    new_id = _append_schema(meta, fields, current=parent_snapshot is None)
+    if parent_snapshot is not None:
+        return _restate(table, meta, "alter", prev, detached=True,
+                        schema_id=new_id)
+    _overwrite_meta(table, meta)
+    return new_id
+
+
+def change_iceberg_column(spark: SparkSession, table: str, col: str,
+                          new_name: str, new_type: str | None = None) -> int:
+    """ALTER TABLE ... CHANGE/MODIFY COLUMN c [newname] newtype on an
+    Iceberg table (SqlAlterTableChangeColumn, alter.ftl:152) and RENAME
+    COLUMN (`new_type=None`: the type stays): a WIDENING type promotion
+    (validated against the spec's legal schema-evolution promotions)
+    and/or a rename.  Stated deviation: the spec's metadata-only change
+    resolves columns by field-id, which this name-based reader doesn't,
+    so it is applied as a copy-on-write rewrite; the schema then gains
+    a generation with the field changed and its id preserved.
+    Partition-spec source columns can't change."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from .delta import _check_promotion
+
+    snap = resolve_snapshot(table)
+    if any(pf["source"] == col for pf in snap.spec_fields):
+        raise ValueError(f"cannot change partition source column {col!r}")
+    types = {f.name: f.dataType.simpleString()
+             for f in snap.schema.fields}
+    if col not in types:
+        raise ValueError(f"no column {col!r}")
+    if new_name != col and new_name in types:
+        raise ValueError(f"column {new_name!r} already exists")
+    df = read_iceberg(spark, table)
+    change = {"name": new_name}
+    if new_type is not None:
+        _check_promotion(types[col], new_type.lower())
+        df = df.withColumn(col, F.col(col).cast(new_type))
+        change["type"] = _iceberg_type(_parse_datatype_string(new_type))
+    sid = write_iceberg(spark, df.withColumnRenamed(col, new_name), table,
+                        mode="overwrite")
+    meta = _load_meta(table)
+    _append_schema(meta, [
+        {**fl, **change} if fl["name"] == col else dict(fl)
+        for fl in _schema_fields(meta, meta.get("current-schema-id", 0))])
+    _overwrite_meta(table, meta)
+    return sid
 
 
 def alter_iceberg_partition_spec(table: str, specs: list[str]) -> int:
@@ -2078,14 +1925,10 @@ def alter_iceberg_partition_spec(table: str, specs: list[str]) -> int:
     identity values are baked into manifests per file and attach as
     data columns, so changing them needs a rewrite, not an evolution.
     Hidden (bucket/truncate/temporal) transforms evolve freely."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     new_fields = _parse_partition_spec(list(specs))
     cur_id = meta.get("default-spec-id", 0)
-    schema_fields = next(
-        s for s in meta.get("schemas") or [meta["schema"]]
-        if s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-    )["fields"]
+    schema_fields = _schema_fields(meta, meta.get("current-schema-id", 0))
     by_name = {f["name"]: f["id"] for f in schema_fields}
     for pf in new_fields:
         if pf["source"] not in by_name:
@@ -2111,15 +1954,13 @@ def alter_iceberg_partition_spec(table: str, specs: list[str]) -> int:
                     "source-id": by_name[pf["source"]]}
                    for pf in new_fields]})
     meta["default-spec-id"] = new_id
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
+    _overwrite_meta(table, meta)
     return new_id
 
 
 def iceberg_history(table: str) -> list[dict]:
     """Table history: one row per snapshot (id, timestamp, operation)."""
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
+    meta = _load_meta(table)
     return [
         {
             "snapshot_id": s["snapshot-id"],
@@ -2128,90 +1969,6 @@ def iceberg_history(table: str) -> list[dict]:
         }
         for s in meta.get("snapshots") or []
     ]
-
-
-def change_iceberg_column(spark: SparkSession, table: str, col: str,
-                          new_name: str, new_type: str) -> int:
-    """ALTER TABLE ... CHANGE/MODIFY COLUMN c [newname] newtype on an
-    Iceberg table (SqlAlterTableChangeColumn, alter.ftl:152): a
-    WIDENING type promotion (validated against the spec's legal
-    schema-evolution promotions) and/or a rename, applied as a
-    copy-on-write rewrite — same stated deviation as RENAME COLUMN."""
-    from .delta import _check_promotion
-
-    snap = resolve_snapshot(table)
-    if any(pf["source"] == col for pf in snap.spec_fields):
-        raise ValueError(f"cannot change partition source column {col!r}")
-    types = {f.name: f.dataType.simpleString()
-             for f in snap.schema.fields}
-    if col not in types:
-        raise ValueError(f"no column {col!r}")
-    if new_name != col and new_name in types:
-        raise ValueError(f"column {new_name!r} already exists")
-    _check_promotion(types[col], new_type.lower())
-    df = read_iceberg(spark, table)
-    df = df.withColumn(col, F.col(col).cast(new_type))
-    if new_name != col:
-        df = df.withColumnRenamed(col, new_name)
-    sid = write_iceberg(spark, df, table, mode="overwrite")
-    # point the metadata at a schema generation carrying the promoted
-    # type (and name) — field ids preserved, like the spec's evolution
-    from pyspark.sql.types import _parse_datatype_string
-
-    ice_t = _iceberg_type(_parse_datatype_string(new_type))
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    cur_id = meta.get("current-schema-id", 0)
-    schemas = meta.get("schemas") or [meta["schema"]]
-    cur = next(s for s in schemas if s.get("schema-id", 0) == cur_id)
-    fields = [({**fl, "name": new_name, "type": ice_t}
-               if fl["name"] == col else dict(fl))
-              for fl in cur["fields"]]
-    new_id = max((s.get("schema-id", 0) for s in schemas), default=0) + 1
-    schemas.append({"type": "struct", "schema-id": new_id,
-                    "fields": fields})
-    meta["schemas"] = schemas
-    meta["current-schema-id"] = new_id
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
-    return sid
-
-
-def rename_iceberg_column(spark: SparkSession, table: str,
-                          old: str, new: str) -> int:
-    """ALTER TABLE ... RENAME COLUMN on an Iceberg table, as a
-    copy-on-write rewrite (stated deviation: the spec's metadata-only
-    rename resolves columns by field-id, which this name-based reader
-    doesn't; rewriting keeps the reader correct).  Partition-spec source
-    columns can't be renamed."""
-    snap = resolve_snapshot(table)
-    if any(pf["source"] == old for pf in snap.spec_fields):
-        raise ValueError(f"cannot rename partition source column {old!r}")
-    names = [f.name for f in snap.schema.fields]
-    if old not in names:
-        raise ValueError(f"no column {old!r}")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    df = read_iceberg(spark, table).withColumnRenamed(old, new)
-    # rewrite through the public writer (partitioning follows the stored
-    # spec), then point the metadata at a schema with the field renamed —
-    # field id preserved, as the spec's rename does
-    sid = write_iceberg(spark, df, table, mode="overwrite")
-    with open(_metadata_file(table)) as f:
-        meta = json.load(f)
-    cur_id = meta.get("current-schema-id", 0)
-    schemas = meta.get("schemas") or [meta["schema"]]
-    cur = next(s for s in schemas if s.get("schema-id", 0) == cur_id)
-    fields = [({**fl, "name": new} if fl["name"] == old else dict(fl))
-              for fl in cur["fields"]]
-    new_id = max((s.get("schema-id", 0) for s in schemas), default=0) + 1
-    schemas.append({"type": "struct", "schema-id": new_id,
-                    "fields": fields})
-    meta["schemas"] = schemas
-    meta["current-schema-id"] = new_id
-    with open(_metadata_file(table), "w") as f:
-        json.dump(meta, f)
-    return sid
 
 
 def read_iceberg_incremental(spark: SparkSession, table: str,
@@ -2238,7 +1995,7 @@ def read_iceberg_incremental(spark: SparkSession, table: str,
     return _apply_mor_deletes(spark, df, snap_to)
 
 
-# The lake_dml codec: what Iceberg alone decides for DELETE/UPDATE/MERGE.
+# The lake_dml codec: what Iceberg alone decides for DML and maintenance.
 DML = lake_dml.Codec(
     resolve=_dml_snapshot,
     mode=lambda snap, verb: snap.properties.get(f"write.{verb}.mode",
@@ -2247,5 +2004,26 @@ DML = lake_dml.Codec(
     rewrite=_cow_commit_iceberg,
     mark=_mark_commit,
     cdf=lambda snap: False,
-    ops={"delete": "delete", "update": "overwrite", "merge": "overwrite"},
+    ops={"delete": "delete", "update": "overwrite", "merge": "overwrite",
+         "optimize": "replace", "truncate": "delete"},
+    at=lambda _spark, table, snapshot_id: resolve_snapshot(table,
+                                                           snapshot_id),
+    files=lambda table, snap: sorted(os.path.relpath(p, table)
+                                     for p, _ in snap.files),
+    properties=lambda snap: snap.properties,
+    versions=lambda _spark, table: sorted(
+        (s["snapshot-id"], s.get("timestamp-ms", 0))
+        for s in _load_meta(table).get("snapshots") or []),
+    referenced=_referenced,
+    # a snapshot a branch or tag points at stays alive: refs pin
+    # history against expiry, the spec's retention contract
+    pins=lambda table: {int(r["snapshot-id"]) for r in
+                        (_load_meta(table).get("refs") or {}).values()},
+    expire=_expire,
+    restore=_restore,
+    log_dirs=("metadata",),
 )
+
+optimize_iceberg = partial(lake_dml.optimize, DML)
+expire_iceberg_snapshots = partial(lake_dml.vacuum, DML, None)
+rollback_iceberg = partial(lake_dml.rollback, DML, None)

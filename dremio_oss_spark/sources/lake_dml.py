@@ -1,5 +1,7 @@
-"""Row-level DML over the lake formats: DELETE, UPDATE and MERGE, each
-written once, in both copy-on-write and merge-on-read.
+"""Row-level DML and table maintenance over the lake formats: DELETE,
+UPDATE and MERGE, each written once in both copy-on-write and
+merge-on-read, and OPTIMIZE, TRUNCATE, ROLLBACK, VACUUM and REMOVE
+ORPHAN FILES, each written once.
 
 Reference: dremio-oss plans DML once over the table format, as one
 copy-on-write plan generator (`DmlCopyOnWritePlanGenerator.java`:
@@ -22,7 +24,8 @@ differs between the formats:
 - `rewrite(spark, table, snapshot, operation, hit_files, rewrite,
   inserts, changes)` -> version: stage `rewrite(<live rows of
   hit_files>)` and `inserts` as new files; commit them with the
-  removal of `hit_files` (table-relative paths).
+  removal of `hit_files` (table-relative paths).  `rewrite=None`
+  stages nothing for the hit files (TRUNCATE).
 - `mark(spark, table, snapshot, operation, marked, post, changes)` ->
   version: encode `marked`'s `(__file, __pos)` as delete marks (Delta
   deletion vectors, Iceberg position-delete files), stage `post` as
@@ -30,6 +33,36 @@ differs between the formats:
 - `cdf(snapshot)` -> whether commits carry `changes`: change rows with
   the table's columns plus `_change_type` (Delta's change data feed).
 - `ops` -> the commit operation name of each verb.
+
+Maintenance half of the contract (reference: `OptimizeHandler.java`,
+`TruncateTableHandler.java`, `VacuumTableHandler.java`,
+`SqlRollbackTable`, each written once over the table format):
+
+- `at(spark, table, version)` -> the snapshot at `version` (None: the
+  current one); an unknown version raises an error naming the table
+  and the id.
+- `files(table, snapshot)` -> its live data files, table-relative,
+  sorted.
+- `properties(snapshot)` -> its table properties (`dremio.cluster_by`,
+  `dremio.localsort` pick the OPTIMIZE layout).
+- `versions(spark, table)` -> `(version, timestamp_ms)` of every
+  version the table keeps, oldest first.
+- `referenced(spark, table, version)` -> realpaths of the files that
+  version reads: data files plus delete marks (Delta deletion-vector
+  files, Iceberg delete files).
+- `pins(table)` -> versions a named ref pins against expiry (Iceberg
+  branches and tags).
+- `expire(table, kept)` -> drop every other version from the table's
+  history (Iceberg's snapshot list; Delta keeps its log).
+- `restore(spark, table, current, target)` -> version: one claimed
+  commit after `current` that restates `target`'s files, delete marks
+  and schema.
+- `log_dirs` -> top-level directories the file sweep never enters.
+
+Fold rule: a copy-on-write commit that removes every live data file
+drops the table's delete marks with them (the rewritten files are read
+with the deletes applied, so no mark has a row left to apply to); a
+commit that keeps any data file carries every mark forward.
 
 One-snapshot rule: a statement resolves its snapshot once, then plans,
 stages and commits against it.  The commit claims the version after
@@ -50,6 +83,7 @@ reference's costed DIST/BROADCAST join instances (`HashJoinPrule`,
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from dataclasses import dataclass
@@ -79,6 +113,15 @@ class Codec:
     mark: Callable
     cdf: Callable
     ops: dict
+    at: Callable
+    files: Callable
+    properties: Callable
+    versions: Callable
+    referenced: Callable
+    pins: Callable
+    expire: Callable
+    restore: Callable
+    log_dirs: tuple
 
 
 def codec(fmt: str) -> Codec:
@@ -320,3 +363,238 @@ def merge(codec: Codec, spark: SparkSession, table: str,
                   lambda rows: assign(rows, None), rewrite, inserts,
                   hit_rows=live.join(source.select(*on).distinct(), on,
                                      "left_semi"))
+
+
+# -- table maintenance --------------------------------------------------------
+
+def _zorder_rewrite(zorder_by: list[str], n_files: int, bits: int = 16):
+    """Rewrite hook clustering rows along a Z-curve over `zorder_by`.
+
+    Each column linearly quantizes to `bits` levels between its min and
+    max (two driver scalars per column — no global-ordering window, so
+    nothing funnels through one partition at 100 TB); the z-value
+    interleaves the columns' bits, and a range repartition + sort on it
+    yields `n_files` files whose min/max stats are tight on EVERY
+    z-ordered column — multidimensional file skipping, where a linear
+    sort only serves its leading column."""
+    def rw(hits: DataFrame) -> DataFrame:
+        lo_hi = hits.agg(*[f(c) for c in zorder_by
+                           for f in (F.min, F.max)]).first()
+        df = hits
+        for i, c in enumerate(zorder_by):
+            lo = float(lo_hi[2 * i] or 0)
+            hi = float(lo_hi[2 * i + 1] or 0)
+            span = (hi - lo) or 1.0
+            q = F.least(
+                F.floor((F.col(c).cast("double") - F.lit(lo))
+                        / F.lit(span) * (1 << bits)),
+                F.lit((1 << bits) - 1),
+            ).cast("bigint")
+            df = df.withColumn(f"__q_{i}", F.greatest(q, F.lit(0)))
+        z = None
+        for k in range(bits):
+            for i in range(len(zorder_by)):
+                bit = (F.shiftright(F.col(f"__q_{i}"), k)
+                       .bitwiseAND(F.lit(1)))
+                term = bit * F.lit(2 ** (k * len(zorder_by) + i))
+                z = term if z is None else z + term
+        return (df.withColumn("__z", z.cast("bigint"))
+                .repartitionByRange(n_files, "__z")
+                .sortWithinPartitions("__z")
+                .drop("__z", *[f"__q_{i}" for i in range(len(zorder_by))]))
+
+    return rw
+
+
+def _binpack_select(table: str, hit_rel: list[str],
+                    options: dict) -> tuple[list[str], int] | None:
+    """Bin-pack candidate selection per the reference's OPTIMIZE
+    options (`parserImpls.ftl` ParseOptimizeOptions,
+    OptimizeHandler.java): files smaller than MIN_FILE_SIZE_MB or
+    larger than MAX_FILE_SIZE_MB qualify; fewer than MIN_INPUT_FILES
+    qualifying files → no-op (None).  Returns (candidates, n_output)
+    with n_output sized so rewritten files land near
+    TARGET_FILE_SIZE_MB.  Sizes come from the snapshot's file listing
+    (driver-side getsize — file-count bounded, the same metadata the
+    commit already walks)."""
+    tgt_mb = float(options.get("target_file_size_mb", 256))
+    mn = float(options.get("min_file_size_mb", 0.75 * tgt_mb)) * 2**20
+    mx = float(options.get("max_file_size_mb", 1.8 * tgt_mb)) * 2**20
+    min_in = int(options.get("min_input_files", 5))
+    sizes = {rel: os.path.getsize(os.path.join(table, rel))
+             for rel in hit_rel}
+    cand = [rel for rel in hit_rel
+            if sizes[rel] < mn or sizes[rel] > mx]
+    if len(cand) < max(1, min_in):
+        return None
+    n_out = max(1, math.ceil(sum(sizes[r] for r in cand)
+                             / (tgt_mb * 2**20)))
+    return cand, n_out
+
+
+def layout(properties: dict,
+           zorder_by: list[str] | None) -> tuple[str, list[str]]:
+    """The OPTIMIZE rewrite layout, `(kind, columns)`: an explicit
+    ZORDER BY, else the declared clustering key (ALTER TABLE CLUSTER BY,
+    SqlAlterTableClusterKey), else the declared LOCALSORT
+    (SqlAlterTableSortOrder), else bin-pack."""
+    if zorder_by:
+        return "zorder", list(zorder_by)
+    for kind, key in (("zorder", "dremio.cluster_by"),
+                      ("localsort", "dremio.localsort")):
+        cols = [c.strip() for c in (properties.get(key) or "").split(",")
+                if c.strip()]
+        if cols:
+            return kind, cols
+    return "binpack", []
+
+
+def optimize(codec: Codec, spark: SparkSession, table: str,
+             where: str | None = None,
+             zorder_by: list[str] | None = None,
+             options: dict | None = None,
+             parent_snapshot: int | None = None,
+             zorder_files: int = 8) -> int:
+    """OPTIMIZE TABLE [REWRITE DATA USING BIN_PACK] [FOR PARTITIONS
+    <pred>] [ZORDER BY cols] [(options)]: rewrite live files into fewer
+    ones holding the same rows (Delta commits them dataChange=false,
+    Iceberg as a `replace` snapshot), with deletes folded in.
+
+    - `where`: only files holding a matching row rewrite — the 100 TB
+      pattern compacts hot partitions without touching cold history.
+    - `options` (MIN_INPUT_FILES / TARGET_FILE_SIZE_MB /
+      MIN_FILE_SIZE_MB / MAX_FILE_SIZE_MB, ParseOptimizeOptions): only
+      out-of-band-sized files rewrite, into outputs near the target
+      size; fewer than MIN_INPUT_FILES qualifying files is a
+      commit-free no-op.
+    - layout (`layout`): a Z-curve over the z-order columns into
+      `zorder_files` files, so min/max skipping serves every column; a
+      range split + sort on the LOCALSORT keys, so the rewritten files
+      cover disjoint key ranges; else a plain bin-pack.
+    - `parent_snapshot`: compact a versioned catalog's branch snapshot
+      and commit detached (`OptimizeHandler.java:129`).
+
+    Reference: dremio-oss OPTIMIZE TABLE (`parserImpls.ftl` OPTIMIZE,
+    `OptimizeHandler.java`); the Z-curve follows the public Delta
+    OPTIMIZE ZORDER design."""
+    snap = codec.resolve(spark, table, parent_snapshot)
+    if where is None:
+        hits = codec.files(table, snap)
+    else:
+        hits = hit_files(table, codec.live(spark, table, snap,
+                                           True).where(where))
+    n_out = None
+    if options:
+        got = _binpack_select(table, hits, options)
+        if got is None:
+            return snap.version
+        hits, n_out = got
+    kind, cols = layout(codec.properties(snap), zorder_by)
+    if kind == "zorder":
+        rewrite = _zorder_rewrite(cols, zorder_files)
+    elif kind == "localsort":
+        # without size options, one file per range slice, bounded by
+        # the session shuffle width (AQE keeps an explicit range count)
+        n = n_out or max(1, min(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            len(hits)))
+        rewrite = lambda files: (files.repartitionByRange(  # noqa: E731
+            n, *cols).sortWithinPartitions(*cols))
+    else:
+        rewrite = lambda files: (  # noqa: E731
+            files.repartition(n_out) if n_out else files)
+    return codec.rewrite(spark, table, snap, codec.ops["optimize"], hits,
+                         rewrite, None, None)
+
+
+def truncate(codec: Codec, spark: SparkSession, table: str) -> int:
+    """TRUNCATE TABLE (SqlTruncateTable, `TruncateTableHandler.java`):
+    one commit removing every live file and staging nothing — no scan,
+    no rewrite; earlier versions stay time-travelable until VACUUM.  A
+    table whose commits carry change rows deletes through the scan
+    instead, so the feed records every removed row."""
+    snap = codec.resolve(spark, table, None)
+    if codec.cdf(snap):
+        return delete(codec, spark, table, "true", COW)
+    return codec.rewrite(spark, table, snap, codec.ops["truncate"],
+                         codec.files(table, snap), None, None, None)
+
+
+def rollback(codec: Codec, spark: SparkSession, table: str,
+             version: int) -> int:
+    """ROLLBACK TABLE ... TO SNAPSHOT (`parserImpls.ftl:1211`,
+    `SqlRollbackTable`): one new commit whose files, delete marks and
+    schema are exactly `version`'s.  History is kept (the roll-forward
+    is itself a commit) and no data file is copied.  The commit claims
+    the version after the current one, so a commit landing meanwhile
+    raises `ConcurrentWriteError` instead of being overwritten."""
+    current = codec.at(spark, table, None)
+    return codec.restore(spark, table, current,
+                         codec.at(spark, table, version))
+
+
+def _retained(versions: list[tuple[int, int]], keep_last: int = 1,
+             older_than_ms: int | None = None, pins=(),
+             keep_ids=None) -> set[int]:
+    """The retention rule over `(version, timestamp_ms)` pairs: the
+    `keep_last` newest (at least one) or, when given, exactly
+    `keep_ids` (a versioned catalog's referenced snapshots); plus every
+    version committed at or after `older_than_ms`; plus every version a
+    ref pins."""
+    ids = [v for v, _ in versions]
+    keep = (set(ids[-max(1, keep_last):]) if keep_ids is None
+            else set(keep_ids) & set(ids))
+    if older_than_ms is not None:
+        keep |= {v for v, ts in versions if ts >= older_than_ms}
+    return keep | (set(pins) & set(ids))
+
+
+def _sweep(codec: Codec, spark: SparkSession, table: str, versions,
+          older_than_ms: int | None = None) -> list[str]:
+    """Delete every data or delete-mark file under `table` that none of
+    `versions` references, except files modified at or after
+    `older_than_ms` (an in-flight commit may have written them without
+    referencing them yet).  The log directories are never entered.
+    Returns the deleted table-relative paths."""
+    referenced: set[str] = set()
+    for v in versions:
+        referenced |= codec.referenced(spark, table, v)
+    removed: list[str] = []
+    for root, dirs, files in os.walk(table):
+        if root == table:
+            dirs[:] = [d for d in dirs if d not in codec.log_dirs]
+        for fn in files:
+            p = os.path.join(root, fn)
+            if (fn.endswith((".parquet", ".bin"))
+                    and os.path.realpath(p) not in referenced
+                    and (older_than_ms is None
+                         or os.path.getmtime(p) * 1000 < older_than_ms)):
+                os.remove(p)
+                removed.append(os.path.relpath(p, table))
+    return sorted(removed)
+
+
+def vacuum(codec: Codec, spark: SparkSession, table: str,
+           keep_last: int = 1, older_than_ms: int | None = None,
+           keep_ids=None) -> list[str]:
+    """VACUUM TABLE [EXPIRE SNAPSHOTS] [older_than = 'ts'] [retain_last
+    = n] (`VacuumTableHandler.java`, parserImpls.ftl:1264): expire the
+    versions the retention rule (`_retained`) drops, then delete the
+    files only they referenced.  Time travel to a retained version
+    keeps working.  Returns the deleted table-relative paths."""
+    keep = _retained(codec.versions(spark, table), keep_last,
+                    older_than_ms, codec.pins(table), keep_ids)
+    codec.expire(table, keep)
+    return _sweep(codec, spark, table, keep)
+
+
+def remove_orphan_files(codec: Codec, spark: SparkSession, table: str,
+                        older_than_ms: int | None = None) -> list[str]:
+    """VACUUM TABLE ... REMOVE ORPHAN FILES [older_than = 'ts']: delete
+    files no version references at all (aborted writes, a lost commit
+    race, leftover staging); history stays intact.  `older_than`
+    protects files an in-flight commit wrote but has not referenced
+    yet (VacuumTableRemoveOrphanFilesOptions)."""
+    return _sweep(codec, spark, table,
+                 [v for v, _ in codec.versions(spark, table)],
+                 older_than_ms)

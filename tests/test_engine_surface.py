@@ -199,6 +199,121 @@ def test_metadata_table_functions_and_rollback(spark, tmp_path):
     snap2 = eng.sql(
         f"select * from table(table_snapshot('{t2}'))").collect()
     assert snap2[0]["format"] == "iceberg"
+    # an unknown snapshot names the table and the id on both formats
+    import re
+
+    for path in (t, t2):
+        with pytest.raises(FileNotFoundError,
+                           match=re.escape(f"999 in {path}")):
+            eng.sql(f"ROLLBACK TABLE '{path}' TO SNAPSHOT '999'")
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_rollback_restores_target_schema(spark, tmp_path, fmt):
+    """ROLLBACK restates the target's schema with its files: a column
+    added after the target is gone on both formats, and on Iceberg the
+    rollback snapshot is a full commit (sequence number, schema id, the
+    main ref advanced) whose schema becomes the current one."""
+    import json
+    import os
+
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources import delta, iceberg
+
+    eng = Engine(spark)
+    t = str(tmp_path / fmt)
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double")
+    first = (delta.write_delta(spark, df, t) if fmt == "delta"
+             else iceberg.write_iceberg(spark, df, t))
+    eng.sql(f"ALTER TABLE '{t}' ADD COLUMNS (w int)")
+    eng.sql(f"INSERT INTO '{t}' select cast(3 as bigint), "
+            "cast(3 as double), 3")
+    eng.sql(f"ROLLBACK TABLE '{t}' TO SNAPSHOT '{first}'")
+    got = eng.sql(f"select * from '{t}'")
+    assert got.columns == ["k", "v"]
+    assert sorted(r["k"] for r in got.collect()) == [1, 2]
+    if fmt == "iceberg":
+        md = os.path.join(t, "metadata")
+        v = open(os.path.join(md, "version-hint.text")).read().strip()
+        meta = json.load(open(os.path.join(md, f"v{v}.metadata.json")))
+        cur = meta["snapshots"][-1]
+        assert cur["summary"]["operation"] == "rollback"
+        assert meta["current-snapshot-id"] == cur["snapshot-id"]
+        assert meta["refs"]["main"]["snapshot-id"] == cur["snapshot-id"]
+        assert cur["sequence-number"] == meta["last-sequence-number"]
+        target = next(s for s in meta["snapshots"]
+                      if s["snapshot-id"] == first)
+        assert cur["schema-id"] == target["schema-id"] \
+            == meta["current-schema-id"]
+
+
+# Spark jobs per maintenance statement, measured on the per-format
+# implementations these statements replaced: the shared core must not
+# add any.
+_MAINTENANCE_JOBS = {"optimize_partitions": 6, "optimize": 3,
+                     "rollback": 0, "truncate": 0}
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_maintenance_statement_job_counts(spark, tmp_path, fmt):
+    """OPTIMIZE (full and FOR PARTITIONS), ROLLBACK and TRUNCATE run no
+    more Spark jobs than their bounds; ROLLBACK and TRUNCATE are
+    metadata-only."""
+    import uuid
+
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources import delta, iceberg
+
+    eng = Engine(spark)
+    sc = spark.sparkContext
+    write = delta.write_delta if fmt == "delta" else iceberg.write_iceberg
+    t = str(tmp_path / fmt)
+    df = spark.createDataFrame([(i, i % 3, float(i)) for i in range(30)],
+                               "k long, p long, v double")
+    first = write(spark, df, t, partition_by=["p"])
+    write(spark, df, t, mode="append")
+    write(spark, df, t, mode="append")
+
+    def jobs(stmt: str) -> int:
+        group = f"maintenance-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, stmt)
+        try:
+            eng.sql(stmt).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got = {
+        "optimize_partitions": jobs(
+            f"OPTIMIZE TABLE '{t}' FOR PARTITIONS p = 1"),
+        "optimize": jobs(f"OPTIMIZE TABLE '{t}'"),
+        "rollback": jobs(f"ROLLBACK TABLE '{t}' TO SNAPSHOT '{first}'"),
+        "truncate": jobs(f"TRUNCATE TABLE '{t}'"),
+    }
+    assert all(got[k] <= n for k, n in _MAINTENANCE_JOBS.items()), got
+    assert eng.sql(f"select count(*) as n from '{t}'").first()["n"] == 0
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_insert_applies_store_assignment(spark, tmp_path, fmt):
+    """INSERT casts a column to the table's type where Spark's ANSI
+    store assignment allows it (TIMESTAMP_NTZ into a CTAS table, which
+    Iceberg reads back as TIMESTAMP); any other mismatch (a string into
+    a bigint) still raises."""
+    from dremio_oss_spark.engine import Engine
+
+    eng = Engine(spark)
+    t = str(tmp_path / fmt)
+    src = ("select 1 as k, timestamp_ntz'2024-01-02 03:04:05' as ts "
+           "union all select 2, timestamp_ntz'2024-02-03 04:05:06'")
+    eng.sql(f"CREATE TABLE '{t}' STORE AS (type => '{fmt}') AS {src}")
+    eng.sql(f"INSERT INTO '{t}' {src}")
+    got = eng.sql(f"select k, count(*) as n from '{t}' group by k "
+                  "order by k").collect()
+    assert [(r["k"], r["n"]) for r in got] == [(1, 2), (2, 2)]
+    with pytest.raises(ValueError, match="append column 'k'"):
+        eng.sql(f"INSERT INTO '{t}' select 'x', "
+                "timestamp_ntz'2024-01-01 00:00:00'")
 
 
 def test_lake_path_select_and_time_travel(spark, tmp_path):
@@ -1451,9 +1566,19 @@ def test_alter_ftl_remaining_productions(spark, tmp_path):
     ndv = eng.sql(f"select ndv from sys.statistics where table_name = "
                   f"'{t}' and column_name = 'n_nationkey'").first()["ndv"]
     assert ndv == 25  # exact (HLL++ gives 26 at this cardinality)
-    # OPTIMIZE without explicit ZORDER consumes the clustering key
+    # OPTIMIZE without explicit ZORDER consumes the clustering key, on
+    # both formats
     res = eng.sql(f"OPTIMIZE TABLE '{t}'").first()
     assert res["operation"] == "OPTIMIZE ZORDER"
+    from dremio_oss_spark.sources.iceberg import write_iceberg
+
+    ti = str(tmp_path / "alt_i")
+    write_iceberg(spark, spark.read.parquet(
+        _os.path.join(SF_SMALL, "nation.parquet")), ti)
+    eng.sql(f"ALTER TABLE '{ti}' CLUSTER BY (n_regionkey, n_nationkey)")
+    res = eng.sql(f"OPTIMIZE TABLE '{ti}'").first()
+    assert res["operation"] == "OPTIMIZE ZORDER"
+    assert eng.sql(f"select count(*) as n from '{ti}'").first()["n"] == 25
     # drops clear the declarations
     eng.sql(f"ALTER TABLE '{t}' DROP PRIMARY KEY")
     eng.sql(f"ALTER TABLE '{t}' DROP LOCALSORT")

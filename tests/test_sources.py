@@ -1028,9 +1028,7 @@ def test_rename_column_both_formats(spark, tmp_path):
     import pytest as _pt
 
     with _pt.raises(ValueError, match="partition column"):
-        from dremio_oss_spark.sources.delta import rename_delta_column
-
-        rename_delta_column(spark, t, "p", "pp")
+        eng.sql(f"ALTER TABLE '{t}' RENAME COLUMN p TO pp")
 
     t2 = str(tmp_path / "i")
     write_iceberg(spark, df, t2, partition_by=["p"])
@@ -1278,6 +1276,75 @@ def test_delta_dv_rollback_restores_pre_delete_state(spark, tmp_path):
     assert read_delta(spark, t).count() == 20
 
 
+def test_iceberg_rollback_claims_its_snapshot(spark, tmp_path,
+                                              monkeypatch):
+    """A commit that lands while ROLLBACK writes its snapshot wins the
+    version claim: the rollback raises ConcurrentWriteError instead of
+    overwriting the metadata file, and the appended row survives."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.sources import iceberg
+    from dremio_oss_spark.sources.delta import ConcurrentWriteError
+
+    t = str(tmp_path / "t")
+    rows = spark.range(10).select(F.col("id").alias("k"))
+    first = iceberg.write_iceberg(spark, rows, t)
+    iceberg.write_iceberg(spark, rows, t)  # overwrite: snapshot 2
+    real, raced = iceberg._snapshot_ts_ms, []
+
+    def racing(meta):
+        if not raced:  # once: the append's own commit passes through
+            raced.append(None)
+            raced[0] = iceberg.write_iceberg(
+                spark, spark.range(100, 101).select(
+                    F.col("id").alias("k")), t, mode="append")
+        return real(meta)
+
+    monkeypatch.setattr(iceberg, "_snapshot_ts_ms", racing)
+    with pytest.raises(ConcurrentWriteError):
+        iceberg.rollback_iceberg(t, first)
+    monkeypatch.undo()
+    assert raced == [3]
+    assert [h["operation"] for h in iceberg.iceberg_history(t)][-1] \
+        == "append"
+    assert iceberg.read_iceberg(spark, t).where("k = 100").count() == 1
+
+
+def test_vacuum_reclaims_delta_deletion_vector_files(spark, tmp_path):
+    """Deletion-vector files are delete marks the sweep owns: REMOVE
+    ORPHAN FILES deletes a .bin no version references (a DV commit that
+    lost the version race) and keeps the ones history reads; after
+    OPTIMIZE folds the DVs, VACUUM reclaims them."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources.delta import read_delta, write_delta
+
+    eng = Engine(spark)
+    t = str(tmp_path / "t")
+    write_delta(spark, spark.range(40).select(
+        F.col("id").alias("k")).coalesce(1), t)
+    eng.sql(f"ALTER TABLE '{t}' SET TBLPROPERTIES "
+            "('delta.enableDeletionVectors' = 'true')")
+    eng.sql(f"DELETE FROM '{t}' WHERE k < 5")
+    eng.sql(f"DELETE FROM '{t}' WHERE k >= 35")
+    dvs = sorted(glob.glob(os.path.join(t, "*.bin")))
+    assert len(dvs) == 2
+    lost = os.path.join(t, "dv-00099-0badf00d.bin")
+    with open(lost, "wb") as f:
+        f.write(b"\x01")
+    eng.sql(f"VACUUM TABLE '{t}' REMOVE ORPHAN FILES")
+    assert sorted(glob.glob(os.path.join(t, "*.bin"))) == dvs
+    eng.sql(f"OPTIMIZE TABLE '{t}'")
+    eng.sql(f"VACUUM TABLE '{t}'")
+    assert glob.glob(os.path.join(t, "*.bin")) == []
+    got = sorted(r["k"] for r in read_delta(spark, t).collect())
+    assert got == list(range(5, 35))
+
+
 def test_sorted_layout_and_partition_scoped_optimize(spark, tmp_path):
     """sort_by writes (LOCALSORT layout) give each file a disjoint key
     range so stats prune point lookups to ONE file; OPTIMIZE ... FOR
@@ -1499,18 +1566,21 @@ def test_optimistic_concurrency_commits(spark, tmp_path):
                         it, mode="append")
 
 
-def test_optimize_zorder_multidimensional_skipping(spark, tmp_path):
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_optimize_zorder_multidimensional_skipping(spark, tmp_path, fmt):
     """OPTIMIZE ZORDER BY (x, y): after the rewrite, point lookups on
     EITHER column stats-prune most files; a linear sort on x only serves
     x. Row set identical before/after (dataChange=false)."""
     from pyspark.sql import functions as F
 
-    from dremio_oss_spark.sources.delta import (
-        optimize_delta,
-        plan_delta_scan,
-        read_delta,
-        write_delta,
-    )
+    from dremio_oss_spark.sources import delta, iceberg
+
+    write, read, optimize, plan = {
+        "delta": (delta.write_delta, delta.read_delta,
+                  delta.optimize_delta, delta.plan_delta_scan),
+        "iceberg": (iceberg.write_iceberg, iceberg.read_iceberg,
+                    iceberg.optimize_iceberg, iceberg.plan_iceberg_scan),
+    }[fmt]
 
     # 64x64 independent grid: worst case for a single-column sort
     grid = (spark.range(64).select(F.col("id").alias("x"))
@@ -1518,14 +1588,14 @@ def test_optimize_zorder_multidimensional_skipping(spark, tmp_path):
             .withColumn("v", F.col("x") * 100 + F.col("y")))
 
     zt = str(tmp_path / "z")
-    write_delta(spark, grid, zt)
-    before = {(r["x"], r["y"]) for r in read_delta(spark, zt).collect()}
-    optimize_delta(spark, zt, zorder_by=["x", "y"], zorder_files=16)
-    after = {(r["x"], r["y"]) for r in read_delta(spark, zt).collect()}
+    write(spark, grid, zt)
+    before = {(r["x"], r["y"]) for r in read(spark, zt).collect()}
+    optimize(spark, zt, zorder_by=["x", "y"], zorder_files=16)
+    after = {(r["x"], r["y"]) for r in read(spark, zt).collect()}
     assert after == before  # dataChange=false: identical rows
 
-    _, total_x, scanned_x = plan_delta_scan(spark, zt, {"x": 7})
-    _, total_y, scanned_y = plan_delta_scan(spark, zt, {"y": 7})
+    _, total_x, scanned_x = plan(spark, zt, {"x": 7})
+    _, total_y, scanned_y = plan(spark, zt, {"y": 7})
     assert total_x == 16
     # a z-order over two 16-file dims should prune ~3/4 on each axis
     assert scanned_x <= total_x // 2
@@ -1533,9 +1603,9 @@ def test_optimize_zorder_multidimensional_skipping(spark, tmp_path):
 
     # contrast: linear sort layout serves x but not y
     lt = str(tmp_path / "lin")
-    write_delta(spark, grid, lt, sort_by=["x"])
-    _, lt_total, lt_x = plan_delta_scan(spark, lt, {"x": 7})
-    _, _, lt_y = plan_delta_scan(spark, lt, {"y": 7})
+    write(spark, grid, lt, sort_by=["x"])
+    _, lt_total, lt_x = plan(spark, lt, {"x": 7})
+    _, _, lt_y = plan(spark, lt, {"y": 7})
     assert lt_x <= lt_total // 2      # leading column prunes
     assert lt_y == lt_total           # non-leading column cannot
 
@@ -3108,34 +3178,37 @@ def test_change_column_type_promotion(spark, tmp_path):
         eng.sql(f"alter table '{ti}' change column v v int")
 
 
-def test_optimize_applies_declared_localsort(spark, tmp_path):
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_optimize_applies_declared_localsort(spark, tmp_path, fmt):
     """ALTER TABLE LOCALSORT BY then OPTIMIZE: the compaction rewrite
     range-clusters on the declared keys — rewritten files cover
     disjoint key ranges (checked via per-file min/max stats), rows
     unchanged."""
-    import json as _json
-    import os as _os
-
     from pyspark.sql import functions as F
 
     from dremio_oss_spark.engine import Engine
-    from dremio_oss_spark.sources.iceberg import (read_iceberg,
-                                                  resolve_snapshot,
-                                                  write_iceberg)
+    from dremio_oss_spark.sources import delta, iceberg
 
     t = str(tmp_path / "ls_t")
     df = spark.range(0, 4000).select(
         (F.col("id") * 7919 % 4000).alias("k"),
         F.col("id").alias("v"))
     # several unsorted files
-    write_iceberg(spark, df.repartition(6), t)
+    if fmt == "delta":
+        delta.write_delta(spark, df.repartition(6), t)
+    else:
+        iceberg.write_iceberg(spark, df.repartition(6), t)
     eng = Engine(spark)
     eng.sql(f"ALTER TABLE '{t}' LOCALSORT BY (k)")
     eng.sql(f"OPTIMIZE TABLE '{t}'")
-    snap = resolve_snapshot(t)
+    if fmt == "delta":
+        snap = delta.resolve_snapshot(spark, t)
+        stats = [snap.stats.get(p) or {} for p in snap.files]
+    else:
+        snap = iceberg.resolve_snapshot(t)
+        stats = [snap.stats.get(p) or {} for p, _pv in snap.files]
     ranges = []
-    for p, _pv in snap.files:
-        st = snap.stats.get(p) or {}
+    for st in stats:
         lo = (st.get("minValues") or {}).get("k")
         hi = (st.get("maxValues") or {}).get("k")
         assert lo is not None and hi is not None
@@ -3144,6 +3217,5 @@ def test_optimize_applies_declared_localsort(spark, tmp_path):
     assert len(ranges) > 1  # actually range-split
     for (l1, h1), (l2, h2) in zip(ranges, ranges[1:]):
         assert h1 <= l2, f"overlapping key ranges {ranges}"
-    got = read_iceberg(spark, t)
-    assert got.count() == 4000
-    assert got.agg(F.sum("v")).first()[0] == sum(range(4000))
+    got = eng.sql(f"select count(*) as n, sum(v) as s from '{t}'").first()
+    assert (got["n"], got["s"]) == (4000, sum(range(4000)))
