@@ -22,10 +22,12 @@ from __future__ import annotations
 
 import os
 import re
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import sqltext
 from .catalog import register_testdata
 from .functions.shims import register_all
 from .session import build_spark
@@ -60,92 +62,41 @@ _CONVERT_CODECS = {
 _JSON_TO_CODECS = {"JSON", "SIMPLEJSON", "COMPACTJSON", "EXTENDEDJSON"}
 
 
-def _split_top_level(s: str, sep: str) -> list[str]:
-    """Split on `sep` outside parentheses and single quotes."""
-    out, depth, in_str, cur = [], 0, False, []
-    for ch in s:
-        if ch == "'" and not in_str:
-            in_str = True
-        elif ch == "'" and in_str:
-            in_str = False
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == sep and depth == 0:
-                out.append("".join(cur))
-                cur = []
-                continue
-        cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
+def _dialect(query: str) -> str:
+    """Dremio function names Spark lacks -> Spark's, outside literals."""
+    for pat, rep in _DIALECT_REWRITES:
+        query = sqltext.sub(pat, rep, query, re.I)
+    return query
 
 
 def _rewrite_convert(query: str) -> str:
     """CONVERT_FROM/TO(x, '<codec>') -> the matching shim call
-    (exec/expr/fn/impl/conv/).  Paren-balanced, string-aware, recursive —
-    regex can't handle nested CONVERT calls."""
-    pat = re.compile(r"\bCONVERT_(FROM|TO)\s*\(", re.I)
-    m = pat.search(query)
+    (exec/expr/fn/impl/conv/).  Paren-balanced over the masked text and
+    recursive — regex can't handle nested CONVERT calls."""
+    masked = sqltext.mask(query)
+    m = re.search(r"\bCONVERT_(FROM|TO)\s*\(", masked, re.I)
     if not m:
         return query
-    open_i = m.end() - 1
-    depth, in_str, close_i = 0, False, -1
-    for j in range(open_i, len(query)):
-        ch = query[j]
-        if in_str:
-            in_str = ch != "'"
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                close_i = j
-                break
-    if close_i < 0:
+    depth = 0
+    for p in re.finditer(r"[()]", masked[m.end() - 1:]):
+        depth += 1 if p.group() == "(" else -1
+        if depth == 0:
+            break
+    else:
         return query  # unbalanced: let Spark produce the parse error
-    inner = query[open_i + 1:close_i]
-    args, depth, in_str, cur = [], 0, False, ""
-    for ch in inner:
-        if in_str:
-            cur += ch
-            in_str = ch != "'"
-            continue
-        if ch == "'":
-            in_str = True
-            cur += ch
-        elif ch == "(":
-            depth += 1
-            cur += ch
-        elif ch == ")":
-            depth -= 1
-            cur += ch
-        elif ch == "," and depth == 0:
-            args.append(cur)
-            cur = ""
-        else:
-            cur += ch
-    args.append(cur)
+    close_i = m.end() - 1 + p.start()
+    args = sqltext.split_top_level(query[m.end():close_i])
     codec = args[-1].strip().strip("'").upper() if len(args) >= 2 else ""
     if codec in _JSON_TO_CODECS and m.group(1).upper() == "TO":
-        rewritten_arg = _rewrite_convert(",".join(args[:-1]))
-        return (
-            query[:m.start()]
-            + f"to_json({rewritten_arg})"
-            + _rewrite_convert(query[close_i + 1:])
-        )
-    if codec not in _CONVERT_CODECS:
+        name = "to_json"
+    elif codec in _CONVERT_CODECS:
+        name = f"convert_{m.group(1).lower()}_{codec.lower()}"
+    else:
         raise ValueError(
             f"CONVERT_{m.group(1).upper()} codec {codec!r} not supported in "
             f"SQL (known: {sorted(_CONVERT_CODECS)}; JSON goes through "
             "convert_from_json with plan-time schema discovery)"
         )
-    name = f"convert_{m.group(1).lower()}_{codec.lower()}"
     rewritten_arg = _rewrite_convert(",".join(args[:-1]))
     return (
         query[:m.start()]
@@ -226,6 +177,11 @@ class Engine:
         self.session_user: str = "$dremio$"
         self._query_seq = 0
         self._last_query_id: str | None = None
+        # plan cache (see sql()): LRU entries and the statement counter
+        # that invalidates them
+        self._plan_cache: OrderedDict = OrderedDict()
+        self._plan_cache_gen = 0
+        self.plan_cache_hits = 0
         # per-job telemetry (reference services/jobtelemetry +
         # JobProfileResource.java:64): profiles land here from the REST
         # server and from profiled_sql(); sys.jobs reads it back
@@ -550,6 +506,23 @@ class Engine:
     def _flat(space: str, name: str) -> str:
         return f"{space}__{name}".replace(".", "__")
 
+    def _resolve_vds_names(self, query: str) -> str:
+        """Dotted VDS references `space.name[.col]` -> the flat view
+        name, outside literals: per identifier chain, one lookup of its
+        head in `self.spaces`, then the longest prefix naming a VDS of
+        that space — cost follows the statement, not the catalog."""
+        def repl(m: sqltext.Match) -> str:
+            head, parts = m.group(1), m.group(2)[1:].split(".")
+            vds = getattr(self.spaces.get(head), "vds", ())
+            for k in range(len(parts), 0, -1):
+                name = ".".join(parts[:k])
+                if name in vds:
+                    return ".".join([self._flat(head, name)] + parts[k:])
+            return m.group(0)
+
+        return sqltext.sub(r"(?<![\w.])([A-Za-z_]\w*)((?:\.\w+)+)", repl,
+                           query)
+
     def table(self, fqname: str, user: str | None = None) -> DataFrame:
         """Resolve `space.name` (VDS) or a bare table/view name; when a
         user is given, SELECT access is enforced against the ACL.
@@ -847,52 +820,12 @@ class Engine:
         "window", "natural", "semi", "anti", "except",
         "intersect", "distribute", "cluster", "sort", "as"))
 
-    @staticmethod
-    def _strip_sql(sql: str) -> str:
-        """ONE pass over ' and " string literals, -- line comments and
-        /* */ block comments: stripping any of these with separate
-        regexes corrupts the others (an apostrophe inside a comment,
-        '--' inside a literal, a quote inside a block comment).  An
-        unterminated context consumes to EOF by construction — same as
-        the SQL parser would."""
-        out, i, n = [], 0, len(sql)
-        while i < n:
-            c = sql[i]
-            if c in ("'", '"'):  # Spark: both are string literals
-                q = c
-                i += 1
-                while i < n:
-                    if sql[i] == "\\":
-                        i += 2
-                        continue
-                    if sql[i] == q:
-                        if i + 1 < n and sql[i + 1] == q:
-                            i += 2  # doubled quote stays inside
-                            continue
-                        i += 1
-                        break
-                    i += 1
-                out.append(q + q)
-                continue
-            if c == "-" and sql[i:i + 2] == "--":
-                while i < n and sql[i] != "\n":
-                    i += 1
-                continue
-            if c == "/" and sql[i:i + 2] == "/*":
-                end = sql.find("*/", i + 2)
-                i = n if end < 0 else end + 2
-                out.append(" ")
-                continue
-            out.append(c)
-            i += 1
-        return "".join(out)
-
     @classmethod
     def _sql_from_refs(cls, sql: str) -> list[str]:
         """FROM/JOIN targets INCLUDING old-style comma lists
         ("from a, b c, d"), skipping aliases by keyword guard —
         shared by dataset_graph and dataset_descendants."""
-        clean = cls._strip_sql(sql)
+        clean = sqltext.mask(sql)
         out: list[str] = []
         for m in re.finditer(r"\b(?:from|join)\s+", clean, re.I):
             pos = m.end()
@@ -1232,7 +1165,7 @@ class Engine:
         """Make `sys.<name>` and `INFORMATION_SCHEMA.<view>` table refs
         queryable in engine SQL by materializing the corresponding
         catalog view as a temp view."""
-        def repl(m: "re.Match[str]") -> str:
+        def repl(m: sqltext.Match) -> str:
             name = m.group(1).lower()
             if name not in self._SYS_SQL:
                 return m.group(0)
@@ -1243,9 +1176,9 @@ class Engine:
             fn().createOrReplaceTempView(view)
             return view
 
-        query = re.sub(r"\bsys\.(\w+)\b", repl, query, flags=re.I)
+        query = sqltext.sub(r"\bsys\.(\w+)\b", repl, query, re.I)
 
-        def repl_is(m: "re.Match[str]") -> str:
+        def repl_is(m: sqltext.Match) -> str:
             kind = m.group(1).lower().strip('"')
             src = self.information_schema_tables()
             if kind == "views":
@@ -1261,9 +1194,10 @@ class Engine:
             src.createOrReplaceTempView(view)
             return view
 
-        return re.sub(
-            r"\binformation_schema\.(\"?\w+\"?)", repl_is, query, flags=re.I
-        )
+        # Dremio's double-quoted identifier (`information_schema."TABLES"`)
+        # is a string literal to the lexer: match its masked quotes
+        return sqltext.sub(r"\binformation_schema\.(\"[^\"]*\"|\w+)",
+                           repl_is, query, re.I)
 
     def alter_session(self, key: str, value) -> None:
         """ALTER SESSION SET "key" = value (reference `SqlSetOption` /
@@ -1418,7 +1352,7 @@ class Engine:
             store = self._default_refl_store()
             measures = []
             star_df = None
-            for item in _split_top_level(meas_s, ","):
+            for item in sqltext.split_top_level(meas_s):
                 item = item.strip()
                 if not item:
                     continue
@@ -1700,12 +1634,13 @@ class Engine:
         self._tabular[name] = (list(params), sql)
 
     def _expand_tabular(self, query: str) -> str:
-        def repl(m: "re.Match[str]") -> str:
+        def repl(m: sqltext.Match) -> str:
             name, argstr = m.group(1), m.group(2)
             if name not in self._tabular:
                 return m.group(0)
             params, body = self._tabular[name]
-            args = [a.strip() for a in argstr.split(",")] if argstr.strip() else []
+            args = ([a.strip() for a in sqltext.split_top_level(argstr)]
+                    if argstr.strip() else [])
             if len(args) != len(params):
                 raise ValueError(
                     f"{name} expects {len(params)} args, got {len(args)}"
@@ -1714,17 +1649,18 @@ class Engine:
             # placeholders, THEN placeholders swap to arguments — a
             # sequential pass re-substituted an argument that happened
             # to equal a LATER parameter name (f(y, 2) with params
-            # (x, y) clobbered the y argument).  Lambda replacements
-            # keep backslashes in arguments literal.
+            # (x, y) clobbered the y argument).  Replacements are
+            # inserted verbatim, backslashes included.
             ph = {p: f"\x00tparam{i}\x00" for i, p in enumerate(params)}
             for p in params:
-                body = re.sub(rf"\b{re.escape(p)}\b",
-                              lambda _m, t=ph[p]: t, body)
+                body = sqltext.sub(rf"\b{re.escape(p)}\b", ph[p], body)
             for p, a in zip(params, args):
                 body = body.replace(ph[p], a)
-            return f"({body})"
+            # the body joins the statement after its dialect pass
+            return f"({_dialect(body)})"
 
-        return re.sub(r"table\(\s*(\w+)\s*\(([^()]*)\)\s*\)", repl, query, flags=re.I)
+        return sqltext.sub(r"table\(\s*(\w+)\s*\(([^()]*)\)\s*\)", repl,
+                           query, re.I)
 
     def promote_folder_dataset(self, name: str, path: str) -> int:
         """Format a folder of parquet files as a named physical dataset
@@ -2233,7 +2169,7 @@ class Engine:
             m = re.match(r"\s*\((.*?)\)\s*RETURNS\s+(\w+)", sig, re.S)
             params = []
             if m and m.group(1).strip():
-                for p in _split_top_level(m.group(1), ","):
+                for p in sqltext.split_top_level(m.group(1)):
                     pn, _, pt = p.strip().partition(" ")
                     params.append({"name": pn,
                                    "type": (pt.strip() or "ANY").upper()})
@@ -2553,6 +2489,74 @@ class Engine:
         return self._local_df(
             [(operation, str(detail))], "operation string, result string")
 
+    @staticmethod
+    def _assignments(sets: str) -> dict[str, str]:
+        """An UPDATE/MERGE SET list, `a = e1, s.b = e2`, as
+        {"a": "e1", "b": "e2"}."""
+        return {c.strip().split(".")[-1]: e.strip() for c, _, e in
+                (p.partition("=") for p in sqltext.split_top_level(sets))}
+
+    @staticmethod
+    def _column_defs(cols: str) -> dict[str, str]:
+        """ADD COLUMNS' `(a int, b decimal(10,2))` as {name: type}."""
+        return {n: t.strip() for n, _, t in
+                (p.strip().partition(" ")
+                 for p in sqltext.split_top_level(cols))}
+
+    @staticmethod
+    def _optimize_options(opts: str | None) -> dict[str, float] | None:
+        """OPTIMIZE's `(MIN_INPUT_FILES=5, TARGET_FILE_SIZE_MB=256, …)`:
+        ParseOptimizeOptions' four names, validated."""
+        if not opts:
+            return None
+        options = {}
+        for item in sqltext.split_top_level(opts):
+            k, _, v = item.partition("=")
+            k = k.strip().lower()
+            if k not in ("min_input_files", "target_file_size_mb",
+                         "min_file_size_mb", "max_file_size_mb"):
+                raise ValueError(f"unknown OPTIMIZE option {k!r}")
+            options[k] = float(v)
+        return options
+
+    # MERGE after its target (SqlMergeIntoTable): USING a view name, a
+    # quoted lake path or a parenthesized subquery, with an optional
+    # alias that qualifies source columns (default `s`), then ON and the
+    # grammar's three clause shapes: matched-only, insert-only, or both
+    _MERGE_REST = (
+        r"\s+using\s+"
+        r"(?:'(?P<spath>[^']+)'|\((?P<subq>.+?)\)|(?P<sview>\w+))"
+        r"(?:\s+(?:as\s+)?(?!on\b)(?P<alias>\w+))?\s+"
+        r"on\s+(?P<cond>.+?)\s+"
+        r"(?:when\s+matched\s+then\s+update\s+set\s+(?P<sets>.+?))?"
+        r"(?:\s*when\s+not\s+matched\s+then\s+insert\s+(?P<ins>\*))?"
+        r"\s*$")
+
+    def _merge_args(self, m: sqltext.Match) -> dict:
+        """Source frame, join keys and clause flags of a MERGE matched
+        with `_MERGE_REST` (`SET *` takes every source column)."""
+        from .sources import delta as D
+        from .sources import iceberg as I
+
+        spath, sets = m.group("spath"), m.group("sets")
+        if spath is None:
+            source = (self.sql(m.group("subq"))
+                      if m.group("subq") is not None
+                      else self.spark.table(m.group("sview")))
+        elif self._lake_format(spath) == "delta":
+            source = D.read_delta(self.spark, spath)
+        elif self._lake_format(spath) == "iceberg":
+            source = I.read_iceberg(self.spark, spath)
+        else:  # a plain parquet dir/file source
+            source = self.spark.read.parquet(spath)
+        return {"source": source,
+                "on": [k.split("=")[0].strip().split(".")[-1] for k in
+                       sqltext.split(r"\band\b", m.group("cond"), re.I)],
+                "update_set": (None if sets is None or sets.strip() == "*"
+                               else self._assignments(sets)),
+                "insert_not_matched": m.group("ins") is not None,
+                "update_matched": sets is not None}
+
     def _lake_statement(self, query: str) -> DataFrame | None:
         """SQL forms of the lakehouse DML surface on quoted table paths:
         DELETE FROM / UPDATE / MERGE INTO / OPTIMIZE TABLE /
@@ -2574,7 +2578,7 @@ class Engine:
             path, fmt, parts, select = (
                 m.group(1), (m.group(2) or "delta").lower(),
                 m.group(3), m.group(4))
-            part_by = ([p.strip() for p in _split_top_level(parts, ",")]
+            part_by = ([p.strip() for p in sqltext.split_top_level(parts)]
                        if parts else None)
             df = self.sql(select)
             if fmt == "delta":
@@ -2634,7 +2638,7 @@ class Engine:
             return self._status("DELETE", lake_dml.delete(
                 lake_dml.codec(fmt), self.spark, path, pred))
 
-        m = re.match(
+        m = sqltext.match(
             r"\s*update\s+'([^']+)'\s+set\s+(.+?)(?:\s+where\s+(.+?))?\s*$",
             query, re.I | re.S)
         if m:
@@ -2642,62 +2646,19 @@ class Engine:
             fmt = self._lake_format(path)
             if fmt is None:
                 return None
-            set_exprs: dict[str, str] = {}
-            for part in _split_top_level(sets, ","):
-                c, _, e = part.partition("=")
-                set_exprs[c.strip()] = e.strip()
             return self._status("UPDATE", lake_dml.update(
-                lake_dml.codec(fmt), self.spark, path, set_exprs, pred))
+                lake_dml.codec(fmt), self.spark, path,
+                self._assignments(sets), pred))
 
-        # the grammar's three clause shapes (SqlMergeIntoTable:
-        # updateCall [+ insertCall] | insertCall alone): matched-only,
-        # insert-only, or both.  USING accepts any TableRef: a view
-        # name, a quoted lake path, or a parenthesized subquery, with an
-        # optional alias that qualifies source columns (default `s`)
-        m = re.match(
-            r"\s*merge\s+into\s+'([^']+)'\s+using\s+"
-            r"(?:'(?P<spath>[^']+)'|\((?P<subq>.+?)\)|(?P<sview>\w+))"
-            r"(?:\s+(?:as\s+)?(?!on\b)(?P<alias>\w+))?\s+"
-            r"on\s+(?P<cond>.+?)\s+"
-            r"(?:when\s+matched\s+then\s+update\s+set\s+(?P<sets>.+?))?"
-            r"(?:\s*when\s+not\s+matched\s+then\s+insert\s+\*)?\s*$",
-            query, re.I | re.S)
-        if m and (m.group("sets") is not None
-                  or re.search(r"when\s+not\s+matched", query, re.I)):
-            path, cond, sets = (m.group(1), m.group("cond"),
-                                m.group("sets"))
-            fmt = self._lake_format(path)
+        m = sqltext.match(r"\s*merge\s+into\s+'([^']+)'" + self._MERGE_REST,
+                          query, re.I | re.S)
+        if m and (m.group("sets") is not None or m.group("ins")):
+            fmt = self._lake_format(m.group(1))
             if fmt is None:
                 return None
-            keys = [k.strip().split(".")[-1]
-                    for k in re.split(r"\band\b", cond, flags=re.I)
-                    for k in [k.split("=")[0]]]
-            insert_nm = bool(re.search(r"when\s+not\s+matched", query,
-                                       re.I))
-            update_set = None  # SET * → take every source column
-            if sets is not None and sets.strip() != "*":
-                update_set = {}
-                for part in _split_top_level(sets, ","):
-                    c, _, e = part.partition("=")
-                    update_set[c.strip().split(".")[-1]] = e.strip()
-            if m.group("spath") is not None:
-                spath = m.group("spath")
-                sfmt = self._lake_format(spath)
-                if sfmt == "delta":
-                    source = D.read_delta(self.spark, spath)
-                elif sfmt == "iceberg":
-                    source = I.read_iceberg(self.spark, spath)
-                else:  # a plain parquet dir/file source
-                    source = self.spark.read.parquet(spath)
-            elif m.group("subq") is not None:
-                source = self.sql(m.group("subq"))
-            else:
-                source = self.spark.table(m.group("sview"))
             return self._status("MERGE", lake_dml.merge(
-                lake_dml.codec(fmt), self.spark, path, source, on=keys,
-                update_set=update_set, insert_not_matched=insert_nm,
-                update_matched=sets is not None,
-                alias=m.group("alias") or "s"))
+                lake_dml.codec(fmt), self.spark, m.group(1),
+                alias=m.group("alias") or "s", **self._merge_args(m)))
 
         m = re.match(r"\s*truncate\s+(?:table\s+)?'([^']+)'\s*$",
                      query, re.I)
@@ -2752,20 +2713,6 @@ class Engine:
             fmt = self._lake_format(path)
             if fmt is None:
                 return None
-            options = None
-            if opts:
-                # MIN_INPUT_FILES=5, TARGET_FILE_SIZE_MB=256, ... —
-                # ParseOptimizeOptions' four names, validated
-                options = {}
-                for item in opts.split(","):
-                    k, _, v = item.partition("=")
-                    k = k.strip().lower()
-                    if k not in ("min_input_files",
-                                 "target_file_size_mb",
-                                 "min_file_size_mb",
-                                 "max_file_size_mb"):
-                        raise ValueError(f"unknown OPTIMIZE option {k!r}")
-                    options[k] = float(v.strip())
             codec = lake_dml.codec(fmt)
             zorder_by = zcols and [c.strip() for c in zcols.split(",")]
             kind, _ = lake_dml.layout(
@@ -2774,7 +2721,8 @@ class Engine:
             return self._status(
                 "OPTIMIZE ZORDER" if kind == "zorder" else "OPTIMIZE",
                 lake_dml.optimize(codec, self.spark, path, where=where,
-                                  zorder_by=zorder_by, options=options))
+                                  zorder_by=zorder_by,
+                                  options=self._optimize_options(opts)))
 
         m = re.match(
             r"\s*vacuum\s+table\s+'([^']+)'"
@@ -2830,10 +2778,7 @@ class Engine:
             fmt = self._lake_format(path)
             if fmt is None:
                 return None
-            add: dict[str, str] = {}
-            for part in _split_top_level(cols, ","):
-                name, _, typ = part.strip().partition(" ")
-                add[name.strip()] = typ.strip()
+            add = self._column_defs(cols)
             out = (D.alter_delta(self.spark, path, add=add)
                    if fmt == "delta" else I.alter_iceberg(path, add=add))
             return self._status("ALTER TABLE ADD COLUMNS", out)
@@ -2886,7 +2831,7 @@ class Engine:
             if fmt is None:
                 return None
             props: dict[str, str] = {}
-            for part in _split_top_level(body, ","):
+            for part in sqltext.split_top_level(body):
                 k, _, v = part.partition("=")
                 props[k.strip().strip("'\"")] = v.strip().strip("'\"")
             if fmt == "delta":
@@ -2905,7 +2850,7 @@ class Engine:
             if fmt is None:
                 return None
             unset = {part.strip().strip("'\""): None
-                     for part in _split_top_level(body, ",")}
+                     for part in sqltext.split_top_level(body)}
             if fmt == "delta":
                 D.set_delta_properties(self.spark, path, unset)
             else:
@@ -3681,26 +3626,20 @@ class Engine:
         if store is None or not (store._reflections or store._raw
                                  or getattr(store, "_external", None)):
             return None
-        # the probe analyzes through Spark, so dialect names must be
-        # rewritten FIRST (NDV( -> approx_count_distinct( etc.) or the
-        # probe's analysis fails and acceleration silently falls
-        # through; Engine.sql re-applies the same rewrites later —
-        # idempotent, rewritten names never re-match a pattern
-        for pat, rep in _DIALECT_REWRITES:
-            query = re.sub(pat, rep, query, flags=re.IGNORECASE)
         # dependency-driven freshness: stale dependents refresh BEFORE
         # matching, so an accelerated answer reflects the latest commit
         self._refresh_stale_reflections()
         # fail-safe, same contract as the plan-tree path: acceleration
         # must never break a query that would plan normally
+        flat = self._resolve_vds_names(query)
         try:
-            df = self._external_accelerate(query)
+            df = self._external_accelerate(flat)
         except Exception:  # noqa: BLE001 — fall through, plan normally
             df = None
             self.last_plan_accelerated = None
         if df is not None:
             return df
-        df = self._plan_tree_accelerate(query)
+        df = self._plan_tree_accelerate(flat)
         if df is not None:
             return df
         if not store._reflections:
@@ -3721,7 +3660,7 @@ class Engine:
             return None
         measures: list[Measure] = []
         out_specs: list[tuple] = []  # ('dim', col) | ('measure', m, alias)
-        for item in _split_top_level(sel, ","):
+        for item in sqltext.split_top_level(sel):
             item = item.strip()
             if re.fullmatch(r"\w+", item):
                 if item not in dims:
@@ -3779,6 +3718,18 @@ class Engine:
             self.last_plan_accelerated = None
             return None
 
+    @staticmethod
+    def _analyzable(query: str) -> bool:
+        """Whether a probe may analyze `query` through Spark: SELECT or
+        WITH only, and no command keyword anywhere — WITH ... INSERT
+        INTO is a COMMAND that spark.sql() executes eagerly, so
+        analyzing it would apply the DML twice.  Skipping such a query
+        is sound (it just plans normally)."""
+        return bool(re.match(r"\s*(select|with)\b", query, re.I)) and not \
+            re.search(r"\b(insert\s+into|create\s+(or\s+replace\s+)?"
+                      r"table|replace\s+table|merge\s+into|"
+                      r"delete\s+from)\b", query, re.I)
+
     def _external_accelerate(self, query: str) -> DataFrame | None:
         """External-reflection substitution (reference
         `ReflectionServiceImpl.createExternalReflection:586`): when the
@@ -3789,24 +3740,13 @@ class Engine:
         reference's descriptor substitution of the dataset expansion.
         Freshness gate: either side's row type drifting from the
         creation-time fingerprint marks the reflection OUT_OF_SYNC
-        (invalid) and it stops matching."""
+        (invalid) and it stops matching.  `query` arrives with its
+        dotted VDS names flattened (`_resolve_vds_names`)."""
         store = self._refl_store
         ext = [e for e in getattr(store, "_external", {}).values()
                if not e.invalid]
-        if not ext:
+        if not ext or not self._analyzable(query):
             return None
-        if not re.match(r"\s*(select|with)\b", query, re.I):
-            return None
-        if re.search(r"\b(insert\s+into|create\s+(or\s+replace\s+)?"
-                     r"table|replace\s+table|merge\s+into|"
-                     r"delete\s+from)\b", query, re.I):
-            return None  # a probe must never execute a command
-        q = query
-        for space in self.spaces.values():
-            for name in space.vds:
-                q = re.sub(
-                    rf"\b{re.escape(space.name)}\.{re.escape(name)}\b",
-                    self._flat(space.name, name), q)
         # which datasets does the query actually reference?  Walk the
         # ANALYZED plan's identifier fields — matching on raw query
         # text would false-hit string literals and comments.
@@ -3814,7 +3754,7 @@ class Engine:
 
         try:
             analyzed = json.loads(
-                self.spark.sql(q)._jdf.queryExecution().analyzed()
+                self.spark.sql(query)._jdf.queryExecution().analyzed()
                 .toJSON())
         except Exception:
             return None
@@ -3865,7 +3805,7 @@ class Engine:
                 self._resolve_table(e.target).createOrReplaceTempView(
                     flat)
             try:
-                df = self.spark.sql(q)
+                df = self.spark.sql(query)
                 df.schema  # force analysis against the swapped binding
             except Exception:
                 return None  # sound fall-through: plan normally
@@ -3886,17 +3826,9 @@ class Engine:
         normalization), canonicalize the logical plan, and answer from a
         covering reflection.  Only SELECT/WITH statements are analyzed —
         Spark executes commands (INSERT/CTAS) eagerly on `sql()`, and a
-        probe must never have side effects."""
-        if not re.match(r"\s*(select|with)\b", query, re.I):
-            return None
-        if re.search(r"\b(insert\s+into|create\s+(or\s+replace\s+)?table|"
-                     r"replace\s+table|merge\s+into|delete\s+from)\b",
-                     query, re.I):
-            # WITH ... INSERT INTO is a COMMAND: spark.sql() executes it
-            # eagerly at probe time, so analyzing it here would apply
-            # the DML twice.  Skipping acceleration for any query whose
-            # text contains a command keyword is sound (it just plans
-            # normally) — a probe must never have side effects.
+        probe must never have side effects.  `query` arrives with its
+        dotted VDS names flattened (`_resolve_vds_names`)."""
+        if not self._analyzable(query):
             return None
         from .plans.substitution import (extract_agg_query,
                                          extract_scan_query,
@@ -3904,11 +3836,6 @@ class Engine:
                                          match_and_execute_raw)
 
         q = query
-        for space in self.spaces.values():
-            for name in space.vds:
-                q = re.sub(
-                    rf"\b{re.escape(space.name)}\.{re.escape(name)}\b",
-                    self._flat(space.name, name), q)
         # path-anchored reflections: a quoted lake path with a
         # registered reflection rewrites to its canonical __plake_ view
         # so the analyzed tree matches refl.table.  Time-travel suffixes
@@ -3925,8 +3852,8 @@ class Engine:
                 if v is None or p in pinned:
                     return m.group(0)
                 return f"{m.group(1)} {v}"
-            q = re.sub(r"\b(from|join)\s+'([^']+)'(?!\s+at\b)", _plake,
-                       q, flags=re.I)
+            q = sqltext.sub(r"\b(from|join)\s+'([^']+)'(?!\s+at\b)",
+                            _plake, q, re.I)
         try:
             probe = self.spark.sql(q)
             analyzed = (probe._jdf.queryExecution()
@@ -4153,7 +4080,7 @@ class Engine:
 
         names = "|".join(re.escape(n) for n in self._versioned_sources)
 
-        def repl(m: "re.Match[str]") -> str:
+        def repl(m: sqltext.Match) -> str:
             kw, src, key = m.group(1), m.group(2), m.group(3)
             mode, arg = m.group(4), m.group(5) or m.group(6)
             root = self._versioned_sources[src]
@@ -4191,8 +4118,9 @@ class Engine:
                     f"no table or view {src}.{key} at "
                     f"{cid or ref or 'main'}")
             if content["type"] == "ICEBERG_VIEW":
+                # the view body joins the statement after its dialect pass
                 inner = self._expand_versioned_refs(
-                    content["sql"],
+                    _dialect(content["sql"]),
                     overrides={src: (("commit", cid) if cid
                                      else ("branch", ref or "main"))})
                 return f"{kw} ({inner})"
@@ -4212,11 +4140,11 @@ class Engine:
             df.createOrReplaceTempView(view)
             return f"{kw} {view}"
 
-        return re.sub(
+        return sqltext.sub(
             rf"\b(from|join)\s+({names})\.((?:\w+\.)*\w+)"
             r"(?:\s+at\s+(branch|tag|commit|ref|timestamp)\s+"
             r"(?:'([^']+)'|(\w+)))?",
-            repl, query, flags=re.I)
+            repl, query, re.I)
 
     def _dataplane_statement(self, query: str) -> DataFrame | None:
         """Statement router for catalog-level versioned sources: branch
@@ -4286,41 +4214,17 @@ class Engine:
                 "MERGE BRANCH",
                 f"{m.group(1)} -> {m.group(2)} @ {res['commit']} "
                 f"({len(res['merged_keys'])} keys)")
-        # MERGE INTO <src>.<key> [AT BRANCH b] USING <view|(subq)>
-        #   ON <cond> [WHEN MATCHED THEN UPDATE SET ...]
-        #   [WHEN NOT MATCHED THEN INSERT *]
-        m = re.match(
+        # MERGE INTO <src>.<key> [AT BRANCH b] USING ... ON <cond>
+        #   [WHEN MATCHED THEN UPDATE SET ...] [WHEN NOT MATCHED THEN INSERT *]
+        m = sqltext.match(
             rf"\s*merge\s+into\s+({names})\.((?:\w+\.)*\w+){at}"
-            r"\s+using\s+(?:\((?P<subq>.+?)\)(?:\s+(?:as\s+)?\w+)?"
-            r"|(?P<sview>\w+))\s+on\s+(?P<cond>.+?)\s+"
-            r"(?:when\s+matched\s+then\s+update\s+set\s+(?P<sets>.+?))?"
-            r"(?:\s*when\s+not\s+matched\s+then\s+insert\s+\*)?\s*$",
-            query, re.I | re.S)
-        if m and (m.group("sets") is not None
-                  or re.search(r"when\s+not\s+matched", query, re.I)):
+            + self._MERGE_REST, query, re.I | re.S)
+        if m and (m.group("sets") is not None or m.group("ins")):
             src, key = m.group(1), m.group(2)
             branch = m.group(3) or self._default_branch(src)
-            keys = [k.strip().split(".")[-1]
-                    for k in re.split(r"\band\b", m.group("cond"),
-                                      flags=re.I)
-                    for k in [k.split("=")[0]]]
-            sets = m.group("sets")
-            update_set = None
-            if sets is not None and sets.strip() != "*":
-                update_set = {}
-                for part in _split_top_level(sets, ","):
-                    c, _, e = part.partition("=")
-                    update_set[c.strip().split(".")[-1]] = e.strip()
-            source = (self._sql_uncached(m.group("subq"))
-                      if m.group("subq") is not None
-                      else self.spark.table(m.group("sview")))
             cid = dataplane.merge_into(
                 self.spark, self._versioned_sources[src], branch, key,
-                source, on=keys, update_set=update_set,
-                insert_not_matched=bool(
-                    re.search(r"when\s+not\s+matched", query, re.I)),
-                update_matched=sets is not None,
-                author=self.session_user)
+                author=self.session_user, **self._merge_args(m))
             return self._status("MERGE",
                                 f"{src}.{key} @ {branch} ({cid})")
         # VACUUM SOURCE <src> [OLDER_THAN n unit]: catalog GC of
@@ -4351,22 +4255,10 @@ class Engine:
         if m:
             src, key = m.group(1), m.group(2)
             branch = m.group(3) or self._default_branch(src)
-            options = None
-            if m.group(4):
-                # same ParseOptimizeOptions names as the quoted arm
-                options = {}
-                for item in m.group(4).split(","):
-                    k, _, v = item.partition("=")
-                    k = k.strip().lower()
-                    if k not in ("min_input_files",
-                                 "target_file_size_mb",
-                                 "min_file_size_mb",
-                                 "max_file_size_mb"):
-                        raise ValueError(f"unknown OPTIMIZE option {k!r}")
-                    options[k] = float(v.strip())
             cid, before, after = dataplane.optimize_table(
                 self.spark, self._versioned_sources[src], branch, key,
-                options=options, author=self.session_user)
+                options=self._optimize_options(m.group(4)),
+                author=self.session_user)
             return self._status(
                 "OPTIMIZE TABLE",
                 f"{src}.{key} @ {branch}: {before} -> {after} files "
@@ -4545,20 +4437,17 @@ class Engine:
             return self._status("DELETE",
                                 f"{src}.{key} @ {branch} ({cid})")
         # UPDATE <src>.<key> [AT BRANCH b] SET ... [WHERE p]
-        m = re.match(
+        m = sqltext.match(
             rf"\s*update\s+({names})\.((?:\w+\.)*\w+){at}"
             r"\s+set\s+(.+?)(?:\s+where\s+(.+?))?\s*$",
             query, re.I | re.S)
         if m:
             src, key = m.group(1), m.group(2)
             branch = m.group(3) or self._default_branch(src)
-            assignments = {}
-            for part in _split_top_level(m.group(4), ","):
-                c, e = part.split("=", 1)
-                assignments[c.strip()] = e.strip()
             cid = dataplane.update_where(
                 self.spark, self._versioned_sources[src], branch, key,
-                assignments, m.group(5), author=self.session_user)
+                self._assignments(m.group(4)), m.group(5),
+                author=self.session_user)
             return self._status("UPDATE",
                                 f"{src}.{key} @ {branch} ({cid})")
         # ALTER TABLE <src>.<key> [AT BRANCH b]
@@ -4570,12 +4459,7 @@ class Engine:
         if m:
             src, key = m.group(1), m.group(2)
             branch = m.group(3) or self._default_branch(src)
-            add = None
-            if m.group(4):
-                add = {}
-                for part in _split_top_level(m.group(4), ","):
-                    cname, _, ctype = part.strip().partition(" ")
-                    add[cname.strip()] = ctype.strip()
+            add = self._column_defs(m.group(4)) if m.group(4) else None
             drop = [m.group(5)] if m.group(5) else None
             cid = dataplane.alter_table(
                 self._versioned_sources[src], branch, key,
@@ -4607,7 +4491,7 @@ class Engine:
         remote result (ref `exec/tablefunctions/ExternalQuery.java`,
         `ExternalQueryScanPrel.java:38` — the query text ships verbatim
         to the source engine and only its result crosses the wire)."""
-        def repl(m: "re.Match[str]") -> str:
+        def repl(m: sqltext.Match) -> str:
             src, remote_sql = m.group(1), m.group(2)
             s = self._ext_sources.get(src)
             if s is None:
@@ -4616,28 +4500,28 @@ class Engine:
             s.external_query(remote_sql).createOrReplaceTempView(view)
             return view
 
-        return re.sub(
+        return sqltext.sub(
             r"table\(\s*(\w+)\s*\.\s*external_query\s*\(\s*"
             r"'([^']*)'\s*\)\s*\)",
-            repl, query, flags=re.I | re.S)
+            repl, query, re.I | re.S)
 
     def _expand_metadata_fns(self, query: str) -> str:
         """Rewrite TABLE(table_history('<path>')) et al. into temp views
         (ref `MetadataFunctionsMacro.java:36` TABLE_HISTORY/FILES/...)."""
-        def repl(m: "re.Match[str]") -> str:
+        def repl(m: sqltext.Match) -> str:
             fn, path = m.group(1).lower(), m.group(2)
             view = f"__meta_{fn}_{abs(hash(path)) % 10**8}"
             getattr(self, fn)(path).createOrReplaceTempView(view)
             return view
 
-        query = re.sub(
+        query = sqltext.sub(
             r"table\(\s*(" + "|".join(self._META_FNS) + r")\s*\(\s*"
             r"'([^']+)'\s*\)\s*\)",
-            repl, query, flags=re.I)
+            repl, query, re.I)
 
         # TABLE(table_changes('<path>', start [, end])) — Delta CDF TVF
         # (delta-spark's table_changes; protocol "Change Data Files")
-        def repl_cdf(m: "re.Match[str]") -> str:
+        def repl_cdf(m: sqltext.Match) -> str:
             from .sources.delta import read_delta_cdf
 
             path, start = m.group(1), int(m.group(2))
@@ -4648,10 +4532,10 @@ class Engine:
                            end).createOrReplaceTempView(view)
             return view
 
-        return re.sub(
+        return sqltext.sub(
             r"table\(\s*table_changes\s*\(\s*'([^']+)'\s*,\s*(\d+)"
             r"(?:\s*,\s*(\d+))?\s*\)\s*\)",
-            repl_cdf, query, flags=re.I)
+            repl_cdf, query, re.I)
 
     def _safe_equality_bindings(self, query: str, path: str) -> dict:
         """Extract `col = literal` bindings that are SAFE to prune the
@@ -4661,15 +4545,16 @@ class Engine:
         every extracted conjunct must hold for every returned row.
         Pruning only ever narrows the FILE set; the unchanged WHERE
         still row-filters, so a missed binding costs nothing."""
-        if len(re.findall(r"\b(from|join)\b", query, re.I)) != 1:
+        if len(re.findall(r"\b(from|join)\b", sqltext.mask(query),
+                          re.I)) != 1:
             return {}
-        m = re.search(
+        m = sqltext.search(
             r"\bwhere\b(.*?)(\bgroup\s+by\b|\border\s+by\b|\blimit\b|$)",
             query, re.I | re.S)
-        if not m or re.search(r"\bor\b", m.group(1), re.I):
+        if not m or sqltext.search(r"\bor\b", m.group(1), re.I):
             return {}
         out: dict[str, object] = {}
-        for part in re.split(r"\band\b", m.group(1), flags=re.I):
+        for part in sqltext.split(r"\band\b", m.group(1), re.I):
             pm = re.fullmatch(
                 r"\s*(\w+)\s*=\s*(?:'([^']*)'|(-?\d+(?:\.\d+)?))\s*",
                 part)
@@ -4751,61 +4636,27 @@ class Engine:
         if not self._sources:
             return query
 
-        def string_mask(q: str) -> list[bool]:
-            # positions inside single-quoted SQL literals — a match in
-            # '/root/testdata/sf0.01/x.parquet' must never be parsed as
-            # source `testdata` table `sf0`.  Handles backslash escapes
-            # (Spark default) and '' doubling.
-            mask = [False] * len(q)
-            ins, i = False, 0
-            while i < len(q):
-                c = q[i]
-                if not ins:
-                    ins = c == "'"
-                else:
-                    mask[i] = True
-                    if c == "\\":
-                        if i + 1 < len(q):
-                            mask[i + 1] = True
-                        i += 1
-                    elif c == "'":
-                        if i + 1 < len(q) and q[i + 1] == "'":
-                            mask[i + 1] = True
-                            i += 1  # '' = escaped quote, stay in string
-                        else:
-                            ins = False
-                            mask[i] = False  # closing quote boundary
-                i += 1
-            return mask
+        def repl(m: sqltext.Match) -> str:
+            name, tbl = m.group(1), m.group(2)
+            root = self._sources[name]
+            for cand in ([os.path.join(root, tbl)]
+                         + [os.path.join(root, f"{tbl}.{e}")
+                            for e in ("parquet", "csv", "tsv", "psv",
+                                      "json")]):
+                df = self._raw_path_df(cand)
+                if df is not None:
+                    df.createOrReplaceTempView(f"{name}__{tbl}")
+                    return f"{name}__{tbl}"
+            # not a dataset under the source: leave the token for Spark
+            # — it may be a table alias or column qualifier that merely
+            # shares the source's name
+            return m.group(0)
 
-        for name, root in self._sources.items():
-            pat = rf"\b{re.escape(name)}\.([A-Za-z_]\w*)\b"
-            mask = string_mask(query)
-            resolved = []
-            for m in re.finditer(pat, query):
-                if mask[m.start()]:
-                    continue
-                tbl = m.group(1)
-                df = None
-                for cand in ([os.path.join(root, tbl)]
-                             + [os.path.join(root, f"{tbl}.{e}")
-                                for e in ("parquet", "csv", "tsv",
-                                          "psv", "json")]):
-                    df = self._raw_path_df(cand)
-                    if df is not None:
-                        break
-                if df is None:
-                    # not a dataset under the source: leave the token
-                    # for Spark — it may be a table alias or column
-                    # qualifier that merely shares the source's name
-                    continue
-                df.createOrReplaceTempView(f"{name}__{tbl}")
-                resolved.append(m)
-            # rewrite back-to-front so earlier spans keep their offsets
-            for m in reversed(resolved):
-                query = (query[:m.start()] + f"{name}__{m.group(1)}"
-                         + query[m.end():])
-        return query
+        # masked: a match inside a quoted path such as
+        # '…/testdata/sf0.01/x.parquet' must never be parsed as source
+        # `testdata` table `sf0`
+        names = "|".join(re.escape(n) for n in self._sources)
+        return sqltext.sub(rf"\b({names})\.([A-Za-z_]\w*)\b", repl, query)
 
     def _raw_path_df(self, path: str) -> DataFrame | None:
         """DataFrame over a plain file/folder path, format by extension
@@ -4839,7 +4690,7 @@ class Engine:
         stats/partition-aware scan planners before Spark ever plans the
         query.  Non-lakehouse quoted paths are left alone (Spark errors
         as before)."""
-        def repl(m: "re.Match[str]") -> str:
+        def repl(m: sqltext.Match) -> str:
             kw, path = m.group(1), m.group(2)
             mode, arg = m.group(3), m.group(4) or m.group(5)
             fmt = self._lake_format(path)
@@ -4938,11 +4789,11 @@ class Engine:
             df.createOrReplaceTempView(view)
             return f"{kw} {view}"
 
-        return re.sub(
+        return sqltext.sub(
             r"\b(from|join)\s+'([^']+)'"
             r"(?:\s+at\s+(snapshot|timestamp|branch|tag)\s+"
             r"(?:'([^']+)'|(\w+)))?",
-            repl, query, flags=re.I)
+            repl, query, re.I)
 
     # -- SQL entry ---------------------------------------------------------
     # statements the plan cache must never serve or retain: quoted lake
@@ -4952,6 +4803,7 @@ class Engine:
     # fine), sys./INFORMATION_SCHEMA views re-materialize per call, and
     # plan-time-folded / non-deterministic functions would freeze their
     # fold (uncacheableFunctions in supportPlanCache)
+    _PLAN_CACHE_SIZE = 128
     _PC_EXCLUDE = re.compile(
         r"'[^']*[/\\][^']*'"                      # path-like quoted ref
         r"|\bsys\s*\.|\binformation_schema\s*\."  # live catalog views
@@ -4974,22 +4826,21 @@ class Engine:
         or the reflection store (whose mutation counter also keys the
         generation); re-binding a session temp view behind the engine's
         back is outside the cache's visibility, as in the reference.
-        Tune: spark.dremio.plancache.enabled / .maxsize (default 128)."""
-        is_select = bool(re.match(r"\s*(select|with)\b", query, re.I))
-        cache = getattr(self, "_plan_cache", None)
-        if cache is None:
-            from collections import OrderedDict
 
-            cache = self._plan_cache = OrderedDict()
-            self._plan_cache_gen = 0
-            self.plan_cache_hits = 0
+        Comments are removed here, once (hints kept), so every handler
+        sees the statement itself.  The cache holds at most
+        `_PLAN_CACHE_SIZE` (128) plans, least recently used evicted
+        first, keyed by `sqltext.cache_key`: whitespace collapsed in
+        code, each literal verbatim — `'a b'` and `'a  b'` are two
+        entries, statements differing only in comments share one."""
+        query = sqltext.strip_comments(query)
+        is_select = bool(re.match(r"\s*(select|with)\b", query, re.I))
+        cache = self._plan_cache
         if not is_select:
             self._plan_cache_gen += 1
             cache.clear()
             return self._sql_uncached(query)
-        enabled = str(self.spark.conf.get(
-            "spark.dremio.plancache.enabled", "true")).lower() == "true"
-        cacheable = (enabled and not getattr(self, "_accel_disabled", 0)
+        cacheable = (not getattr(self, "_accel_disabled", 0)
                      and not self._PC_EXCLUDE.search(query)
                      # versioned-source refs bind to ONE catalog commit
                      # at plan time, same exclusion as quoted lake paths
@@ -5000,7 +4851,7 @@ class Engine:
         # the principal and namespace context are attribute-settable
         # (no statement to observe): they key the entry — a policied
         # plan folded for user A must never serve user B
-        key = (" ".join(query.split()),
+        key = (sqltext.cache_key(query),
                getattr(self, "session_user", None),
                getattr(self, "_current_space", None))
         # generation = (statement counter, reflection-store mutation
@@ -5041,12 +4892,7 @@ class Engine:
                       self.last_plan_accelerated,
                       self.last_count_from_metadata,
                       list(getattr(self, "last_plan_considered", [])))
-        try:
-            cap = int(self.spark.conf.get(
-                "spark.dremio.plancache.maxsize", "128"))
-        except (TypeError, ValueError):
-            cap = 128
-        while len(cache) > max(1, cap):
+        while len(cache) > self._PLAN_CACHE_SIZE:
             cache.popitem(last=False)
         return df
 
@@ -5234,13 +5080,18 @@ class Engine:
                 if view:
                     self._mark_reflections_stale(view)
             return lake
+        # the probe analyzes through Spark, so dialect names are
+        # rewritten first (NDV( -> approx_count_distinct( etc.), once;
+        # the workload recorder keeps reading the user's names
+        user_query = query
+        query = _dialect(query)
         accelerated = self._try_accelerate(query)
         # workload recording for the reflection suggester
         # (ReflectionSuggester.java): parse-only, fail-safe, no planning
         try:
             from .plans.suggester import AggWorkloadRecord, parse_agg_shape
 
-            rec = parse_agg_shape(query)
+            rec = parse_agg_shape(user_query)
             if rec is None and re.match(r"\s*select\b", query, re.I) \
                     and re.search(r"\bgroup\s+by\b", query, re.I):
                 # aggregate-shaped but outside the per-dataset analyzer
@@ -5276,20 +5127,9 @@ class Engine:
         query = self._expand_lake_refs(query)
         query = self._expand_tabular(query)
         query = _rewrite_convert(query)
-        for pat, rep in _DIALECT_REWRITES:
-            query = re.sub(pat, rep, query, flags=re.IGNORECASE)
         query = self._expand_context_fns(query)
         self._ensure_shims(query)  # after rewrites: they may introduce shims
-        # dotted VDS references: space.name -> space__name when registered
-        # (word-bounded so string literals / longer identifiers survive)
-        for space in self.spaces.values():
-            for name in space.vds:
-                query = re.sub(
-                    rf"\b{re.escape(space.name)}\.{re.escape(name)}\b",
-                    self._flat(space.name, name),
-                    query,
-                )
-        df = self.spark.sql(query)
+        df = self.spark.sql(self._resolve_vds_names(query))
         self._query_seq += 1
         self._last_query_id = f"q-{self._query_seq}"
         return df
@@ -5299,7 +5139,7 @@ class Engine:
         explains as (action, target, format, predicate, scan plan of the
         hit-row read) without executing; anything else explains as a
         query through Spark."""
-        m = re.match(
+        m = sqltext.match(
             r"(delete)\s+from\s+'([^']+)'(?:\s+where\s+(.+))?$"
             r"|(update)\s+'([^']+)'\s+set\s+(.+?)(?:\s+where\s+(.+))?$"
             r"|(merge)\s+into\s+'([^']+)'\s",
@@ -5389,20 +5229,16 @@ class Engine:
         DremioSqlOperatorTable IS_MEMBER / LAST_QUERY_ID): both depend on
         engine session state Spark can't see, so they fold to literals at
         plan time — exactly where the reference evaluates them."""
-        import re as _re
-
-        def _member(m: "_re.Match[str]") -> str:
+        def _member(m: sqltext.Match) -> str:
             role = m.group(1)
             return (
                 "true" if role in self._principals(self.session_user)
                 else "false"
             )
 
-        query = _re.sub(
-            r"\bis_member\s*\(\s*'([^']*)'\s*\)", _member, query, flags=_re.I
+        query = sqltext.sub(
+            r"\bis_member\s*\(\s*'([^']*)'\s*\)", _member, query, re.I
         )
         last = f"'{self._last_query_id}'" if self._last_query_id else \
             "cast(null as string)"
-        return _re.sub(
-            r"\blast_query_id\s*\(\s*\)", last, query, flags=_re.I
-        )
+        return sqltext.sub(r"\blast_query_id\s*\(\s*\)", last, query, re.I)

@@ -38,6 +38,8 @@ import threading
 import pyarrow as pa
 import pyarrow.flight as flight
 
+from .. import sqltext
+
 
 class _BearerMiddleware(flight.ServerMiddleware):
     def __init__(self):
@@ -128,7 +130,7 @@ class EngineFlightServer(flight.FlightServerBase):
     @staticmethod
     def _render_param(v) -> str:
         """One bound parameter as a SQL literal — values only, never
-        identifiers, with string quoting escaped."""
+        identifiers, with quotes and backslashes escaped."""
         import datetime as _dt
 
         if v is None:
@@ -141,35 +143,26 @@ class EngineFlightServer(flight.FlightServerBase):
             return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
         if isinstance(v, _dt.date):
             return f"DATE '{v.isoformat()}'"
-        s = str(v).replace("'", "''")
+        s = str(v).replace("\\", "\\\\").replace("'", "''")
         return f"'{s}'"
 
     @classmethod
     def _bind(cls, sql: str, params: list) -> str:
-        """Substitute positional `?` placeholders, skipping any inside
-        single-quoted string literals."""
-        out, i, p = [], 0, 0
-        in_str = False
-        while i < len(sql):
-            ch = sql[i]
-            if ch == "'":
-                in_str = not in_str
-                out.append(ch)
-            elif ch == "?" and not in_str:
-                if p >= len(params):
-                    raise flight.FlightServerError(
-                        f"statement has more placeholders than the "
-                        f"{len(params)} bound parameters")
-                out.append(cls._render_param(params[p]))
-                p += 1
-            else:
-                out.append(ch)
-            i += 1
-        if p != len(params):
+        """Substitute positional `?` placeholders in the statement's
+        code — never inside a literal, a quoted identifier or a
+        comment."""
+        holes = [i for kind, a, b in sqltext.spans(sql)
+                 if kind == sqltext.CODE
+                 for i in range(a, b) if sql[i] == "?"]
+        if len(holes) != len(params):
             raise flight.FlightServerError(
-                f"{len(params)} parameters bound but only {p} "
+                f"{len(params)} parameters bound to {len(holes)} "
                 "placeholders in the statement")
-        return "".join(out)
+        out, pos = [], 0
+        for i, v in zip(holes, params):
+            out += [sql[pos:i], cls._render_param(v)]
+            pos = i + 1
+        return "".join(out) + sql[pos:]
 
     def do_put(self, context, descriptor, reader, writer):
         """Parameter upload for a prepared statement: the descriptor

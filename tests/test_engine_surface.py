@@ -247,6 +247,40 @@ def test_rollback_restores_target_schema(spark, tmp_path, fmt):
             == meta["current-schema-id"]
 
 
+@pytest.mark.parametrize("q", [
+    "select 'see sales.orders_v' as s",
+    "select 'NDV(x)' as s",
+    "select 'last_query_id()' as s",
+])
+def test_rewrites_leave_literals_alone(spark, q):
+    """The engine's text rewrites (dotted VDS names, dialect functions,
+    context functions) never reach inside a string literal: the engine
+    answers exactly what Spark answers."""
+    eng = Engine(spark)
+    eng.create_space("sales")
+    eng.create_vds("sales", "orders_v", "select 1 as x")
+    eng.sql("select 1 as one").collect()  # last_query_id() is now set
+    assert eng.sql(q).collect() == spark.sql(q).collect()
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_update_set_literals_opaque(spark, tmp_path, fmt):
+    """UPDATE's SET/WHERE split and the SET list split read code only: a
+    `where` or a comma inside a literal of either quote kind is data."""
+    from dremio_oss_spark.sources import delta, iceberg
+
+    eng = Engine(spark)
+    t = str(tmp_path / fmt)
+    write = delta.write_delta if fmt == "delta" else iceberg.write_iceberg
+    write(spark, spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")],
+                                       "k long, note string"), t)
+    eng.sql(f"UPDATE '{t}' SET note = 'a where b' WHERE k = 1")
+    eng.sql(f"UPDATE '{t}' SET note = \"c,d\" WHERE k = 2")
+    got = {r["k"]: r["note"]
+           for r in eng.sql(f"select * from '{t}'").collect()}
+    assert got == {1: "a where b", 2: "c,d", 3: "z"}
+
+
 # Spark jobs per maintenance statement, measured on the per-format
 # implementations these statements replaced: the shared core must not
 # add any.

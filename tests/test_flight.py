@@ -307,6 +307,20 @@ def test_flight_prepared_statement_roundtrip(flight_setup, spark):
     tab3 = flight_prepared_query(
         server.port, "select ? as s from nation limit 1", ["O'Brien"])
     assert tab3.column("s").to_pylist() == ["O'Brien"]
+    # ...and so does a trailing backslash: the next parameter stays a
+    # value instead of running as SQL
+    tab5 = flight_prepared_query(
+        server.port, "select ? as a, ? as b from nation limit 1",
+        ["x\\", " || current_user() as a --"])
+    assert tab5.to_pylist() == [
+        {"a": "x\\", "b": " || current_user() as a --"}]
+    # a `?` inside a double-quoted literal, a comment, or a literal
+    # after an escaped quote is text, not a placeholder
+    for q, lit in (('select "?" as q, ? as v from nation limit 1', "?"),
+                   ("select 'it\\'s ?' as q /* ? */, ? as v "
+                    "from nation limit 1", "it's ?")):
+        tab6 = flight_prepared_query(server.port, q, [7])
+        assert tab6.to_pylist() == [{"q": lit, "v": 7}]
 
     # zero-parameter prepared statements execute without a DoPut
     tab4 = flight_prepared_query(

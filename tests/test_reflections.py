@@ -2609,6 +2609,25 @@ def test_plan_cache_hits_and_invalidation(spark, tmp_path):
         n1 = eng.sql(qcnt).collect()[0][0]
         n2 = eng.sql(qcnt).collect()[0][0]
         assert n1 == n2  # same plan, re-executed fine
+
+        # whitespace inside a literal is part of the statement: the
+        # 'a  b' query is its own entry, not the 'a b' one's answer
+        spark.createDataFrame([("a b",), ("a  b",), ("a  b",)],
+                              "s string").createOrReplaceTempView("pc_ws")
+        qs = "select count(*) as n from pc_ws where s = '{}'"
+        assert eng.sql(qs.format("a b")).collect()[0][0] == 1
+        assert eng.sql(qs.format("a  b")).collect()[0][0] == 2
+
+        # comments are not: a leading block comment or a trailing line
+        # comment is served, accelerated, from the plain text's entry
+        # and leaves the cache as it was
+        d3 = eng.sql(q)
+        h1, n_ent = eng.plan_cache_hits, len(eng._plan_cache)
+        assert eng.sql("/* panel 7 */ " + q) is d3
+        assert eng.last_plan_accelerated == "t_pc"
+        assert eng.sql(q + " -- x") is d3
+        assert eng.plan_cache_hits == h1 + 2
+        assert len(eng._plan_cache) == n_ent
     finally:
         eng._default_refl_store().drop("t_pc")
 

@@ -309,9 +309,10 @@ def test_information_schema_sql_addressable(spark):
     engine SQL (InfoSchemaStoragePlugin surface)."""
     eng = Engine(spark)
     eng.add_testdata_source(SF_SMALL)
-    names = {r["table_name"] for r in eng.sql(
-        "select table_name from information_schema.tables").collect()}
-    assert {"lineitem", "orders"} <= names
+    for q in ("select table_name from information_schema.tables",
+              'select table_name from information_schema."TABLES"'):
+        names = {r["table_name"] for r in eng.sql(q).collect()}
+        assert {"lineitem", "orders"} <= names
     eng.create_space("isdemo")
     eng.create_vds("isdemo", "v1", "select 1 as x")
     views = {r["table_name"] for r in eng.sql(
