@@ -359,8 +359,10 @@ class Engine:
         return self._policies.setdefault(table, {"row": [], "mask": {}})
 
     def _policy_target(self, name: str) -> str:
-        """Policies on a VDS attach to its FLAT session-view name (the
-        name queries rewrite dotted references to)."""
+        """The session view a dataset name denotes: a VDS's FLAT name
+        (the name queries rewrite dotted references to), anything else
+        as given.  Policies attach to it, and reflection substitution
+        finds a dataset in analyzed plans by it."""
         if "." in name:
             first, rest = name.split(".", 1)
             if first in self.spaces:
@@ -3581,7 +3583,9 @@ class Engine:
         """Wrapper recording the probe's substitution CANDIDATES for
         the job profile's acceleration section (the reference lists
         considered/matched reflections per query): every matcher funnels
-        through ReflectionStore._note_candidates, reset here per probe."""
+        through ReflectionStore._note_candidates, reset here per probe.
+        `_probe` holds the (text, frame) the probe analyzed, or None."""
+        self._probe = None
         store = getattr(self, "_refl_store", None)
         if store is not None:
             store.last_candidates = []
@@ -3596,19 +3600,12 @@ class Engine:
         """Transparent reflection substitution for plain SQL (the
         reference's core acceleration UX: SubstitutionProvider matches
         the user's query tree and answers from a materialization without
-        the user naming it).  Two matchers run in order:
-
-        1. **Plan-tree** (`plans/substitution.py`): the query's ANALYZED
-           Spark logical plan — views already expanded — is canonicalized
-           to the AggQuery IR, so join queries and VDS-over-join queries
-           substitute (the reference's tree-level
-           `SubstitutionProvider.java:40` with normalization per
-           `PlannerPhase.java:145-169`).
-        2. **Regex fragment** fallback for single-table aggregates whose
-           FROM target isn't Spark-resolvable (reflection-only names).
-
-        Anything outside both fragments — or with no covering
-        reflection — falls through to normal planning.
+        the user naming it).  The query is analyzed ONCE
+        (`_plan_tree_accelerate`) and that plan decides every
+        substitution, in order: an external reflection's dataset swap,
+        the plan-tree aggregate and raw-scan matchers
+        (`plans/substitution.py`), and the any-shape raw swap.  Anything
+        none of them answers falls through to normal planning.
         `last_plan_accelerated` records the reflection used (None when
         not accelerated)."""
         self.last_plan_accelerated = None
@@ -3616,7 +3613,7 @@ class Engine:
             return None  # view-definition planning must not substitute
         if not getattr(self, "acceleration_enabled", True):
             return None  # global kill switch (DevelopmentOptions)
-        if re.search(r"\b(?:sys|information_schema)\.", query, re.I):
+        if sqltext.search(r"\b(?:sys|information_schema)\.", query, re.I):
             # engine catalog views resolve AFTER this probe
             # (_expand_sys_tables); analyzing them raw would just log a
             # TABLE_OR_VIEW_NOT_FOUND at ERROR level before the
@@ -3629,94 +3626,7 @@ class Engine:
         # dependency-driven freshness: stale dependents refresh BEFORE
         # matching, so an accelerated answer reflects the latest commit
         self._refresh_stale_reflections()
-        # fail-safe, same contract as the plan-tree path: acceleration
-        # must never break a query that would plan normally
-        flat = self._resolve_vds_names(query)
-        try:
-            df = self._external_accelerate(flat)
-        except Exception:  # noqa: BLE001 — fall through, plan normally
-            df = None
-            self.last_plan_accelerated = None
-        if df is not None:
-            return df
-        df = self._plan_tree_accelerate(flat)
-        if df is not None:
-            return df
-        if not store._reflections:
-            return None  # raw-only store: nothing for the regex fragment
-        from .plans import AggQuery, Measure
-        from .plans.reflections import parse_pred
-
-        m = re.match(
-            r"\s*select\s+(.+?)\s+from\s+([\w.]+)"
-            r"(?:\s+where\s+(.+?))?\s+group\s+by\s+(.+?)"
-            r"(?:\s+order\s+by\s+([\w,\s]+?))?\s*;?\s*$",
-            query, re.I | re.S)
-        if not m:
-            return None
-        sel, table, where, gb, ob = m.groups()
-        dims = [d.strip() for d in gb.split(",")]
-        if not all(re.fullmatch(r"\w+", d) for d in dims):
-            return None
-        measures: list[Measure] = []
-        out_specs: list[tuple] = []  # ('dim', col) | ('measure', m, alias)
-        for item in sqltext.split_top_level(sel):
-            item = item.strip()
-            if re.fullmatch(r"\w+", item):
-                if item not in dims:
-                    return None
-                out_specs.append(("dim", item))
-                continue
-            am = re.fullmatch(
-                r"(sum|count|min|max)\s*\(\s*(\*|\w+)\s*\)"
-                r"(?:\s+as\s+(\w+))?", item, re.I)
-            if am is None:
-                return None
-            kind, col = am.group(1).lower(), am.group(2)
-            if col == "*" and kind != "count":
-                return None
-            meas = Measure(kind, col)
-            measures.append(meas)
-            out_specs.append(("measure", meas, am.group(3) or item))
-        filters: tuple[str, ...] = ()
-        if where:
-            parts = [p.strip()
-                     for p in re.split(r"\s+and\s+", where, flags=re.I)]
-            # each conjunct must be in the sound predicate fragment;
-            # covers() then checks the columns are reflection dims
-            if any(parse_pred(p) is None for p in parts):
-                return None
-            filters = tuple(parts)
-        pol = self._policies.get(self._policy_target(table))
-        if pol and (pol["row"] or pol["mask"]):
-            # policied tables never accelerate (a materialization built
-            # before the policy would leak unmasked/unfiltered rows)
-            return None
-        # fail-safe like the plan-tree path: any unexpected matching or
-        # execution error falls through to normal planning
-        try:
-            q = AggQuery(table=table, dims=tuple(dims),
-                         measures=tuple(measures), filters=filters)
-            refl = store.find_match(q, accept=self._accel_accept)
-            if refl is None:
-                return None
-            df, substituted = store.execute(q, base=None,
-                                accept=self._accel_accept)
-            if not substituted:
-                return None
-            # select by SPEC, not by rename: `sum(x) as a, sum(x) as b`
-            # is one rollup column projected twice — renames collide
-            df = df.select(*[
-                F.col(s[1]) if s[0] == "dim"
-                else F.col(s[1].name).alias(s[2])
-                for s in out_specs])
-            if ob:
-                df = df.orderBy(*[c.strip() for c in ob.split(",")])
-            self.last_plan_accelerated = refl.name
-            return df
-        except Exception:  # noqa: BLE001 — plan normally instead
-            self.last_plan_accelerated = None
-            return None
+        return self._plan_tree_accelerate(self._resolve_vds_names(query))
 
     @staticmethod
     def _analyzable(query: str) -> bool:
@@ -3730,63 +3640,66 @@ class Engine:
                       r"table|replace\s+table|merge\s+into|"
                       r"delete\s+from)\b", query, re.I)
 
-    def _external_accelerate(self, query: str) -> DataFrame | None:
+    @staticmethod
+    def _conform(probe: DataFrame, df: DataFrame) -> DataFrame | None:
+        """Acceleration must be invisible in the result SCHEMA too:
+        reflection partials are decimal(28,4), so a substituted
+        sum(double_col) would surface as decimal without this.  Cast
+        every output, by position, to the probe's (unaccelerated) dtype;
+        a name mismatch means the rewrite drifted — refuse (None)."""
+        want, got = probe.schema.fields, df.schema.fields
+        if [f.name for f in want] != [f.name for f in got]:
+            return None
+        if [f.dataType for f in want] == [f.dataType for f in got]:
+            return df
+        tmp = [f"__c{i}" for i in range(len(want))]
+        return df.toDF(*tmp).select(*[
+            F.col(t).cast(f.dataType).alias(f.name)
+            for t, f in zip(tmp, want)])
+
+    def _swap_answer(self, query: str, probe: DataFrame,
+                     bindings: dict) -> DataFrame | None:
+        """Answer `query` with each session view named in `bindings`
+        bound to its stand-in frame for the duration of one re-analysis,
+        conformed to the probe's schema.  None when a view is unbound or
+        the query no longer analyzes (a column the stand-in lacks).
+        Every binding is restored no matter what — a leaked swap would
+        silently redirect every later query in the session."""
+        originals = {}
+        try:
+            for name, df in bindings.items():
+                originals[name] = self.spark.table(name)
+                df.createOrReplaceTempView(name)
+            return self._conform(probe, self.spark.sql(query))
+        except Exception:  # noqa: BLE001 — sound fall-through
+            return None
+        finally:
+            for name, odf in originals.items():
+                odf.createOrReplaceTempView(name)
+
+    def _external_accelerate(self, query: str, probe: DataFrame,
+                             names: set, policied) -> DataFrame | None:
         """External-reflection substitution (reference
         `ReflectionServiceImpl.createExternalReflection:586`): when the
-        query references a dataset with a registered EXTERNAL
-        reflection, re-plan it with that dataset bound to the
+        analyzed plan reads a dataset with a registered EXTERNAL
+        reflection, re-plan the query with that dataset bound to the
         user-maintained target — the whole query (any shape: joins,
         aggregates, windows) answers from the target, exactly the
         reference's descriptor substitution of the dataset expansion.
         Freshness gate: either side's row type drifting from the
         creation-time fingerprint marks the reflection OUT_OF_SYNC
-        (invalid) and it stops matching.  `query` arrives with its
-        dotted VDS names flattened (`_resolve_vds_names`)."""
-        store = self._refl_store
-        ext = [e for e in getattr(store, "_external", {}).values()
-               if not e.invalid]
-        if not ext or not self._analyzable(query):
-            return None
-        # which datasets does the query actually reference?  Walk the
-        # ANALYZED plan's identifier fields — matching on raw query
-        # text would false-hit string literals and comments.
-        import json
+        (invalid) and it stops matching.  `names` are the relations the
+        probe's plan reads (`relation_names`)."""
+        from .plans.reflections import _schema_fp
 
-        try:
-            analyzed = json.loads(
-                self.spark.sql(query)._jdf.queryExecution().analyzed()
-                .toJSON())
-        except Exception:
-            return None
-        names: set[str] = set()
-
-        def _walk(n):
-            if isinstance(n, dict):
-                for k in ("identifier", "name", "alias"):
-                    v = n.get(k)
-                    if isinstance(v, str):
-                        names.add(v.split(".")[-1].lower())
-                for v in n.values():
-                    _walk(v)
-            elif isinstance(n, list):
-                for v in n:
-                    _walk(v)
-
-        _walk(analyzed)
         hits = []
-        for e in ext:
-            flat = (self._flat(*e.table.split(".", 1))
-                    if "." in e.table else e.table)
-            if flat.split(".")[-1].lower() not in names:
-                continue
+        for e in getattr(self._refl_store, "_external", {}).values():
             # policy-governed datasets never accelerate (the target
             # holds raw rows — serving it would bypass row/mask
             # policies, same exclusion as declared reflections)
-            pol = (self._policies.get(self._policy_target(e.table))
-                   or self._policies.get(flat))
-            if pol and (pol["row"] or pol["mask"]):
+            if (e.invalid or policied([e.table])
+                    or self._policy_target(e.table).lower() not in names):
                 continue
-            from .plans.reflections import _schema_fp
             try:
                 cur_d = _schema_fp(self._resolve_table(e.table))
                 cur_t = _schema_fp(self._resolve_table(e.target))
@@ -3795,45 +3708,37 @@ class Engine:
             if cur_d != e.dataset_fp or cur_t != e.target_fp:
                 e.invalid = True  # OUT_OF_SYNC (ExternalReflectionStatus)
                 continue
-            hits.append((e, flat))
+            hits.append(e)
         if not hits:
             return None
-        originals = {}
-        try:
-            for e, flat in hits:
-                originals[flat] = self.spark.table(flat)
-                self._resolve_table(e.target).createOrReplaceTempView(
-                    flat)
-            try:
-                df = self.spark.sql(query)
-                df.schema  # force analysis against the swapped binding
-            except Exception:
-                return None  # sound fall-through: plan normally
-            self.last_plan_accelerated = hits[0][0].name
-            # the matched external reflection is a considered candidate
-            # (profile contract: accelerated_by is always in the list)
-            self._refl_store._note_candidates([h[0] for h in hits])
-            return df
-        finally:
-            # restore the session bindings no matter what — a leaked
-            # swap would silently redirect every later query
-            for flat, odf in originals.items():
-                odf.createOrReplaceTempView(flat)
+        df = self._swap_answer(query, probe, {
+            self._policy_target(e.table): self._resolve_table(e.target)
+            for e in hits})
+        if df is None:
+            return None
+        self.last_plan_accelerated = hits[0].name
+        # the matched external reflection is a considered candidate
+        # (profile contract: accelerated_by is always in the list)
+        self._refl_store._note_candidates(hits)
+        return df
 
     def _plan_tree_accelerate(self, query: str) -> DataFrame | None:
-        """Tree-level substitution: analyze the SQL through Spark (views
-        expand here, exactly the reference's pre-substitution
-        normalization), canonicalize the logical plan, and answer from a
-        covering reflection.  Only SELECT/WITH statements are analyzed —
-        Spark executes commands (INSERT/CTAS) eagerly on `sql()`, and a
-        probe must never have side effects.  `query` arrives with its
-        dotted VDS names flattened (`_resolve_vds_names`)."""
+        """Analyze the SQL through Spark once (views expand here, exactly
+        the reference's pre-substitution normalization) and answer from
+        a covering reflection.  Only SELECT/WITH statements are analyzed
+        — Spark executes commands (INSERT/CTAS) eagerly on `sql()`, and
+        a probe must never have side effects.  The analyzed frame is
+        kept in `_probe`, so normal planning of the same text reuses it.
+        `query` arrives with its dotted VDS names flattened
+        (`_resolve_vds_names`)."""
         if not self._analyzable(query):
             return None
         from .plans.substitution import (extract_agg_query,
                                          extract_scan_query,
+                                         extract_union_branches,
                                          match_and_execute,
-                                         match_and_execute_raw)
+                                         match_and_execute_raw,
+                                         relation_names)
 
         q = query
         # path-anchored reflections: a quoted lake path with a
@@ -3855,133 +3760,116 @@ class Engine:
             q = sqltext.sub(r"\b(from|join)\s+'([^']+)'(?!\s+at\b)",
                             _plake, q, re.I)
         try:
+            self._ensure_shims(q)
             probe = self.spark.sql(q)
             analyzed = (probe._jdf.queryExecution()
                         .analyzed().toJSON())
         except Exception:  # noqa: BLE001 — dialect SQL Spark can't parse
             return None
+        self._probe = (q, probe)
+        store = self._refl_store
+        pol = {t.lower() for t, p in self._policies.items()
+               if p["row"] or p["mask"]}
 
-        def conform(df):
-            # Acceleration must be invisible in the result SCHEMA too:
-            # reflection partials are decimal(28,4), so a substituted
-            # sum(double_col) would surface as decimal without this.
-            # Cast every output to the ANALYZED (unaccelerated) dtype;
-            # a name mismatch means the rewrite drifted — refuse.
-            want = probe.schema.fields
-            if [f.name for f in want] != list(df.columns):
-                return None
-            return df.select(*[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in want])
         def policied(tables) -> bool:
             # a materialization built before a policy attached would
             # serve unmasked/unfiltered rows — reflections never answer
             # queries over policy-governed tables (the reference
             # likewise excludes secured datasets from acceleration)
-            return any(
-                self._policies.get(t) and (
-                    self._policies[t]["row"] or self._policies[t]["mask"])
-                for t in tables)
+            return any(self._policy_target(t).lower() in pol
+                       for t in tables)
 
         # Fail-safe: acceleration must NEVER break a query that would
         # plan normally — any unexpected error in matching/execution
         # falls through to the unaccelerated path.
         try:
-            ex = extract_agg_query(analyzed)
-            if ex is not None and not policied(ex.tables):
-                got = match_and_execute(self._refl_store, ex,
-                                        self._accel_accept)
+            names = relation_names(analyzed)
+            df = self._external_accelerate(q, probe, names, policied)
+            if df is not None:
+                return df
+            # the extractors read whole plans: a policy on ANY relation
+            # under them (a base table inside a reflected view too)
+            # refuses
+            matchable = not policied(names)
+            # a view carrying a reflection of its own is one leaf, named
+            # like the reflection's table
+            anchors = {v.lower(): r.table
+                       for r in (*store._reflections.values(),
+                                 *store._raw.values())
+                       if (v := self._policy_target(r.table)) != r.table}
+            ex = (extract_agg_query(analyzed, anchors)
+                  if matchable else None)
+            if ex is not None:
+                got = match_and_execute(store, ex, self._accel_accept)
                 if got is not None:
-                    df = conform(got[0])
+                    df = self._conform(probe, got[0])
                     if df is not None:
                         self.last_plan_accelerated = got[1]
                         return df
-            if ex is None:
+            got_u = (extract_union_branches(analyzed, anchors)
+                     if matchable and ex is None else None)
+            if got_u is not None:
                 # UNION ALL of aggregate fragments: substitute every
                 # branch (all-or-nothing) and union positionally — SQL
                 # union names come from the first branch, which the
-                # substituted frames preserve, so conform() still
+                # substituted frames preserve, so _conform still
                 # verifies the output schema
-                from .plans.substitution import extract_union_branches
+                branches, order, u_limit = got_u
+                subs = [match_and_execute(store, b, self._accel_accept)
+                        for b in branches]
+                if all(s is not None for s in subs):
+                    from functools import reduce as _reduce
 
-                got_u = extract_union_branches(analyzed)
-                if got_u is not None:
-                    branches, order, u_limit = got_u
-                    if all(not policied(b.tables) for b in branches):
-                        subs = [match_and_execute(self._refl_store, b,
-                                                  self._accel_accept)
-                                for b in branches]
-                    else:
-                        subs = [None]
-                    if all(s is not None for s in subs):
-                        from functools import reduce as _reduce
+                    from .plans.substitution import _sort_col
 
-                        from .plans.substitution import _sort_col
-
-                        u = _reduce(lambda a, b: a.union(b),
-                                    [s[0] for s in subs])
-                        if order:
-                            u = u.orderBy(*[
-                                _sort_col(F.col(n), asc, nf)
-                                for n, asc, nf in order])
-                        if u_limit is not None:
-                            # sort+limit plans as TakeOrderedAndProject
-                            u = u.limit(u_limit)
-                        df = conform(u)
-                        if df is not None:
-                            self.last_plan_accelerated = ",".join(
-                                dict.fromkeys(s[1] for s in subs))
-                            return df
+                    u = _reduce(lambda a, b: a.union(b),
+                                [s[0] for s in subs])
+                    if order:
+                        u = u.orderBy(*[
+                            _sort_col(F.col(n), asc, nf)
+                            for n, asc, nf in order])
+                    if u_limit is not None:
+                        # sort+limit plans as TakeOrderedAndProject
+                        u = u.limit(u_limit)
+                    df = self._conform(probe, u)
+                    if df is not None:
+                        self.last_plan_accelerated = ",".join(
+                            dict.fromkeys(s[1] for s in subs))
+                        return df
+            if not store._raw:
+                return None
             # non-aggregate scan: a covering RAW reflection swaps the
             # scan (narrow sorted files) — the raw-reflection role
-            if self._refl_store._raw:
-                exs = extract_scan_query(analyzed)
-                if exs is not None and not policied([exs.table]):
-                    got = match_and_execute_raw(
-                        self._refl_store, exs, self._accel_accept)
-                    if got is not None:
-                        df = conform(got[0])
-                        if df is not None:
-                            self.last_plan_accelerated = got[1]
-                            return df
-                # ANY-SHAPE raw swap: when the fragment extractors
-                # refuse (window functions, DISTINCT, joins, CTEs), a
-                # raw reflection still answers by re-binding the scan —
-                # raws hold EVERY row, analysis against the swapped
-                # binding succeeds only if it carries every referenced
-                # column, and conform() refuses any output drift (e.g.
-                # `select *` over a narrower raw).  This is the
-                # reference's scan-level materialization match
-                # (SubstitutionProvider.java:40 on the TableScan).
-                for refl in self._refl_store._raw.values():
-                    if (getattr(refl, "invalid", False)
-                            or policied([refl.table])):
-                        continue
-                    if not re.search(rf"\b{re.escape(refl.table)}\b",
-                                     q, re.I):
-                        continue
-                    try:
-                        orig = self.spark.table(refl.table)
-                    except Exception:  # noqa: BLE001 — not a view here
-                        continue
-                    store = self._refl_store
-                    mat = store._read_data(store._data_dir(refl))
-                    try:
-                        mat.createOrReplaceTempView(refl.table)
-                        try:
-                            cand = self.spark.sql(q)
-                            cand.schema  # force analysis on the swap
-                        except Exception:  # noqa: BLE001 — uncovered col
-                            continue
-                        df = conform(cand)
-                        if df is not None:
-                            self.last_plan_accelerated = refl.name
-                            store._note_candidates([refl])
-                            return df
-                    finally:
-                        # restore no matter what: a leaked swap would
-                        # redirect every later query in the session
-                        orig.createOrReplaceTempView(refl.table)
+            exs = (extract_scan_query(analyzed, anchors)
+                   if matchable else None)
+            if exs is not None:
+                got = match_and_execute_raw(store, exs, self._accel_accept)
+                if got is not None:
+                    df = self._conform(probe, got[0])
+                    if df is not None:
+                        self.last_plan_accelerated = got[1]
+                        return df
+            # ANY-SHAPE raw swap: when the fragment extractors refuse
+            # (window functions, DISTINCT, joins, CTEs), a raw
+            # reflection still answers by re-binding the scan — raws
+            # hold EVERY row, analysis against the swapped binding
+            # succeeds only if it carries every referenced column, and
+            # _conform refuses any output drift (e.g. `select *` over a
+            # narrower raw).  This is the reference's scan-level
+            # materialization match (SubstitutionProvider.java:40 on
+            # the TableScan).
+            for refl in store._raw.values():
+                view = self._policy_target(refl.table)
+                if (getattr(refl, "invalid", False)
+                        or view.lower() not in names
+                        or policied([refl.table])):
+                    continue
+                df = self._swap_answer(q, probe, {
+                    view: store._read_data(store._data_dir(refl))})
+                if df is not None:
+                    self.last_plan_accelerated = refl.name
+                    store._note_candidates([refl])
+                    return df
         except Exception:  # noqa: BLE001 — fall through, plan normally
             self.last_plan_accelerated = None
         return None
@@ -5086,6 +4974,7 @@ class Engine:
         user_query = query
         query = _dialect(query)
         accelerated = self._try_accelerate(query)
+        probe, self._probe = self._probe, None
         # workload recording for the reflection suggester
         # (ReflectionSuggester.java): parse-only, fail-safe, no planning
         try:
@@ -5129,7 +5018,10 @@ class Engine:
         query = _rewrite_convert(query)
         query = self._expand_context_fns(query)
         self._ensure_shims(query)  # after rewrites: they may introduce shims
-        df = self.spark.sql(self._resolve_vds_names(query))
+        query = self._resolve_vds_names(query)
+        # the probe already analyzed this very text: reuse its frame
+        df = (probe[1] if probe is not None and probe[0] == query
+              else self.spark.sql(query))
         self._query_seq += 1
         self._last_query_id = f"q-{self._query_seq}"
         return df

@@ -166,7 +166,7 @@ class AggQuery:
     # finest TEMPORAL grain the query needs per dim column, as sorted
     # (col, grain) pairs — "raw" when the column itself is grouped,
     # "day"/"month"/... when only f(col) at that grain appears.  Callers
-    # that don't analyze grain (the regex fragment) leave it empty,
+    # that don't analyze grain (API-built queries) leave it empty,
     # which covers() reads as raw — sound against BY DAY reflections.
     dim_grain: tuple = ()
 
@@ -422,8 +422,6 @@ class Reflection:
         # filters must reference reflection dims only (pushable post-rollup):
         # any column-looking identifier that is NOT a dim, a measure output,
         # a SQL keyword, or a quoted literal disqualifies the match
-        import re
-
         keywords = {
             "and", "or", "not", "in", "is", "null", "true", "false",
             "between", "like", "cast", "as", "case", "when", "then",
@@ -501,6 +499,9 @@ class ReflectionStore:
         # never outlives the materialization generation it scans — the
         # reference's PlanCacheSynchronizer contract
         self.mutations = 0
+        # materialization dir -> (max entry mtime, DataFrame handle);
+        # see _read_data
+        self._read_data_memo: dict[str, tuple] = {}
         # dataset -> {"refresh_s": n|None, "grace_s": m|None} — the
         # reference's per-dataset AccelerationSettings
         # (refreshPeriod/gracePeriod; DependencyManager consumes them
@@ -592,7 +593,7 @@ class ReflectionStore:
         substitutes for queries whose filter implies it (see covers)."""
         self._bump()
         path = os.path.join(self.root, name)
-        shutil.rmtree(path, ignore_errors=True)
+        self._forget(path)
         # every aggregation reflection maintains a ROW-COUNT partial:
         # count(*) rollups are the most common BI query and the partial
         # is one bigint per cell (the reference's aggregation
@@ -657,7 +658,7 @@ class ReflectionStore:
         reflection role, ReflectionServiceImpl.java)."""
         self._bump()
         path = os.path.join(self.root, name)
-        shutil.rmtree(path, ignore_errors=True)
+        self._forget(path)
         proj = source.select(*display_cols)
         if sort_col:
             proj = proj.sortWithinPartitions(sort_col)
@@ -765,7 +766,7 @@ class ReflectionStore:
         refl = (self._reflections.pop(name, None)
                 or self._raw.pop(name, None))
         if refl:
-            shutil.rmtree(refl.path, ignore_errors=True)
+            self._forget(refl.path)
 
     # -- materialization maintenance ---------------------------------------
     @staticmethod
@@ -797,7 +798,7 @@ class ReflectionStore:
         generations)."""
         old_g = getattr(refl, "generation", 0)
         new_dir = os.path.join(refl.path, f"data-g{old_g + 1}")
-        shutil.rmtree(new_dir, ignore_errors=True)
+        self._forget(new_dir)
         writer(new_dir)
         return new_dir, old_g
 
@@ -814,12 +815,7 @@ class ReflectionStore:
                 except ValueError:
                     continue
             if g is not None and g < old_g:
-                shutil.rmtree(os.path.join(refl.path, d),
-                              ignore_errors=True)
-
-    @staticmethod
-    def _discard_staged(new_dir: str) -> None:
-        shutil.rmtree(new_dir, ignore_errors=True)
+                self._forget(os.path.join(refl.path, d))
 
     def _path_of(self, name: str) -> str:
         refl = self._reflections.get(name) or self._raw.get(name)
@@ -926,46 +922,56 @@ class ReflectionStore:
             # written.  Partitioned layouts skip the seed (their read
             # rediscovers __p_ dir columns, which the plain schema
             # cannot express).
-            key = self._mtime_key(path)
-            if key is not None:
-                self.__dict__.setdefault("_read_data_memo", {})[
-                    key] = self.spark.read.schema(df.schema).parquet(path)
+            mt = self._mtime(path)
+            if mt is not None:
+                self._read_data_memo[path] = (
+                    mt, self.spark.read.schema(df.schema).parquet(path))
 
     def _read_data(self, path: str) -> DataFrame:
         """Read a materialization dir, memoizing the DataFrame HANDLE
-        (a logical plan, never data) per (path, max entry mtime): every
-        substitution probe / scan / refresh merge re-reads the current
-        generation, and each fresh `spark.read.parquet` pays a
-        schema-inference job.  The mtime fold invalidates on appends
-        into the current generation (incremental_refresh_raw) — the
-        relation's file listing is snapshotted at read time, so serving
-        a stale handle after an append would also serve stale DATA."""
+        (a logical plan, never data) per path, stamped with the dir's
+        max entry mtime: every substitution probe / scan / refresh merge
+        re-reads the current generation, and each fresh
+        `spark.read.parquet` pays a schema-inference job.  A newer mtime
+        replaces the entry — appends into the current generation
+        (incremental_refresh_raw) must not serve the stale handle, whose
+        file listing was snapshotted at read time.  Entries of removed
+        generation dirs are dropped with the dir (`_forget`), so the
+        memo holds at most one entry per live materialization dir."""
         df = self._read_raw(path)
         helpers = [c for c in df.columns if c.startswith("__p_")]
         return df.drop(*helpers) if helpers else df
 
     @staticmethod
-    def _mtime_key(path: str) -> tuple | None:
+    def _mtime(path: str) -> float | None:
         try:
             mt = os.path.getmtime(path)
             for e in os.scandir(path):
                 s = e.stat()
                 if s.st_mtime > mt:
                     mt = s.st_mtime
-            return (path, mt)
+            return mt
         except OSError:
             return None
+
+    def _forget(self, path: str) -> None:
+        """Remove a materialization dir and every memo entry under it."""
+        shutil.rmtree(path, ignore_errors=True)
+        memo = self._read_data_memo
+        for p in [p for p in memo
+                  if p == path or p.startswith(path + os.sep)]:
+            del memo[p]
 
     def _read_raw(self, path: str) -> DataFrame:
         """Memoized raw materialization read (keeps __p_ helper
         columns — scan_materialization prunes on them)."""
-        key = self._mtime_key(path)
-        memo = self.__dict__.setdefault("_read_data_memo", {})
-        if key is not None and key in memo:
-            return memo[key]
+        mt = self._mtime(path)
+        hit = self._read_data_memo.get(path)
+        if mt is not None and hit is not None and hit[0] == mt:
+            return hit[1]
         df = self.spark.read.parquet(path)
-        if key is not None:
-            memo[key] = df
+        if mt is not None:
+            self._read_data_memo[path] = (mt, df)
         return df
 
     def _full_refresh(self, refl: Reflection, source: DataFrame) -> None:
@@ -1045,7 +1051,7 @@ class ReflectionStore:
                 refl, lambda p: self._write_data(refl, merged, p))
             n_new = int(obs.get["n"])
             if n_new == 0:
-                self._discard_staged(new_dir)
+                self._forget(new_dir)
                 return 0
             self._commit_staged(refl, old_g)
             wm = obs_wm.get["wm"]
@@ -1189,7 +1195,7 @@ class ReflectionStore:
                 refl, lambda p: self._write_data(refl, merged, p))
             n_changes = int(obs.get["n"])
             if n_changes == 0:
-                self._discard_staged(new_dir)
+                self._forget(new_dir)
             else:
                 self._commit_staged(refl, old_g)
         else:
@@ -1267,7 +1273,7 @@ class ReflectionStore:
                 refl, lambda p: self._write_data(refl, merged, p))
             n_new = int(obs.get["n"])
             if n_new == 0:
-                self._discard_staged(new_dir)
+                self._forget(new_dir)
             else:
                 self._commit_staged(refl, old_g)
         elif (n_new := new_rows.count()):

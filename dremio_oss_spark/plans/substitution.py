@@ -4,10 +4,8 @@ plan and match it against registered reflections.
 Reference: dremio-oss substitutes materializations into arbitrary query
 trees — `planner/acceleration/substitution/SubstitutionProvider.java:40`
 (Calcite SubstitutionVisitor over a canonicalized tree) with the
-normalization phases of `PlannerPhase.java:145-169`.  The round-4 engine
-only matched a regex fragment (`SELECT dims+aggs FROM one_table ...`), so
-join queries and VDS-over-join queries never accelerated through plain
-SQL.  This module does the tree-level equivalent, Spark-first:
+normalization phases of `PlannerPhase.java:145-169`.  This module does the
+tree-level equivalent, Spark-first:
 
 - Spark ANALYZES the SQL (views expand, names resolve, types settle) —
   the analyzed LogicalPlan *is* the canonical tree, serialized to JSON
@@ -20,10 +18,12 @@ SQL.  This module does the tree-level equivalent, Spark-first:
   API-built queries: join edges ⊆ reflection star, dims ⊆ dims,
   measures ⊆ measures, filters implied + dim-only.
 
-Because matching happens AFTER view expansion, a VDS defined as a star
-join accelerates the same way the reference accelerates queries over a
-virtual dataset: the user's `SELECT ... FROM vds GROUP BY ...` analyzes
-into the same join subtree the reflection materialized.
+Views expand during analysis, so a VDS defined as a star join
+accelerates from a reflection on its fact table: the user's
+`SELECT ... FROM vds GROUP BY ...` analyzes into the same join subtree
+the reflection materialized.  A view that carries a reflection of its
+own is the exception: the extractors take it as one leaf (`anchors`),
+named like the reflection's table, so its body is never walked.
 
 Scale: extraction is pure plan metadata (a few KB of JSON per query);
 the win is the substituted scan — a few-MB rollup materialization
@@ -448,8 +448,28 @@ class ExtractedAgg:
         return tuple(dict.fromkeys(ms))
 
 
+def _output_cols(node, kids) -> list[tuple[int, str]]:
+    """(attr id, name) of each output column of a view body's top node;
+    a top outside these shapes refuses."""
+    c = _cls(node)
+    if c in ("Project", "Aggregate"):
+        items = node["projectList" if c == "Project"
+                     else "aggregateExpressions"]
+        return [(_attr_id(it[0]), it[0]["name"]) for it in items]
+    if c in ("LogicalRelation", "LogicalRDD"):
+        return [(_attr_id(o[0]), o[0]["name"]) for o in node["output"]]
+    if c in ("Filter", "Sort", "GlobalLimit", "LocalLimit", "Distinct",
+             "SubqueryAlias", "View", "Union"):
+        # a union's output ids are its first branch's
+        return _output_cols(*kids[0])
+    raise _Unsupported(f"view body {c}")
+
+
 class _Extractor:
-    def __init__(self, root):
+    def __init__(self, root, anchors=None):
+        # flat view name (lower case) -> the reflection table it anchors:
+        # such a view is one leaf, its body never walked
+        self.anchors: dict[str, str] = anchors or {}
         self.env: dict[int, tuple[str | None, str] | None] = {}
         self.tables: list[str] = []
         self.filter_exprs: list = []
@@ -493,6 +513,14 @@ class _Extractor:
         if c == "View":
             return self._walk_source(*kids[0])
         if c == "SubqueryAlias":
+            anchor = self.anchors.get(node["identifier"]["name"].lower())
+            if anchor is not None and _cls(kids[0][0]) == "View":
+                # a reflection-anchored view: one leaf named like the
+                # reflection's table, whose columns are the view's output
+                for i, col in _output_cols(*kids[0][1][0]):
+                    self.env[i] = (anchor, col)
+                self.tables.append(anchor)
+                return set()
             pending = self._walk_source(*kids[0])
             if pending:
                 name = node["identifier"]["name"]
@@ -1635,12 +1663,35 @@ class _Extractor:
         )
 
 
-def extract_agg_query(analyzed_json: str) -> ExtractedAgg | None:
+def relation_names(analyzed_json: str) -> set[str]:
+    """Lower-cased name of every relation an analyzed plan reads (each
+    one sits under a SubqueryAlias), view bodies and subquery plans
+    included."""
+    out: set[str] = set()
+
+    def walk(n):
+        if isinstance(n, dict):
+            if n.get("class", "").endswith(".SubqueryAlias"):
+                out.add(n["identifier"]["name"].lower())
+            for v in n.values():
+                walk(v)
+        elif isinstance(n, list):
+            for v in n:
+                walk(v)
+
+    walk(json.loads(analyzed_json))
+    return out
+
+
+def extract_agg_query(analyzed_json: str,
+                      anchors: dict | None = None) -> ExtractedAgg | None:
     """Parse `analyzed().toJSON()` into the canonical aggregate form, or
-    None when the plan is outside the matchable fragment."""
+    None when the plan is outside the matchable fragment.  `anchors`
+    maps a view's lower-cased name to the reflection table it stands
+    for: that view becomes one leaf instead of being read through."""
     try:
         root = _tree(json.loads(analyzed_json))
-        return _Extractor(root).extract()
+        return _Extractor(root, anchors).extract()
     except (_Unsupported, KeyError, ValueError, TypeError, IndexError):
         return None
 
@@ -2103,10 +2154,11 @@ class _ScanExtractor(_Extractor):
             order_by=order, limit=limit)
 
 
-def extract_scan_query(analyzed_json: str) -> ExtractedScan | None:
+def extract_scan_query(analyzed_json: str,
+                       anchors: dict | None = None) -> ExtractedScan | None:
     try:
         root = _tree(json.loads(analyzed_json))
-        return _ScanExtractor(root).extract_scan()
+        return _ScanExtractor(root, anchors).extract_scan()
     except (_Unsupported, KeyError, ValueError, TypeError, IndexError):
         return None
 
@@ -2143,7 +2195,7 @@ def match_and_execute_raw(store, ex: ExtractedScan, accept=None):
     return None
 
 
-def extract_union_branches(analyzed_json: str
+def extract_union_branches(analyzed_json: str, anchors: dict | None = None
                            ) -> tuple[list, list | None] | None:
     """Top-level UNION ALL of independently-matchable aggregate
     fragments (the stacked-rollup BI shape: two GROUP BYs unioned),
@@ -2195,7 +2247,7 @@ def extract_union_branches(analyzed_json: str
     out = []
     for child in kids:
         try:
-            out.append(_Extractor(child).extract())
+            out.append(_Extractor(child, anchors).extract())
         except (_Unsupported, KeyError, ValueError, TypeError,
                 IndexError):
             return None

@@ -251,8 +251,8 @@ def transparent_join(spark: SparkSession, sf: str) -> DataFrame:
     reflection (lineitem ⋈ supplier) declared entirely through DDL
     (JOINS clause), then a user join query silently answers from the
     materialization — the tree-level matching of
-    SubstitutionProvider.java:40 that the regex fragment could never
-    reach.  Substitution AND the materialization scan are asserted."""
+    SubstitutionProvider.java:40.  Substitution AND the
+    materialization scan are asserted."""
     from pyspark.sql import functions as F
 
     from ..catalog import register_testdata

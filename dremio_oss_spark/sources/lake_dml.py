@@ -93,6 +93,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import sqltext
+
 COW, MOR = "copy-on-write", "merge-on-read"
 
 # Plan-shape probe: the last copy-on-write MERGE rewrite join, kept so
@@ -136,8 +138,9 @@ def _src_expr(expr: str, alias: str = "s") -> str:
     expression to the joined plan's `__s_` names.  Word-boundary
     anchored so a column whose name merely ends in the alias followed by
     a dotted reference (`prices.amount` under alias `s`) is left alone —
-    a plain substring replace corrupted it to `price__s_amount`."""
-    return re.sub(rf"\b{re.escape(alias)}\.", "__s_", expr)
+    a plain substring replace corrupted it to `price__s_amount`.
+    String literals are data: `'see s.x'` stays as written."""
+    return sqltext.sub(rf"\b{re.escape(alias)}\.", "__s_", expr)
 
 
 def _apply_set_exprs(df: DataFrame, set_exprs: dict[str, str],

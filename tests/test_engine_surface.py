@@ -251,6 +251,7 @@ def test_rollback_restores_target_schema(spark, tmp_path, fmt):
     "select 'see sales.orders_v' as s",
     "select 'NDV(x)' as s",
     "select 'last_query_id()' as s",
+    "select 'sys.log' as s",
 ])
 def test_rewrites_leave_literals_alone(spark, q):
     """The engine's text rewrites (dotted VDS names, dialect functions,
@@ -279,6 +280,26 @@ def test_update_set_literals_opaque(spark, tmp_path, fmt):
     got = {r["k"]: r["note"]
            for r in eng.sql(f"select * from '{t}'").collect()}
     assert got == {1: "a where b", 2: "c,d", 3: "z"}
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_merge_set_literals_opaque(spark, tmp_path, fmt):
+    """MERGE's source-alias rewrite (`s.` -> the joined plan's names)
+    reads code only: `s.x` inside a literal is data."""
+    from dremio_oss_spark.sources import delta, iceberg
+
+    eng = Engine(spark)
+    t = str(tmp_path / fmt)
+    write = delta.write_delta if fmt == "delta" else iceberg.write_iceberg
+    write(spark, spark.createDataFrame([(1, "x"), (2, "y")],
+                                       "k long, note string"), t)
+    spark.createDataFrame([(1, "u")], "k long, note string") \
+        .createOrReplaceTempView("merge_lit_src")
+    eng.sql(f"MERGE INTO '{t}' USING merge_lit_src ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET note = 'see s.x' || s.note")
+    got = {r["k"]: r["note"]
+           for r in eng.sql(f"select * from '{t}'").collect()}
+    assert got == {1: "see s.xu", 2: "y"}
 
 
 # Spark jobs per maintenance statement, measured on the per-format
@@ -1348,9 +1369,10 @@ def test_tabular_udf_arg_matching_later_param(spark):
 
 
 def test_regex_accel_duplicate_aliases(spark):
-    """Review r6: the regex fallback must survive `sum(x) as a,
-    sum(x) as b` (one rollup column projected twice) without erroring
-    the query."""
+    """`sum(x) as a, sum(x) as b` (one rollup column projected twice)
+    answers correctly.  The reflected temp view reads `spark.range`, a
+    plan node the plan-tree matcher refuses, so the query plans
+    normally."""
     from dremio_oss_spark.engine import Engine
 
     spark.range(20).selectExpr("id % 3 as g", "id * 1.0 as v") \

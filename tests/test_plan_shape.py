@@ -515,35 +515,47 @@ def test_analyze_no_full_shuffle_on_wide_input(spark, tmp_path):
     from dremio_oss_spark.plans.statistics import _fan_out, analyze_full
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    wide_dir = str(tmp_path / "wide")
-    load(spark, SF_SMALL, "lineitem").repartition(n_part) \
-        .write.mode("overwrite").parquet(wide_dir)
-    wide = spark.read.parquet(wide_dir)
-    assert wide.rdd.getNumPartitions() >= n_part
-    # wide input passes through untouched — no Exchange injected
-    assert _fan_out(wide) is wide
-    # and the single-pass ANALYZE aggregate plans exactly ONE exchange:
-    # the partial->final SinglePartition hop; nothing below the partial
-    # aggregate (no RoundRobin repartition of the scan)
-    agg_df = _fan_out(wide).agg(F.count(F.lit(1)).alias("_n_rows"))
-    plan = agg_df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert "RoundRobinPartitioning" not in plan, plan
-    # narrow input (one file, one split) still fans out
-    narrow_dir = str(tmp_path / "narrow")
-    load(spark, SF_SMALL, "nation").coalesce(1) \
-        .write.mode("overwrite").parquet(narrow_dir)
-    narrow = spark.read.parquet(narrow_dir)
-    assert narrow.rdd.getNumPartitions() < n_part
-    assert _fan_out(narrow) is not narrow
-    # end-to-end: one analyze_full call = stats + histogram, same values
-    # as the split functions
-    stats_df, hist_df = analyze_full(wide, ["l_quantity"])
-    s = stats_df.collect()[0]
-    assert s["column_name"] == "l_quantity" and s["n_rows"] == wide.count()
-    h = {(r["column_name"], r["percentile"]): r["value"]
-         for r in hist_df.collect()}
-    assert h[("l_quantity", 0.5)] is not None
+    # "wide" means at least n_part splits; Spark packs small files into
+    # min(cores, minPartitionNum) splits, so pin the split floor instead
+    # of depending on the host's core count
+    old_min = spark.conf.get("spark.sql.files.minPartitionNum", None)
+    spark.conf.set("spark.sql.files.minPartitionNum", str(n_part))
+    try:
+        wide_dir = str(tmp_path / "wide")
+        load(spark, SF_SMALL, "lineitem").repartition(n_part) \
+            .write.mode("overwrite").parquet(wide_dir)
+        wide = spark.read.parquet(wide_dir)
+        assert wide.rdd.getNumPartitions() >= n_part
+        # wide input passes through untouched — no Exchange injected
+        assert _fan_out(wide) is wide
+        # and the single-pass ANALYZE aggregate plans exactly ONE
+        # exchange: the partial->final SinglePartition hop; nothing
+        # below the partial aggregate (no RoundRobin repartition)
+        agg_df = _fan_out(wide).agg(F.count(F.lit(1)).alias("_n_rows"))
+        plan = agg_df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "RoundRobinPartitioning" not in plan, plan
+        # narrow input (one file, one split) still fans out
+        narrow_dir = str(tmp_path / "narrow")
+        load(spark, SF_SMALL, "nation").coalesce(1) \
+            .write.mode("overwrite").parquet(narrow_dir)
+        narrow = spark.read.parquet(narrow_dir)
+        assert narrow.rdd.getNumPartitions() < n_part
+        assert _fan_out(narrow) is not narrow
+        # end-to-end: one analyze_full call = stats + histogram, same
+        # values as the split functions
+        stats_df, hist_df = analyze_full(wide, ["l_quantity"])
+        s = stats_df.collect()[0]
+        assert s["column_name"] == "l_quantity"
+        assert s["n_rows"] == wide.count()
+        h = {(r["column_name"], r["percentile"]): r["value"]
+             for r in hist_df.collect()}
+        assert h[("l_quantity", 0.5)] is not None
+    finally:
+        if old_min is None:
+            spark.conf.unset("spark.sql.files.minPartitionNum")
+        else:
+            spark.conf.set("spark.sql.files.minPartitionNum", old_min)
 
 
 def test_exact_quantiles_rule_nulls_and_partition_independence(spark, tmp_path):

@@ -1368,9 +1368,10 @@ def test_leftjoin_star_substitution_null_extension(spark, tmp_path):
 
 def test_selfjoin_vds_reflection_accelerates(spark):
     """Self-join stars accelerate through VDS anchoring: the reflection
-    keys on the VDS identity, so a rollup over the view substitutes
-    without ever walking the view's internal self-join (which the
-    plan-tree IR refuses — see COVERAGE.md deviations).  This is the
+    keys on the VDS identity, and the plan-tree extractor takes a view
+    carrying a reflection as one leaf, so a rollup over the view
+    substitutes without ever walking the view's internal self-join
+    (which the IR refuses — see COVERAGE.md deviations).  This is the
     reference's view-acceleration UX for the same shape
     (SubstitutionProvider.java matches the query tree against the view
     tree; anchoring on the view sidesteps per-occurrence bindings)."""
@@ -3109,6 +3110,14 @@ def test_dim_granularity_by_day(spark):
     store = eng._refl_store
     refl = store._reflections["g1"]
     assert refl.granularity == {"ts": "day"}
+    # a filter on another dim still matches; a sub-day filter on the
+    # BY DAY column refuses
+    eng.sql("select event_type, count(*) as n from ev_g "
+            "where event_type = 'error' group by event_type")
+    assert eng.last_plan_accelerated == "g1"
+    eng.sql("select event_type, count(*) as n from ev_g "
+            "where ts >= '2024-01-01 06:30:00' group by event_type")
+    assert eng.last_plan_accelerated is None
     mat = spark.read.parquet(store._data_dir(refl))
     assert dict(mat.dtypes)["ts"] == "date"
     # day cells, not raw-ts cells: strictly fewer rows than raw grain
@@ -3294,3 +3303,116 @@ def test_refresh_reflections_for_dotted_vds_name(spark):
     store.drop("dn_r")
     eng.drop_vds("dnsp", "v1")
     spark.catalog.dropTempView("dn_base")
+
+
+def _star_vds(spark, tmp_path):
+    """An engine with a small star VDS `st.sales_v` (parquet fact and
+    dim) carrying one aggregate reflection, `r_star`."""
+    from dremio_oss_spark.engine import Engine
+
+    spark.createDataFrame(
+        [(i, i % 3, "ab"[i % 2], 0.5 * i, i % 4) for i in range(60)],
+        "id long, rk long, cat string, amt double, qty long") \
+        .write.mode("overwrite").parquet(str(tmp_path / "fact"))
+    spark.createDataFrame([(0, "EU"), (1, "US"), (2, "APAC")],
+                          "rk long, region string") \
+        .write.mode("overwrite").parquet(str(tmp_path / "dim"))
+    spark.read.parquet(str(tmp_path / "fact")) \
+        .createOrReplaceTempView("st_fact")
+    spark.read.parquet(str(tmp_path / "dim")) \
+        .createOrReplaceTempView("st_dim")
+    eng = Engine(spark)
+    eng.create_space("st")
+    eng.create_vds("st", "sales_v",
+                   "select cat, amt, qty, region from st_fact "
+                   "join st_dim on st_fact.rk = st_dim.rk")
+    eng.sql("ALTER VDS st.sales_v CREATE AGGREGATE REFLECTION r_star "
+            "USING DIMENSIONS (region, cat) MEASURES (amt (SUM, COUNT), "
+            "qty (SUM))")
+    return eng
+
+
+def test_star_vds_reflection_accelerates_through_plan_tree(spark, tmp_path):
+    """A reflection on a star VDS answers the dashboard shapes over that
+    VDS: the plan tree takes the reflected view as one leaf, so the
+    join inside it is never matched edge by edge.  Each answer has the
+    unaccelerated dtypes (the decimal partials cast back to double)
+    and values.  The `'sys.x'` literal must not trip the probe's
+    catalog-view guard."""
+    eng = _star_vds(spark, tmp_path)
+    try:
+        for q in (
+            "select region, sum(amt) as revenue from st.sales_v "
+            "group by region order by region",
+            "select cat, count(*) as n, sum(qty) as q from st.sales_v "
+            "where region in ('EU', 'sys.x') group by cat order by cat",
+            "select region, sum(amt) as revenue from st.sales_v "
+            "where cat = 'a' group by region order by revenue desc limit 2",
+        ):
+            got = eng.sql(q)
+            assert eng.last_plan_accelerated == "r_star", q
+            base = spark.sql(q.replace("st.sales_v", "st__sales_v"))
+            assert got.dtypes == base.dtypes, q
+            assert got.collect() == base.collect(), q
+    finally:
+        eng._refl_store.drop("r_star")
+
+
+def test_uncovered_select_analyzes_once(spark, tmp_path, monkeypatch):
+    """A SELECT over a reflected dataset that no reflection covers is
+    analyzed by Spark once: normal planning reuses the probe's frame."""
+    eng = _star_vds(spark, tmp_path)
+    calls = []
+    real_sql = spark.sql
+
+    def counting_sql(text, *a, **kw):
+        calls.append(text)
+        return real_sql(text, *a, **kw)
+
+    try:
+        monkeypatch.setattr(spark, "sql", counting_sql)
+        df = eng.sql("select region, max(qty) as m from st.sales_v "
+                     "group by region")
+        monkeypatch.undo()
+        assert eng.last_plan_accelerated is None
+        assert len(calls) == 1, calls
+        assert sorted(df.collect()) == sorted(spark.sql(
+            "select region, max(qty) as m from st__sales_v "
+            "group by region").collect())
+    finally:
+        eng._refl_store.drop("r_star")
+
+
+def test_read_memo_keeps_one_entry_per_path(spark, tmp_path):
+    """The materialization read memo holds one handle per live
+    materialization dir: refreshes that publish new generations drop
+    the removed dirs' entries, and an append into the current
+    generation replaces its entry instead of adding one."""
+    import os
+
+    from dremio_oss_spark.plans import ReflectionStore
+
+    src = spark.range(30).selectExpr("id % 3 as g", "id as v", "id as ts")
+    src.write.mode("overwrite").parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    store = ReflectionStore(spark, str(tmp_path / "refl"))
+    store.create_raw_reflection("mr", src, table="memo_t",
+                                display_cols=["g", "v", "ts"],
+                                watermark_col="ts")
+    refl = store._raw["mr"]
+    for _ in range(5):
+        store.rebuild("mr", src)
+        store._read_data(store._data_dir(refl)).count()
+    memo = store._read_data_memo
+    assert set(memo) <= {os.path.join(refl.path, d)
+                         for d in os.listdir(refl.path)}
+    assert len(memo) <= 2, sorted(memo)
+    cur = store._data_dir(refl)
+    before = memo[cur]
+    more = spark.range(30, 40).selectExpr("id % 3 as g", "id as v",
+                                          "id as ts")
+    assert store.incremental_refresh_raw("mr", more) == 10
+    assert store._read_data(cur).count() == 40
+    assert memo[cur] is not before and len(memo) <= 2
+    store.drop("mr")
+    assert not memo
