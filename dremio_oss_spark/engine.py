@@ -186,7 +186,7 @@ class Engine:
         # JobProfileResource.java:64): profiles land here from the REST
         # server and from profiled_sql(); sys.jobs reads it back
         from .plans.telemetry import JobTelemetryStore
-        self.job_telemetry = JobTelemetryStore()
+        self.job_telemetry = JobTelemetryStore(spark)
         # USE BRANCH|TAG|REF|COMMIT session version context
         # (versionSupport.ftl SqlUseVersion): global default + per-path
         # (USE ... IN '<path>') overrides; explicit AT clauses win
@@ -766,15 +766,13 @@ class Engine:
         Spark jobs from the status tracker."""
         rows: list[tuple] = list(self.job_telemetry.rows_for_sys_jobs())
         st = self.spark.sparkContext.statusTracker()
-        # live Spark jobs that BELONG to a tracked RUNNING query (the
-        # REST/Flight workers tag their groups rest-job-{id}) are that
-        # query's execution, not separate entries — exclude them so a
-        # running statement shows once
+        # live Spark jobs that BELONG to a tracked RUNNING query (each
+        # job records the Spark job group its statement runs under)
+        # are that query's execution, not separate entries — exclude
+        # them so a running statement shows once
         tracked_live: set[int] = set()
-        for r in rows:
-            if r[1] == "RUNNING":
-                tracked_live.update(st.getJobIdsForGroup(
-                    f"rest-job-{r[0]}"))
+        for group in self.job_telemetry.running_groups():
+            tracked_live.update(st.getJobIdsForGroup(group))
         for jid in sorted(st.getActiveJobsIds()):
             info = st.getJobInfo(jid)
             if info and jid not in tracked_live:
@@ -790,21 +788,30 @@ class Engine:
     def profiled_sql(self, query: str, user: str | None = None,
                      query_type: str = "LIBRARY"):
         """Plan a statement WITH telemetry capture: registers the job,
-        times planning, records the acceleration outcome.  Returns
-        (DataFrame, job_id); the caller completes the profile after
-        executing via `finish_job` (execution is lazy — planning wall
-        is all that exists at sql() time).  This is the library-level
-        JobsService submit (reference LocalJobsService.submitJob)."""
+        times planning, records the acceleration outcome, and tags the
+        calling thread's Spark jobs with the job group `lib-job-{id}`
+        until `finish_job`.  Returns (DataFrame, job_id); the caller
+        executes the frame on this thread and then calls `finish_job`
+        (execution is lazy — planning wall is all that exists at sql()
+        time).  This is the library-level JobsService submit
+        (reference LocalJobsService.submitJob)."""
         import time as _time
         import uuid as _uuid
 
+        from .plans.telemetry import clear_job_group
+
         jid = _uuid.uuid4().hex[:16]
         tel = self.job_telemetry
-        tel.start(jid, query, user or self.session_user, query_type)
+        group = f"lib-job-{jid}"
+        tel.start(jid, query, user or self.session_user, query_type,
+                  job_group=group)
+        sc = self.spark.sparkContext
+        sc.setJobGroup(group, f"library job {jid}")
         t0 = _time.perf_counter()
         try:
             df = self.sql(query)
         except Exception as e:  # noqa: BLE001 — profile the failure too
+            clear_job_group(sc)
             tel.complete(jid, state="FAILED",
                          error=f"{type(e).__name__}: {e}")
             raise
@@ -1041,15 +1048,19 @@ class Engine:
                    state: str = "COMPLETED",
                    execution_ms: float | None = None,
                    row_count: int | None = None,
-                   error: str | None = None,
-                   job_group: str | None = None) -> None:
-        """Complete a profiled job: snapshot the executed plan's
-        operator metrics and the job group's stage metrics into the
-        telemetry store (JobProfileResource's QueryProfile capture)."""
+                   error: str | None = None) -> None:
+        """Complete a profiled job and clear its job group from the
+        calling thread.  The profile is read later from Spark's status
+        store through that group, so `df` (the frame the caller ran) is
+        not needed; it stays accepted for callers that pass it."""
+        from .plans.telemetry import clear_job_group
+
+        sc = self.spark.sparkContext
+        if sc.getLocalProperty("spark.jobGroup.id") == f"lib-job-{jid}":
+            clear_job_group(sc)
         self.job_telemetry.complete(
-            jid, state=state, df=df, execution_ms=execution_ms,
-            row_count=row_count, error=error,
-            sc=self.spark.sparkContext, job_group=job_group)
+            jid, state=state, execution_ms=execution_ms,
+            row_count=row_count, error=error)
 
     def sys_options(self) -> DataFrame:
         keys = [
@@ -3879,29 +3890,42 @@ class Engine:
         per-operator RUNTIME metrics (rows out, operator time, peak
         memory, spill, full metric map as JSON) — the operator table of
         the reference's job profile (query profiles with per-operator
-        metrics, `exec/work/foreman` profile plumbing).  Execution uses
-        the noop sink, so nothing is collected to the driver."""
+        metrics, `exec/work/foreman` profile plumbing).  Execution
+        writes to the noop sink under a job group of its own, so
+        nothing is collected to the driver and the run is one SQL
+        execution whose status-store entry the job-profile builder
+        reads (`plans/telemetry.py`)."""
         import json as _json
+        import uuid as _uuid
 
-        from .plans.telemetry import plan_operator_profile
+        from .plans.telemetry import JOB_GROUP_PROPS
 
         df = query if isinstance(query, DataFrame) else self.sql(query)
-        # run THIS queryExecution's physical plan (a sink like noop would
-        # plan a separate execution whose metrics we couldn't read);
-        # count() over the internal-row RDD executes distributed with
-        # nothing shipped to the driver but the count
-        df._jdf.queryExecution().toRdd().count()
+        sc = self.spark.sparkContext
+        group = f"profile-{_uuid.uuid4().hex[:16]}"
+        prev = [sc.getLocalProperty(k) for k in JOB_GROUP_PROPS]
+        sc.setJobGroup(group, f"profile {group}")
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            for k, v in zip(JOB_GROUP_PROPS, prev):
+                sc.setLocalProperty(k, v)
+        ops = self.job_telemetry.reader.profile(group)["operators"]
+        if ops and ops[0]["operatorName"] == "OverwriteByExpression":
+            # the noop sink's write node: the frame's plan is below it
+            ops = [dict(o, operatorId=o["operatorId"] - 1,
+                        depth=o["depth"] - 1) for o in ops[1:]]
         rows: list[tuple] = []
-        for o in plan_operator_profile(df):  # shared AQE-unwrapping walk
+        for o in ops:
             m = o["metrics"]
             t = next((m[k] for k in
-                      ("aggTime", "time in aggregation build",
-                       "scanTime", "pipelineTime", "sortTime")
+                      ("time in aggregation build", "scan time",
+                       "duration", "sort time")
                       if k in m), None)
             rows.append((o["operatorId"], o["depth"], o["operatorName"],
-                         m.get("numOutputRows"), t,
-                         m.get("peakMemory"),
-                         m.get("spillSize"), _json.dumps(m)))
+                         m.get("number of output rows"), t,
+                         m.get("peak memory"),
+                         m.get("spill size"), _json.dumps(m)))
         return self._local_df(
             rows,
             "op_id int, depth int, operator string, rows_out long, "

@@ -36,82 +36,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col)).cast("bigint")
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-ish token estimate: alnum runs + individual punctuation marks,
-    like a byte-pair tokenizer's pre-tokenization pass. (RE2-compatible
-    pattern — no lookarounds — so the DuckDB oracle can mirror it.)"""
-    return F.size(
-        F.regexp_extract_all(col, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), F.lit(0))
-    ).cast("bigint")
-
-
-def stopword_hits(col: Column, lang: str) -> Column:
-    """Count of marker-stopword occurrences for `lang` (word-boundary regex)."""
-    pat = r"\b(" + "|".join(LANG_MARKERS[lang]) + r")\b"
-    return F.size(F.regexp_extract_all(F.lower(col), F.lit(pat), F.lit(0))).cast(
-        "bigint"
-    )
-
-
-def lang_scores(col: Column) -> list[Column]:
-    """Per-language stopword-rate score columns, normalized by token count."""
-    n = token_count(col)
-    return [
-        F.round(stopword_hits(col, lang) / n, 6).alias(f"score_{lang}")
-        for lang in LANG_MARKERS
-    ]
-
-
-def lang_id(col: Column) -> Column:
-    """Argmax language over the marker scores ('und' when all are zero)."""
-    n = token_count(col)
-    pairs = F.array(
-        *[
-            F.struct(
-                (stopword_hits(col, lang) / n).alias("score"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang in LANG_MARKERS
-        ]
-    )
-    best = F.array_max(pairs)
-    return F.when(best.getField("score") > 0, best.getField("lang")).otherwise("und")
-
-
-def quality_features(col: Column) -> list[Column]:
-    """Length/punctuation/word-shape quality features + a combined score.
-
-    Mirrors common pretraining-corpus quality filters (doc length, mean word
-    length, symbol ratio, stopword density).
-    """
-    n_chars = F.length(col).cast("bigint")
-    toks = tokens(col)
-    n_words = F.size(toks).cast("bigint")
-    mean_word_len = F.round((n_chars - n_words + 1) / n_words, 6)
-    n_punct = F.size(
-        F.regexp_extract_all(col, F.lit(r"[^\w\s]"), F.lit(0))
-    ).cast("bigint")
-    punct_ratio = F.round(n_punct / n_chars, 6)
-    stop_ratio = F.round(stopword_hits(col, "en") / n_words, 6)
-    score = F.round(
-        (
-            F.when((n_words >= 10) & (n_words <= 100000), 0.4).otherwise(0.0)
-            + F.when((mean_word_len >= 2) & (mean_word_len <= 12), 0.3).otherwise(0.0)
-            + F.when(punct_ratio < 0.2, 0.1).otherwise(0.0)
-            + F.when(stop_ratio > 0.05, 0.2).otherwise(0.0)
-        ),
-        6,
-    )
-    return [
-        n_chars.alias("n_chars2"),
-        n_words.alias("n_words"),
-        mean_word_len.alias("mean_word_len"),
-        punct_ratio.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        score.alias("quality_score"),
-    ]
-
-
 def fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of whitespace-normalized,
     lowercased text (cross-engine stable)."""
@@ -124,10 +48,9 @@ def _wta_exprs(c: str) -> list[str]:
     ONE parsed F.expr instead of a Column-API chain (every Column
     operator is a py4j round-trip; the old ~50-expression builder cost
     ~0.5 s PER CALL, re-paid by every consumer and every sf1 decade
-    row).  The parsed trees are identical to the Column forms: regex
-    literals carry the same final pattern (backslashes doubled for the
-    SQL escape pass), and double literals are suffixed D so 0.4D etc.
-    stay DoubleType exactly like F.lit(0.4)."""
+    row).  Regex literals carry their final pattern with backslashes
+    doubled for the SQL escape pass, and double literals are suffixed
+    D so 0.4D etc. stay DoubleType."""
     tok = f"split(trim(lower({c})), '\\\\s+')"
     n = f"cast(size({tok}) as bigint)"
 

@@ -33,6 +33,7 @@ import uuid
 from urllib.parse import parse_qs, unquote, urlparse
 
 from ..explore import ExploreError, VersionNotFoundError
+from ..plans.telemetry import clear_job_group
 
 
 class TokenManager:
@@ -296,10 +297,12 @@ def _histogram_full_job(h, cpath: str, version: str, col: str) -> dict:
 
     jid = h.jobs.create()
     sc = h.engine.spark.sparkContext
-    sc.setJobGroup(f"rest-job-{jid}", f"REST job {jid}", True)
+    group = f"rest-job-{jid}"
+    sc.setJobGroup(group, f"REST job {jid}", True)
     tel = h.engine.job_telemetry
     tel.start(jid, f"HISTOGRAM FULL {cpath}@{version}.{col}",
-              user=_request_user(h), query_type="UI_RUN")
+              user=_request_user(h), query_type="UI_RUN",
+              job_group=group)
     try:
         t0 = _time.perf_counter()
         out = h.explore.value_histogram(
@@ -314,8 +317,7 @@ def _histogram_full_job(h, cpath: str, version: str, col: str) -> dict:
             rows=rows)
         tel.complete(jid, state="COMPLETED",
                      execution_ms=(_time.perf_counter() - t0) * 1000,
-                     row_count=len(rows), sc=sc,
-                     job_group=f"rest-job-{jid}")
+                     row_count=len(rows))
         out["jobId"] = {"id": jid}
         out["mode"] = "full"
         return out
@@ -325,9 +327,7 @@ def _histogram_full_job(h, cpath: str, version: str, col: str) -> dict:
         h.jobs.finish(jid, state="FAILED", error=err)
         raise
     finally:
-        for k in ("spark.jobGroup.id", "spark.job.description",
-                  "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(k, None)
+        clear_job_group(sc)
 
 
 def handle_version_get(h) -> bool:

@@ -39,6 +39,7 @@ import pyarrow as pa
 import pyarrow.flight as flight
 
 from .. import sqltext
+from ..plans.telemetry import clear_job_group
 
 
 class _BearerMiddleware(flight.ServerMiddleware):
@@ -249,7 +250,8 @@ class EngineFlightServer(flight.FlightServerBase):
         # up in sys.jobs / GET /job/{id}/profile with queryType FLIGHT)
         jid = ticket.decode()[2:18]
         tel = self.engine.job_telemetry
-        tel.start(jid, sql, query_type="FLIGHT")
+        tel.start(jid, sql, query_type="FLIGHT",
+                  job_group=f"flight-job-{jid}")
         with self._lock:
             t_plan = _time.perf_counter()
             try:
@@ -355,7 +357,8 @@ class EngineFlightServer(flight.FlightServerBase):
                 # direct DoGet with plain SQL: a read-only convenience
                 sql = ticket.ticket.decode()
                 jid = _uuid.uuid4().hex[:16]
-                tel.start(jid, sql, query_type="FLIGHT")
+                tel.start(jid, sql, query_type="FLIGHT",
+                          job_group=f"flight-job-{jid}")
                 t_plan = _time.perf_counter()
                 try:
                     df = self._run(sql)
@@ -384,6 +387,10 @@ class EngineFlightServer(flight.FlightServerBase):
         except Exception:  # noqa: BLE001 — command frames lack stats
             qname = "SMALL"
         tel.set_queue(jid, qname)
+        # the job group the profile is read through (and a cancel
+        # would reach), like the REST worker's rest-job-{id}
+        sc = self.engine.spark.sparkContext
+        sc.setJobGroup(f"flight-job-{jid}", f"Flight job {jid}", True)
         t_exec = _time.perf_counter()
         try:
             with wm.admit_to(qname):
@@ -391,7 +398,9 @@ class EngineFlightServer(flight.FlightServerBase):
         except Exception as e:  # noqa: BLE001 — execution failure
             tel.complete(jid, state="FAILED", error=str(e))
             raise
-        tel.complete(jid, state="COMPLETED", df=df,
+        finally:
+            clear_job_group(sc)
+        tel.complete(jid, state="COMPLETED",
                      execution_ms=(_time.perf_counter() - t_exec) * 1000,
                      row_count=table.num_rows)
         return flight.RecordBatchStream(table)

@@ -75,6 +75,8 @@ import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from ..plans.telemetry import clear_job_group
+
 # engine state (shims, policy views, acceleration markers) is not
 # thread-safe; ThreadingHTTPServer handlers serialize engine access
 _ENGINE_LOCK = threading.Lock()
@@ -670,9 +672,11 @@ class _Handler(BaseHTTPRequestHandler):
         import time as _time
 
         sc = self.engine.spark.sparkContext
-        sc.setJobGroup(f"rest-job-{jid}", f"REST job {jid}", True)
+        group = f"rest-job-{jid}"
+        sc.setJobGroup(group, f"REST job {jid}", True)
         tel = self.engine.job_telemetry
-        tel.start(jid, sql, user="$dremio$", query_type="REST")
+        tel.start(jid, sql, user="$dremio$", query_type="REST",
+                  job_group=group)
         try:
             t_plan = _time.perf_counter()
             with _ENGINE_LOCK:
@@ -703,12 +707,8 @@ class _Handler(BaseHTTPRequestHandler):
             # serialized.  For a mutating statement engine.sql executes
             # the commit itself, so DML/DDL stays fully serialized.
             t_exec = _time.perf_counter()
-            # capture metrics from the frame that EXECUTES (the limited
-            # one) — df itself never runs, so its plan's SQLMetrics
-            # would stay zero
-            ldf = df.limit(n_collect)
             with wm.admit_to(qname):
-                rows = ldf.collect()
+                rows = df.limit(n_collect).collect()
             exec_ms = (_time.perf_counter() - t_exec) * 1000
             names = [f.name for f in df.schema.fields]
             if len(set(names)) == len(names):
@@ -729,9 +729,8 @@ class _Handler(BaseHTTPRequestHandler):
             self.jobs.finish(jid, state="COMPLETED", schema=schema,
                              rows=json_rows[:self.max_stored],
                              accelerated_by=accelerated)
-            tel.complete(jid, state="COMPLETED", df=ldf,
-                         execution_ms=exec_ms, row_count=len(rows),
-                         sc=sc, job_group=f"rest-job-{jid}")
+            tel.complete(jid, state="COMPLETED", execution_ms=exec_ms,
+                         row_count=len(rows))
             return df, rows, json_rows, schema, accelerated
         except Exception as e:  # noqa: BLE001 — recorded on the job
             err = f"{type(e).__name__}: {e}"
@@ -739,10 +738,7 @@ class _Handler(BaseHTTPRequestHandler):
             self.jobs.finish(jid, state="FAILED", error=err)
             raise
         finally:
-            # pyspark has no clearJobGroup; reset the thread-locals
-            for k in ("spark.jobGroup.id", "spark.job.description",
-                      "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(k, None)
+            clear_job_group(sc)
 
     def _run_job(self, jid: str, sql: str) -> None:
         """Async worker-thread wrapper: errors are already recorded on

@@ -81,10 +81,6 @@ def _commits_dir(root: str) -> str:
     return os.path.join(_nessie_dir(root), "commits")
 
 
-def is_versioned_source(root: str) -> bool:
-    return os.path.exists(_refs_path(root))
-
-
 def init_source(root: str) -> None:
     """Idempotently initialize the commit store: a `main` branch at the
     empty root (no commits yet — head is None, state is {})."""

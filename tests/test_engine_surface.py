@@ -838,7 +838,8 @@ def test_profile_returns_operator_metrics(spark):
     assert any((r["peak_memory"] or 0) > 0 for r in aggs)
     agg = max(aggs, key=lambda r: r["depth"])
     scan = [r for r in prof if "Scan" in r["operator"]]
-    assert scan and json.loads(scan[-1]["metrics"]).get("numOutputRows", 0) > 0
+    assert scan and json.loads(
+        scan[-1]["metrics"]).get("number of output rows", 0) > 0
     # deepest operators are upstream (scan below the aggregate)
     assert max(r["depth"] for r in scan) >= agg["depth"]
 

@@ -1207,7 +1207,8 @@ def test_rest_job_profile_and_jobs_listing(spark):
         # per-operator SQLMetrics with nonzero rows processed
         ops = {o["operatorName"]: o["metrics"] for o in prof["operators"]}
         assert any("HashAggregate" in n for n in ops)
-        assert any(m.get("numOutputRows", 0) > 0 for m in ops.values())
+        assert any(m.get("number of output rows", 0) > 0
+                   for m in ops.values())
         # phase (stage) metrics captured from the status tracker
         assert prof["phases"] and all(
             p["numTasks"] > 0 for p in prof["phases"])
@@ -1592,7 +1593,8 @@ def test_rest_bi_connect_files(spark):
 def test_flight_queries_profile_into_telemetry(flight_setup, spark):
     """Flight statements land in the SAME job-telemetry store the REST
     profile route serves: GetFlightInfo records planning, DoGet records
-    execution + operator metrics, queryType is FLIGHT."""
+    execution, queryType is FLIGHT, and the profile carries operator
+    metrics and phases."""
     from dremio_oss_spark.server.flight import flight_query
 
     eng, server = flight_setup
@@ -1611,8 +1613,12 @@ def test_flight_queries_profile_into_telemetry(flight_setup, spark):
     prof = eng.job_telemetry.profile(j["id"])
     assert prof["planningTimeMs"] > 0 and prof["executionTimeMs"] > 0
     assert "HashAggregate" in prof["plan"]
-    assert any(o["metrics"].get("numOutputRows", 0) > 0
+    assert any(o["metrics"].get("number of output rows", 0) > 0
                for o in prof["operators"])
+    # DoGet runs under the job group flight-job-{id}: the profile
+    # carries the statement's stages too
+    assert prof["profileStatus"] == "COMPLETE"
+    assert sum(p["completedTasks"] for p in prof["phases"]) > 0
     # a failing statement profiles FAILED
     import pyarrow.flight as fl
     import pytest as _pytest
@@ -1743,9 +1749,10 @@ def test_review_findings_r11_regressions(spark):
         assert code == 200 and det["id"] == jid
 
         # (7) abandoned RUNNING jobs cannot grow the store unboundedly
-        s = JobTelemetryStore(cap=4)
+        s = JobTelemetryStore(spark, cap=4)
         for i in range(50):
-            s.start(f"zombie{i}", "select 1")
+            s.start(f"zombie{i}", "select 1",
+                    job_group=f"lib-job-zombie{i}")
         assert len(s._jobs) <= 16  # hard bound at 4x cap
     finally:
         eng._drop_principal("ddl_made")

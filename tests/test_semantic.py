@@ -348,7 +348,7 @@ def test_profiled_sql_library_flow(spark):
     assert prof["state"] == "COMPLETED" and prof["queryUser"] == "alex"
     assert prof["queryType"] == "LIBRARY"
     assert "HashAggregate" in prof["plan"]
-    assert any(o["metrics"].get("numOutputRows", 0) > 0
+    assert any(o["metrics"].get("number of output rows", 0) > 0
                for o in prof["operators"])
     row = {r["job_id"]: r for r in eng.sys_jobs().collect()}[jid]
     assert row["user_name"] == "alex" and row["rows_returned"] == 5
