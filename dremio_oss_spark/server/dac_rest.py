@@ -1190,7 +1190,7 @@ def handle_jobs_filters(h) -> bool:
             names = sorted({u["name"] for u in eng.list_users()}
                            | {u for u in seen if u})
         elif kind == "queues":
-            seen = {j.get("queue") or "" for j in _telemetry_jobs(eng)}
+            seen = {j.get("wlmQueue") or "" for j in _telemetry_jobs(eng)}
             wlm = getattr(eng._workload(), "queues", None)
             defined = set(wlm() if callable(wlm) else wlm or [])
             names = sorted({q for q in (seen | set(defined)) if q})

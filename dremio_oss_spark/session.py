@@ -65,6 +65,12 @@ def build_spark(
         # as long and convert in catalog.load_events
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
+        # lake files store TIMESTAMP as INT64 micros (the Iceberg spec's
+        # encoding), whose footers carry min/max: commit stats then come
+        # from the footers (sources/delta._footer_stats), not a scan.
+        # A per-write option cannot do this: the writer takes the
+        # session value.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # local runs: modest driver heap; harmless if JVM already up
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

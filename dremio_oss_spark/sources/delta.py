@@ -33,7 +33,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 from ..localframe import meta_df
 from . import lake_dml
 
@@ -631,25 +631,47 @@ def _scan_with_partition_values(
 _STATS_TYPES = ("byte", "short", "int", "bigint", "float", "double",
                 "string", "date", "timestamp")
 
+# The one timestamp encoding whose footer bounds are Spark's own internal
+# value (micros since the epoch, UTC): what the engine's sessions write
+# (`session.build_spark` sets outputTimestampType=TIMESTAMP_MICROS).
+_MICROS_UTC = {"Type": "Timestamp", "isAdjustedToUTC": True,
+               "timeUnit": "microseconds"}
+
+
+def _json_scalar(v):
+    """A stats bound as the log stores it: JSON scalars as they are,
+    anything else (date, datetime) as its `str` — ISO, so lexically
+    ordered and range pruning on the strings stays correct."""
+    return v if isinstance(v, (int, float, str, type(None))) else str(v)
+
 
 def _footer_stats(table: str, staged: list[tuple[str, dict]],
-                  cols: list[str]) -> dict[str, dict] | None:
+                  types: dict[str, str]) -> dict[str, dict] | None:
     """Driver-side stats from the just-written parquet FOOTERS — the
     same numRecords/min/max the Spark scan would compute, with zero
-    Spark jobs.  Small-commit fast path only (the caller gates on file
-    count): a 100k-file backfill must use the distributed scan, not a
-    serial footer loop.  Returns None on ANY irregularity (missing or
-    inexact statistics on a non-all-null column) so the caller falls
-    back to the exact scan — stats feed file skipping, and an
-    untrusted bound could mis-prune."""
+    Spark jobs.  `types` maps each stats column to its Spark
+    `simpleString`.  Small-commit fast path only (the caller gates on
+    file count): a 100k-file backfill must use the distributed scan, not
+    a serial footer loop.  Returns None on ANY irregularity (missing or
+    inexact statistics on a non-all-null column, a timestamp stored as
+    anything but INT64 UTC micros) so the caller falls back to the exact
+    scan — stats feed file skipping, and an untrusted bound could
+    mis-prune.  Timestamp bounds are the raw micros rendered through
+    `TimestampType.fromInternal`, the conversion `collect()` applies on
+    the scan path, so both paths emit the same strings."""
     import pyarrow.parquet as pq
 
+    ts_cols = {c for c, t in types.items() if t == "timestamp"}
     out: dict[str, dict] = {}
     for rel, _pv in staged:
         try:
             md = pq.ParquetFile(os.path.join(table, rel)).metadata
         except Exception:
             return None
+        if md.num_rows == 0:
+            # as the scan records a file it saw no row of
+            out[rel] = {"numRecords": 0, "minValues": {}, "maxValues": {}}
+            continue
         mins: dict[str, object] = {}
         maxs: dict[str, object] = {}
         for rg in range(md.num_row_groups):
@@ -657,10 +679,15 @@ def _footer_stats(table: str, staged: list[tuple[str, dict]],
             for ci in range(grp.num_columns):
                 col = grp.column(ci)
                 name = col.path_in_schema
-                if name not in cols:
+                if name not in types:
                     continue
                 st = col.statistics
                 if st is None:
+                    return None
+                if name in ts_cols and not (
+                        col.physical_type == "INT64"
+                        and _MICROS_UTC.items()
+                        <= json.loads(st.logical_type.to_json()).items()):
                     return None
                 if not st.has_min_max:
                     # sound only when the chunk is ALL-NULL (writers
@@ -673,18 +700,21 @@ def _footer_stats(table: str, staged: list[tuple[str, dict]],
                 exact_max = getattr(st, "is_max_value_exact", True)
                 if exact_min is False or exact_max is False:
                     return None  # truncated bound: not the true extremum
-                v_min, v_max = st.min, st.max
+                if name in ts_cols:
+                    v_min, v_max = st.min_raw, st.max_raw
+                else:
+                    v_min, v_max = st.min, st.max
                 if name not in mins or v_min < mins[name]:
                     mins[name] = v_min
                 if name not in maxs or v_max > maxs[name]:
                     maxs[name] = v_max
-        def _j(v):
-            return (v if isinstance(v, (int, float, str, type(None)))
-                    else str(v))
+        for c in ts_cols & mins.keys():
+            mins[c] = TimestampType().fromInternal(mins[c])
+            maxs[c] = TimestampType().fromInternal(maxs[c])
         out[rel] = {
             "numRecords": md.num_rows,
-            "minValues": {c: _j(mins.get(c)) for c in cols},
-            "maxValues": {c: _j(maxs.get(c)) for c in cols},
+            "minValues": {c: _json_scalar(mins.get(c)) for c in types},
+            "maxValues": {c: _json_scalar(maxs.get(c)) for c in types},
         }
     return out
 
@@ -694,35 +724,32 @@ def _collect_stats(spark: SparkSession, table: str,
                    schema: StructType | None,
                    part_cols: list[str]) -> dict[str, dict]:
     """Per-staged-file column statistics (numRecords, minValues,
-    maxValues) for the add.stats field — ONE scan over only the
-    just-written files, grouped by basename.  This is the file-skipping
+    maxValues) for the add.stats field.  This is the file-skipping
     metadata every Delta writer embeds; the same min/max the reference
     reads from parquet footers (`DeltaLakeScanPrel` row-group pruning).
     Date/timestamp values serialize ISO (lexically ordered, so range
     pruning on strings stays correct).
 
-    Small commits (≤ `spark.dremio.stats.footerMaxFiles` files, default
-    64) read the footers directly on the driver — zero Spark jobs, the
-    dominant fixed cost of metadata-sized DML.  Timestamp columns and
-    any irregular footer fall back to the scan (session-timezone
-    rendering and NaN/truncation handling stay identical by
-    construction there)."""
+    Commits of ≤ `spark.dremio.stats.footerMaxFiles` files (default 64)
+    take every stats type from the footers just written, on the driver —
+    zero Spark jobs, the dominant fixed cost of metadata-sized DML.
+    Larger commits, and any irregular footer (`_footer_stats` returns
+    None), run ONE scan over only the just-written files, grouped by
+    basename; both paths return the same dict."""
     if not staged or schema is None:
         return {}
-    cols = [f.name for f in schema.fields
-            if f.name not in part_cols
-            and f.dataType.simpleString() in _STATS_TYPES]
-    if not cols:
+    types = {f.name: f.dataType.simpleString() for f in schema.fields
+             if f.name not in part_cols
+             and f.dataType.simpleString() in _STATS_TYPES}
+    if not types:
         return {}
     try:
         footer_max = int(spark.conf.get(
             "spark.dremio.stats.footerMaxFiles", "64"))
     except (TypeError, ValueError):
         footer_max = 64
-    if len(staged) <= footer_max and not any(
-            f.dataType.simpleString() == "timestamp"
-            for f in schema.fields if f.name in cols):
-        got = _footer_stats(table, staged, cols)
+    if len(staged) <= footer_max:
+        got = _footer_stats(table, staged, types)
         if got is not None:
             return got
     paths = [os.path.join(table, rel) for rel, _ in staged]
@@ -732,12 +759,9 @@ def _collect_stats(spark: SparkSession, table: str,
                     F.element_at(F.split(F.input_file_name(), "/"), -1))
     )
     aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
+    for c in types:
         aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
     by_base = {os.path.basename(rel): rel for rel, _ in staged}
-
-    def _j(v):
-        return v if isinstance(v, (int, float, str, type(None))) else str(v)
 
     out: dict[str, dict] = {}
     for r in df.groupBy("__base").agg(*aggs).collect():
@@ -746,8 +770,8 @@ def _collect_stats(spark: SparkSession, table: str,
             continue
         out[rel] = {
             "numRecords": r["__n"],
-            "minValues": {c: _j(r[f"__min_{c}"]) for c in cols},
-            "maxValues": {c: _j(r[f"__max_{c}"]) for c in cols},
+            "minValues": {c: _json_scalar(r[f"__min_{c}"]) for c in types},
+            "maxValues": {c: _json_scalar(r[f"__max_{c}"]) for c in types},
         }
     # empty part files never form a scan group: record them explicitly
     # (numRecords=0, no bounds) so stats stay complete per live file —

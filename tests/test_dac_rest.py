@@ -293,6 +293,20 @@ def test_jobs_filters_and_download(rest):
     assert code == 404
 
 
+def test_jobs_filter_offers_queue_seen_only_on_jobs(rest):
+    """/jobs/filters/queues offers a queue that appears only on a job
+    record (listing key `wlmQueue`), beside the workload manager's."""
+    eng, port = rest
+    code, out = _call(port, "POST", "/api/v3/sql",
+                      body={"sql": "select 1 as one"})
+    assert code == 200
+    eng.job_telemetry.set_queue(out["id"], "adhoc-only-on-job")
+    code, out = _call(port, "GET",
+                      "/api/v3/jobs/filters/queues?filter=only-on")
+    assert code == 200
+    assert [i["id"] for i in out["items"]] == ["adhoc-only-on-job"]
+
+
 def test_login_logout_and_temp_tokens(spark):
     from dremio_oss_spark.server.rest import serve_rest_background
 

@@ -302,6 +302,50 @@ def test_merge_set_literals_opaque(spark, tmp_path, fmt):
     assert got == {1: "see s.xu", 2: "y"}
 
 
+def _group_jobs(eng, stmt: str) -> int:
+    """Spark jobs `stmt` launches, counted through a job group of its
+    own."""
+    import uuid
+
+    sc = eng.spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, stmt)
+    try:
+        eng.sql(stmt).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_commit_takes_stats_from_footers(spark, tmp_path):
+    """A small lake commit takes its file stats from the footers it just
+    wrote, timestamp columns included: an Iceberg INSERT of a few rows
+    launches one Spark job (the write), and Iceberg UPDATE and DELETE
+    launch as many jobs as the Delta statements on the same rows.  The
+    engine runs on a new session, as servers and the benchmark do: it
+    inherits the INT64 timestamp encoding `build_spark` sets."""
+    eng = Engine(spark.newSession())
+    src = ("select id as k, cast(id * 1.5 as double) as v, "
+           "timestamp'2024-01-02 03:04:05.123456' + make_interval("
+           "0, 0, 0, cast(id as int)) as ts from range({lo}, {hi})")
+    got = {}
+    for fmt in ("delta", "iceberg"):
+        t = str(tmp_path / fmt)
+        eng.sql(f"CREATE TABLE '{t}' STORE AS (type => '{fmt}') AS "
+                + src.format(lo=0, hi=20))
+        got[fmt] = {
+            "insert": _group_jobs(
+                eng, f"INSERT INTO '{t}' " + src.format(lo=20, hi=25)),
+            "update": _group_jobs(
+                eng, f"UPDATE '{t}' SET v = v + 1 WHERE k = 3"),
+            "delete": _group_jobs(eng, f"DELETE FROM '{t}' WHERE k = 4"),
+        }
+        assert eng.sql(f"select count(*) as n from '{t}'").first()["n"] == 24
+    assert got["iceberg"]["insert"] == 1, got
+    assert got["iceberg"]["update"] == got["delta"]["update"], got
+    assert got["iceberg"]["delete"] == got["delta"]["delete"], got
+
+
 # Spark jobs per maintenance statement, measured on the per-format
 # implementations these statements replaced: the shared core must not
 # add any.
@@ -314,13 +358,10 @@ def test_maintenance_statement_job_counts(spark, tmp_path, fmt):
     """OPTIMIZE (full and FOR PARTITIONS), ROLLBACK and TRUNCATE run no
     more Spark jobs than their bounds; ROLLBACK and TRUNCATE are
     metadata-only."""
-    import uuid
-
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources import delta, iceberg
 
     eng = Engine(spark)
-    sc = spark.sparkContext
     write = delta.write_delta if fmt == "delta" else iceberg.write_iceberg
     t = str(tmp_path / fmt)
     df = spark.createDataFrame([(i, i % 3, float(i)) for i in range(30)],
@@ -329,21 +370,13 @@ def test_maintenance_statement_job_counts(spark, tmp_path, fmt):
     write(spark, df, t, mode="append")
     write(spark, df, t, mode="append")
 
-    def jobs(stmt: str) -> int:
-        group = f"maintenance-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, stmt)
-        try:
-            eng.sql(stmt).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     got = {
-        "optimize_partitions": jobs(
-            f"OPTIMIZE TABLE '{t}' FOR PARTITIONS p = 1"),
-        "optimize": jobs(f"OPTIMIZE TABLE '{t}'"),
-        "rollback": jobs(f"ROLLBACK TABLE '{t}' TO SNAPSHOT '{first}'"),
-        "truncate": jobs(f"TRUNCATE TABLE '{t}'"),
+        "optimize_partitions": _group_jobs(
+            eng, f"OPTIMIZE TABLE '{t}' FOR PARTITIONS p = 1"),
+        "optimize": _group_jobs(eng, f"OPTIMIZE TABLE '{t}'"),
+        "rollback": _group_jobs(
+            eng, f"ROLLBACK TABLE '{t}' TO SNAPSHOT '{first}'"),
+        "truncate": _group_jobs(eng, f"TRUNCATE TABLE '{t}'"),
     }
     assert all(got[k] <= n for k, n in _MAINTENANCE_JOBS.items()), got
     assert eng.sql(f"select count(*) as n from '{t}'").first()["n"] == 0

@@ -812,6 +812,69 @@ def test_iceberg_manifest_stats_skipping(spark, tmp_path):
     assert pruned2.where("k = 137").collect()[0]["v"] == 275.0
 
 
+def test_collect_stats_footer_and_scan_agree(spark, tmp_path):
+    """`spark.dremio.stats.footerMaxFiles` at its default (stats from
+    the footers just written) and at 0 (the scan only) give the same
+    per-file stats for every stats type: timestamps with microseconds
+    and before 1970, all-NULL chunks and an empty file.  A file whose
+    timestamps are INT96 (no footer bounds) takes the scan at either
+    setting and still matches."""
+    import datetime as dt
+    import glob
+    import os
+
+    from dremio_oss_spark.sources import delta
+
+    schema = spark.createDataFrame(
+        [], "i int, b bigint, d double, s string, dt date, ts timestamp"
+    ).schema
+    batches = [
+        [(1, 10, 1.5, "a", dt.date(1969, 12, 31),
+          dt.datetime(1969, 12, 31, 23, 59, 59, 999999)),
+         (-3, 2 ** 40, -0.25, "zz", dt.date(2024, 2, 29),
+          dt.datetime(2024, 2, 29, 12, 0, 0, 1))],
+        [(7, None, None, "é", None, None), (8, None, None, "", None, None)],
+        [(2, 5, 0.0, "m", dt.date(1900, 1, 1),
+          dt.datetime(1900, 1, 1, 0, 0, 0, 250000))],
+        [],
+    ]
+    t = str(tmp_path / "t")
+
+    def stage(rows, name):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            os.path.join(t, name))
+        return [(os.path.relpath(f, t), {}) for f in
+                glob.glob(os.path.join(t, name, "part-*.parquet"))]
+
+    staged = [f for i, rows in enumerate(batches)
+              for f in stage(rows, f"b{i}")]
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        int96 = stage(batches[0], "int96")
+    finally:
+        spark.conf.set(key, prev)
+
+    def stats(files, footer_max):
+        spark.conf.set("spark.dremio.stats.footerMaxFiles", footer_max)
+        try:
+            return delta._collect_stats(spark, t, files, schema, [])
+        finally:
+            spark.conf.unset("spark.dremio.stats.footerMaxFiles")
+
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    assert delta._footer_stats(t, staged, types) is not None
+    footer = stats(staged, "64")
+    assert footer == stats(staged, "0")
+    first = footer[staged[0][0]]
+    assert first["minValues"]["ts"] == "1969-12-31 23:59:59.999999"
+    assert first["maxValues"]["ts"] == "2024-02-29 12:00:00.000001"
+    assert {v["numRecords"] for v in footer.values()} == {2, 1, 0}
+    assert delta._footer_stats(t, int96, types) is None
+    assert stats(staged + int96, "64") == stats(staged + int96, "0")
+
+
 def test_iceberg_merge_on_read_equality_deletes(spark, tmp_path):
     """MOR DELETE writes an equality-delete file (spec content=2): no
     data rewrite, readers anti-join, deletes stack, COW ops on the MOR
