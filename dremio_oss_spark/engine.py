@@ -2051,77 +2051,32 @@ class Engine:
         return self.spark.sql(f"describe table {name}")
 
     def _iceberg_refs(self, table_path: str, kind: str) -> list[tuple]:
+        """(name, snapshot id) of each `kind` ref in an Iceberg table's
+        refs map; any other path raises."""
         import json
 
         from .sources.iceberg import _metadata_file
 
+        if self._lake_format(table_path) != "iceberg":
+            raise ValueError(f"not an Iceberg table: {table_path}")
         with open(_metadata_file(table_path)) as f:
             refs = json.load(f).get("refs") or {}
         return [(n, str(r["snapshot-id"])) for n, r in sorted(refs.items())
                 if r.get("type") == kind]
 
     def show_branches(self, table_path: str) -> DataFrame:
-        """SHOW BRANCHES IN '<table_path>' — Iceberg refs map for
-        Iceberg tables, the snapshot store otherwise."""
-        import os
-
-        if self._lake_format(table_path) == "iceberg":
-            rows = self._iceberg_refs(table_path, "branch")
-        else:
-            from .sources import dml
-
-            rows = [
-                (b, os.path.basename(
-                    dml.current_snapshot(table_path, b) or ""))
-                for b in dml.list_branches(table_path)
-            ]
+        """SHOW BRANCHES IN '<table_path>': the Iceberg refs map."""
         return self._local_df(
-            rows, "branch_name string, snapshot_id string"
+            self._iceberg_refs(table_path, "branch"),
+            "branch_name string, snapshot_id string"
         )
 
     def show_tags(self, table_path: str) -> DataFrame:
-        if self._lake_format(table_path) == "iceberg":
-            rows = self._iceberg_refs(table_path, "tag")
-        else:
-            from .sources import dml
-
-            rows = []
-            for t in dml.list_tags(table_path):
-                with open(dml._tag_file(table_path, t)) as f:
-                    rows.append((t, f.read().strip()))
+        """SHOW TAGS IN '<table_path>': the Iceberg refs map."""
         return self._local_df(
-            rows or [("", "")], "tag_name string, snapshot_id string"
-        ).where("tag_name <> ''")
-
-    def show_logs(self, table_path: str) -> DataFrame:
-        """SHOW LOGS IN '<path>': snapshot history oldest-first."""
-        from .sources import dml
-
-        rows = [(i, s) for i, s in enumerate(dml.history(table_path))]
-        return self._local_df(
-            rows or [(0, "")], "ordinal int, snapshot_id string"
-        ).where("snapshot_id <> ''")
-
-    def show_files(self, table_path: str) -> DataFrame:
-        """SHOW FILES IN '<path>': data files of the current snapshot."""
-        import os
-
-        from .sources import dml
-
-        snap = dml.current_snapshot(table_path)
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot in {table_path}")
-        rows = []
-        for root, _dirs, files in os.walk(snap):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(root, fn)
-                    rows.append(
-                        (os.path.relpath(p, snap), os.path.getsize(p))
-                    )
-        return self._local_df(
-            sorted(rows) or [("", 0)], "file_path string, size_bytes bigint"
-        ).where("file_path <> ''")
+            self._iceberg_refs(table_path, "tag"),
+            "tag_name string, snapshot_id string"
+        )
 
     def show_functions(self) -> DataFrame:
         """SHOW FUNCTIONS: built-ins + registered shims (native)."""
@@ -2358,12 +2313,7 @@ class Engine:
 
     def show_table_properties(self, table_path: str) -> DataFrame:
         """SHOW TBLPROPERTIES (SqlShowTableProperties, parserImpls.ftl):
-        format/location plus snapshot-store state (current snapshot,
-        branch/tag/history counts) when the path is a snapshot table."""
-        import os
-
-        from .sources import dml
-
+        format/location plus a lake table's own properties."""
         props: list[tuple[str, str]] = [
             ("format", "parquet"),
             ("location", table_path),
@@ -2375,13 +2325,6 @@ class Engine:
         elif fmt == "iceberg":
             from .sources.iceberg import resolve_snapshot as _ri
             props += sorted(_ri(table_path).properties.items())
-        if dml.current_snapshot(table_path) is not None:
-            props += [
-                ("current_snapshot", dml.current_snapshot(table_path) or ""),
-                ("n_snapshots", str(len(dml.history(table_path)))),
-                ("branches", ",".join(sorted(dml.list_branches(table_path)))),
-                ("tags", ",".join(sorted(dml.list_tags(table_path)))),
-            ]
         return self._local_df(
             props, "property string, value string"
         )
@@ -2680,11 +2623,6 @@ class Engine:
             path = m.group(1)
             fmt = self._lake_format(path)
             if fmt is None:
-                # snapshot-store tables keep their library semantics
-                from .sources import dml
-                if dml.current_snapshot(path) is not None:
-                    dml.truncate(self.spark, path)
-                    return self._status("TRUNCATE TABLE", path)
                 return None
             return self._status("TRUNCATE TABLE", lake_dml.truncate(
                 lake_dml.codec(fmt), self.spark, path))
@@ -3134,29 +3072,12 @@ class Engine:
         return read_copy_errors(self.spark, path)
 
     def table_refs(self, path: str) -> DataFrame:
-        """TABLE(table_refs('<path>')): branches and tags with their
-        snapshot pointers (Iceberg refs map; the snapshot store's
-        branches/tags otherwise)."""
-        fmt = self._lake_format(path)
-        if fmt == "iceberg":
-            rows = (
-                [(n, "branch", s) for n, s in
-                 self._iceberg_refs(path, "branch")]
-                + [(n, "tag", s) for n, s in self._iceberg_refs(path, "tag")]
-            )
-        else:
-            from .sources import dml
-
-            rows = [(b, "branch",
-                     os.path.basename(dml.current_snapshot(path, b) or ""))
-                    for b in dml.list_branches(path)]
-            for t in dml.list_tags(path):
-                with open(dml._tag_file(path, t)) as f:
-                    rows.append((t, "tag", f.read().strip()))
+        """TABLE(table_refs('<path>')): branches and tags of an Iceberg
+        table with their snapshot pointers (the refs map)."""
+        rows = [(n, kind, s) for kind in ("branch", "tag")
+                for n, s in self._iceberg_refs(path, kind)]
         return self._local_df(
-            rows or [("", "", "")],
-            "ref_name string, type string, snapshot_id string"
-        ).where("ref_name <> ''")
+            rows, "ref_name string, type string, snapshot_id string")
 
     def show_grants(self, on: str) -> DataFrame:
         """SHOW GRANTS ON <object>: the ACL rows for one object
@@ -4825,13 +4746,18 @@ class Engine:
         self.last_plan_considered = []
         if self._policy_built_for:
             self._ensure_policy_views()
-        # catalog statements Spark SQL lacks: SHOW BRANCHES/TAGS/LOGS IN '<path>'
+        # catalog statements Spark SQL lacks: SHOW BRANCHES/TAGS/LOGS/FILES
+        # IN '<path>'; LOGS is the table's commit history, FILES its live
+        # data files
         m = re.match(
-            r"\s*show\s+(branches|tags|logs)\s+in\s+'([^']+)'\s*$", query, re.I
+            r"\s*show\s+(branches|tags|logs|files)\s+in\s+'([^']+)'\s*$",
+            query, re.I
         )
         if m:
             kind, path = m.group(1).lower(), m.group(2)
-            return getattr(self, f"show_{kind}")(path)
+            return {"branches": self.show_branches, "tags": self.show_tags,
+                    "logs": self.table_history,
+                    "files": self.table_files}[kind](path)
         # SHOW TBLPROPERTIES '<path>' (SqlShowTableProperties)
         m = re.match(r"\s*show\s+tblproperties\s+'([^']+)'\s*$",
                      query, re.I)

@@ -1384,10 +1384,6 @@ class ExploreService:
         session).  Returns None when the fast path does not apply —
         the caller falls back to full analysis."""
         try:
-            if str(self.engine.spark.conf.get(
-                    "spark.dremio.explore.fastFields",
-                    "true")).lower() != "true":
-                return None
             prev_schema = base.get("_schema")
             if prev_schema is None:
                 return None

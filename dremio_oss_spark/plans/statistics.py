@@ -326,32 +326,29 @@ def analyze_full(df: DataFrame, columns: list[str] | None = None,
     # them concurrently (guide §2.6 — actions are only sequential
     # because driver code calls them sequentially) so each job's
     # stage tail back-fills the others' idle slots.  Job COUNT is
-    # unchanged; only the dead time between actions goes.
-    # inheritable_thread_target propagates the job group/description.
-    concurrent = str(spark.conf.get(
-        "spark.dremio.stats.concurrentAnalyze", "true")).lower() == "true"
-    if concurrent:
-        from concurrent.futures import ThreadPoolExecutor
+    # unchanged; only the dead time between actions goes.  Thread
+    # safety: the three are read-only actions over one immutable
+    # frame (each plans its own query; none writes a table, a view or
+    # a conf); inheritable_thread_target clones the caller's local
+    # properties when it wraps each function, so every job runs in the
+    # caller's job group; and all three results are joined before
+    # anything below writes a row.
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_row = pool.submit(inheritable_thread_target(
-                lambda: df.agg(*aggs).collect()[0]))
-            f_q = (pool.submit(inheritable_thread_target(
-                       lambda: _exact_quantiles(df, hcols, hexprs, pct)))
-                   if exact_q else None)
-            f_ndv = (pool.submit(inheritable_thread_target(
-                         lambda: _exact_ndv(df, cols)))
-                     if exact_ndv else None)
-            row = f_row.result()
-            qvals = f_q.result() if f_q is not None else None
-            ndvx = (f_ndv.result() if f_ndv is not None
-                    else {c: row[f"_ndv_{c}"] for c in cols})
-    else:
-        row = df.agg(*aggs).collect()[0]
-        qvals = _exact_quantiles(df, hcols, hexprs, pct) if exact_q else None
-        ndvx = (_exact_ndv(df, cols) if exact_ndv
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_row = pool.submit(inheritable_thread_target(
+            lambda: df.agg(*aggs).collect()[0]))
+        f_q = (pool.submit(inheritable_thread_target(
+                   lambda: _exact_quantiles(df, hcols, hexprs, pct)))
+               if exact_q else None)
+        f_ndv = (pool.submit(inheritable_thread_target(
+                     lambda: _exact_ndv(df, cols)))
+                 if exact_ndv else None)
+        row = f_row.result()
+        qvals = f_q.result() if f_q is not None else None
+        ndvx = (f_ndv.result() if f_ndv is not None
                 else {c: row[f"_ndv_{c}"] for c in cols})
     stats_df = meta_df(spark,
         _decode_stats(row, cols, ndvx), _STATS_SCHEMA)

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..plans.statistics import analyze_table
-from ..sources import dml
 from ..sources.external import ExternalSource
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
@@ -67,20 +66,23 @@ order by r_name
 
 
 # --------------------------------------------------------------------------
-# Time travel + rollback over the snapshot store (TimeTravelTableMacro,
+# Time travel + rollback on an Iceberg table (TimeTravelTableMacro,
 # ROLLBACK TABLE)
 def time_travel(spark: SparkSession, sf: str) -> DataFrame:
-    d = _scratch("tt", sf)
-    t = os.path.join(d, "part_t")
-    part = load(spark, sf, "part")
-    dml.create_table(part, t)
-    snap0 = dml.history(t)[-1]
-    dml.delete_where(spark, t, F.col("p_size") > 25)
-    after_delete = dml.read(spark, t).count()
+    from ..sources import lake_dml
+    from ..sources.iceberg import (read_iceberg, resolve_snapshot,
+                                   write_iceberg)
+
+    t = os.path.join(_scratch("tt", sf), "part_t")
+    write_iceberg(spark, load(spark, sf, "part"), t)
+    snap0 = resolve_snapshot(t).snapshot_id
+    ice = lake_dml.codec("iceberg")
+    lake_dml.delete(ice, spark, t, "p_size > 25")
+    after_delete = read_iceberg(spark, t).count()
     # time travel to the pre-delete snapshot: full original data
-    at0 = dml.read_at(spark, t, snap0)
-    dml.rollback(t, snap0)
-    rolled = dml.read(spark, t)
+    at0 = read_iceberg(spark, t, snapshot_id=snap0)
+    lake_dml.rollback(ice, spark, t, snap0)
+    rolled = read_iceberg(spark, t)
     return (
         at0.groupBy()
         .agg(

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..sources import dml
 from ..sources.formats import FormatRegistry
 from ..sources.writer import copy_into, ctas, insert_into, read_table
 from ..localframe import meta_df
@@ -259,19 +258,19 @@ order by mode
 
 
 # --------------------------------------------------------------------------
-# Copy-on-write DML: DELETE + UPDATE + MERGE
-# (DmlCopyOnWritePlanGenerator.java, Parser.tdd:624-685)
+# Copy-on-write DML: DELETE + UPDATE + MERGE on an Iceberg table through
+# the lake DML core (DmlCopyOnWritePlanGenerator.java, Parser.tdd:624-685)
 def dml_cow(spark: SparkSession, sf: str) -> DataFrame:
-    d = _scratch("dml", sf)
-    t = os.path.join(d, "customer_t")
+    from ..sources import lake_dml
+    from ..sources.iceberg import read_iceberg, write_iceberg
+
+    t = os.path.join(_scratch("dml", sf), "customer_t")
     cust = load(spark, sf, "customer")
-    dml.create_table(cust, t)
-    # DELETE FROM t WHERE c_acctbal < 0
-    dml.delete_where(spark, t, F.col("c_acctbal") < 0)
-    # UPDATE t SET c_mktsegment = 'VIP' WHERE c_custkey <= 10
-    dml.update_where(
-        spark, t, F.col("c_custkey") <= 10, {"c_mktsegment": F.lit("VIP")}
-    )
+    write_iceberg(spark, cust, t)
+    ice = lake_dml.codec("iceberg")
+    lake_dml.delete(ice, spark, t, "c_acctbal < 0")
+    lake_dml.update(ice, spark, t, {"c_mktsegment": "'VIP'"},
+                    "c_custkey <= 10")
     # MERGE INTO t USING src ON c_custkey: matched -> new balance, else insert
     # keys 1-5 that survived the DELETE (acctbal >= 0) -> guaranteed matched
     src = cust.where(
@@ -285,9 +284,10 @@ def dml_cow(spark: SparkSession, sf: str) -> DataFrame:
             "c_acctbal double, c_mktsegment string",
         )
     )
-    dml.merge_into(spark, t, src, on=["c_custkey"], update_cols=["c_acctbal"])
+    lake_dml.merge(ice, spark, t, src, on=["c_custkey"],
+                   update_set={"c_acctbal": "s.c_acctbal"})
     return (
-        dml.read(spark, t)
+        read_iceberg(spark, t)
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n"),

@@ -1,6 +1,5 @@
 """Sources, formats, writers, and DML (SURVEY.md §2.3/§2.4)."""
 
-from .dml import delete_where, merge_into, update_where
 from .formats import FormatRegistry
 from .writer import copy_into, ctas, insert_into
 
@@ -8,8 +7,5 @@ __all__ = [
     "FormatRegistry",
     "copy_into",
     "ctas",
-    "delete_where",
     "insert_into",
-    "merge_into",
-    "update_where",
 ]

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import gc
 import os
 import sys
 import threading
@@ -23,13 +24,43 @@ def spark():
     yield s
 
 
+def _flush_py4j_releases():
+    """Send the Java-object releases py4j has queued for its finalizer
+    thread, on this thread, so none of them arrives later."""
+    from pyspark import SparkContext
+
+    client = getattr(SparkContext._gateway, "_gateway_client", None)
+    queue = getattr(client, "finalizer_deque", None)
+    while queue:
+        try:
+            task = queue.pop()
+        except IndexError:
+            break
+        if not isinstance(task, tuple):  # the worker's shutdown marker
+            queue.append(task)
+            break
+        owner, target_id = task
+        owner.garbage_collect_object(target_id, False)
+
+
 @contextlib.contextmanager
 def count_py4j():
     """Count py4j round trips at `GatewayClient.send_command`, from every
     thread, while the block runs (perfbench's `Py4jCounter`).  Yields an
-    object whose `calls` holds the count."""
+    object whose `calls` holds the count.
+
+    py4j releases a Java object through `send_command` when its Python
+    proxy is freed.  A garbage-collection pass inside the block would
+    add the releases of proxies that earlier code left in reference
+    cycles, so the collector runs first, its releases are sent before
+    the block opens, and it stays disabled until the block ends: the
+    count is the block's own round trips."""
     import py4j.java_gateway as jg
 
+    gc.collect()
+    _flush_py4j_releases()
+    gc_was_enabled = gc.isenabled()
+    gc.disable()
     orig = jg.GatewayClient.__dict__["send_command"]
     counter = types.SimpleNamespace(calls=0)
     lock = threading.Lock()
@@ -45,3 +76,5 @@ def count_py4j():
         yield counter
     finally:
         jg.GatewayClient.send_command = orig
+        if gc_was_enabled:
+            gc.enable()

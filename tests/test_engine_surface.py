@@ -4,6 +4,8 @@ productions in the reference grammar, parserImpls.ftl)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from dremio_oss_spark.catalog import load
@@ -44,18 +46,25 @@ def test_folders_nest_and_protect(engine):
 
 
 def test_show_table_properties(engine, spark, tmp_path):
-    from dremio_oss_spark.sources import dml
+    """SHOW TBLPROPERTIES lists format, location and the table's own
+    properties; snapshot, history and refs come from the table_*
+    functions."""
+    from dremio_oss_spark.sources.iceberg import write_iceberg
 
     t = str(tmp_path / "props_t")
-    dml.create_table(load(spark, SF_SMALL, "region"), t)
-    dml.create_tag(t, "v1")
+    write_iceberg(spark, load(spark, SF_SMALL, "region"), t,
+                  properties={"write.update.mode": "merge-on-read"})
+    engine.sql(f"CREATE TAG v1 IN '{t}'")
     props = {r["property"]: r["value"]
-             for r in engine.show_table_properties(t).collect()}
-    assert props["format"] == "parquet"
-    assert props["current_snapshot"]
-    assert int(props["n_snapshots"]) >= 1
-    assert "main" in props["branches"]
-    assert "v1" in props["tags"]
+             for r in engine.sql(f"SHOW TBLPROPERTIES '{t}'").collect()}
+    assert props["format"] == "parquet" and props["location"] == t
+    assert props["write.update.mode"] == "merge-on-read"
+    snap = engine.table_snapshot(t).collect()[0]
+    assert snap["format"] == "iceberg" and snap["n_files"] >= 1
+    assert engine.table_history(t).count() == 1
+    refs = {(r["ref_name"], r["type"]) for r in
+            engine.table_refs(t).collect()}
+    assert refs == {("main", "branch"), ("v1", "tag")}
 
 
 def test_describe_function_shim_and_native(engine):
@@ -953,6 +962,74 @@ def test_table_refs_and_show_grants(spark, tmp_path):
     rows = {(r["privilege"], r["grantee"]) for r in
             eng.sql("SHOW GRANTS ON finance.revenue").collect()}
     assert rows == {("SELECT", "bob"), ("ALTER", "carol")}
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_show_logs_and_files_read_lake_tables(spark, tmp_path, fmt):
+    """SHOW LOGS IN '<path>' is the table's commit history, one row per
+    commit, and SHOW FILES IN '<path>' lists exactly its live data
+    files, on both lake formats."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.sources import lake_dml
+    from dremio_oss_spark.sources.delta import write_delta
+    from dremio_oss_spark.sources.iceberg import write_iceberg
+
+    eng = Engine(spark)
+    t = str(tmp_path / fmt)
+    df = spark.range(30).select(F.col("id").alias("k"),
+                                (F.col("id") % 3).alias("p"))
+    {"delta": write_delta, "iceberg": write_iceberg}[fmt](
+        spark, df, t, partition_by=["p"])
+    ice = lake_dml.codec(fmt)
+    lake_dml.delete(ice, spark, t, "k < 4", mode=lake_dml.COW)
+    lake_dml.update(ice, spark, t, {"k": "k + 100"}, "p = 1",
+                    mode=lake_dml.COW)
+
+    logs = eng.sql(f"SHOW LOGS IN '{t}'").collect()
+    assert len(logs) == 3
+    assert logs == eng.table_history(t).collect()
+
+    files = eng.sql(f"SHOW FILES IN '{t}'").collect()
+    assert files and all(
+        r["size_bytes"] == os.path.getsize(os.path.join(t, r["file_path"]))
+        for r in files)
+    # copy-on-write leaves no delete marks: the listed files hold the
+    # table's rows, no more and no fewer
+    live = spark.read.parquet(*[os.path.join(t, r["file_path"])
+                                for r in files])
+    assert live.count() == 26
+    assert live.where("k < 4").count() == 0
+
+
+def test_show_branches_and_tags_read_iceberg_refs(spark, tmp_path):
+    """SHOW BRANCHES / SHOW TAGS and table_refs list exactly an Iceberg
+    table's refs; on a path with no refs map they raise, naming it."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.sources.delta import write_delta
+    from dremio_oss_spark.sources.iceberg import resolve_snapshot, write_iceberg
+
+    eng = Engine(spark)
+    t = str(tmp_path / "i")
+    write_iceberg(spark, spark.range(5).select(F.col("id").alias("k")), t)
+    eng.sql(f"CREATE BRANCH dev IN '{t}'")
+    eng.sql(f"CREATE TAG v1 IN '{t}'")
+    sid = str(resolve_snapshot(t).snapshot_id)
+    assert sorted(map(tuple, eng.sql(f"SHOW BRANCHES IN '{t}'").collect())) \
+        == [("dev", sid), ("main", sid)]
+    assert [tuple(r) for r in eng.sql(f"SHOW TAGS IN '{t}'").collect()] \
+        == [("v1", sid)]
+
+    d = str(tmp_path / "d")
+    write_delta(spark, spark.range(5).select(F.col("id").alias("k")), d)
+    for stmt in (f"SHOW BRANCHES IN '{d}'", f"SHOW TAGS IN '{d}'",
+                 f"select * from table(table_refs('{d}'))"):
+        with pytest.raises(ValueError,
+                           match="not an Iceberg table: " + re.escape(d)):
+            eng.sql(stmt)
 
 
 def test_raw_path_sql_queries(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Extras queries vs DuckDB oracle + HLL tolerance + vacuum behavior."""
+"""Extras queries vs DuckDB oracle + HLL tolerance + external pushdown."""
 
 from __future__ import annotations
 
@@ -32,132 +32,6 @@ def test_hll_sketch_tolerance(spark):
     exact = load(spark, SF_SMALL, "customer").select("c_custkey").distinct().count()
     assert row["ndv_exact"] == exact
     assert row["est_within_5pct"]  # merged-sketch estimate inside 5% bound
-
-
-def test_vacuum_keeps_current(spark):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.sources import dml
-
-    d = extras_q._scratch("vacuum", SF_SMALL)
-    t = os.path.join(d, "t")
-    dml.create_table(load(spark, SF_SMALL, "region"), t)
-    dml.delete_where(spark, t, F.col("r_regionkey") == 0)
-    assert len(dml.history(t)) == 2
-    removed = dml.vacuum(t, keep=1)
-    assert len(removed) == 1
-    assert dml.read(spark, t).count() == 4  # current snapshot intact
-
-
-def test_branches_isolate_writes(spark):
-    """CREATE BRANCH / write AT BRANCH / ASSIGN BRANCH (Nessie-style
-    branch-pointer semantics over the snapshot store)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.sources import dml
-
-    d = extras_q._scratch("branches", SF_SMALL)
-    t = os.path.join(d, "t")
-    dml.create_table(load(spark, SF_SMALL, "nation"), t)
-    dml.create_branch(t, "dev")
-    assert dml.list_branches(t) == ["main", "dev"] or dml.list_branches(t) == [
-        "main",
-        "dev",
-    ]
-    # write on dev only
-    dml.delete_where(spark, t, F.col("n_regionkey") == 0, branch="dev")
-    assert dml.read(spark, t).count() == 25  # main untouched
-    assert dml.read(spark, t, branch="dev").count() == 20
-    # fast-forward main to dev (merge)
-    dml.assign_branch(t, "dev", "main")
-    assert dml.read(spark, t).count() == 20
-    dml.drop_branch(t, "dev")
-    assert dml.list_branches(t) == ["main"]
-
-
-def test_merge_on_read_delete_and_optimize(spark):
-    """MOR delete: sidecar keys, read-time anti-join; OPTIMIZE compacts."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.sources import dml
-
-    d = extras_q._scratch("mor", SF_SMALL)
-    t = os.path.join(d, "t")
-    dml.create_table(load(spark, SF_SMALL, "customer"), t)
-    n0 = dml.read(spark, t).count()
-    n_del = dml.read(spark, t).where(F.col("c_custkey") <= 10).count()
-    dml.delete_where_mor(spark, t, F.col("c_custkey") <= 10, ["c_custkey"])
-    # plain read (data files only) still sees all rows; MOR view hides them
-    assert dml.read(spark, t).count() == n0
-    assert dml.read_mor(spark, t, ["c_custkey"]).count() == n0 - n_del
-    # second MOR delete stacks
-    dml.delete_where_mor(spark, t, F.col("c_custkey") == 11, ["c_custkey"])
-    assert dml.read_mor(spark, t, ["c_custkey"]).count() == n0 - n_del - 1
-    # OPTIMIZE folds deletes into a new snapshot: plain read now agrees
-    dml.optimize(spark, t, ["c_custkey"], target_partitions=2)
-    assert dml.read(spark, t).count() == n0 - n_del - 1
-
-
-def test_mor_delete_is_branch_scoped(spark):
-    """A MOR delete on one branch must NOT leak into other branches that
-    point at the same parent snapshot (snapshot immutability)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.sources import dml
-
-    d = extras_q._scratch("mor_branch", SF_SMALL)
-    t = os.path.join(d, "t")
-    dml.create_table(load(spark, SF_SMALL, "nation"), t)
-    dml.create_branch(t, "dev")  # dev points at the same snapshot as main
-    dml.delete_where_mor(spark, t, F.col("n_regionkey") == 0, ["n_nationkey"],
-                         branch="dev")
-    # main's MOR view is unaffected; dev sees the delete
-    assert dml.read_mor(spark, t, ["n_nationkey"]).count() == 25
-    assert dml.read_mor(spark, t, ["n_nationkey"], branch="dev").count() == 20
-    # the delete created a new snapshot on dev; time travel to the parent
-    # still sees all 25 rows
-    parent = dml.history(t)[0]
-    assert dml.read_at(spark, t, parent).count() == 25
-
-
-def test_vacuum_protects_branches_and_mor_parents(spark):
-    """VACUUM must keep every branch's current snapshot and any snapshot
-    whose data files a surviving MOR snapshot symlinks into."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.sources import dml
-
-    d = extras_q._scratch("vacuum_branch", SF_SMALL)
-    t = os.path.join(d, "t")
-    dml.create_table(load(spark, SF_SMALL, "nation"), t)
-    dml.create_branch(t, "dev")
-    # advance main twice so the branch snapshot is old enough to be a
-    # vacuum candidate
-    dml.delete_where(spark, t, F.col("n_regionkey") == 0)
-    dml.delete_where(spark, t, F.col("n_regionkey") == 1)
-    # MOR delete on main: current snapshot symlinks into its parent
-    dml.delete_where_mor(spark, t, F.col("n_regionkey") == 2, ["n_nationkey"])
-    dml.vacuum(t, keep=1)
-    # dev still readable (its snapshot was protected)
-    assert dml.read(spark, t, branch="dev").count() == 25
-    # main's MOR view still readable (symlink parent was protected):
-    # 25 rows - regions 0,1 (COW) - region 2 (MOR) = 10
-    assert dml.read_mor(spark, t, ["n_nationkey"]).count() == 10
 
 
 def test_external_source_pushdown_sql(spark):

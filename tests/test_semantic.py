@@ -99,20 +99,17 @@ def test_hive_udf_registry_gated(spark):
 
 
 def test_show_files_functions_create_use_truncate(spark, tmp_path):
-    """Remaining Parser.tdd statement surface: SHOW FILES/FUNCTIONS,
-    SHOW CREATE (VDS), USE, TRUNCATE TABLE."""
-    from pyspark.sql import functions as F
-
+    """Remaining Parser.tdd statement surface: table_files, SHOW
+    FUNCTIONS, SHOW CREATE (VDS), USE, TRUNCATE TABLE."""
     from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.engine import Engine
-    from dremio_oss_spark.sources import dml
+    from dremio_oss_spark.sources.iceberg import resolve_snapshot, write_iceberg
 
     eng = Engine(spark)
     eng.add_testdata_source(SF_SMALL)
 
     t = str(tmp_path / "nation_t")
-    dml.create_table(load(spark, SF_SMALL, "nation"), t)
-    files = eng.show_files(t).collect()
+    write_iceberg(spark, load(spark, SF_SMALL, "nation"), t)
+    files = eng.table_files(t).collect()
     assert files and all(r["file_path"].endswith(".parquet") for r in files)
     assert all(r["size_bytes"] > 0 for r in files)
 
@@ -129,11 +126,14 @@ def test_show_files_functions_create_use_truncate(spark, tmp_path):
     eng.use("sales")
     assert eng.table("big_nations").count() == eng.table("sales.big_nations").count()
 
-    n_before = dml.read(spark, t).count()
-    snap_before = dml.history(t)[-1]
-    dml.truncate(spark, t)
-    assert dml.read(spark, t).count() == 0
-    assert dml.read_at(spark, t, snap_before).count() == n_before  # time travel
+    def count(at: str = "") -> int:
+        return eng.sql(f"select count(*) as c from '{t}'{at}").collect()[0]["c"]
+
+    n_before = count()
+    snap_before = resolve_snapshot(t).snapshot_id
+    eng.sql(f"TRUNCATE TABLE '{t}'")
+    assert count() == 0
+    assert count(f" at snapshot '{snap_before}'") == n_before  # time travel
 
 
 def test_tabular_udf_expansion_and_similar_to(spark):

@@ -118,59 +118,6 @@ def test_copy_into_on_error_continue(spark):
     assert rejects.count() == 1
 
 
-def test_tags_merge_branch_and_show_surface(spark, tmp_path):
-    """Tags pin snapshots (vacuum-protected, immutable); MERGE BRANCH
-    fast-forwards or raises on divergence; SHOW BRANCHES/TAGS/LOGS work
-    through the engine SQL surface (parserImpls.ftl:943, Parser.tdd)."""
-    import os
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from dremio_oss_spark.catalog import load
-    from dremio_oss_spark.engine import Engine
-    from dremio_oss_spark.sources import dml
-
-    t = str(tmp_path / "part_t")
-    part = load(spark, SF_SMALL, "part").where(F.col("p_partkey") <= 200)
-    dml.create_table(part, t)
-    n0 = dml.read(spark, t).count()
-
-    # tag the initial snapshot, then mutate main
-    dml.create_tag(t, "v1")
-    with _pytest.raises(FileExistsError):
-        dml.create_tag(t, "v1")
-    dml.delete_where(spark, t, F.col("p_size") > 25)
-    assert dml.read(spark, t).count() < n0
-    assert dml.read_at_tag(spark, t, "v1").count() == n0  # tag still sees all
-
-    # vacuum must keep the tag's snapshot even though it's old
-    removed = dml.vacuum(t, keep=1)
-    assert dml.read_at_tag(spark, t, "v1").count() == n0
-    assert removed == []  # only two snapshots exist: head + tagged
-
-    # dev branch advances; main untouched since fork -> fast-forward merge
-    dml.create_branch(t, "dev")
-    dml.delete_where(spark, t, F.col("p_size") > 20, branch="dev")
-    assert dml.merge_branch(t, "dev", "main") == "fast-forward"
-    assert dml.read(spark, t).count() == dml.read(spark, t, "dev").count()
-    assert dml.merge_branch(t, "dev", "main") == "up-to-date"
-
-    # divergence: both branches move independently -> merge refuses
-    dml.create_branch(t, "dev2")
-    dml.delete_where(spark, t, F.col("p_size") > 15, branch="dev2")
-    dml.delete_where(spark, t, F.col("p_partkey") > 190)  # main moves too
-    with _pytest.raises(ValueError, match="diverged"):
-        dml.merge_branch(t, "dev2", "main")
-
-    eng = Engine(spark)
-    branches = {r["branch_name"] for r in eng.sql(f"show branches in '{t}'").collect()}
-    assert {"main", "dev", "dev2"} <= branches
-    tags = {r["tag_name"] for r in eng.sql(f"show tags in '{t}'").collect()}
-    assert tags == {"v1"}
-    assert eng.sql(f"show logs in '{t}'").count() == len(dml.history(t))
-
-
 def test_show_describe_statements(spark):
     """SHOW TABLES/VIEWS/SCHEMAS + DESCRIBE TABLE engine surface."""
     from dremio_oss_spark.engine import Engine
@@ -1008,8 +955,8 @@ def test_iceberg_refs_branches_tags_merge(spark, tmp_path):
 
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources.iceberg import (
-        create_iceberg_ref, expire_iceberg_snapshots, merge_iceberg_branch,
-        read_iceberg, write_iceberg)
+        create_iceberg_ref, expire_iceberg_snapshots, iceberg_history,
+        merge_iceberg_branch, read_iceberg, write_iceberg)
 
     eng = Engine(spark)
     t = str(tmp_path / "t")
@@ -1018,6 +965,8 @@ def test_iceberg_refs_branches_tags_merge(spark, tmp_path):
     write_iceberg(spark, df, t)
 
     eng.sql(f"CREATE TAG v1 IN '{t}'")
+    with pytest.raises(ValueError, match="already exists"):
+        eng.sql(f"CREATE TAG v1 IN '{t}'")  # tags are immutable
     eng.sql(f"CREATE BRANCH dev IN '{t}'")
     extra = spark.createDataFrame([(100, 1.0)], "k long, v double")
     write_iceberg(spark, extra, t, mode="append", branch="dev")
@@ -1058,12 +1007,21 @@ def test_iceberg_refs_branches_tags_merge(spark, tmp_path):
     except ValueError as e:
         assert "diverged" in str(e)
 
+    # SHOW LOGS: one row per snapshot, oldest first
+    logs = eng.sql(f"show logs in '{t}'").collect()
+    assert [r["snapshot_id"] for r in logs] == [
+        h["snapshot_id"] for h in iceberg_history(t)]
+    assert len(logs) == 4
+
     # the v1 tag pins snapshot 1 against expiry
     expire_iceberg_snapshots(t, keep_last=1)
     assert read_iceberg(spark, t, ref="v1").count() == 10
     eng.sql(f"DROP TAG v1 IN '{t}'")
     tags = {r["tag_name"] for r in eng.sql(f"show tags in '{t}'").collect()}
     assert "v1" not in tags
+    eng.sql(f"DROP BRANCH dev2 IN '{t}'")
+    assert {r["branch_name"] for r in
+            eng.sql(f"show branches in '{t}'").collect()} == {"main", "dev"}
 
 
 def test_rename_column_both_formats(spark, tmp_path):
