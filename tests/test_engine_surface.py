@@ -983,9 +983,9 @@ def test_show_logs_and_files_read_lake_tables(spark, tmp_path, fmt):
                                 (F.col("id") % 3).alias("p"))
     {"delta": write_delta, "iceberg": write_iceberg}[fmt](
         spark, df, t, partition_by=["p"])
-    ice = lake_dml.codec(fmt)
-    lake_dml.delete(ice, spark, t, "k < 4", mode=lake_dml.COW)
-    lake_dml.update(ice, spark, t, {"k": "k + 100"}, "p = 1",
+    codec = lake_dml.codec(fmt)
+    lake_dml.delete(codec, spark, t, "k < 4", mode=lake_dml.COW)
+    lake_dml.update(codec, spark, t, {"k": "k + 100"}, "p = 1",
                     mode=lake_dml.COW)
 
     logs = eng.sql(f"SHOW LOGS IN '{t}'").collect()
