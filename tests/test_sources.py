@@ -118,6 +118,65 @@ def test_copy_into_on_error_continue(spark):
     assert rejects.count() == 1
 
 
+def test_tags_merge_branch_and_show_surface(spark, tmp_path):
+    """Tags pin snapshots (expiry-protected, immutable); MERGE BRANCH
+    fast-forwards or raises on divergence; SHOW BRANCHES/TAGS/LOGS work
+    through the engine SQL surface (parserImpls.ftl:943, Parser.tdd),
+    on an Iceberg table."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.catalog import load
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources.iceberg import (
+        create_iceberg_ref, delete_from_iceberg, expire_iceberg_snapshots,
+        iceberg_history, merge_iceberg_branch, read_iceberg, write_iceberg)
+
+    t = str(tmp_path / "part_t")
+    part = load(spark, SF_SMALL, "part").where(F.col("p_partkey") <= 200)
+    write_iceberg(spark, part, t)
+    n0 = read_iceberg(spark, t).count()
+
+    # tag the initial snapshot, then mutate main
+    create_iceberg_ref(t, "v1", "tag")
+    with pytest.raises(ValueError, match="already exists"):
+        create_iceberg_ref(t, "v1", "tag")
+    delete_from_iceberg(spark, t, "p_size > 25")
+    n1 = read_iceberg(spark, t).count()
+    assert n1 < n0
+    assert read_iceberg(spark, t, ref="v1").count() == n0  # tag sees all
+
+    # expiry must keep the tag's snapshot even though it's old
+    expire_iceberg_snapshots(t, keep_last=1)
+    assert read_iceberg(spark, t, ref="v1").count() == n0
+    assert len(iceberg_history(t)) == 2  # head + tagged
+
+    # dev branch advances; main untouched since fork -> fast-forward merge
+    create_iceberg_ref(t, "dev", "branch")
+    extra = part.where(F.col("p_partkey") <= 3)
+    n_extra = extra.count()
+    write_iceberg(spark, extra, t, mode="append", branch="dev")
+    assert read_iceberg(spark, t).count() == n1
+    merge_iceberg_branch(t, "dev", "main")
+    assert read_iceberg(spark, t).count() == n1 + n_extra
+    assert (read_iceberg(spark, t).count()
+            == read_iceberg(spark, t, ref="dev").count())
+
+    # divergence: both branches move independently -> merge refuses
+    create_iceberg_ref(t, "dev2", "branch")
+    write_iceberg(spark, extra, t, mode="append", branch="dev2")
+    write_iceberg(spark, extra, t, mode="append")  # main moves too
+    with pytest.raises(ValueError, match="diverged"):
+        merge_iceberg_branch(t, "dev2", "main")
+
+    eng = Engine(spark)
+    branches = {r["branch_name"]
+                for r in eng.sql(f"show branches in '{t}'").collect()}
+    assert {"main", "dev", "dev2"} <= branches
+    tags = {r["tag_name"] for r in eng.sql(f"show tags in '{t}'").collect()}
+    assert tags == {"v1"}
+    assert eng.sql(f"show logs in '{t}'").count() == len(iceberg_history(t))
+
+
 def test_show_describe_statements(spark):
     """SHOW TABLES/VIEWS/SCHEMAS + DESCRIBE TABLE engine surface."""
     from dremio_oss_spark.engine import Engine
