@@ -705,27 +705,31 @@ class Engine:
                     return "DUE"
                 return "CAN_ACCELERATE"
 
+            def _refresh_of(r) -> tuple:
+                return (r.refresh_mode, r.refresh_reason, r.refresh_errors)
+
             for r in store._reflections.values():
                 rows.append((
                     r.name, r.table, ",".join(r.dims),
                     ",".join(m.name for m in r.measures),
                     len(r.joins), str(r.watermark) if r.watermark else None,
-                    _status_of(r),
+                    _status_of(r), *_refresh_of(r),
                 ))
             for rr in store._raw.values():
                 rows.append((rr.name, rr.table,
                              ",".join(rr.cols), "", 0, None,
-                             _status_of(rr)))
+                             _status_of(rr), *_refresh_of(rr)))
             for ee in getattr(store, "_external", {}).values():
                 rows.append((ee.name, ee.table,
                              f"external:{ee.target}", "", 0, None,
                              "OUT_OF_SYNC" if ee.invalid
-                             else "CAN_ACCELERATE"))
+                             else "CAN_ACCELERATE", None, None, 0))
         return self._local_df(
-            rows or [("", "", "", "", 0, None, "")],
+            rows or [("", "", "", "", 0, None, "", None, None, 0)],
             "reflection_name string, dataset string, dims string, "
             "measures string, n_join_edges int, watermark string, "
-            "status string",
+            "status string, refresh_mode string, refresh_reason string, "
+            "refresh_errors int",
         ).where("reflection_name <> ''")
 
     def sys_materializations(self) -> DataFrame:
@@ -1892,32 +1896,53 @@ class Engine:
         else:
             store.rebuild(refl.name, base, dims)
 
+    def _fold_blocker(self, refl, path: str) -> str | None:
+        """Why a path reflection's refresh cannot fold the table's change
+        rows (None: it can).  The fold needs signable measures
+        (SUM/COUNT with a COUNT(*)), one table, a base version, and a
+        change source: Iceberg derives one from its snapshots, Delta
+        needs `delta.enableChangeDataFeed`."""
+        from .sources import lake_dml
+
+        if getattr(refl, "joins", ()) or not hasattr(refl, "measures"):
+            return "not an aggregate over one table"
+        kinds = {m.kind for m in refl.measures}
+        if kinds & {"min", "max", "ndv"}:
+            return "MIN/MAX/NDV measures cannot fold deletes"
+        if not any(m.kind == "count" and m.col == "*"
+                   for m in refl.measures):
+            return "no COUNT(*) measure"
+        if refl.base_version is None:
+            return "no base version"
+        fmt = self._lake_format(path)
+        if fmt == "delta":
+            codec = lake_dml.codec(fmt)
+            if not codec.cdf(codec.at(self.spark, path, None)):
+                return "delta.enableChangeDataFeed is not set"
+        return None
+
     def _refresh_path_reflection(self, store, refl, path: str) -> None:
         """Commit-driven refresh of a path-anchored reflection: fold the
-        CHANGE FEED since base_version when the measure set is signable
-        (SUM/COUNT(*) — the CDC-maintained materialization path), else a
-        shape-preserving full rebuild from the table head.  Any
-        incremental failure (CDF not enabled, pruned history, ...)
-        degrades to the rebuild — freshness never depends on the fast
-        path being available."""
-        signable = (
-            not getattr(refl, "joins", ())
-            and hasattr(refl, "measures")
-            and not {m.kind for m in refl.measures} & {"min", "max",
-                                                       "ndv"}
-            and any(m.kind == "count" and m.col == "*"
-                    for m in refl.measures)
-            and refl.base_version is not None)
-        if signable:
+        CHANGE FEED since base_version when `_fold_blocker` finds
+        nothing in the way (the CDC-maintained materialization path),
+        else a shape-preserving full rebuild from the table head.
+        `refresh_mode` and `refresh_reason` record which ran and why
+        (sys.reflections shows both).  A fold that raises anyway (pruned
+        history, ...) counts in `refresh_errors` and rebuilds, so
+        freshness never depends on the fast path."""
+        reason = self._fold_blocker(refl, path)
+        if reason is None:
             try:
                 if self._lake_format(path) == "delta":
                     store.cdf_incremental_refresh(refl.name, path)
                 else:
                     store.changelog_incremental_refresh(refl.name, path)
                 refl.stale = False
+                refl.refresh_mode, refl.refresh_reason = "incremental", None
                 return
-            except Exception:  # noqa: BLE001 — degrade to full rebuild
-                pass
+            except Exception as e:  # noqa: BLE001 — counted, then rebuilt
+                refl.refresh_errors += 1
+                reason = f"{type(e).__name__}: {e}"
         self._register_path_reflection_view(path)  # fresh file list
         joins = getattr(refl, "joins", ())
         dims = {js.dim_table: self._resolve_table(js.dim_table)
@@ -1925,44 +1950,45 @@ class Engine:
         store.rebuild(refl.name, self.spark.table(refl.table), dims)
         refl.base_version = self._lake_head_version(path)
         refl.stale = False
+        refl.refresh_mode, refl.refresh_reason = "full", reason
 
-    def _refresh_stale_reflections(self) -> None:
-        """Fail-safe contract: a broken refresh must never break a
-        query.  A reflection whose refresh RAISES (base path deleted,
-        dim view dropped, column dropped from under it, ...) is marked
-        INVALID — it stops matching entirely, so queries plan normally
-        (and surface the real error, e.g. 'column not found') instead of
-        serving the stale materialization.  REFRESH REFLECTION or a
-        successful later auto-refresh clears the quarantine."""
-        store = getattr(self, "_refl_store", None)
-        if store is None or not self._auto_refresh_enabled():
-            return
+    def _refresh_if_stale(self, refl) -> bool:
+        """Refresh a reflection a matcher is considering when it is
+        commit-stale (or time-DUE under `autoRefreshDue`), and say
+        whether it may answer.  Fail-safe contract: a refresh that
+        RAISES (base path deleted, dim view dropped, column dropped from
+        under it, ...) marks the reflection INVALID and refuses it, so
+        the query plans normally (and surfaces the real error) instead
+        of serving the stale materialization; REFRESH REFLECTION or a
+        later successful refresh clears the quarantine.  With
+        auto-refresh off, a stale reflection keeps answering."""
+        store = self._refl_store
         # time-DUE refresh is OPT-IN (the reference refreshes due
         # reflections from a background scheduler, never inline — the
         # default here matches: DUE keeps serving until REFRESH
         # REFLECTIONS or expiry; the conf trades first-query latency
         # for inline freshness where no scheduler exists)
-        auto_due = str(self.spark.conf.get(
+        due = refl.stale or (store.is_due(refl) and str(self.spark.conf.get(
             "spark.dremio.reflections.autoRefreshDue",
-            "false")).lower() == "true"
-        for refl in list(store._reflections.values()) + list(
-                store._raw.values()):
-            if (getattr(refl, "stale", False)
-                    or (auto_due and store.is_due(refl))):
-                try:
-                    self._refresh_stale_reflection(refl)
-                    refl.stale = False
-                    refl.invalid = False
-                    store._stamp(refl)
-                except Exception:  # noqa: BLE001 — quarantine, don't raise
-                    refl.invalid = True
+            "false")).lower() == "true")
+        if not (due and self._auto_refresh_enabled()):
+            return True
+        try:
+            self._refresh_stale_reflection(refl)
+        except Exception:  # noqa: BLE001 — quarantine, don't raise
+            refl.invalid = True
+            return False
+        refl.stale = False
+        refl.invalid = False
+        store._stamp(refl)
+        return True
 
     def clear_all_materializations(self) -> int:
         """DevelopmentOptionsResource.clearMaterializations: mark EVERY
         reflection (agg AND raw) stale and rebuild INLINE, regardless
         of the background auto-refresh conf — an explicit admin action,
         so no query ever reads a cleared materialization.  Same
-        quarantine contract as `_refresh_stale_reflections`: a broken
+        quarantine contract as `_refresh_if_stale`: a broken
         rebuild marks the reflection invalid instead of raising."""
         store = getattr(self, "_refl_store", None)
         if store is None:
@@ -3497,19 +3523,20 @@ class Engine:
         return None
 
     def _accel_accept(self, refl) -> bool:
-        """Per-dataset acceleration gate (SqlAccelToggle): False when
-        the reflection's dataset has its kind (raw/aggregate) disabled
-        via ALTER ... DISABLE RAW|AGGREGATE ACCELERATION."""
+        """The matchers' per-candidate gate: False when the reflection's
+        dataset has its kind (raw/aggregate) disabled via ALTER ...
+        DISABLE RAW|AGGREGATE ACCELERATION (SqlAccelToggle); otherwise
+        the candidate is refreshed if stale (`_refresh_if_stale`) and
+        refused if that refresh fails."""
         togg = getattr(self, "_accel_toggles", None)
-        if not togg:
-            return True
-        t = togg.get(getattr(refl, "table", None))
-        if t is None:
-            return True
-        from .plans.reflections import RawReflection
+        t = togg.get(getattr(refl, "table", None)) if togg else None
+        if t is not None:
+            from .plans.reflections import RawReflection
 
-        kind = "raw" if isinstance(refl, RawReflection) else "agg"
-        return t.get(kind, True)
+            kind = "raw" if isinstance(refl, RawReflection) else "agg"
+            if not t.get(kind, True):
+                return False
+        return self._refresh_if_stale(refl)
 
     def _try_accelerate(self, query: str) -> DataFrame | None:
         """Wrapper recording the probe's substitution CANDIDATES for
@@ -3555,9 +3582,10 @@ class Engine:
         if store is None or not (store._reflections or store._raw
                                  or getattr(store, "_external", None)):
             return None
-        # dependency-driven freshness: stale dependents refresh BEFORE
-        # matching, so an accelerated answer reflects the latest commit
-        self._refresh_stale_reflections()
+        # dependency-driven freshness: a stale candidate refreshes when a
+        # matcher considers it (`_accel_accept`), so an accelerated answer
+        # reflects the latest commit and a query that no reflection could
+        # answer refreshes nothing
         return self._plan_tree_accelerate(self._resolve_vds_names(query))
 
     @staticmethod
@@ -3794,7 +3822,8 @@ class Engine:
                 view = self._policy_target(refl.table)
                 if (getattr(refl, "invalid", False)
                         or view.lower() not in names
-                        or policied([refl.table])):
+                        or policied([refl.table])
+                        or not self._accel_accept(refl)):
                     continue
                 df = self._swap_answer(q, probe, {
                     view: store._read_data(store._data_dir(refl))})

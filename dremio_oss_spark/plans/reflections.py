@@ -328,6 +328,12 @@ class Reflection:
     # DependencyManager: due when older than the refresh period, never
     # served once older than the grace period)
     last_refresh_ms: int = 0
+    # how the last refresh ran ("incremental" or "full"); for a full
+    # rebuild, why no incremental fold ran; and how many incremental
+    # attempts raised and fell back to a rebuild (sys.reflections)
+    refresh_mode: str | None = None
+    refresh_reason: str | None = None
+    refresh_errors: int = 0
     # bare column name -> owning table across the reflection's star
     # (None value = the name exists in 2+ star tables, i.e. ambiguous).
     # Plan-tree substitution matches QUALIFIED columns against this map:
@@ -482,6 +488,9 @@ class RawReflection:
     invalid: bool = False  # quarantined after a failed refresh
     generation: int = 0    # see Reflection.generation
     last_refresh_ms: int = 0  # see Reflection.last_refresh_ms
+    refresh_mode: str | None = None    # see Reflection.refresh_mode
+    refresh_reason: str | None = None  # see Reflection.refresh_reason
+    refresh_errors: int = 0            # see Reflection.refresh_errors
 
 
 class ReflectionStore:

@@ -349,8 +349,9 @@ def _live_rows(spark: SparkSession, table: str, snap: "DeltaSnapshot",
                files: list[str] | None = None) -> DataFrame:
     """Live rows of `snap` (of its data `files` only, when given) with
     the deletion vectors applied: the reader and the `lake_dml` codec's
-    `live`.  `identity` keeps each row's (`__file`, `__pos`), the input
-    every DML plan needs (touch exactly the rows it matches, never
+    `live`.  `identity` keeps each row's (`__file`, `__pos`): its data
+    file's decoded name, taken from the scan, and its row index there.
+    Every DML plan needs them (touch exactly the rows it matches, never
     resurrect a row an earlier deletion vector killed)."""
     if not snap.files and snap.schema is None:
         raise ValueError(f"Delta table {table} has no schema action")
@@ -395,7 +396,7 @@ def _dv_positions(table: str, desc: dict) -> list[int]:
 def _dv_rows_local_df(spark: SparkSession, table: str,
                       dvs: dict[str, dict]) -> DataFrame:
     """Medium-delete-set decode: driver-side bitmap decode into ONE
-    Arrow-backed local DataFrame of (__del_base, __pos).
+    Arrow-backed local DataFrame of (__file, __pos).
 
     Callers gate on the descriptors' summed cardinality (≤
     `spark.dremio.dv.broadcastDecodeMaxRows`), so driver memory is
@@ -417,14 +418,14 @@ def _dv_rows_local_df(spark: SparkSession, table: str,
                              dtype=object))
         arrs.append(pos)
     pdf = pd.DataFrame({
-        "__del_base": np.concatenate(bases) if bases else [],
+        "__file": np.concatenate(bases) if bases else [],
         "__pos": np.concatenate(arrs) if arrs else []})
     return spark.createDataFrame(pdf)
 
 
 def _dv_rows_df(spark: SparkSession, table: str,
                 dvs: dict[str, dict]) -> DataFrame:
-    """Distributed decode of deletion vectors → (__del_base, __pos).
+    """Distributed decode of deletion vectors → (__file, __pos).
 
     The driver ships only the DV *descriptors* (one small JSON row per
     file — the same metadata the log replay already holds); each
@@ -438,25 +439,25 @@ def _dv_rows_df(spark: SparkSession, table: str,
     desc_rows = [(os.path.basename(rel), json.dumps(desc))
                  for rel, desc in dvs.items()]
     desc_df = meta_df(spark, 
-        desc_rows, "__del_base string, __desc string")
+        desc_rows, "__file string, __desc string")
     n_parts = min(len(desc_rows), spark.sparkContext.defaultParallelism)
     desc_df = desc_df.repartition(max(n_parts, 1))
 
     def decode(batches):
         for pdf in batches:
-            for base, dj in zip(pdf["__del_base"], pdf["__desc"]):
+            for name, dj in zip(pdf["__file"], pdf["__desc"]):
                 pos = _dv_positions(table, json.loads(dj))
                 yield pd.DataFrame(
-                    {"__del_base": base,
+                    {"__file": name,
                      "__pos": pd.array(pos, dtype="int64")})
 
-    return desc_df.mapInPandas(decode, "__del_base string, __pos long")
+    return desc_df.mapInPandas(decode, "__file string, __pos long")
 
 
 def _apply_deletion_vectors(spark: SparkSession, df: DataFrame,
                             table: str, snap: "DeltaSnapshot",
                             drop_identity: bool = True) -> DataFrame:
-    """Merge-on-read: anti-join (file basename, row_index) pairs decoded
+    """Merge-on-read: anti-join (file name, row_index) pairs decoded
     from the snapshot's deletion vectors.  The decode runs executor-side
     (`_dv_rows_df`) and the anti-join carries NO broadcast hint: AQE
     broadcasts the delete set when it is genuinely small and shuffles
@@ -501,15 +502,12 @@ def _apply_deletion_vectors(spark: SparkSession, df: DataFrame,
             # The parsed In(...) expression is identical semantics
             # (non-null bigint positions) and Catalyst folds it to an
             # O(1) InSet above the conversion threshold.
-            c = ((F.col("__del_base") == os.path.basename(rel))
+            c = ((F.col("__file") == os.path.basename(rel))
                  & F.expr(f"__pos IN ({','.join(map(str, poss))})"))
             dead = c if dead is None else (dead | c)
         if dead is None:  # all DVs empty: nothing to filter
             return df.drop("__file", "__pos") if drop_identity else df
-        out = (df.withColumn("__del_base",
-                             F.element_at(F.split("__file", "/"), -1))
-               .where(~dead)
-               .drop("__del_base"))
+        out = df.where(~dead)
         return out.drop("__file", "__pos") if drop_identity else out
     # Medium-delete-set path: decode on the driver into ONE Arrow-backed
     # local frame and broadcast the anti-join.  The broadcast is safe
@@ -532,23 +530,35 @@ def _apply_deletion_vectors(spark: SparkSession, df: DataFrame,
             dels = None  # distributed path handles every case
     if dels is None:
         dels = _dv_rows_df(spark, table, snap.dvs)
-    out = (df.withColumn("__del_base",
-                         F.element_at(F.split("__file", "/"), -1))
-           .join(dels, ["__del_base", "__pos"], "left_anti")
-           .drop("__del_base"))
+    out = df.join(dels, ["__file", "__pos"], "left_anti")
     return out.drop("__file", "__pos") if drop_identity else out
+
+
+def _file_name():
+    """Each row's data file name as the file system spells it, from the
+    parquet scan's own `_metadata.file_name`.  Spark 4.1 reports that
+    name percent-encoded (`a b#c.parquet` reads `a%20b%23c.parquet`)
+    but leaves `+` as it is, so `+` is escaped before the decode: a
+    plain `url_decode` would turn it into a space."""
+    return F.expr("url_decode(replace(_metadata.file_name, '+', '%2B'))")
 
 
 def _scan_with_partition_values(
     spark: SparkSession, table: str, schema: StructType | None,
     part_cols: list[str], files: dict[str, dict],
     keep_file: bool = False, keep_pos: bool = False) -> DataFrame:
-    """Single parquet scan over `files` (rel→partitionValues) with the
-    log's partition values attached by broadcast join on
-    input_file_name().  The log — not directory layout — is the source
-    of truth for partition values (delta.io PROTOCOL.md), so this never
-    trusts hive-style paths.  The mapping is one row per file: bounded
-    by live-file count, i.e. the same metadata the driver already holds."""
+    """Single parquet scan over `files` (path under `table` →
+    partitionValues).  `keep_file` keeps each row's `__file`, the
+    decoded name of its data file taken from the scan itself
+    (`_file_name`); `keep_pos` keeps `__pos`, its row index in that
+    file.  Names must be unique across the scanned set (guarded), so
+    the name alone identifies the file.
+
+    The log, not the directory layout, is the source of truth for
+    partition values (delta.io PROTOCOL.md), so a partitioned table
+    attaches them by a join keyed by that name.  The mapping is one row
+    per file: bounded by live-file count, the metadata the driver
+    already holds.  An unpartitioned scan joins nothing."""
     from pyspark.sql.types import LongType, StringType, StructField
 
     if not files:  # nothing live: an empty frame with the same columns
@@ -568,64 +578,41 @@ def _scan_with_partition_values(
         # stable row position within each physical parquet file — the
         # Iceberg position-delete `pos` semantics (spec content=1)
         df = df.withColumn("__pos", F.col("_metadata.row_index"))
-    if not part_cols and not keep_file and not keep_pos:
+    if not part_cols and not keep_file:
         return df
-    # Join key is the file BASENAME, not the full path:
-    # input_file_name() returns a percent-ENCODED URI, so partition dirs
-    # with URI-special chars (p_brand=Brand#13) would never equal the
-    # raw filesystem path.  Basenames are encoding-stable here (staged
-    # names are version+index+uuid, [a-z0-9-] only) and must be unique
-    # across the scanned set — guarded below.  The canonical decoded
-    # path (`__file`) and the partition values both come from the
-    # mapping side of the join.
-    by_base: dict[str, str] = {}
-    for rel in files:
-        base = os.path.basename(rel)
-        if base in by_base:
-            raise ValueError(
-                f"duplicate data-file basename {base!r}; "
-                "cannot attach partition values by basename")
-        by_base[base] = rel
-    ptypes = {
-        f.name: f.dataType.simpleString()
-        for f in (schema.fields if schema else [])
-    }
-    rows = [
-        tuple([os.path.basename(rel),
-               os.path.realpath(os.path.join(table, rel))]
-              + [None if pv.get(c) is None else str(pv.get(c))
-                 for c in part_cols])
-        for rel, pv in files.items()
-    ]
-    pv_schema = StructType(
-        [StructField("__base", StringType()),
-         StructField("__file", StringType())]
-        + [StructField(f"__pv_{c}", StringType()) for c in part_cols])
-    pv_df = meta_df(spark, rows, pv_schema)
-    # one row per file: broadcast below the distributed-metadata
-    # threshold (the usual case — file-count-bounded, MBs); above it
-    # the hint is dropped so AQE costs the join, because force-shipping
-    # a multi-million-file mapping to every executor is the same
-    # failure mode as any other forced broadcast of an unbounded side
-    if len(files) < _distributed_threshold(spark):
-        pv_df = F.broadcast(pv_df)
-    df = (
-        df.withColumn(
-            "__base",
-            F.element_at(F.split(F.input_file_name(), "/"), -1),
-        )
-        .join(pv_df, "__base")
-        .drop("__base")
-    )
-    if not keep_file:
-        df = df.drop("__file")
-    for c in part_cols:
-        # partitionValues are strings in the log; cast to the declared
-        # type (null encoded as missing/None)
-        df = df.withColumn(
-            c, F.col(f"__pv_{c}").cast(ptypes.get(c, "string"))
-        ).drop(f"__pv_{c}")
-    return df
+    names = {os.path.basename(rel) for rel in files}
+    if len(names) < len(files):
+        raise ValueError(f"duplicate data-file names in {table}; "
+                         "a file name must identify its file")
+    df = df.withColumn("__file", _file_name())
+    if part_cols:
+        ptypes = {f.name: f.dataType.simpleString()
+                  for f in (schema.fields if schema else [])}
+        pv_df = meta_df(spark, [
+            tuple([os.path.basename(rel)]
+                  + [None if pv.get(c) is None else str(pv.get(c))
+                     for c in part_cols])
+            for rel, pv in files.items()], StructType(
+                [StructField("__name", StringType())]
+                + [StructField(f"__pv_{c}", StringType())
+                   for c in part_cols]))
+        # one row per file: broadcast below the distributed-metadata
+        # threshold (the usual case — file-count-bounded, MBs); above
+        # it the hint is dropped so AQE costs the join, because
+        # force-shipping a multi-million-file mapping to every executor
+        # is the same failure mode as any other forced broadcast of an
+        # unbounded side
+        if len(files) < _distributed_threshold(spark):
+            pv_df = F.broadcast(pv_df)
+        df = df.join(pv_df, F.col("__file") == F.col("__name")).drop(
+            "__name")
+        for c in part_cols:
+            # partitionValues are strings in the log; cast to the
+            # declared type (null encoded as missing/None)
+            df = df.withColumn(
+                c, F.col(f"__pv_{c}").cast(ptypes.get(c, "string"))
+            ).drop(f"__pv_{c}")
+    return df if keep_file else df.drop("__file")
 
 
 _STATS_TYPES = ("byte", "short", "int", "bigint", "float", "double",
@@ -1450,8 +1437,7 @@ def _dv_commit_marked(spark: SparkSession, table: str,
                      "readerFeatures": ["deletionVectors"],
                      "writerFeatures": sorted(set(writer_feats)
                                               | prev_feats)}}])
-    hits_df = marked.select(
-        F.element_at(F.split("__file", "/"), -1).alias("base"), "__pos")
+    hits_df = marked.select(F.col("__file").alias("base"), "__pos")
     rel_of_base = {os.path.basename(rel): rel for rel in snap.files}
     # Small-DML fast path: collect up to cap+1 (file, pos) rows in ONE
     # job and encode the bitmaps on the driver — no pandas-UDF stage,

@@ -396,21 +396,18 @@ def read_iceberg_changes(spark: SparkSession, table: str,
     if new_pos:
         dels = (spark.read.parquet(*new_pos)
                 .select(F.element_at(F.split("file_path", "/"), -1)
-                        .alias("__del_base"),
+                        .alias("__file"),
                         F.col("pos").alias("__pos")).distinct())
-        hit_bases = {r["__del_base"] for r in dels.select("__del_base")
+        hit_names = {r["__file"] for r in dels.select("__file")
                      .distinct().collect()}
         target = {p: pv for p, pv in sto.files
-                  if os.path.basename(p) in hit_bases}
+                  if os.path.basename(p) in hit_names}
         if target:
             rows = _scan_with_partition_values(
                 spark, table, sto.schema, sto.partition_cols, target,
                 keep_file=True, keep_pos=True)
-            rows = (rows.withColumn(
-                        "__del_base",
-                        F.element_at(F.split("__file", "/"), -1))
-                    .join(dels, ["__del_base", "__pos"], "left_semi")
-                    .drop("__del_base", "__file", "__pos"))
+            rows = (rows.join(dels, ["__file", "__pos"], "left_semi")
+                    .drop("__file", "__pos"))
             frames.append(_tag(rows, "delete"))
     old_eq = {rp(p) for p, _ in sfrom.deletes}
     new_eq = [(p, cols) for p, cols in sto.deletes if rp(p) not in old_eq]
@@ -437,9 +434,10 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame,
     """Merge-on-read position deletes (spec content=1): the scan carries
     (`__file`, `__pos`) identity via the parquet `_metadata.row_index`
     column, and the tiny delete files anti-join it away by
-    (file basename, pos).  Basenames are unique across the live set
-    (guarded in `_scan_with_partition_values`), encoding-stable, and
-    path-prefix independent, so no realpath normalization is needed.
+    (file name, pos).  `__file` is the data file's decoded name from the
+    scan, names are unique across the live set (guarded in
+    `_scan_with_partition_values`) and path-prefix independent, so no
+    realpath normalization is needed.
     No broadcast hint on the anti-join: on a heavily-deleted 100 TB
     table the union of position-delete rows is billions of rows, so AQE
     must be free to shuffle it; when the delete set IS tiny AQE still
@@ -505,15 +503,11 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame,
                     # per element (profiled: a near-cap inline filter
                     # cost seconds of socket time per read); identical
                     # In(...) semantics for non-null bigint positions
-                    c = ((F.col("__del_base") == base)
+                    c = ((F.col("__file") == base)
                          & F.expr("__pos IN (%s)" % ",".join(
                              map(str, sorted(poss)))))
                     dead = c if dead is None else (dead | c)
-                out = (df.withColumn(
-                        "__del_base",
-                        F.element_at(F.split("__file", "/"), -1))
-                       .where(~dead)
-                       .drop("__del_base"))
+                out = df.where(~dead)
                 if not keep_pos:
                     out = out.drop("__pos")
                 return out if keep_file else out.drop("__file")
@@ -523,8 +517,8 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame,
                 parts = [pq.read_table(p, columns=["file_path", "pos"])
                          .to_pandas() for p in snap.pos_deletes]
                 pdf = pd.concat(parts, ignore_index=True)
-                pdf["__del_base"] = pdf["file_path"].map(os.path.basename)
-                pdf = (pdf[["__del_base", "pos"]]
+                pdf["__file"] = pdf["file_path"].map(os.path.basename)
+                pdf = (pdf[["__file", "pos"]]
                        .rename(columns={"pos": "__pos"})
                        .drop_duplicates())
                 pdf["__pos"] = pdf["__pos"].astype("int64")
@@ -534,13 +528,10 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame,
     if dels is None:
         dels = (spark.read.parquet(*snap.pos_deletes)
                 .select(F.element_at(F.split("file_path", "/"), -1)
-                        .alias("__del_base"),
+                        .alias("__file"),
                         F.col("pos").alias("__pos"))
                 .distinct())
-    out = (df.withColumn("__del_base",
-                         F.element_at(F.split("__file", "/"), -1))
-           .join(dels, ["__del_base", "__pos"], "left_anti")
-           .drop("__del_base"))
+    out = df.join(dels, ["__file", "__pos"], "left_anti")
     if not keep_pos:
         out = out.drop("__pos")
     # `keep_file`: sequence-aware equality deletes still need the
@@ -583,7 +574,7 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
     data files with sequence STRICTLY BELOW S — re-inserting a
     previously deleted key at a later sequence survives, exactly the
     commit-order behavior the spec mandates.  The scan carries each
-    row's data-file sequence via a (basename → seq) map join
+    row's data-file sequence via a (file name → seq) map join
     (file-count bounded, broadcast below the distributed-metadata
     threshold) and the anti-join adds the `seq < delete_seq` conjunct.
     Tables written before sequence stamping (any delete missing a
@@ -607,12 +598,10 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
     dseq = snap.delete_seq
     seq_map = meta_df(spark, 
         [(os.path.basename(p), int(fseq.get(p, 0))) for p, _ in snap.files],
-        "__eq_base string, __dataseq long")
+        "__eq_file string, __dataseq long")
     if len(snap.files) < _distributed_threshold(spark):
         seq_map = F.broadcast(seq_map)  # one row per file
-    df = (df.withColumn("__eq_base",
-                        F.element_at(F.split("__file", "/"), -1))
-          .join(seq_map, "__eq_base"))
+    df = df.join(seq_map, F.col("__file") == F.col("__eq_file"))
     for cols, paths in by_cols.items():
         keys = None
         for p in paths:
@@ -626,7 +615,7 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
             [df[c] == k2[f"__k_{c}"] for c in cols]
             + [df["__dataseq"] < k2["__dseq"]])
         df = df.join(k2, cond, "left_anti")
-    return df.drop("__eq_base", "__dataseq")
+    return df.drop("__eq_file", "__dataseq")
 
 
 def _iceberg_type(dt: T.DataType):
@@ -1525,7 +1514,9 @@ def _live_rows(spark: SparkSession, table: str, snap: "IcebergSnapshot",
     and the `lake_dml` codec's `live`.  `identity` keeps each row's
     (`__file`, `__pos`), the input every DML plan needs (position-delete
     exactly the rows it touches, never resurrect a row an earlier delete
-    killed).  One multi-path scan + broadcast file→partitionValues join
+    killed).  `__file` is the data file's decoded name, taken from the
+    parquet scan itself.  One multi-path scan, plus a broadcast
+    file→partitionValues join keyed by that name on a partitioned table
     — the same O(1)-in-file-count plan the Delta reader uses (manifests,
     not directory layout, are the partition-value source of truth)."""
     from .delta import _scan_with_partition_values
@@ -1604,7 +1595,7 @@ def _mark_commit(spark: SparkSession, table: str, snap: "IcebergSnapshot",
         keys, prefix = marked.select(*equality_cols).distinct(), "eq-delete"
     else:
         rel_of = meta_df(spark,
-            [(os.path.realpath(p), os.path.relpath(p, table))
+            [(os.path.basename(p), os.path.relpath(p, table))
              for p, _ in snap.files], "__file string, file_path string")
         if len(snap.files) < _distributed_threshold(spark):
             rel_of = F.broadcast(rel_of)  # file-count bounded

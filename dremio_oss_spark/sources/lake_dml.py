@@ -20,12 +20,16 @@ differs between the formats:
   (`delta.enableDeletionVectors`, `write.<verb>.mode`).
 - `live(spark, table, snapshot, identity)` -> the snapshot's live rows,
   existing deletes applied.  `identity=True` keeps each row's `__file`
-  (realpath of its data file) and `__pos` (row index in that file).
+  (the decoded name of its data file, taken from the parquet scan's
+  own `_metadata.file_name`; names are unique within a snapshot) and
+  `__pos` (row index in that file).
 - `rewrite(spark, table, snapshot, operation, hit_files, rewrite,
   inserts, changes)` -> version: stage `rewrite(<live rows of
   hit_files>)` and `inserts` as new files; commit them with the
   removal of `hit_files` (table-relative paths).  `rewrite=None`
-  stages nothing for the hit files (TRUNCATE).
+  stages nothing for the hit files (TRUNCATE).  Copy-on-write plans
+  `hit_files` in one observed Spark job over the matched rows
+  (`hit_files`).
 - `mark(spark, table, snapshot, operation, marked, post, changes)` ->
   version: encode `marked`'s `(__file, __pos)` as delete marks (Delta
   deletion vectors, Iceberg position-delete files), stage `post` as
@@ -183,14 +187,31 @@ def _apply_set_exprs(df: DataFrame, set_exprs: dict[str, str],
     return df.select(*cols)
 
 
-def hit_files(table: str, rows: DataFrame) -> list[str]:
-    """Table-relative data files behind `rows`' `__file` values.  The
-    collect is bounded by file count (metadata-sized), never by row
-    count; only these files are rewritten (file-level skipping, the
-    same pruning `DeltaLakeScanPrel` relies on)."""
-    root = os.path.realpath(table)
-    return sorted(os.path.relpath(r[0], root)
-                  for r in rows.select("__file").distinct().collect())
+def hit_files(codec: Codec, table: str, snap, rows: DataFrame) -> list[str]:
+    """Table-relative data files behind `rows`' `__file` names, found in
+    one Spark job: `rows` run through the `noop` sink under an
+    `Observation` of `collect_set(__file)` (bounded by file count, never
+    by row count), and the driver maps each name to its path through
+    the snapshot's file list; a name no live file has raises.  Only
+    these files are rewritten (file-level skipping, the same pruning
+    `DeltaLakeScanPrel` relies on).  No sort or range repartition goes
+    under the observed frame: a child that re-executes feeds the metric
+    twice (see `reflections._fold_signed_changes`)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    (rows.select("__file")
+     .observe(obs, F.collect_set("__file").alias("files"))
+     .write.format("noop").mode("overwrite").save())
+    path_of = {os.path.basename(rel): rel
+               for rel in codec.files(table, snap)}
+    names = obs.get["files"]
+    unknown = sorted(set(names) - path_of.keys())
+    if unknown:
+        raise ValueError(
+            f"scanned data files {unknown[:5]} match no live file of "
+            f"{table}")
+    return sorted(path_of[n] for n in names)
 
 
 def _changes(**tagged: DataFrame | None) -> DataFrame | None:
@@ -243,7 +264,8 @@ def _write(codec: Codec, spark: SparkSession, table: str, snap,
                         insert=inserts)
 
     if mode == COW:
-        hits = hit_files(table, matched if hit_rows is None else hit_rows)
+        hits = hit_files(codec, table, snap,
+                         matched if hit_rows is None else hit_rows)
         return codec.rewrite(
             spark, table, snap, op, hits, rewrite, inserts,
             changes(None if image is None else image(matched))
@@ -316,8 +338,9 @@ def merge(codec: Codec, spark: SparkSession, table: str,
     src_types = {f.name: f.dataType for f in source.schema.fields}
     inserts = None
     if insert_not_matched or not update_matched:
-        live_keys = codec.live(spark, table, snap, False).select(
-            *on).distinct()
+        # no distinct() under the anti join: it gives the same rows,
+        # and each distinct() is a shuffle job of its own
+        live_keys = codec.live(spark, table, snap, False).select(*on)
         inserts = source.join(live_keys, on, "left_anti").select(
             *[c if src_types.get(c) == t else F.col(c).cast(t).alias(c)
               for c, t in types.items()])
@@ -364,7 +387,7 @@ def merge(codec: Codec, spark: SparkSession, table: str,
     return _write(codec, spark, table, snap, "merge", mode,
                   live.join(source.select(*src), on, "inner"),
                   lambda rows: assign(rows, None), rewrite, inserts,
-                  hit_rows=live.join(source.select(*on).distinct(), on,
+                  hit_rows=live.join(source.select(*on), on,
                                      "left_semi"))
 
 
@@ -484,8 +507,8 @@ def optimize(codec: Codec, spark: SparkSession, table: str,
     if where is None:
         hits = codec.files(table, snap)
     else:
-        hits = hit_files(table, codec.live(spark, table, snap,
-                                           True).where(where))
+        hits = hit_files(codec, table, snap, codec.live(
+            spark, table, snap, True).where(where))
     n_out = None
     if options:
         got = _binpack_select(table, hits, options)

@@ -78,3 +78,18 @@ def count_py4j():
         jg.GatewayClient.send_command = orig
         if gc_was_enabled:
             gc.enable()
+
+
+def count_jobs(eng, stmt: str) -> int:
+    """Spark jobs `stmt` launches through `eng.sql(stmt).collect()`,
+    counted through a job group of its own."""
+    import uuid
+
+    sc = eng.spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, stmt)
+    try:
+        eng.sql(stmt).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

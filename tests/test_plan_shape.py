@@ -164,7 +164,7 @@ def test_winnowing_plan_stays_partition_local(spark):
 
 def test_lakehouse_scan_partition_join_broadcasts(spark, tmp_path):
     """The Delta/Iceberg readers attach manifest partition values via a
-    broadcast hash join on the file basename — one parquet scan, no
+    broadcast hash join on the scanned file name — one parquet scan, no
     shuffle, no per-file or per-partition plan branches (O(1) plan in
     file count)."""
     from dremio_oss_spark.sources.delta import read_delta, write_delta
@@ -179,6 +179,28 @@ def test_lakehouse_scan_partition_join_broadcasts(spark, tmp_path):
     assert "SortMergeJoin" not in plan
     assert "Union" not in plan  # single scan, not per-partition branches
     assert plan.count("FileScan parquet") == 1
+
+
+def test_identity_scan_of_unpartitioned_table_joins_nothing(spark,
+                                                           tmp_path):
+    """DML's identity scan of an unpartitioned table takes `__file` from
+    the parquet scan itself: one FileScan, no join, no exchange, and the
+    names are the live files' names."""
+    import os
+
+    from dremio_oss_spark.sources.delta import (
+        _live_rows, resolve_snapshot, write_delta)
+
+    t = str(tmp_path / "t")
+    write_delta(spark, spark.createDataFrame(
+        [(i, float(i)) for i in range(40)], "k long, v double"), t)
+    snap = resolve_snapshot(spark, t)
+    live = _live_rows(spark, t, snap, True).where("k < 30")
+    plan = _plan(live)
+    assert "Join" not in plan and "Exchange" not in plan
+    assert plan.count("FileScan parquet") == 1
+    got = {r[0] for r in live.select("__file").distinct().collect()}
+    assert got and got <= {os.path.basename(rel) for rel in snap.files}
 
 
 def test_decontaminate_broadcasts_eval_side(spark):

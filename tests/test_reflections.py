@@ -1123,6 +1123,84 @@ def test_path_anchored_reflection_lifecycle(spark, tmp_path):
         store.drop("p_sales")
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_stale_reflection_refreshes_only_when_considered(spark, tmp_path,
+                                                         fmt):
+    """A stale path reflection refreshes when a matcher considers it, not
+    before every SELECT: a MERGE whose source reads another table leaves
+    the reflection stale and unrefreshed, and the next aggregate read
+    over the path refreshes it once and returns the plain-Spark
+    answer."""
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources import delta as D
+    from dremio_oss_spark.sources import iceberg as I
+
+    write, read = ((D.write_delta, D.read_delta) if fmt == "delta"
+                   else (I.write_iceberg, I.read_iceberg))
+    t = str(tmp_path / fmt)
+    write(spark, spark.createDataFrame(
+        [(k, k % 3, float(k)) for k in range(30)],
+        "k long, g long, v double"), t)
+    spark.createDataFrame([(k, k % 3, 100.0 + k) for k in range(25, 35)],
+                          "k long, g long, v double") \
+        .createOrReplaceTempView("considered_src")
+    eng = Engine(spark)
+    eng.sql(f"ALTER TABLE '{t}' CREATE AGGREGATE REFLECTION considered_r "
+            "USING DIMENSIONS (g) MEASURES (v (SUM, COUNT))")
+    store = eng._default_refl_store()
+    refl = store._reflections["considered_r"]
+    q = (f"select g, cast(sum(v) as double) as s, count(*) as n "
+         f"from '{t}' group by g order by g")
+    try:
+        eng.sql(f"insert into '{t}' select id as k, id % 3 as g, "
+                "cast(id as double) as v from range(30, 40)")
+        assert refl.stale
+        gen = refl.generation
+        eng.sql(f"MERGE INTO '{t}' USING (select k, g, v from "
+                "considered_src) s ON t.k = s.k "
+                "WHEN MATCHED THEN UPDATE SET * "
+                "WHEN NOT MATCHED THEN INSERT *")
+        assert refl.stale and refl.generation == gen
+        got = [tuple(r) for r in eng.sql(q).collect()]
+        assert eng.last_plan_accelerated == "considered_r"
+        assert not refl.stale and refl.generation == gen + 1
+        read(spark, t).createOrReplaceTempView("considered_direct")
+        assert got == [tuple(r) for r in spark.sql(
+            "select g, cast(sum(v) as double) as s, count(*) as n "
+            "from considered_direct group by g order by g").collect()]
+    finally:
+        store.drop("considered_r")
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+def test_path_reflection_reports_refresh_mode(spark, tmp_path, cdf):
+    """sys.reflections reports how a Delta path reflection last
+    refreshed: without the change data feed a full rebuild, with its
+    reason; with it an incremental fold.  Neither counts an error."""
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources.delta import write_delta
+
+    t = str(tmp_path / "t")
+    write_delta(spark, spark.createDataFrame(
+        [(k, k % 2, float(k)) for k in range(20)],
+        "k long, g long, v double"), t, enable_cdf=cdf)
+    eng = Engine(spark)
+    eng.sql(f"ALTER TABLE '{t}' CREATE AGGREGATE REFLECTION mode_r "
+            "USING DIMENSIONS (g) MEASURES (v (SUM, COUNT))")
+    try:
+        eng.sql(f"delete from '{t}' where k < 4")
+        eng.sql(f"select g, sum(v) as s from '{t}' group by g").collect()
+        assert eng.last_plan_accelerated == "mode_r"
+        row = eng.sql("select refresh_mode, refresh_reason, refresh_errors "
+                      "from sys.reflections "
+                      "where reflection_name = 'mode_r'").first()
+        assert tuple(row) == (
+            ("incremental", None, 0) if cdf else
+            ("full", "delta.enableChangeDataFeed is not set", 0))
+    finally:
+        eng._default_refl_store().drop("mode_r")
+
+
 def test_failed_refresh_quarantines_reflection(spark, tmp_path):
     """Review r6: a refresh that RAISES (column dropped from under the
     reflection) must never break unrelated queries — the reflection is
@@ -2669,6 +2747,11 @@ def test_raw_swap_any_query_shape(spark):
             got = eng.sql(q)
             assert eng.last_plan_accelerated == "raw_any", q
             assert norm(got.collect()) == norm(spark.sql(q).collect()), q
+        # the swap honours DISABLE RAW ACCELERATION like the raw matcher
+        eng.sql("ALTER TABLE orders DISABLE RAW ACCELERATION")
+        eng.sql(accelerated[0])
+        assert eng.last_plan_accelerated is None
+        eng.sql("ALTER TABLE orders ENABLE RAW ACCELERATION")
         fallthrough = [
             "select * from orders",                # narrower raw
             "select o_orderdate, o_orderkey from orders",  # uncovered

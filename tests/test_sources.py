@@ -594,6 +594,67 @@ def test_partition_values_with_uri_special_chars(spark, tmp_path):
         "Brand#0", "Brand#1"}
 
 
+def _rename_delta_data_files(table: str, name) -> None:
+    """Rename every data file of a one-commit Delta table to
+    `name(i)`, in place and in the log's `add.path`."""
+    import json
+    import os
+
+    log = os.path.join(table, "_delta_log", f"{0:020d}.json")
+    with open(log) as f:
+        actions = [json.loads(line) for line in f if line.strip()]
+    i = 0
+    for a in actions:
+        if "add" in a:
+            old = a["add"]["path"]
+            new = os.path.join(os.path.dirname(old), name(i))
+            os.rename(os.path.join(table, old), os.path.join(table, new))
+            a["add"]["path"] = new
+            i += 1
+    with open(log, "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in actions))
+
+
+@pytest.mark.parametrize("mode,partitioned", [
+    ("copy-on-write", False), ("copy-on-write", True),
+    ("merge-on-read", False)])
+def test_dml_on_data_file_with_uri_special_name(spark, tmp_path, mode,
+                                                partitioned):
+    """A data file whose name holds URI-special characters (space, `#`,
+    `%`, `+`): Spark reports the scan's file name percent-encoded, and
+    DML used to join that against the log's decoded name, so DELETE,
+    UPDATE and MERGE silently touched no row of the file.  Each verb now
+    changes exactly the rows it matches."""
+    from dremio_oss_spark.sources import delta as D
+    from dremio_oss_spark.sources import lake_dml
+
+    df = spark.createDataFrame([(k, k % 2, float(k)) for k in range(10)],
+                               "k long, p long, v double").coalesce(1)
+    src = spark.createDataFrame([(1, 1, 100.0), (2, 0, 200.0),
+                                 (20, 0, 20.0)], "k long, p long, v double")
+    want = {k: float(k) for k in range(10)}
+    expected = {
+        "delete": {k: v for k, v in want.items() if k >= 3},
+        "update": {k: v + 100 * (k < 3) for k, v in want.items()},
+        "merge": {**want, 1: 100.0, 2: 200.0, 20: 20.0},
+    }
+    for verb, rows in expected.items():
+        t = str(tmp_path / verb)
+        D.write_delta(spark, df, t,
+                      partition_by=["p"] if partitioned else None)
+        _rename_delta_data_files(t, lambda i: f"a b%23c+d#e-{i}.parquet")
+        assert D.read_delta(spark, t).count() == 10
+        if verb == "delete":
+            lake_dml.delete(D.DML, spark, t, "k < 3", mode)
+        elif verb == "update":
+            lake_dml.update(D.DML, spark, t, {"v": "v + 100"}, "k < 3",
+                            mode)
+        else:
+            lake_dml.merge(D.DML, spark, t, src, ["k"], mode=mode)
+        got = {r["k"]: r["v"] for r in D.read_delta(spark, t).collect()}
+        assert got == rows, (verb, got)
+
+
 def test_iceberg_partition_transforms_prune_and_dml(spark, tmp_path):
     """bucket/truncate/year hidden partitioning: source columns stay in
     the data files, manifests carry the transform values, equality
@@ -2837,8 +2898,8 @@ def test_dml_commit_after_concurrent_commit_raises(spark, tmp_path,
         write(spark, df, t)
         raced = []
 
-        def plan_then_race(table, rows):
-            hits = plan(table, rows)
+        def plan_then_race(*args):
+            hits = plan(*args)
             if not raced:
                 raced.append(True)
                 update(spark, t, {"v": "v * 10"}, "k = 2")
