@@ -234,6 +234,33 @@ def test_semdedup_drops_are_within_cluster_neardups(spark):
     assert all(r["cos"] > 0.3 and r["dup_of"] < r["vec_id"] for r in rows)
 
 
+def test_sql_templates_equal_column_twins(spark):
+    """The single-parse SQL templates collect the same values as the
+    Column-API folds they replace, on every (vector, vector) pair of
+    the fixture against its first 20 vectors."""
+    from dremio_oss_spark.operators.clustering import (_dist_dec,
+                                                       _dist_dec_sql)
+    from dremio_oss_spark.operators.similarity import (cosine, cosine_dbl,
+                                                       cosine_dbl_sql,
+                                                       cosine_sql)
+
+    emb = load(spark, SF_SMALL, "embeddings")
+    a = emb.select("vec_id", F.col("embedding").alias("va"))
+    b = emb.where(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("vid_b"), F.col("embedding").alias("vb"),
+        F.expr("transform(embedding, x -> cast(x as double))").alias("cb"))
+    rows = a.crossJoin(b).select(
+        cosine(F.col("va"), F.col("vb")).alias("c1"),
+        cosine_sql("va", "vb").alias("c2"),
+        cosine_dbl(F.col("va"), F.col("vb")).alias("d1"),
+        cosine_dbl_sql("va", "vb").alias("d2"),
+        _dist_dec(F.col("va"), F.col("cb")).alias("e1"),
+        _dist_dec_sql("va", "cb").alias("e2")).collect()
+    assert rows
+    assert all(r.c1 == r.c2 and r.d1 == r.d2 and r.e1 == r.e2
+               for r in rows)
+
+
 def test_weighted_mixture_deterministic_and_stable(spark):
     """Mixture resampling: copy counts are a pure function of (id,
     weight) — identical run-over-run, and a doc's fate is unchanged by
