@@ -35,23 +35,11 @@ from .similarity import DEC
 from ..localframe import meta_df
 
 
-def _dist_dec(vec, cvec):
-    """Exact squared-L2 distance between two double-array columns:
-    per-dim double subtraction/square, decimal-exact sum."""
-    sq = F.zip_with(
-        vec,
-        cvec,
-        lambda x, c: ((x.cast("double") - c) * (x.cast("double") - c)).cast(DEC),
-    )
-    return F.aggregate(
-        sq, F.lit(0).cast(DEC), lambda acc, x: (acc + x).cast(DEC)
-    ).cast("double")
-
-
 def _dist_dec_sql(vec: str, cvec: str):
-    """_dist_dec as ONE parsed expression (identical tree): the
-    Column/HOF form costs ~100 py4j round-trips per call site per
-    build, re-paid every k-means assignment pass."""
+    """Exact squared-L2 distance between two double-array columns:
+    per-dim double subtraction/square, decimal-exact sum — ONE parsed
+    expression (a Column/HOF fold costs ~100 py4j round-trips per call
+    site per build, re-paid every k-means assignment pass)."""
     return F.expr(
         f"CAST(aggregate(zip_with({vec}, {cvec}, (x, c) -> "
         f"CAST((CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c) "

@@ -24,54 +24,17 @@ from .dedup import _h64
 DEC = "decimal(28,12)"
 
 
-def _dot_dec(a: Column, b: Column) -> Column:
-    """Exact (decimal-accumulated) dot product of two float arrays."""
-    prods = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DEC)
-    )
-    # the merge lambda must preserve the accumulator type exactly (Spark
-    # widens decimal addition to (29,12)), hence the cast-back
-    return F.aggregate(
-        prods, F.lit(0).cast(DEC), lambda acc, x: (acc + x).cast(DEC)
-    ).cast("double")
-
-
-def _norm_dec(a: Column) -> Column:
-    sq = F.transform(a, lambda x: (x.cast("double") * x.cast("double")).cast(DEC))
-    return F.sqrt(
-        F.aggregate(sq, F.lit(0).cast(DEC), lambda acc, x: (acc + x).cast(DEC)).cast(
-            "double"
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot_dec(a, b) / (_norm_dec(a) * _norm_dec(b))
-
-
-def _dot_dbl(a: Column, b: Column) -> Column:
-    """Fast double dot product (codegen-friendly) — for paths with no
-    cross-engine oracle, where fp summation order can't cause mismatches."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def cosine_dbl(a: Column, b: Column) -> Column:
-    return _dot_dbl(a, b) / F.sqrt(_dot_dbl(a, a) * _dot_dbl(b, b))
-
-
-# -- single-parse SQL templates of the array-fold helpers above ------------
-# Every Column operator and HOF lambda above is one or more py4j
-# round-trips at PLAN-CONSTRUCTION time (~40-60 per zip_with/aggregate
-# pair, measured in the r14/r15 send_command counters); a cosine built
-# from Columns costs ~150 round-trips per call site per query build.
-# These emit the IDENTICAL expression tree as ONE parsed SQL string.
-# `a`/`b` are SQL expression strings (usually plain column names).
+# -- cosine as single-parse SQL templates ----------------------------------
+# A Column-API fold costs one or more py4j round-trips per operator and
+# HOF lambda at PLAN-CONSTRUCTION time (~40-60 per zip_with/aggregate
+# pair; ~150 for a cosine per call site per query build).  Each template
+# below is ONE parsed SQL string.  `a`/`b` are SQL expression strings
+# (usually plain column names).
 
 def _dot_dec_sql(a: str, b: str) -> str:
+    """Exact dot product of two float arrays: per-element double
+    products, summed as DECIMAL(28,12) (the accumulator is cast back
+    each step: Spark widens decimal addition to (29,12))."""
     return (
         f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> "
         f"CAST((CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS {DEC})), "
@@ -90,7 +53,8 @@ def _norm_dec_sql(a: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> Column:
-    """cosine() as one parsed expression — bit-identical tree."""
+    """Exact cosine: decimal-accumulated dot product over the
+    decimal-accumulated norms."""
     return F.expr(
         f"({_dot_dec_sql(a, b)}) / "
         f"(({_norm_dec_sql(a)}) * ({_norm_dec_sql(b)}))"
@@ -106,7 +70,9 @@ def _dot_dbl_sql(a: str, b: str) -> str:
 
 
 def cosine_dbl_sql(a: str, b: str) -> Column:
-    """cosine_dbl() as one parsed expression — bit-identical tree."""
+    """Fast double cosine (codegen-friendly) — for paths with no
+    cross-engine oracle, where fp summation order can't cause
+    mismatches."""
     return F.expr(
         f"({_dot_dbl_sql(a, b)}) / "
         f"SQRT(({_dot_dbl_sql(a, a)}) * ({_dot_dbl_sql(b, b)}))"

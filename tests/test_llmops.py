@@ -216,7 +216,7 @@ def test_semdedup_drops_are_within_cluster_neardups(spark):
     """Every dropped vector must name a lower-id cluster-mate with exact
     cosine above the threshold; every keeper must have none."""
     from dremio_oss_spark.operators.clustering import semdedup
-    from dremio_oss_spark.operators.similarity import cosine
+    from dremio_oss_spark.operators.similarity import cosine_sql
 
     emb = load(spark, SF_SMALL, "embeddings")
     # 0.3 (below the registered query's 0.5) so the small fixture yields
@@ -227,21 +227,21 @@ def test_semdedup_drops_are_within_cluster_neardups(spark):
     checked = (
         dropped.join(v.withColumnRenamed("vec_id", "dup_of").withColumnRenamed("vec", "vec_a"), "dup_of")
         .join(v.withColumnRenamed("vec", "vec_b"), "vec_id")
-        .withColumn("cos", cosine(F.col("vec_a"), F.col("vec_b")))
+        .withColumn("cos", cosine_sql("vec_a", "vec_b"))
     )
     rows = checked.collect()
     assert rows, "fixture should contain at least one semantic near-dup"
     assert all(r["cos"] > 0.3 and r["dup_of"] < r["vec_id"] for r in rows)
 
 
-def test_sql_templates_equal_column_twins(spark):
-    """The single-parse SQL templates collect the same values as the
-    Column-API folds they replace, on every (vector, vector) pair of
-    the fixture against its first 20 vectors."""
-    from dremio_oss_spark.operators.clustering import (_dist_dec,
-                                                       _dist_dec_sql)
-    from dremio_oss_spark.operators.similarity import (cosine, cosine_dbl,
-                                                       cosine_dbl_sql,
+def test_sql_templates_match_numpy(spark):
+    """The single-parse SQL array folds (exact and double cosine, exact
+    squared-L2 distance) agree with numpy float64 on every (vector,
+    vector) pair of the fixture against its first 20 vectors."""
+    import numpy as np
+
+    from dremio_oss_spark.operators.clustering import _dist_dec_sql
+    from dremio_oss_spark.operators.similarity import (cosine_dbl_sql,
                                                        cosine_sql)
 
     emb = load(spark, SF_SMALL, "embeddings")
@@ -250,15 +250,18 @@ def test_sql_templates_equal_column_twins(spark):
         F.col("vec_id").alias("vid_b"), F.col("embedding").alias("vb"),
         F.expr("transform(embedding, x -> cast(x as double))").alias("cb"))
     rows = a.crossJoin(b).select(
-        cosine(F.col("va"), F.col("vb")).alias("c1"),
-        cosine_sql("va", "vb").alias("c2"),
-        cosine_dbl(F.col("va"), F.col("vb")).alias("d1"),
-        cosine_dbl_sql("va", "vb").alias("d2"),
-        _dist_dec(F.col("va"), F.col("cb")).alias("e1"),
-        _dist_dec_sql("va", "cb").alias("e2")).collect()
+        "va", "vb", cosine_sql("va", "vb").alias("c"),
+        cosine_dbl_sql("va", "vb").alias("d"),
+        _dist_dec_sql("va", "cb").alias("e")).collect()
     assert rows
-    assert all(r.c1 == r.c2 and r.d1 == r.d2 and r.e1 == r.e2
-               for r in rows)
+    for r in rows:
+        va = np.asarray(r.va, dtype=np.float64)
+        vb = np.asarray(r.vb, dtype=np.float64)
+        cos = va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb))
+        assert r.c == pytest.approx(cos, rel=1e-9, abs=1e-9)
+        assert r.d == pytest.approx(cos, rel=1e-9, abs=1e-9)
+        assert r.e == pytest.approx(float(((va - vb) ** 2).sum()),
+                                    rel=1e-9, abs=1e-9)
 
 
 def test_weighted_mixture_deterministic_and_stable(spark):
