@@ -24,17 +24,13 @@ from .dedup import _h64
 DEC = "decimal(28,12)"
 
 
-# -- cosine as single-parse SQL templates ----------------------------------
-# A Column-API fold costs one or more py4j round-trips per operator and
-# HOF lambda at PLAN-CONSTRUCTION time (~40-60 per zip_with/aggregate
-# pair; ~150 for a cosine per call site per query build).  Each template
-# below is ONE parsed SQL string.  `a`/`b` are SQL expression strings
-# (usually plain column names).
+# Array folds as single-parse SQL templates: a Column-API fold costs
+# ~40-60 py4j round-trips per zip_with/aggregate pair at plan-build
+# time.  `a`/`b` are SQL expression strings (usually column names).
 
 def _dot_dec_sql(a: str, b: str) -> str:
-    """Exact dot product of two float arrays: per-element double
-    products, summed as DECIMAL(28,12) (the accumulator is cast back
-    each step: Spark widens decimal addition to (29,12))."""
+    # the accumulator casts back each step: Spark widens decimal
+    # addition to (29,12)
     return (
         f"CAST(aggregate(zip_with({a}, {b}, (x, y) -> "
         f"CAST((CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS {DEC})), "
@@ -53,8 +49,7 @@ def _norm_dec_sql(a: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> Column:
-    """Exact cosine: decimal-accumulated dot product over the
-    decimal-accumulated norms."""
+    """Exact cosine over decimal-accumulated dot product and norms."""
     return F.expr(
         f"({_dot_dec_sql(a, b)}) / "
         f"(({_norm_dec_sql(a)}) * ({_norm_dec_sql(b)}))"
@@ -70,9 +65,7 @@ def _dot_dbl_sql(a: str, b: str) -> str:
 
 
 def cosine_dbl_sql(a: str, b: str) -> Column:
-    """Fast double cosine (codegen-friendly) — for paths with no
-    cross-engine oracle, where fp summation order can't cause
-    mismatches."""
+    """Fast double cosine, for paths with no cross-engine oracle."""
     return F.expr(
         f"({_dot_dbl_sql(a, b)}) / "
         f"SQRT(({_dot_dbl_sql(a, a)}) * ({_dot_dbl_sql(b, b)}))"

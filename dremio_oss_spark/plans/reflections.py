@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .statistics import file_splits
+
 # Partial-merge per measure kind: how two materialized cells of the
 # same (coarser) group combine.  "ndv" partials are DataSketches HLL
 # binaries (F.hll_sketch_agg) and merge by sketch union — the ESTIMATE
@@ -47,6 +49,16 @@ from pyspark.sql import functions as F
 # APPROX_COUNT_DISTINCT, SqlCreateReflection.java:316).
 _ROLLUP = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max,
            "ndv": F.hll_union_agg}
+
+
+def _roll_partial(m, grand_total: bool):
+    """Re-roll measure `m`'s stored partial at the query grain.  A
+    grand total over no cells (an empty materialization) counts 0, not
+    NULL, like the base plan; grouped answers have no empty group."""
+    if m.kind == "count" and grand_total:
+        return F.expr(f"coalesce(sum(`{m.name}`), 0)").alias(m.name)
+    return _ROLLUP[m.kind](F.col(m.name)).alias(m.name)
+
 
 # DataSketches HLL accepts int/bigint/string/binary inputs only; any
 # other dtype casts to string first — an injective cast, so the distinct
@@ -508,8 +520,8 @@ class ReflectionStore:
         # never outlives the materialization generation it scans — the
         # reference's PlanCacheSynchronizer contract
         self.mutations = 0
-        # materialization dir -> (max entry mtime, DataFrame handle);
-        # see _read_data
+        # materialization dir -> (max entry mtime, DataFrame handle,
+        # one-split decision or None); see _read_raw
         self._read_data_memo: dict[str, tuple] = {}
         # dataset -> {"refresh_s": n|None, "grace_s": m|None} — the
         # reference's per-dataset AccelerationSettings
@@ -671,7 +683,7 @@ class ReflectionStore:
         proj = source.select(*display_cols)
         if sort_col:
             proj = proj.sortWithinPartitions(sort_col)
-        proj.write.mode("overwrite").parquet(os.path.join(path, "data"))
+        self._write_plain(proj, os.path.join(path, "data"))
         refl = RawReflection(name, table, tuple(display_cols), path,
                              sort_col=sort_col,
                              watermark_col=watermark_col)
@@ -728,7 +740,7 @@ class ReflectionStore:
         if rr.sort_col:
             proj = proj.sortWithinPartitions(rr.sort_col)
         self._publish_data(
-            rr, lambda p: proj.write.mode("overwrite").parquet(p))
+            rr, lambda p: self._write_plain(proj, p))
         rr.stale = False
 
     def scan(self, table: str, cols: list[str], base: DataFrame) -> tuple[DataFrame, bool]:
@@ -837,19 +849,12 @@ class ReflectionStore:
         parserImpls.ftl): rewrite the materialization to fewer,
         target-sized files — incremental refreshes append small partials,
         and scan cost grows with file count.  Returns (files_before,
-        files_after).  Locally the target is one file; at scale this maps
-        to a `coalesce(bytes/target_size)` rewrite with identical rows."""
-        def _files(data: str) -> list[str]:
-            out = []
-            for root, _, fns in os.walk(data):
-                out += [f for f in fns
-                        if f.endswith(".parquet") and not f.startswith(".")]
-            return out
-
+        files_after).  An unpartitioned layout gets one file per read
+        split of a single file of its bytes (`statistics.file_splits`)."""
         refl = self._reflections.get(name) or self._raw.get(name)
         if refl is None:
             raise KeyError(f"no reflection named {name}")
-        before = len(_files(self._data_dir(refl)))
+        files = self._data_files(self._data_dir(refl))
         df = self._read_data(self._data_dir(refl))
         part_by = tuple(getattr(refl, "partition_by", ()) or ())
 
@@ -859,10 +864,12 @@ class ReflectionStore:
                 self._write_data(
                     refl, df.repartition(*[F.col(c) for c in part_by]), p)
             else:
-                df.coalesce(1).write.mode("overwrite").parquet(p)
+                n = file_splits(self.spark,
+                                [sum(os.path.getsize(f) for f in files)])
+                self._write_plain(df.coalesce(max(n, 1)), p)
 
         self._publish_data(refl, writer)
-        return before, len(_files(self._data_dir(refl)))
+        return len(files), len(self._data_files(self._data_dir(refl)))
 
     def load_materialization(self, name: str) -> DataFrame:
         """LOAD MATERIALIZATION (SqlLoadMaterialization): expose a
@@ -924,17 +931,20 @@ class ReflectionStore:
              .partitionBy(*[f"__p_{c}" for c in refl.partition_by])
              .parquet(path))
         else:
-            df.write.mode("overwrite").parquet(path)
-            # seed the read memo with a known-schema handle: the very
-            # next _read_data (substitution probe, refresh merge) would
-            # otherwise pay a schema-inference job on the files just
-            # written.  Partitioned layouts skip the seed (their read
-            # rediscovers __p_ dir columns, which the plain schema
-            # cannot express).
-            mt = self._mtime(path)
-            if mt is not None:
-                self._read_data_memo[path] = (
-                    mt, self.spark.read.schema(df.schema).parquet(path))
+            self._write_plain(df, path)
+
+    def _write_plain(self, df: DataFrame, path: str) -> None:
+        """Unpartitioned materialization write that seeds the read memo
+        with a known-schema handle: the very next _read_data
+        (substitution probe, refresh merge) would otherwise pay a
+        schema-inference job on the files just written.  Partitioned
+        layouts skip the seed (their read rediscovers __p_ dir columns,
+        which the plain schema cannot express)."""
+        df.write.mode("overwrite").parquet(path)
+        mt = self._mtime(path)
+        if mt is not None:
+            self._read_data_memo[path] = (
+                mt, self.spark.read.schema(df.schema).parquet(path), None)
 
     def _read_data(self, path: str) -> DataFrame:
         """Read a materialization dir, memoizing the DataFrame HANDLE
@@ -947,7 +957,7 @@ class ReflectionStore:
         file listing was snapshotted at read time.  Entries of removed
         generation dirs are dropped with the dir (`_forget`), so the
         memo holds at most one entry per live materialization dir."""
-        df = self._read_raw(path)
+        df = self._read_raw(path)[1]
         helpers = [c for c in df.columns if c.startswith("__p_")]
         return df.drop(*helpers) if helpers else df
 
@@ -971,17 +981,27 @@ class ReflectionStore:
                   if p == path or p.startswith(path + os.sep)]:
             del memo[p]
 
-    def _read_raw(self, path: str) -> DataFrame:
-        """Memoized raw materialization read (keeps __p_ helper
-        columns — scan_materialization prunes on them)."""
+    @staticmethod
+    def _data_files(path: str) -> list[str]:
+        """The parquet data files of a materialization dir, across its
+        partition dirs."""
+        out = []
+        for root, _, fns in os.walk(path):
+            out += [os.path.join(root, f) for f in fns
+                    if f.endswith(".parquet") and not f.startswith(".")]
+        return out
+
+    def _read_raw(self, path: str) -> tuple:
+        """Memoized raw read: the memo entry (mtime or None, handle with
+        the __p_ helper columns, one-split decision or None)."""
         mt = self._mtime(path)
         hit = self._read_data_memo.get(path)
         if mt is not None and hit is not None and hit[0] == mt:
-            return hit[1]
-        df = self.spark.read.parquet(path)
+            return hit
+        entry = (mt, self.spark.read.parquet(path), None)
         if mt is not None:
-            self._read_data_memo[path] = (mt, df)
-        return df
+            self._read_data_memo[path] = entry
+        return entry
 
     def _full_refresh(self, refl: Reflection, source: DataFrame) -> None:
         # the watermark rides the materialization write as an observed
@@ -1338,11 +1358,25 @@ class ReflectionStore:
             cur = self.last_candidates = []
         cur.extend(r.name for r in refls if r.name not in cur)
 
-    def scan_materialization(self, refl: Reflection,
+    def scan_materialization(self, refl: Reflection | RawReflection,
                              filters: tuple[str, ...]) -> DataFrame:
         """The materialization scan with query filters applied, including
-        partition-directory pruning through the __p_ helper columns."""
-        raw = self._read_raw(self._data_dir(refl))
+        partition-directory pruning through the __p_ helper columns.
+        A materialization Spark reads as ONE file split runs as one task
+        anyway; `coalesce(1)` says so, and CoalesceExec(1)'s
+        SinglePartition satisfies the rollup and the sort, so the answer
+        plans no Exchange (Dremio's ExcessiveExchangeIdentifier at width
+        1).  The decision rides the read memo entry; no data file or an
+        unreadable size means "not one split"."""
+        path = self._data_dir(refl)
+        mt, raw, one = self._read_raw(path)
+        if one is None and mt is not None:
+            try:
+                sizes = [os.path.getsize(f) for f in self._data_files(path)]
+            except OSError:
+                sizes = []
+            one = bool(sizes) and file_splits(self.spark, sizes) == 1
+            self._read_data_memo[path] = (mt, raw, one)
         helpers = [c for c in raw.columns if c.startswith("__p_")]
         mat = raw
         for f in filters:
@@ -1364,7 +1398,7 @@ class ReflectionStore:
                         F.col(f"__p_{c}") == F.expr(m2.group(1)))
         if helpers:
             mat = mat.drop(*helpers)
-        return mat
+        return mat.coalesce(1) if one else mat
 
     def execute(
         self,
@@ -1411,7 +1445,7 @@ class ReflectionStore:
                 if m.kind == "ndv":
                     return F.hll_sketch_estimate(
                         F.hll_union_agg(F.col(m.name))).alias(m.name)
-                return _ROLLUP[m.kind](F.col(m.name)).alias(m.name)
+                return _roll_partial(m, not q.dims)
             # no declared partial: covers() admitted a DIM-GRAIN answer
             # (ndv / min / max / count over a stored dim — see covers())
             if m.kind == "ndv":

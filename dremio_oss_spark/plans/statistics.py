@@ -44,6 +44,31 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
+def file_splits(spark, sizes: list[int | None]) -> int:
+    """Read partitions Spark plans for data files of these byte sizes:
+    FilePartition.maxSplitBytes, then files cut at that size and packed
+    next-fit decreasing (getFilePartitions).  None (a size os.stat
+    cannot read) counts as one full maxPartitionBytes file."""
+    conf = spark.conf
+    max_pb = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes",
+                                   "128m"))
+    open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes",
+                                      "4m"))
+    cores = int(conf.get("spark.sql.files.minPartitionNum", None)
+                or spark.sparkContext.defaultParallelism)
+    sizes = [max_pb if s is None else s for s in sizes]
+    total = sum(sizes) + len(sizes) * open_cost
+    max_split = max(1, min(max_pb, max(open_cost, total // cores)))
+    # a full-size chunk fills a partition alone; only the tails pack
+    n, cur = sum(s // max_split for s in sizes), 0
+    for t in sorted((s % max_split for s in sizes if s % max_split),
+                    reverse=True):
+        if cur and cur + t > max_split:
+            n, cur = n + 1, 0
+        cur += t + open_cost
+    return n + (1 if cur else 0)
+
+
 def _fan_out(df: DataFrame) -> DataFrame:
     """Repartition ONLY a narrow input (single-file test fixture) so
     the partial aggregation parallelizes.  A real lake scan is already
@@ -56,9 +81,8 @@ def _fan_out(df: DataFrame) -> DataFrame:
     # decide width WITHOUT materializing the RDD lineage
     # (df.rdd.getNumPartitions() builds the whole RDD DAG just to count
     # splits — driver-side planning cost paid on every ANALYZE of a
-    # wide lake scan).  Reproduce Spark's own split arithmetic
-    # (FilePartition.maxSplitBytes: bytesPerCore over openCost-adjusted
-    # totals) from the resolved file list instead — file COUNT alone is
+    # wide lake scan).  Spark's own split arithmetic (`file_splits`)
+    # over the resolved file list decides instead — file COUNT alone is
     # no proxy in either direction, since bin-packing merges small
     # files (300 x 1 MB -> a few splits) and splitting divides large
     # ones (3 x 10 GB -> hundreds).  Stat cost is capped: more than 10k
@@ -69,25 +93,14 @@ def _fan_out(df: DataFrame) -> DataFrame:
         files = []
     if len(files) > 10_000:
         return df
-    spark = df.sparkSession
-    max_pb = _parse_bytes(spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)))
-    open_cost = _parse_bytes(spark.conf.get(
-        "spark.sql.files.openCostInBytes", str(4 * 1024 * 1024)))
-    parallelism = int(spark.conf.get(
-        "spark.sql.files.minPartitionNum",
-        str(spark.sparkContext.defaultParallelism)))
-    adjusted = 0
+    sizes = []
     for f in files:
         p = f[7:] if f.startswith("file://") else f
         try:
-            adjusted += os.path.getsize(p) + open_cost
+            sizes.append(os.path.getsize(p))
         except OSError:  # remote FS path: assume a full split per file
-            adjusted += max_pb
-    bytes_per_core = adjusted // max(parallelism, 1)
-    max_split = min(max_pb, max(open_cost, bytes_per_core))
-    est_splits = (adjusted + max_split - 1) // max(max_split, 1)
-    if est_splits < n_part:
+            sizes.append(None)
+    if file_splits(df.sparkSession, sizes) < n_part:
         return df.repartition(n_part)
     return df
 

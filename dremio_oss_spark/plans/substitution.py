@@ -1786,7 +1786,7 @@ def match_and_execute(store, ex: ExtractedAgg, accept=None):
     ENABLE/DISABLE AGGREGATE ACCELERATION toggle, SqlAccelToggle)."""
     from pyspark.sql import functions as F
 
-    from .reflections import _ROLLUP
+    from .reflections import _ROLLUP, _roll_partial
 
     refl = None
     for fact in sorted(
@@ -1850,7 +1850,7 @@ def match_and_execute(store, ex: ExtractedAgg, accept=None):
                 # HyperLogLog.java:28)
                 return F.hll_sketch_estimate(
                     F.hll_union_agg(F.col(m.name))).alias(m.name)
-            return _ROLLUP[m.kind](F.col(m.name)).alias(m.name)
+            return _roll_partial(m, not ex.dims)
         # no declared partial: covers() admitted a DIM-GRAIN answer —
         # ndv (same distinct set, same default rsd -> bit-identical
         # HLL++ estimate), min/max (multiplicity-blind, null cells
@@ -2179,10 +2179,7 @@ def match_and_execute_raw(store, ex: ExtractedScan, accept=None):
             and (accept is None or accept(refl)))]
     store._note_candidates(covering)
     for refl in covering:
-        mat = store._read_data(store._data_dir(refl))
-        df = mat
-        for f in ex.filters:
-            df = df.where(f)
+        df = store.scan_materialization(refl, ex.filters)
         if ex.order_by:
             # sort on BASE columns before the projection — the sort
             # key may be a column the final SELECT drops

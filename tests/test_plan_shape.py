@@ -580,6 +580,46 @@ def test_analyze_no_full_shuffle_on_wide_input(spark, tmp_path):
             spark.conf.set("spark.sql.files.minPartitionNum", old_min)
 
 
+def test_file_splits_matches_spark_read_partitions(spark, tmp_path):
+    """`statistics.file_splits` (the one copy of Spark's file-split
+    arithmetic: ANALYZE's fan-out and the one-split reflection scan
+    both use it) predicts the read partitions Spark plans for the same
+    files, across split sizes, open costs and split floors — including
+    files cut into several splits and small files packed together."""
+    import os
+
+    from dremio_oss_spark.plans.statistics import file_splits
+
+    d = str(tmp_path / "splits")
+    spark.range(0, 30000, 1, 5).selectExpr(
+        "id", "repeat(cast(id as string), cast(id % 7 as int)) as s") \
+        .write.parquet(d)
+    sizes = [os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+             if f.endswith(".parquet")]
+    confs = ("spark.sql.files.maxPartitionBytes",
+             "spark.sql.files.openCostInBytes",
+             "spark.sql.files.minPartitionNum")
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for max_pb, open_cost, floor in (
+                (None, None, "1"), (None, None, "4"), ("8192", "1024", "2"),
+                ("65536", "16", "1"), (str(max(sizes) // 2), "4096", "8")):
+            for k, v in zip(confs, (max_pb, open_cost, floor)):
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+            got = spark.read.parquet(d).rdd.getNumPartitions()
+            assert file_splits(spark, sizes) == got, (max_pb, open_cost,
+                                                      floor, sizes)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_exact_quantiles_rule_nulls_and_partition_independence(spark, tmp_path):
     """r14 optimization: the default histogram quantiles come from the
     distributed EXACT selection, not the G-K sketch.  Pins (1) the

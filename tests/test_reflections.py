@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dremio_oss_spark.queries import reflections_q
@@ -3499,3 +3501,253 @@ def test_read_memo_keeps_one_entry_per_path(spark, tmp_path):
     assert memo[cur] is not before and len(memo) <= 2
     store.drop("mr")
     assert not memo
+
+
+# -- one-split materializations: no Exchange, one Spark job ----------------
+
+def _executed_plan(df) -> str:
+    """The final (AQE) executed plan of `df`, after collecting it."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _canon(rows) -> list:
+    """Rows as sortable tuples, floats rounded (partial re-sums may
+    differ from a one-pass sum in the last bits)."""
+    out = [tuple(round(float(x), 6) if isinstance(x, float) else x
+                 for x in r) for r in rows]
+    return sorted(out, key=lambda r: tuple((v is None, str(v)) for v in r))
+
+
+def test_one_split_materialization_answers_in_one_job(spark):
+    """A materialization Spark reads as ONE file split is scanned as one
+    partition (`coalesce(1)`), so a covered GROUP BY ... ORDER BY, a
+    covered ORDER BY ... DESC LIMIT k and a raw-reflection ORDER BY
+    each run as exactly one Spark job with no Exchange.  Above one split
+    (maxPartitionBytes lowered below the file size, new generations
+    written by COMPACT) the same statements keep the plan they always
+    had — a hash exchange for the rollup, a range exchange for a global
+    sort — and return identical rows."""
+    from dremio_oss_spark.catalog import register_testdata
+    from dremio_oss_spark.engine import Engine
+
+    from .conftest import count_jobs
+
+    register_testdata(spark, SF_SMALL)
+    eng = Engine(spark)
+    eng.sql("ALTER TABLE orders CREATE AGGREGATE REFLECTION os_agg "
+            "USING DIMENSIONS (o_orderpriority, o_orderstatus) "
+            "MEASURES (o_totalprice (SUM))")
+    eng.sql("ALTER TABLE orders CREATE RAW REFLECTION os_raw "
+            "USING DISPLAY (o_orderkey, o_totalprice)")
+    cases = [
+        ("os_agg", "select o_orderpriority, sum(o_totalprice) as rev "
+                   "from orders group by o_orderpriority "
+                   "order by o_orderpriority",
+         ("Exchange hashpartitioning", "Exchange rangepartitioning")),
+        ("os_agg", "select o_orderstatus, sum(o_totalprice) as rev "
+                   "from orders group by o_orderstatus "
+                   "order by rev desc limit 2",
+         ("Exchange hashpartitioning", "TakeOrderedAndProject")),
+        ("os_raw", "select o_orderkey, o_totalprice from orders "
+                   "where o_totalprice > 100000 "
+                   "order by o_totalprice desc, o_orderkey",
+         ("Exchange rangepartitioning",)),
+    ]
+    store = eng._default_refl_store()
+    one_split = {}
+    for name, q, _ in cases:
+        assert count_jobs(eng, q) == 1, q
+        assert eng.last_plan_accelerated == name, q
+        df = eng.sql(q)
+        plan = _executed_plan(df)
+        assert "Exchange" not in plan and "Coalesce 1" in plan, plan
+        one_split[q] = [tuple(r) for r in df.collect()]
+        assert _canon(one_split[q]) == _canon(spark.sql(q).collect()), q
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try:
+        for name in ("os_agg", "os_raw"):
+            eng.sql(f"COMPACT MATERIALIZATION {name} AS 'split'")
+            refl = store._reflections.get(name) or store._raw[name]
+            assert sum(os.path.getsize(f) for f in store._data_files(
+                store._data_dir(refl))) > 1024
+        for name, q, nodes in cases:
+            df = eng.sql(q)
+            assert eng.last_plan_accelerated == name, q
+            plan = _executed_plan(df)
+            assert "Coalesce" not in plan, plan
+            for node in nodes:
+                assert node in plan, (node, plan)
+            assert [tuple(r) for r in df.collect()] == one_split[q], q
+    finally:
+        if old is None:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        else:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+        store.drop("os_agg")
+        store.drop("os_raw")
+
+
+def test_compact_materialization_sizes_files_by_split(spark, tmp_path):
+    """COMPACT rewrites an unpartitioned materialization as one file per
+    read split a single file of its bytes would get: with
+    spark.sql.files.maxPartitionBytes below the materialization's size
+    that is more than one file, at the defaults a small
+    materialization compacts to one file.  The rows never change."""
+    from dremio_oss_spark.plans import ReflectionStore
+
+    src_dir = str(tmp_path / "src")
+    spark.range(0, 4000, 1, 4).selectExpr(
+        "id as k", "id * 7 % 1000 as v").write.parquet(src_dir)
+    store = ReflectionStore(spark, str(tmp_path / "refl"))
+    store.create_raw_reflection("cm", spark.read.parquet(src_dir),
+                                table="cm_t", display_cols=["k", "v"])
+    refl = store._raw["cm"]
+
+    def files():
+        return store._data_files(store._data_dir(refl))
+
+    def rows():
+        return sorted(tuple(r) for r in
+                      store._read_data(store._data_dir(refl)).collect())
+
+    want = rows()
+    assert len(files()) == 4
+    size = sum(os.path.getsize(f) for f in files())
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(size // 3))
+    try:
+        before, after = store.compact_materialization("cm")
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert before == 4 and after == len(files()) > 1
+    assert rows() == want
+    assert store.compact_materialization("cm") == (after, 1)
+    assert rows() == want
+    store.drop("cm")
+
+
+def _assert_one_split_parity(eng, spark, q, name, plain_q=None):
+    """Accelerated and unaccelerated collects are equal, and the
+    accelerated plan is the one-split shape: a coalesced scan and no
+    Exchange."""
+    df = eng.sql(q)
+    assert eng.last_plan_accelerated == name, q
+    plan = _executed_plan(df)
+    assert "Exchange" not in plan and "Coalesce 1" in plan, plan
+    assert _canon(df.collect()) == _canon(
+        spark.sql(plain_q or q).collect()), q
+    return plan
+
+
+def test_one_split_answers_equal_unaccelerated(spark, tmp_path):
+    """Every substitution shape whose plan loses its exchanges on a
+    one-split materialization returns the unaccelerated rows: HAVING,
+    COUNT(DISTINCT) re-derived from a stored dim, ROLLUP and GROUPING
+    SETS (a union of per-set rollups), a PARTITION BY reflection under
+    a pruning equality filter, a grand total over an empty
+    materialization, and a BY DAY temporal dim."""
+    from dremio_oss_spark.catalog import load, register_testdata
+    from dremio_oss_spark.engine import Engine
+
+    register_testdata(spark, SF_SMALL)
+    eng = Engine(spark)
+    store = eng._default_refl_store()
+    eng.sql("ALTER TABLE lineitem CREATE AGGREGATE REFLECTION par_li "
+            "USING DIMENSIONS (l_returnflag, l_linestatus, l_suppkey) "
+            "MEASURES (l_quantity (SUM, COUNT))")
+    for q in (
+        "select l_returnflag, sum(l_quantity) as s from lineitem "
+        "group by l_returnflag having sum(l_quantity) > 20000",
+        "select l_returnflag, count(distinct l_suppkey) as n "
+        "from lineitem group by l_returnflag",
+        "select l_returnflag, l_linestatus, sum(l_quantity) as s, "
+        "count(l_quantity) as n from lineitem "
+        "group by rollup(l_returnflag, l_linestatus)",
+        "select l_returnflag, l_suppkey, count(l_quantity) as n "
+        "from lineitem group by grouping sets "
+        "((l_returnflag), (l_suppkey), ()) order by 1, 2",
+    ):
+        _assert_one_split_parity(eng, spark, q, "par_li")
+    store.drop("par_li")
+
+    # PARTITION BY: one split when Spark packs every file into one
+    # partition (a split floor of 1); the equality filter still prunes
+    old = spark.conf.get("spark.sql.files.minPartitionNum", None)
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        eng.sql("ALTER TABLE lineitem CREATE AGGREGATE REFLECTION par_pb "
+                "USING DIMENSIONS (l_returnflag, l_linestatus) "
+                "MEASURES (l_quantity (SUM)) PARTITION BY (l_returnflag)")
+        assert len(store._data_files(store._data_dir(
+            store._reflections["par_pb"]))) > 1
+        plan = _assert_one_split_parity(
+            eng, spark,
+            "select l_linestatus, sum(l_quantity) as s from lineitem "
+            "where l_returnflag = 'R' group by l_linestatus", "par_pb")
+        assert "PartitionFilters: [isnotnull(__p_l_returnflag" in plan
+    finally:
+        if old is None:
+            spark.conf.unset("spark.sql.files.minPartitionNum")
+        else:
+            spark.conf.set("spark.sql.files.minPartitionNum", old)
+        store.drop("par_pb")
+
+    empty_dir = str(tmp_path / "empty_orders")
+    load(spark, SF_SMALL, "orders").where("1 = 0").write.parquet(empty_dir)
+    spark.read.parquet(empty_dir).createOrReplaceTempView("par_empty")
+    eng.sql("ALTER TABLE par_empty CREATE AGGREGATE REFLECTION par_e "
+            "USING DIMENSIONS (o_orderstatus) "
+            "MEASURES (o_totalprice (SUM))")
+    _assert_one_split_parity(
+        eng, spark, "select sum(o_totalprice) as s, count(*) as n "
+        "from par_empty", "par_e")
+    store.drop("par_e")
+
+    load(spark, SF_SMALL, "events").createOrReplaceTempView("par_ev")
+    eng.sql("ALTER TABLE par_ev CREATE AGGREGATE REFLECTION par_day "
+            "USING DIMENSIONS (event_type, ts BY DAY) "
+            "MEASURES (value (SUM))")
+    _assert_one_split_parity(
+        eng, spark, "select event_type, date_trunc('month', ts) as m, "
+        "cast(sum(value) as decimal(28,4)) as s, count(*) as n "
+        "from par_ev group by event_type, date_trunc('month', ts)",
+        "par_day")
+    store.drop("par_day")
+    for v in ("par_empty", "par_ev"):
+        spark.catalog.dropTempView(v)
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_one_split_path_reflection_after_dml(spark, tmp_path, fmt):
+    """A lake table's path reflection, refreshed after DML commits,
+    answers from a one-split materialization with no Exchange and
+    returns the rows plain Spark reads from the table."""
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources import delta as D
+    from dremio_oss_spark.sources import iceberg as I
+
+    write, read = ((D.write_delta, D.read_delta) if fmt == "delta"
+                   else (I.write_iceberg, I.read_iceberg))
+    t = str(tmp_path / fmt)
+    write(spark, spark.createDataFrame(
+        [(k, k % 3, float(k)) for k in range(30)],
+        "k long, g long, v double"), t)
+    eng = Engine(spark)
+    eng.sql(f"ALTER TABLE '{t}' CREATE AGGREGATE REFLECTION split_lake "
+            "USING DIMENSIONS (g) MEASURES (v (SUM, COUNT))")
+    q = ("select g, cast(sum(v) as double) as s, count(*) as n "
+         "from {} group by g order by g")
+    try:
+        eng.sql(f"insert into '{t}' select id as k, id % 3 as g, "
+                "cast(id as double) as v from range(30, 40)")
+        eng.sql(f"delete from '{t}' where k < 5")
+        eng.sql(f"update '{t}' set v = v + 1 where k >= 35")
+        read(spark, t).createOrReplaceTempView("split_lake_direct")
+        _assert_one_split_parity(eng, spark, q.format(f"'{t}'"),
+                                 "split_lake",
+                                 q.format("split_lake_direct"))
+    finally:
+        eng._default_refl_store().drop("split_lake")
+        spark.catalog.dropTempView("split_lake_direct")
