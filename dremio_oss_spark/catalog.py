@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .plans.statistics import local_files, one_split
+
 # tables the driver materializes at /root/testdata/<sf>/<name>.parquet
 TESTDATA_TABLES = (
     "region",
@@ -103,15 +105,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _allow_nanos(spark)
     p = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        # a directory's own mtime only moves when entries are added or
-        # renamed — an in-place part-file overwrite would keep serving a
-        # stale plan — so fold in the newest entry's (mtime, size) too
-        mt = os.path.getmtime(p)
-        if os.path.isdir(p):
-            for e in os.scandir(p):
-                s = e.stat()
-                if s.st_mtime > mt:
-                    mt = s.st_mtime
+        # the newest entry's mtime: an in-place part-file overwrite
+        # must not keep serving a stale plan
+        mt, sizes = local_files(p)
         key = (p, mt)
     except OSError:
         return spark.read.parquet(p)  # missing: surface Spark's error
@@ -121,7 +117,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return spark.read.parquet(p)
     hit = memo.get(key)
     if hit is None:
-        hit = memo[key] = spark.read.parquet(p)
+        # a table Spark reads as one split is handed out as one
+        # partition (`one_split`), decided once per entry under the
+        # session's confs at that time
+        df = spark.read.parquet(p)
+        hit = memo[key] = df.coalesce(1) if one_split(spark, sizes) else df
     return hit
 
 

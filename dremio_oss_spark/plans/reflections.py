@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .statistics import file_splits
+from .statistics import file_splits, local_files, one_split
 
 # Partial-merge per measure kind: how two materialized cells of the
 # same (coarser) group combine.  "ndv" partials are DataSketches HLL
@@ -715,7 +715,9 @@ class ReflectionStore:
             new = new.sortWithinPartitions(rr.sort_col)
         n = new.count()
         if n:
-            new.write.mode("append").parquet(self._data_dir(rr))
+            path = self._data_dir(rr)
+            new.write.mode("append").parquet(path)
+            self._seed_read(path, cur.schema)
             self.mutations += 1  # plan-cache sync
         rr.stale = False
         return n
@@ -941,10 +943,15 @@ class ReflectionStore:
         layouts skip the seed (their read rediscovers __p_ dir columns,
         which the plain schema cannot express)."""
         df.write.mode("overwrite").parquet(path)
+        self._seed_read(path, df.schema)
+
+    def _seed_read(self, path: str, schema) -> None:
+        """Memo entry for files just written under `path`: a
+        known-schema handle, so the next read infers no schema."""
         mt = self._mtime(path)
         if mt is not None:
             self._read_data_memo[path] = (
-                mt, self.spark.read.schema(df.schema).parquet(path), None)
+                mt, self.spark.read.schema(schema).parquet(path), None)
 
     def _read_data(self, path: str) -> DataFrame:
         """Read a materialization dir, memoizing the DataFrame HANDLE
@@ -964,12 +971,7 @@ class ReflectionStore:
     @staticmethod
     def _mtime(path: str) -> float | None:
         try:
-            mt = os.path.getmtime(path)
-            for e in os.scandir(path):
-                s = e.stat()
-                if s.st_mtime > mt:
-                    mt = s.st_mtime
-            return mt
+            return local_files(path)[0]
         except OSError:
             return None
 
@@ -1362,12 +1364,10 @@ class ReflectionStore:
                              filters: tuple[str, ...]) -> DataFrame:
         """The materialization scan with query filters applied, including
         partition-directory pruning through the __p_ helper columns.
-        A materialization Spark reads as ONE file split runs as one task
-        anyway; `coalesce(1)` says so, and CoalesceExec(1)'s
-        SinglePartition satisfies the rollup and the sort, so the answer
-        plans no Exchange (Dremio's ExcessiveExchangeIdentifier at width
-        1).  The decision rides the read memo entry; no data file or an
-        unreadable size means "not one split"."""
+        A materialization Spark reads as ONE file split is scanned as
+        `coalesce(1)` (`statistics.one_split`), so the rollup and the
+        sort above it plan no Exchange.  The decision rides the read
+        memo entry."""
         path = self._data_dir(refl)
         mt, raw, one = self._read_raw(path)
         if one is None and mt is not None:
@@ -1375,7 +1375,7 @@ class ReflectionStore:
                 sizes = [os.path.getsize(f) for f in self._data_files(path)]
             except OSError:
                 sizes = []
-            one = bool(sizes) and file_splits(self.spark, sizes) == 1
+            one = one_split(self.spark, sizes)
             self._read_data_memo[path] = (mt, raw, one)
         helpers = [c for c in raw.columns if c.startswith("__p_")]
         mat = raw

@@ -16,6 +16,7 @@ stats DataFrame/store the engine's sys.statistics view serves.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,6 +68,40 @@ def file_splits(spark, sizes: list[int | None]) -> int:
             n, cur = n + 1, 0
         cur += t + open_cost
     return n + (1 if cur else 0)
+
+
+def one_split(spark, sizes: list[int | None] | None) -> bool:
+    """True iff Spark reads data files of these byte sizes as exactly
+    ONE split.  Such a scan runs as one task anyway; `coalesce(1)` over
+    it says so, and CoalesceExec(1)'s SinglePartition satisfies every
+    clustered and ordered distribution above it, so the aggregates,
+    sorts, windows and broadcast joins over it plan no Exchange
+    (Dremio's ExcessiveExchangeIdentifier at width 1).  On two or more
+    cores at default confs one split holds at most about
+    openCostInBytes (4 MB) of input.  No file list, no file, or a size
+    that could not be read (None) is never one split."""
+    return (bool(sizes) and None not in sizes
+            and file_splits(spark, sizes) == 1)
+
+
+def local_files(path: str) -> tuple[float, list[int] | None]:
+    """(newest mtime, data-file byte sizes) of a local file or
+    directory, as Spark's file index lists it: hidden `_`/`.` entries
+    are skipped.  The sizes are None when the directory holds a
+    subdirectory (partition dirs), whose files this one-level scan does
+    not see.  The mtime folds in every entry's, since a directory's own
+    mtime moves only when entries are added or renamed.  Raises OSError
+    for a path `os.stat` cannot read (remote FS, glob)."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_mtime, [st.st_size]
+    mt, sizes = st.st_mtime, []
+    for e in os.scandir(path):
+        s = e.stat()
+        mt = max(mt, s.st_mtime)
+        if sizes is not None and not e.name.startswith(("_", ".")):
+            sizes = sizes + [s.st_size] if e.is_file() else None
+    return mt, sizes
 
 
 def _fan_out(df: DataFrame) -> DataFrame:

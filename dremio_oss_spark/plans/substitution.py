@@ -60,6 +60,12 @@ def _cls(node: dict) -> str:
     return node["class"].rsplit(".", 1)[-1]
 
 
+def _is_coalesce(node: dict) -> bool:
+    """`coalesce(n)`: rows unchanged, only the partitioning — how a
+    one-split base scan is handed out (`statistics.one_split`)."""
+    return _cls(node) == "Repartition" and not node.get("shuffle")
+
+
 def _tree(arr: list[dict]):
     """Rebuild the pre-order (node, children) tree TreeNode.toJSON emits."""
     pos = 0
@@ -459,7 +465,7 @@ def _output_cols(node, kids) -> list[tuple[int, str]]:
     if c in ("LogicalRelation", "LogicalRDD"):
         return [(_attr_id(o[0]), o[0]["name"]) for o in node["output"]]
     if c in ("Filter", "Sort", "GlobalLimit", "LocalLimit", "Distinct",
-             "SubqueryAlias", "View", "Union"):
+             "SubqueryAlias", "View", "Union") or _is_coalesce(node):
         # a union's output ids are its first branch's
         return _output_cols(*kids[0])
     raise _Unsupported(f"view body {c}")
@@ -510,7 +516,7 @@ class _Extractor:
                 self.env[_attr_id(attr)] = (None, attr["name"])
                 ids.append(_attr_id(attr))
             return set(ids)
-        if c == "View":
+        if c == "View" or _is_coalesce(node):
             return self._walk_source(*kids[0])
         if c == "SubqueryAlias":
             anchor = self.anchors.get(node["identifier"]["name"].lower())

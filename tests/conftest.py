@@ -80,9 +80,12 @@ def count_py4j():
             gc.enable()
 
 
-def count_jobs(eng, stmt: str) -> int:
-    """Spark jobs `stmt` launches through `eng.sql(stmt).collect()`,
-    counted through a job group of its own."""
+def count_spark_work(eng, stmt: str) -> tuple[int, int]:
+    """(Spark jobs, Spark stages) `stmt` launches through
+    `eng.sql(stmt).collect()`, counted through a job group of its own.
+    A stage counts once however many of the group's jobs list it (a
+    later job lists a finished shuffle stage again, as skipped), so the
+    count is the stage ids the statement created."""
     import uuid
 
     sc = eng.spark.sparkContext
@@ -92,4 +95,14 @@ def count_jobs(eng, stmt: str) -> int:
         eng.sql(stmt).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = set()
+    for j in jobs:
+        stages.update(tracker.getJobInfo(j).stageIds)
+    return len(jobs), len(stages)
+
+
+def count_jobs(eng, stmt: str) -> int:
+    """Spark jobs `stmt` launches through `eng.sql(stmt).collect()`."""
+    return count_spark_work(eng, stmt)[0]

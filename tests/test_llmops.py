@@ -771,6 +771,33 @@ def test_simhash_hash_mode_xxhash64(spark):
         spark.conf.unset("spark.dremio.dedup.hash")
 
 
+def test_simhash_distinct_sig_space_conf_both_settings(spark):
+    """`spark.dremio.dedup.simhash.distinctSigMaxSpace` picks the pair
+    search: at the default a 16-bit signature space searches distinct
+    signatures and expands them back to documents (a union of the
+    cross-signature and same-signature arms); at 0 the banded join runs
+    over documents directly.  Both return the same pairs."""
+    from dremio_oss_spark.operators.dedup import (simhash,
+                                                  simhash_near_pairs)
+
+    sh = simhash(load(spark, SF_SMALL, "documents"))
+    key = "spark.dremio.dedup.simhash.distinctSigMaxSpace"
+
+    def run():
+        df = simhash_near_pairs(sh, max_hamming=3)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted(tuple(r) for r in df.collect())
+
+    sig_plan, via_sigs = run()
+    spark.conf.set(key, "0")
+    try:
+        doc_plan, via_docs = run()
+    finally:
+        spark.conf.unset(key)
+    assert "Union" in sig_plan and "Union" not in doc_plan
+    assert via_sigs and via_sigs == via_docs
+
+
 def test_ann_plane_mode_gaussian(spark):
     """`spark.dremio.ann.planes=gaussian` — the production plane
     family (one seeded normal draw, no hashing; the md5 planes exist

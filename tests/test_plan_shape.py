@@ -17,6 +17,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _session(spark, **confs):
+    """A new session with `confs` set.  It has its own `load` memo, so
+    its one-split decisions (`statistics.one_split`) follow `confs`."""
+    sess = spark.newSession()
+    for k, v in confs.items():
+        sess.conf.set(k, v)
+    return sess
+
+
 def test_filter_pushdown_reaches_scan(spark):
     df = load(spark, SF_SMALL, "lineitem").where(
         F.col("l_shipdate") <= "1998-09-02"
@@ -241,7 +250,9 @@ def test_runtime_bloom_filter_injected_on_shuffle_join(spark):
     pushed from VectorizedHashJoin into upstream scans
     (`sabot/op/join/vhash/VectorizedHashJoinOperator.java` runtime
     bloom filters, `RuntimeFilterManager`).  Broadcast joins don't need
-    one (the small side ships whole), so the test pins a shuffle join."""
+    one (the small side ships whole), so the test pins a shuffle join
+    over fixtures that read as several splits.  Over one-split scans
+    (the defaults) the join shuffles nothing, so no filter is injected."""
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         # let the tiny sf0.001 fixture qualify as a probe side
@@ -249,23 +260,20 @@ def test_runtime_bloom_filter_injected_on_shuffle_join(spark):
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        li = load(spark, SF_SMALL, "lineitem")
-        orders = load(spark, SF_SMALL, "orders").where(
+
+    def plan(**more):
+        sess = _session(spark, **confs, **more)
+        li = load(sess, SF_SMALL, "lineitem")
+        orders = load(sess, SF_SMALL, "orders").where(
             "o_totalprice > 400000")
-        j = li.join(orders, li.l_orderkey == orders.o_orderkey)
-        plan = _plan(j)
-        assert "bloom_filter_agg" in plan  # build side aggregates a bloom
-        assert "might_contain" in plan  # probe side filters through it
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        return _plan(li.join(orders, li.l_orderkey == orders.o_orderkey))
+
+    split = plan(**{"spark.sql.files.maxPartitionBytes": "16384"})
+    assert "bloom_filter_agg" in split  # build side aggregates a bloom
+    assert "might_contain" in split  # probe side filters through it
+    one = plan()
+    assert "SortMergeJoin" in one and "Exchange" not in one, one
+    assert "might_contain" not in one, one
 
 
 def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
@@ -290,17 +298,22 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
 def test_sessionize_shares_one_user_shuffle(spark):
     """Both window passes and the per-session rollup must reuse a single
     hashpartitioning(user_id) exchange (the final orderBy adds only a
-    rangepartitioning for presentation)."""
+    rangepartitioning for presentation) when events reads as several
+    splits.  Over the one-split events scan (the defaults) the whole
+    pipeline plans no Exchange."""
     import re
 
     from dremio_oss_spark.queries.relational_q import sessionize
 
-    p = _plan(sessionize(spark, SF_SMALL))
+    p = _plan(sessionize(_session(
+        spark, **{"spark.sql.files.maxPartitionBytes": "8192"}), SF_SMALL))
     assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
     assert "user_id" in next(
         line for line in p.splitlines()
         if "Exchange hashpartitioning" in line
     )
+    one = _plan(sessionize(spark, SF_SMALL))
+    assert "Exchange" not in one, one
 
 
 def test_kmeans_assignment_broadcasts_centroids(spark):
@@ -662,3 +675,117 @@ def test_exact_quantiles_rule_nulls_and_partition_independence(spark, tmp_path):
     assert hist(df.coalesce(1), "exact") == got
     # sketch fallback: exact regime at this size -> same values
     assert hist(df, "sketch") == got
+
+
+# -- one-split base-table scans: no Exchange above them --------------------
+
+_STAR_SQL = """select l_returnflag, l_linestatus, l_quantity, l_extendedprice,
+       l_discount, l_shipdate, o_orderpriority, o_orderstatus, o_orderdate,
+       c_mktsegment, n_name, n_regionkey
+from lineitem
+join orders on l_orderkey = o_orderkey
+join customer on o_custkey = c_custkey
+join nation on c_nationkey = n_nationkey"""
+
+_QUARTER = ("select c_mktsegment, avg(l_discount) as avg_disc "
+            "from sales.orders_star "
+            "where o_orderdate >= timestamp '1995-01-01' "
+            "and o_orderdate < timestamp '1995-04-01' "
+            "group by c_mktsegment order by c_mktsegment")
+
+# below the sf0.01 lineitem and orders files: both read as several splits
+_SPLIT_CONFS = {"spark.sql.files.maxPartitionBytes": "262144"}
+
+
+def _star_engine(spark, **confs):
+    """An Engine on a new session with `confs`, the sf0.01 testdata and
+    the 4-way star view `sales.orders_star`, which no reflection
+    covers."""
+    from dremio_oss_spark.engine import Engine
+
+    from .conftest import SF_MEDIUM
+
+    eng = Engine(_session(spark, **confs))
+    eng.add_testdata_source(SF_MEDIUM)
+    eng.create_vds("sales", "orders_star", _STAR_SQL)
+    return eng
+
+
+def _rows(df) -> list:
+    """Collected rows, sorted (NULLs last), doubles rounded to 9
+    places: a sum over several read partitions adds in another order
+    than one over one."""
+    rows = [tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+            for r in df.collect()]
+    return sorted(rows, key=lambda r: [(v is None, v) for v in r])
+
+
+def test_one_split_star_join_plans_no_exchange(spark):
+    """Every base table of the star view is one file split at sf0.01, so
+    `catalog.load` hands each out as `coalesce(1)`: the uncovered
+    quarter panel plans the three broadcasts and nothing else — 4 jobs
+    and 4 stages on a plan-cache miss, 1 and 1 on a hit, with no hash
+    or range exchange.  With maxPartitionBytes below the lineitem file
+    the same statement keeps both exchanges and returns the same rows."""
+    from .conftest import count_spark_work
+
+    eng = _star_engine(spark)
+    assert count_spark_work(eng, _QUARTER) == (4, 4)
+    assert eng.last_plan_accelerated is None
+    assert count_spark_work(eng, _QUARTER) == (1, 1)
+    df = eng.sql(_QUARTER)
+    plan = _plan(df)
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "Exchange rangepartitioning" not in plan, plan
+
+    wide = _star_engine(spark, **_SPLIT_CONFS)
+    wdf = wide.sql(_QUARTER)
+    wplan = _plan(wdf)
+    assert "Exchange hashpartitioning" in wplan, wplan
+    assert "Exchange rangepartitioning" in wplan, wplan
+    assert _rows(wdf) == _rows(df)
+
+
+def test_one_split_shapes_equal_multi_split(spark):
+    """A ROLLUP, a window function and a sort-merge join (broadcast
+    off) over one-split fixtures collect equal to the same statements
+    where lineitem and orders read as several splits.  The window and
+    the join plan no Exchange over the one-split scans; the ROLLUP keeps
+    its hash exchange, because Expand reports an unknown partitioning
+    whatever its child's.  At several splits every plan has one."""
+    from dremio_oss_spark.catalog import register_testdata
+
+    from .conftest import SF_MEDIUM
+
+    stmts = {
+        "rollup": "select l_returnflag, l_linestatus, "
+                  "sum(cast(l_quantity as decimal(18,2))) as qty, "
+                  "count(*) as n from lineitem "
+                  "group by rollup(l_returnflag, l_linestatus)",
+        "window": "select o_orderkey, o_orderpriority, rank() over "
+                  "(partition by o_orderpriority "
+                  "order by o_totalprice desc, o_orderkey) as rk "
+                  "from orders",
+        "smj": "select o_orderpriority, count(*) as n, "
+               "sum(cast(l_extendedprice as decimal(18,2))) as rev "
+               "from lineitem join orders on l_orderkey = o_orderkey "
+               "group by o_orderpriority",
+    }
+    runs = {}
+    for label, confs in (("one", {}), ("split", _SPLIT_CONFS)):
+        sess = _session(spark, **confs, **{
+            "spark.sql.autoBroadcastJoinThreshold": "-1"})
+        register_testdata(sess, SF_MEDIUM)
+        for name, q in stmts.items():
+            df = sess.sql(q)
+            runs[label, name] = (_plan(df), _rows(df))
+    for name in stmts:
+        one_plan, one_rows = runs["one", name]
+        split_plan, split_rows = runs["split", name]
+        assert ("Exchange" in one_plan) == (name == "rollup"), \
+            (name, one_plan)
+        assert "Exchange hashpartitioning" in split_plan, (name, split_plan)
+        assert one_rows and one_rows == split_rows, name
+    assert "SortMergeJoin" in runs["one", "smj"][0]
+    assert "Window" in runs["one", "window"][0]
+    assert "Expand" in runs["one", "rollup"][0]

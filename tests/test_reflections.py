@@ -3503,6 +3503,50 @@ def test_read_memo_keeps_one_entry_per_path(spark, tmp_path):
     assert not memo
 
 
+def test_append_refresh_seeds_raw_read(spark, tmp_path):
+    """An append refresh of a raw reflection seeds the read memo with a
+    known-schema handle over the current generation, as a full write
+    does: the next raw answer launches no schema-inference job
+    (`parquet at`) and returns the rows of the unaccelerated query."""
+    import uuid
+
+    from dremio_oss_spark.engine import Engine
+
+    def write_view(lo, hi, d):
+        spark.range(lo, hi, 1, 1).selectExpr("id as k", "id % 7 as v") \
+            .write.parquet(str(tmp_path / d))
+        spark.read.parquet(str(tmp_path / d)) \
+            .createOrReplaceTempView("rseed_t")
+
+    write_view(0, 100, "t")
+    eng = Engine(spark)
+    eng.sql("ALTER TABLE rseed_t CREATE RAW REFLECTION r_seed "
+            "USING DISPLAY (k, v) REFRESH BY APPEND (k)")
+    store = eng._default_refl_store()
+    write_view(0, 130, "t2")
+    q = "select k, v from rseed_t where k >= 90 order by k"
+    try:
+        assert store.incremental_refresh_raw(
+            "r_seed", spark.table("rseed_t")) == 30
+        sc = spark.sparkContext
+        group = f"seed-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, q)
+        try:
+            got = [tuple(r) for r in eng.sql(q).collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert eng.last_plan_accelerated == "r_seed"
+        status = sc._jsc.sc().statusStore()
+        names = [status.job(j).name()
+                 for j in sc.statusTracker().getJobIdsForGroup(group)]
+        assert names and not any(n.startswith("parquet at")
+                                 for n in names), names
+        assert got == [tuple(r) for r in spark.sql(q).collect()]
+        assert len(got) == 40
+    finally:
+        store.drop("r_seed")
+
+
 # -- one-split materializations: no Exchange, one Spark job ----------------
 
 def _executed_plan(df) -> str:

@@ -89,6 +89,24 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     assert final == {0: 1, 1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
 
 
+def test_state_partitions_conf_both_settings(spark):
+    """`spark.dremio.stream.statePartitions` sets the state-store
+    partition count of a drained stream (default 4); one partition
+    gives the same windowed aggregate, and the session's shuffle
+    partition count is restored after the drain."""
+    key = "spark.dremio.stream.statePartitions"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    run = streaming_q.STREAMING_QUERIES["stream_tumbling_window"]
+    default = [tuple(r) for r in run(spark, SF_SMALL).collect()]
+    spark.conf.set(key, "1")
+    try:
+        one = [tuple(r) for r in run(spark, SF_SMALL).collect()]
+    finally:
+        spark.conf.unset(key)
+    assert default and default == one
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
 def test_stream_events_normalizes_ntz_sessions(spark):
     """Regression (round-3 driver run): under a session with
     spark.sql.timestampType=TIMESTAMP_NTZ the events parquet surfaces
