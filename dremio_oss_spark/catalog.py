@@ -125,6 +125,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return hit
 
 
+def forget_loads(spark: SparkSession) -> None:
+    """Drop the session's `load` and `register_testdata` memos: their
+    one-split decisions hold only under the split confs they were taken
+    under."""
+    spark.__dict__.pop("_dremio_load_memo", None)
+    spark.__dict__.pop("_dremio_testdata_views", None)
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load the events table with `ts` as a proper timestamp.
 

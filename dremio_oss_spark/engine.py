@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sqltext
-from .catalog import register_testdata
+from .catalog import forget_loads, register_testdata
 from .functions.shims import register_all
 from .session import build_spark
 
@@ -1224,11 +1224,34 @@ class Engine:
         self.spark.conf.set(key, str(value))
         self._session_options = getattr(self, "_session_options", {})
         self._session_options[key] = str(value)
+        self._split_conf_changed(key)
 
     def reset_session(self, key: str) -> None:
         """ALTER SESSION RESET "key"."""
         self.spark.conf.unset(key)
         getattr(self, "_session_options", {}).pop(key, None)
+        self._split_conf_changed(key)
+
+    def _split_conf_changed(self, key: str) -> None:
+        """A conf `statistics.one_split` reads changed: drop the
+        one-split decisions taken under the old value.  The testdata
+        views are re-registered and every VDS is planned again (a view
+        holds the plan of the handles it was planned over); the
+        materialization scans decide again on their next read."""
+        if not key.lower().startswith(
+                ("spark.sql.files.",
+                 "spark.sql.adaptive.coalescepartitions.")):
+            return
+        self._plan_cache.clear()
+        forget_loads(self.spark)
+        if "testdata" in self._sources:
+            register_testdata(self.spark, self._sources["testdata"])
+            for space, sp in list(self.spaces.items()):
+                for name, body in list(sp.vds.items()):
+                    self.create_vds(space, name, body)
+        store = getattr(self, "_refl_store", None)
+        if store is not None:
+            store.forget_splits()
 
     # -- view acceleration (reflections defined ON a VDS) --------------------
     def create_vds_reflection(

@@ -983,6 +983,13 @@ class ReflectionStore:
                   if p == path or p.startswith(path + os.sep)]:
             del memo[p]
 
+    def forget_splits(self) -> None:
+        """Clear every memo entry's one-split decision (a split conf
+        changed); the next scan decides again."""
+        memo = self._read_data_memo
+        for p, (mt, df, _) in list(memo.items()):
+            memo[p] = (mt, df, None)
+
     @staticmethod
     def _data_files(path: str) -> list[str]:
         """The parquet data files of a materialization dir, across its

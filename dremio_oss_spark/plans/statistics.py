@@ -72,15 +72,22 @@ def file_splits(spark, sizes: list[int | None]) -> int:
 
 def one_split(spark, sizes: list[int | None] | None) -> bool:
     """True iff Spark reads data files of these byte sizes as exactly
-    ONE split.  Such a scan runs as one task anyway; `coalesce(1)` over
-    it says so, and CoalesceExec(1)'s SinglePartition satisfies every
+    ONE split of at most `coalescePartitions.minPartitionSize` (1 MB)
+    bytes.  Such a scan runs as one task anyway; `coalesce(1)` over it
+    says so, and CoalesceExec(1)'s SinglePartition satisfies every
     clustered and ordered distribution above it, so the aggregates,
     sorts, windows and broadcast joins over it plan no Exchange
-    (Dremio's ExcessiveExchangeIdentifier at width 1).  On two or more
-    cores at default confs one split holds at most about
-    openCostInBytes (4 MB) of input.  No file list, no file, or a size
-    that could not be read (None) is never one split."""
+    (Dremio's ExcessiveExchangeIdentifier at width 1).  The
+    SinglePartition also holds every operator above the scan to one
+    task, so the input is capped at the size below which AQE already
+    coalesces a shuffle of as many bytes into one partition; a larger
+    one-split scan keeps its Exchange and the post-shuffle tasks AQE
+    gives it.  No file list, no file, or a size that could not be read
+    (None) is never one split."""
     return (bool(sizes) and None not in sizes
+            and sum(sizes) <= _parse_bytes(spark.conf.get(
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "1MB"))
             and file_splits(spark, sizes) == 1)
 
 

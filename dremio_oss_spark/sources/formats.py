@@ -19,12 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from ..localframe import meta_df
-from ..plans.statistics import local_files, one_split
-
-# formats Spark reads as a file scan (split into read partitions); the
-# others build an in-memory frame on the driver
-_FILE_SCANS = frozenset(("parquet", "orc", "json", "csv", "tsv", "psv",
-                         "txt"))
 
 
 class FormatRegistry:
@@ -51,17 +45,7 @@ class FormatRegistry:
     def read(self, path: str, fmt: str, schema: str | None = None, **opts) -> DataFrame:
         if fmt not in self._readers:
             raise ValueError(f"unknown format {fmt!r}; known: {self.formats()}")
-        df = self._readers[fmt](path, schema=schema, **opts)
-        if fmt in _FILE_SCANS:
-            # a scan Spark reads as one split is one partition
-            # (`one_split`); a glob or remote path keeps its plan
-            try:
-                sizes = local_files(path)[1]
-            except OSError:
-                sizes = None
-            if one_split(self.spark, sizes):
-                df = df.coalesce(1)
-        return df
+        return self._readers[fmt](path, schema=schema, **opts)
 
     def _read_spark(self, fmt: str):
         def _r(path: str, schema: str | None = None, **opts) -> DataFrame:

@@ -74,8 +74,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def run_to_table(stream: DataFrame, name: str, mode: str) -> None:
-    """Drain the stream with availableNow into a memory sink table.
+def run_to_table(stream: DataFrame, name: str, mode: str):
+    """Drain the stream with availableNow into a memory sink table;
+    return the terminated StreamingQuery (its progress stays readable).
 
     Streaming state-store partition count is fixed at query start from
     spark.sql.shuffle.partitions (AQE does not apply to streaming
@@ -106,6 +107,7 @@ def run_to_table(stream: DataFrame, name: str, mode: str) -> None:
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return q
 
 
 def _sink(sf_dir: str, base: str) -> str:

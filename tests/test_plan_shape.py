@@ -746,6 +746,88 @@ def test_one_split_star_join_plans_no_exchange(spark):
     assert _rows(wdf) == _rows(df)
 
 
+def test_one_split_capped_at_min_partition_size(spark):
+    """`one_split` holds a one-split scan to one task only up to
+    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB):
+    a larger single split keeps its Exchange, so the stages above it
+    get the post-shuffle tasks AQE gives them.  Raising the setting
+    raises the cap; lowering it below the sf0.01 lineitem file leaves
+    that scan uncoalesced and its aggregate shuffling."""
+    from dremio_oss_spark.plans.statistics import file_splits, one_split
+
+    from .conftest import SF_MEDIUM
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    assert file_splits(spark, [2 << 20]) == 1
+    assert one_split(spark, [512 << 10])
+    assert not one_split(spark, [2 << 20])
+    assert one_split(_session(spark, **{key: "4m"}), [2 << 20])
+
+    def agg_plan(sess):
+        return _plan(load(sess, SF_MEDIUM, "lineitem")
+                     .groupBy("l_returnflag").count())
+
+    plan = agg_plan(_session(spark))
+    assert "Coalesce 1" in plan and "Exchange" not in plan, plan
+    plan = agg_plan(_session(spark, **{key: "65536"}))
+    assert "Coalesce" not in plan, plan
+    assert "Exchange hashpartitioning" in plan, plan
+
+
+def test_split_conf_change_replans_one_split_scans(spark):
+    """The one-split decisions are memoized (per `load` entry, per
+    materialization generation), so ALTER SESSION SET of a split conf
+    drops them: after maxPartitionBytes is lowered below the files, a
+    fresh `load`, the star view and a covered reflection answer plan
+    no `Coalesce 1` and keep their exchanges, with the same rows.
+    ALTER SESSION RESET brings the one-split plans back."""
+    import os
+
+    from .conftest import SF_MEDIUM
+
+    eng = _star_engine(spark)
+    eng.sql("ALTER TABLE orders CREATE AGGREGATE REFLECTION ord_prio "
+            "USING DIMENSIONS (o_orderpriority) "
+            "MEASURES (o_totalprice (SUM))")
+    covered = ("select o_orderpriority, sum(o_totalprice) as rev "
+               "from orders group by o_orderpriority "
+               "order by o_orderpriority")
+    store = eng._default_refl_store()
+    refl = store._reflections["ord_prio"]
+    assert sum(os.path.getsize(f) for f in store._data_files(
+        store._data_dir(refl))) > 1024
+
+    def plans():
+        cov = eng.sql(covered)
+        assert eng.last_plan_accelerated == "ord_prio"
+        star = eng.sql(_QUARTER)
+        return ({"load": _plan(load(eng.spark, SF_MEDIUM, "lineitem")),
+                 "star": _plan(star), "covered": _plan(cov)},
+                {"star": _rows(star), "covered": _rows(cov)})
+
+    try:
+        one, rows = plans()
+        for name, plan in one.items():
+            assert "Coalesce 1" in plan, (name, plan)
+        assert "Exchange" not in one["covered"], one["covered"]
+        eng.sql('ALTER SESSION SET "spark.sql.files.maxPartitionBytes" '
+                '= 1024')
+        split, split_rows = plans()
+        for name, plan in split.items():
+            assert "Coalesce" not in plan, (name, plan)
+        for name in ("star", "covered"):
+            assert "Exchange hashpartitioning" in split[name], split[name]
+            assert "Exchange rangepartitioning" in split[name], split[name]
+        assert split_rows == rows
+        eng.sql('ALTER SESSION RESET "spark.sql.files.maxPartitionBytes"')
+        again, again_rows = plans()
+        for name, plan in again.items():
+            assert "Coalesce 1" in plan, (name, plan)
+        assert again_rows == rows
+    finally:
+        store.drop("ord_prio")
+
+
 def test_one_split_shapes_equal_multi_split(spark):
     """A ROLLUP, a window function and a sort-merge join (broadcast
     off) over one-split fixtures collect equal to the same statements

@@ -91,20 +91,37 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
 
 def test_state_partitions_conf_both_settings(spark):
     """`spark.dremio.stream.statePartitions` sets the state-store
-    partition count of a drained stream (default 4); one partition
-    gives the same windowed aggregate, and the session's shuffle
-    partition count is restored after the drain."""
+    partition count of a drained stream (default 4): the windowed
+    aggregate's state operator reports 4 shuffle partitions at the
+    default and 1 at the setting 1, with the same rows, and the
+    session's shuffle partition count is restored after each drain."""
+    from pyspark.sql import functions as F
+
+    from dremio_oss_spark.streaming import windows
+
     key = "spark.dremio.stream.statePartitions"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    run = streaming_q.STREAMING_QUERIES["stream_tumbling_window"]
-    default = [tuple(r) for r in run(spark, SF_SMALL).collect()]
+
+    def drain(sink):
+        agg = (windows.stream_events(spark, SF_SMALL)
+               .withWatermark("ts", "1 hour")
+               .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+               .agg(F.count("*").alias("n")))
+        q = windows.run_to_table(
+            agg.select("w.start", "event_type", "n"), sink, "complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        parts = {op["numShufflePartitions"]
+                 for op in q.lastProgress["stateOperators"]}
+        return parts, sorted(tuple(r) for r in spark.table(sink).collect())
+
+    default = drain("state_parts_default")
     spark.conf.set(key, "1")
     try:
-        one = [tuple(r) for r in run(spark, SF_SMALL).collect()]
+        one = drain("state_parts_one")
     finally:
         spark.conf.unset(key)
-    assert default and default == one
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert default[0] == {4} and one[0] == {1}
+    assert default[1] and default[1] == one[1]
 
 
 def test_stream_events_normalizes_ntz_sessions(spark):
