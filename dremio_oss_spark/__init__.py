@@ -8,10 +8,9 @@ aggregation) is delegated to Spark. This package adds the SQL surface
 and the large-scale data-pipeline operators (dedup, similarity, text).
 """
 
-from .catalog import Catalog, load, register_testdata
+from .catalog import load, register_testdata
 from .session import build_spark
 
 __version__ = "0.12.0"  # bumped per build round
 
-__all__ = ["Catalog", "build_spark", "load", "register_testdata",
-           "__version__"]
+__all__ = ["build_spark", "load", "register_testdata", "__version__"]

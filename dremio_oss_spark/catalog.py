@@ -34,29 +34,6 @@ TESTDATA_TABLES = (
 )
 
 
-class Catalog:
-    """Source registry: maps named sources (directories) to datasets."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._sources: dict[str, str] = {}
-
-    def add_source(self, name: str, path: str, fmt: str = "parquet") -> None:
-        """Register a directory source; each <table>.<fmt> becomes a view."""
-        self._sources[name] = path
-        for fn in sorted(os.listdir(path)):
-            if fn.endswith("." + fmt):
-                table = fn[: -len(fmt) - 1]
-                self.read(os.path.join(path, fn), fmt).createOrReplaceTempView(table)
-
-    def read(self, path: str, fmt: str = "parquet") -> DataFrame:
-        return self.spark.read.format(fmt).load(path)
-
-    def create_view(self, name: str, sql: str) -> None:
-        """VDS equivalent: named SQL view (reference dataset.proto:60)."""
-        self.spark.sql(sql).createOrReplaceTempView(name)
-
-
 def _allow_nanos(spark: SparkSession) -> None:
     """events.parquet stores TIMESTAMP(NANOS); without this runtime conf any
     session that didn't come from build_spark fails with PARQUET_TYPE_ILLEGAL."""

@@ -31,6 +31,7 @@ from . import sqltext
 from .catalog import forget_loads, register_testdata
 from .functions.shims import register_all
 from .session import build_spark
+from .sources.lake_dml import codec_of
 
 _DIALECT_REWRITES: list[tuple[str, str]] = [
     # NDV(expr) -> approx_count_distinct(expr)   (DremioSqlOperatorTable.java:76)
@@ -1332,7 +1333,7 @@ class Engine:
         m = re.match(
             r"(\s*alter\s+(?:table|vds|dataset)\s+)'([^']+)'(\s+.*)$",
             query, re.I | re.S)
-        if m and self._lake_format(m.group(2)):
+        if m and codec_of(m.group(2)):
             view = self._register_path_reflection_view(m.group(2))
             query = m.group(1) + view + m.group(3)
         m = re.match(
@@ -1779,16 +1780,7 @@ class Engine:
 
         p = os.path.normpath(path)
         view = f"__plake_{hashlib.md5(p.encode()).hexdigest()[:10]}"
-        fmt = self._lake_format(p)
-        if fmt == "delta":
-            from .sources.delta import read_delta
-
-            df = read_delta(self.spark, p)
-        else:
-            from .sources.iceberg import read_iceberg
-
-            df = read_iceberg(self.spark, p)
-        df.createOrReplaceTempView(view)
+        codec_of(p).read(self.spark, p).createOrReplaceTempView(view)
         self._path_refl_views = getattr(self, "_path_refl_views", {})
         self._refl_view_paths = getattr(self, "_refl_view_paths", {})
         self._path_refl_views[p] = view
@@ -1796,13 +1788,7 @@ class Engine:
         return view
 
     def _lake_head_version(self, path: str):
-        if self._lake_format(path) == "delta":
-            from .sources.delta import resolve_snapshot
-
-            return resolve_snapshot(self.spark, path).version
-        from .sources.iceberg import resolve_snapshot
-
-        return resolve_snapshot(path).snapshot_id
+        return codec_of(path).at(self.spark, path, None).version
 
     def _mark_reflections_stale(self, dataset: str) -> int:
         store = getattr(self, "_refl_store", None)
@@ -1925,23 +1911,19 @@ class Engine:
         (SUM/COUNT with a COUNT(*)), one table, a base version, and a
         change source: Iceberg derives one from its snapshots, Delta
         needs `delta.enableChangeDataFeed`."""
-        from .sources import lake_dml
+        from .plans.reflections import unsignable_reason
 
         if getattr(refl, "joins", ()) or not hasattr(refl, "measures"):
             return "not an aggregate over one table"
-        kinds = {m.kind for m in refl.measures}
-        if kinds & {"min", "max", "ndv"}:
-            return "MIN/MAX/NDV measures cannot fold deletes"
-        if not any(m.kind == "count" and m.col == "*"
-                   for m in refl.measures):
-            return "no COUNT(*) measure"
+        reason = unsignable_reason(refl.measures)
+        if reason is not None:
+            return reason
         if refl.base_version is None:
             return "no base version"
-        fmt = self._lake_format(path)
-        if fmt == "delta":
-            codec = lake_dml.codec(fmt)
-            if not codec.cdf(codec.at(self.spark, path, None)):
-                return "delta.enableChangeDataFeed is not set"
+        codec = codec_of(path)
+        if (codec.name == "delta"
+                and not codec.cdf(codec.at(self.spark, path, None))):
+            return "delta.enableChangeDataFeed is not set"
         return None
 
     def _refresh_path_reflection(self, store, refl, path: str) -> None:
@@ -1956,7 +1938,7 @@ class Engine:
         reason = self._fold_blocker(refl, path)
         if reason is None:
             try:
-                if self._lake_format(path) == "delta":
+                if codec_of(path).name == "delta":
                     store.cdf_incremental_refresh(refl.name, path)
                 else:
                     store.changelog_incremental_refresh(refl.name, path)
@@ -2077,22 +2059,13 @@ class Engine:
         """DESCRIBE TABLE: column name/type/comment rows (native); lake
         paths resolve through the format readers, with partition columns
         noted in the comment field."""
-        fmt = self._lake_format(name) if os.sep in name else None
-        if fmt is not None:
-            if fmt == "delta":
-                from .sources.delta import resolve_snapshot as _rs
-
-                snap = _rs(self.spark, name)
-                fields, parts = snap.schema.fields, set(snap.partition_cols)
-            else:
-                from .sources.iceberg import resolve_snapshot as _ri
-
-                snap = _ri(name)
-                fields = snap.schema.fields
-                parts = {pf["source"] for pf in snap.spec_fields}
+        codec = codec_of(name) if os.sep in name else None
+        if codec is not None:
+            snap = codec.at(self.spark, name, None)
+            parts = {src for src, _ in codec.partitioning(snap)}
             rows = [(f.name, f.dataType.simpleString(),
                      "partition key" if f.name in parts else None)
-                    for f in fields]
+                    for f in snap.schema.fields]
             return self._local_df(
                 rows, "col_name string, data_type string, comment string")
         if "." in name and name.split(".", 1)[0] in self.spaces:
@@ -2106,7 +2079,7 @@ class Engine:
 
         from .sources.iceberg import _metadata_file
 
-        if self._lake_format(table_path) != "iceberg":
+        if not self._is_iceberg(table_path):
             raise ValueError(f"not an Iceberg table: {table_path}")
         with open(_metadata_file(table_path)) as f:
             refs = json.load(f).get("refs") or {}
@@ -2332,25 +2305,14 @@ class Engine:
         column list from the current snapshot's schema, partition spec
         (Iceberg transforms rendered as written), and table
         properties."""
-        fmt = self._lake_format(path)
-        if fmt is None:
-            raise ValueError(f"not a lakehouse table: {path}")
-        if fmt == "delta":
-            from .sources.delta import resolve_snapshot as _rs
-            snap = _rs(self.spark, path)
-            part = list(snap.partition_cols)
-            props = dict(snap.config)
-        else:
-            from .sources.iceberg import resolve_snapshot as _ri
-            snap = _ri(path)
-            part = [pf["source"] if pf["transform"] == "identity"
-                    else f"{pf['transform']}({pf['source']})"
-                    for pf in snap.spec_fields]
-            props = dict(snap.properties)
+        codec = self._lake_codec(path)
+        snap = codec.at(self.spark, path, None)
+        part = [field for _, field in codec.partitioning(snap)]
+        props = codec.properties(snap)
         cols = ", ".join(f"{f.name} {f.dataType.simpleString().upper()}"
                          for f in (snap.schema.fields if snap.schema
                                    else []))
-        ddl = f"CREATE TABLE '{path}' ({cols}) USING {fmt.upper()}"
+        ddl = f"CREATE TABLE '{path}' ({cols}) USING {codec.name.upper()}"
         if part:
             ddl += f" PARTITIONED BY ({', '.join(part)})"
         if props:
@@ -2367,13 +2329,10 @@ class Engine:
             ("format", "parquet"),
             ("location", table_path),
         ]
-        fmt = self._lake_format(table_path)
-        if fmt == "delta":
-            from .sources.delta import resolve_snapshot as _rs
-            props += sorted(_rs(self.spark, table_path).config.items())
-        elif fmt == "iceberg":
-            from .sources.iceberg import resolve_snapshot as _ri
-            props += sorted(_ri(table_path).properties.items())
+        codec = codec_of(table_path)
+        if codec is not None:
+            props += sorted(codec.properties(
+                codec.at(self.spark, table_path, None)).items())
         return self._local_df(
             props, "property string, value string"
         )
@@ -2480,15 +2439,21 @@ class Engine:
             register_all(self.spark, names=found)
 
     # -- lakehouse DML statements (Delta / Iceberg table paths) ------------
-    def _lake_format(self, path: str) -> str | None:
-        import os
+    @staticmethod
+    def _lake_codec(path: str):
+        """The codec of the lake table at `path`; any other path
+        raises."""
+        codec = codec_of(path)
+        if codec is None:
+            raise ValueError(f"not a lakehouse table: {path}")
+        return codec
 
-        if os.path.isdir(os.path.join(path, "_delta_log")):
-            return "delta"
-        if os.path.exists(os.path.join(path, "metadata",
-                                       "version-hint.text")):
-            return "iceberg"
-        return None
+    @staticmethod
+    def _is_iceberg(path: str) -> bool:
+        """Whether `path` is an Iceberg table: the branch and tag
+        statements read its refs map, which Delta has no twin of."""
+        codec = codec_of(path)
+        return codec is not None and codec.name == "iceberg"
 
     def _status(self, operation: str, detail) -> DataFrame:
         return self._local_df(
@@ -2540,18 +2505,14 @@ class Engine:
     def _merge_args(self, m: sqltext.Match) -> dict:
         """Source frame, join keys and clause flags of a MERGE matched
         with `_MERGE_REST` (`SET *` takes every source column)."""
-        from .sources import delta as D
-        from .sources import iceberg as I
-
         spath, sets = m.group("spath"), m.group("sets")
+        codec = codec_of(spath) if spath is not None else None
         if spath is None:
             source = (self.sql(m.group("subq"))
                       if m.group("subq") is not None
                       else self.spark.table(m.group("sview")))
-        elif self._lake_format(spath) == "delta":
-            source = D.read_delta(self.spark, spath)
-        elif self._lake_format(spath) == "iceberg":
-            source = I.read_iceberg(self.spark, spath)
+        elif codec is not None:
+            source = codec.read(self.spark, spath)
         else:  # a plain parquet dir/file source
             source = self.spark.read.parquet(spath)
         return {"source": source,
@@ -2569,8 +2530,6 @@ class Engine:
         Reference statement surface: dremio-oss DML on Iceberg tables
         (`UpdateHandler`, `MergeHandler`, `OptimizeHandler`,
         `VacuumTableHandler`, parser entries in `parserImpls.ftl`)."""
-        from .sources import delta as D
-        from .sources import iceberg as I
         from .sources import lake_dml
 
         m = re.match(
@@ -2585,15 +2544,9 @@ class Engine:
                 m.group(3), m.group(4))
             part_by = ([p.strip() for p in sqltext.split_top_level(parts)]
                        if parts else None)
-            df = self.sql(select)
-            if fmt == "delta":
-                out = D.write_delta(self.spark, df, path,
-                                    mode="overwrite", partition_by=part_by)
-            elif fmt == "iceberg":
-                out = I.write_iceberg(self.spark, df, path,
-                                      mode="overwrite", partition_by=part_by)
-            else:
-                raise ValueError(f"unsupported table format {fmt!r}")
+            codec = lake_dml.codec(fmt)
+            out = codec.write(self.spark, self.sql(select), path,
+                              mode="overwrite", partition_by=part_by)
             return self._status("CREATE TABLE AS SELECT", out)
 
         m = re.match(
@@ -2601,12 +2554,11 @@ class Engine:
             query, re.I | re.S)
         if m:
             path, select = m.group(1), m.group(2)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             df = self.sql(select)
-            fields = lake_dml.codec(fmt).at(self.spark, path,
-                                            None).schema.fields
+            fields = codec.at(self.spark, path, None).schema.fields
             if len(df.columns) != len(fields):
                 raise ValueError(
                     f"INSERT arity {len(df.columns)} != table {len(fields)}")
@@ -2628,41 +2580,41 @@ class Engine:
             if casts:
                 df = df.select(*[F.col(c).cast(casts[c]).alias(c)
                                  if c in casts else c for c in df.columns])
-            fn = D.write_delta if fmt == "delta" else I.write_iceberg
             return self._status(
-                "INSERT INTO", fn(self.spark, df, path, mode="append"))
+                "INSERT INTO", codec.write(self.spark, df, path,
+                                           mode="append"))
 
         m = re.match(
             r"\s*delete\s+from\s+'([^']+)'(?:\s+where\s+(.+?))?\s*$",
             query, re.I | re.S)
         if m:
             path, pred = m.group(1), m.group(2) or "true"
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             return self._status("DELETE", lake_dml.delete(
-                lake_dml.codec(fmt), self.spark, path, pred))
+                codec, self.spark, path, pred))
 
         m = sqltext.match(
             r"\s*update\s+'([^']+)'\s+set\s+(.+?)(?:\s+where\s+(.+?))?\s*$",
             query, re.I | re.S)
         if m:
             path, sets, pred = m.group(1), m.group(2), m.group(3) or "true"
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             return self._status("UPDATE", lake_dml.update(
-                lake_dml.codec(fmt), self.spark, path,
+                codec, self.spark, path,
                 self._assignments(sets), pred))
 
         m = sqltext.match(r"\s*merge\s+into\s+'([^']+)'" + self._MERGE_REST,
                           query, re.I | re.S)
         if m and (m.group("sets") is not None or m.group("ins")):
-            fmt = self._lake_format(m.group(1))
-            if fmt is None:
+            codec = codec_of(m.group(1))
+            if codec is None:
                 return None
             return self._status("MERGE", lake_dml.merge(
-                lake_dml.codec(fmt), self.spark, m.group(1),
+                codec, self.spark, m.group(1),
                 alias=m.group("alias") or "s", **self._merge_args(m)))
 
         m = re.match(r"\s*truncate\s+(?:table\s+)?'([^']+)'\s*$",
@@ -2670,22 +2622,22 @@ class Engine:
         if m:
             # SqlTruncateTable: metadata-only delete-all commit
             path = m.group(1)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             return self._status("TRUNCATE TABLE", lake_dml.truncate(
-                lake_dml.codec(fmt), self.spark, path))
+                codec, self.spark, path))
 
         m = re.match(
             r"\s*rollback\s+table\s+'([^']+)'\s+to\s+snapshot\s+"
             r"'?(\d+)'?\s*$", query, re.I)
         if m:
             path, snap = m.group(1), int(m.group(2))
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             return self._status("ROLLBACK", lake_dml.rollback(
-                lake_dml.codec(fmt), self.spark, path, snap))
+                codec, self.spark, path, snap))
 
         m = re.match(r"\s*optimize\s+table\s+'([^']+)'"
                      r"\s+rewrite\s+manifests\s*$", query, re.I)
@@ -2694,13 +2646,11 @@ class Engine:
             # MANIFESTS): Iceberg re-consolidates manifests; Delta's
             # analog is materializing a checkpoint
             path = m.group(1)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
-            out = (D.rewrite_manifests_delta(self.spark, path)
-                   if fmt == "delta"
-                   else I.rewrite_manifests_iceberg(path))
-            return self._status("OPTIMIZE REWRITE MANIFESTS", out)
+            return self._status("OPTIMIZE REWRITE MANIFESTS",
+                                codec.rewrite_manifests(self.spark, path))
 
         m = re.match(r"\s*optimize\s+table\s+'([^']+)'"
                      r"(?:\s+rewrite\s+data\s+using\s+bin_pack)?"
@@ -2710,10 +2660,9 @@ class Engine:
         if m:
             path, where, zcols, opts = (m.group(1), m.group(2),
                                         m.group(3), m.group(4))
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
-            codec = lake_dml.codec(fmt)
             zorder_by = zcols and [c.strip() for c in zcols.split(",")]
             kind, _ = lake_dml.layout(
                 codec.properties(codec.at(self.spark, path, None)),
@@ -2736,8 +2685,8 @@ class Engine:
             # [older_than='ts'] [retain_last=n] | REMOVE ORPHAN FILES
             # [older_than='ts'] — a bare VACUUM TABLE = default expire
             path = m.group(1)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
 
             def _ms(s):
@@ -2746,7 +2695,6 @@ class Engine:
                     return None
                 return int(_dt.datetime.fromisoformat(s).timestamp()
                            * 1000)
-            codec = lake_dml.codec(fmt)
             if m.group(4):  # REMOVE ORPHAN FILES
                 out = lake_dml.remove_orphan_files(
                     codec, self.spark, path, _ms(m.group(5)))
@@ -2775,12 +2723,11 @@ class Engine:
             r"\((.+)\)\s*$", query, re.I | re.S)
         if m:
             path, cols = m.group(1), m.group(2)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             add = self._column_defs(cols)
-            out = (D.alter_delta(self.spark, path, add=add)
-                   if fmt == "delta" else I.alter_iceberg(path, add=add))
+            out = codec.alter(self.spark, path, add=add)
             return self._status("ALTER TABLE ADD COLUMNS", out)
 
         m = re.match(
@@ -2788,11 +2735,10 @@ class Engine:
             query, re.I)
         if m:
             path, col = m.group(1), m.group(2)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
-            out = (D.alter_delta(self.spark, path, drop=[col])
-                   if fmt == "delta" else I.alter_iceberg(path, drop=[col]))
+            out = codec.alter(self.spark, path, drop=[col])
             return self._status("ALTER TABLE DROP COLUMN", out)
 
         # RENAME COLUMN c TO newname, and CHANGE/ALTER/MODIFY COLUMN c
@@ -2805,12 +2751,11 @@ class Engine:
             r"column\s+(\w+)\s+(\w+)\s+([\w(),]+)\s*$", query, re.I)
         if m:
             path, col, new_name, new_type = m.groups()
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
-            change = {"delta": D.change_delta_column,
-                      "iceberg": I.change_iceberg_column}[fmt]
-            out = change(self.spark, path, col, new_name, new_type or None)
+            out = codec.change_column(self.spark, path, col, new_name,
+                                      new_type or None)
             if not new_type:
                 return self._status("ALTER TABLE RENAME COLUMN",
                                     f"{col} -> {new_name} @ {out}")
@@ -2827,17 +2772,14 @@ class Engine:
             r"\((.+)\)\s*$", query, re.I | re.S)
         if m:
             path, body = m.groups()
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             props: dict[str, str] = {}
             for part in sqltext.split_top_level(body):
                 k, _, v = part.partition("=")
                 props[k.strip().strip("'\"")] = v.strip().strip("'\"")
-            if fmt == "delta":
-                D.set_delta_properties(self.spark, path, props)
-            else:
-                I.set_iceberg_properties(path, props)
+            codec.set_properties(self.spark, path, props)
             return self._status("ALTER TABLE SET TBLPROPERTIES",
                                 ", ".join(sorted(props)))
 
@@ -2846,26 +2788,21 @@ class Engine:
             r"\((.+)\)\s*$", query, re.I | re.S)
         if m:
             path, body = m.groups()
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return None
             unset = {part.strip().strip("'\""): None
                      for part in sqltext.split_top_level(body)}
-            if fmt == "delta":
-                D.set_delta_properties(self.spark, path, unset)
-            else:
-                I.set_iceberg_properties(path, unset)
+            codec.set_properties(self.spark, path, unset)
             return self._status("ALTER TABLE UNSET TBLPROPERTIES",
                                 ", ".join(sorted(unset)))
 
         # -- remaining alter.ftl productions -------------------------------
         def _set_props(path: str, props: dict) -> bool:
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 return False
-            (D.set_delta_properties(self.spark, path, props)
-             if fmt == "delta"
-             else I.set_iceberg_properties(path, props))
+            codec.set_properties(self.spark, path, props)
             return True
 
         # ALTER TABLE '<path>' ADD PRIMARY KEY (a, b) | DROP PRIMARY KEY
@@ -2977,31 +2914,20 @@ class Engine:
                     ("_delta_log", "metadata", "_change_data")):
                 dirnames[:] = []
                 continue
-            fmt = self._lake_format(dirpath)
-            if fmt is None:
+            codec = codec_of(dirpath)
+            if codec is None:
                 continue
             dirnames[:] = []  # a table is a leaf; don't recurse inside
-            removed = lake_dml.vacuum(lake_dml.codec(fmt), self.spark,
+            removed = lake_dml.vacuum(codec, self.spark,
                                       dirpath, keep_last=keep_last)
-            rows.append((dirpath, fmt, len(removed)))
+            rows.append((dirpath, codec.name, len(removed)))
         return self._local_df(
             rows, "table_path string, format string, files_removed int")
 
     def table_history(self, path: str) -> DataFrame:
         """TABLE(table_history('<path>')): one row per commit/snapshot."""
-        from .sources.delta import delta_history
-        from .sources.iceberg import iceberg_history
-
-        fmt = self._lake_format(path)
-        if fmt == "delta":
-            rows = [(h["version"], h["operation"], str(h["timestamp"]))
-                    for h in delta_history(path)]
-        elif fmt == "iceberg":
-            rows = [(h["snapshot_id"], h["operation"],
-                     str(h["timestamp_ms"]))
-                    for h in iceberg_history(path)]
-        else:
-            raise ValueError(f"not a lakehouse table: {path}")
+        rows = [(v, op, str(ts))
+                for v, op, ts in self._lake_codec(path).history(path)]
         return self._local_df(
             rows, "snapshot_id long, operation string, committed_at string")
 
@@ -3023,17 +2949,10 @@ class Engine:
 
     def table_snapshot(self, path: str) -> DataFrame:
         """TABLE(table_snapshot('<path>')): current snapshot summary."""
-        fmt = self._lake_format(path)
-        if fmt == "delta":
-            from .sources.delta import resolve_snapshot
-            snap = resolve_snapshot(self.spark, path)
-            sid, n = snap.version, len(snap.files)
-        else:
-            from .sources.iceberg import resolve_snapshot
-            snap = resolve_snapshot(path)
-            sid, n = snap.snapshot_id, len(snap.files)
+        codec = self._lake_codec(path)
+        snap = codec.at(self.spark, path, None)
         return self._local_df(
-            [(sid, fmt, n)],
+            [(snap.version, codec.name, len(snap.files))],
             "snapshot_id long, format string, n_files long")
 
     def table_partitions(self, path: str) -> DataFrame:
@@ -3052,59 +2971,19 @@ class Engine:
         """TABLE(table_manifests('<path>')): the metadata files behind
         the current state — Iceberg manifest-list/manifests, Delta JSON
         commits + checkpoints."""
-        import os
-
-        fmt = self._lake_format(path)
-        rows: list[tuple[str, str, int]] = []
-        if fmt == "iceberg":
-            md = os.path.join(path, "metadata")
-            for fn in sorted(os.listdir(md)):
-                kind = ("manifest_list" if fn.startswith("snap-")
-                        else "manifest" if fn.endswith(".avro")
-                        else "metadata" if fn.endswith(".json")
-                        else None)
-                if kind:
-                    p = os.path.join(md, fn)
-                    rows.append((fn, kind, os.path.getsize(p)))
-        elif fmt == "delta":
-            log = os.path.join(path, "_delta_log")
-            for fn in sorted(os.listdir(log)):
-                kind = ("commit" if fn.endswith(".json")
-                        and fn[:-5].isdigit()
-                        else "checkpoint" if fn.endswith(".parquet")
-                        else None)
-                if kind:
-                    p = os.path.join(log, fn)
-                    rows.append((fn, kind, os.path.getsize(p)))
-        else:
-            raise ValueError(f"not a lakehouse table: {path}")
         return self._local_df(
-            rows, "file_name string, kind string, size_bytes long")
+            self._lake_codec(path).manifests(path),
+            "file_name string, kind string, size_bytes long")
 
     def _snap_files(self, path: str) -> list[tuple[str, dict]]:
-        import os
-
-        fmt = self._lake_format(path)
-
-        def _user(pv: dict) -> dict:
-            # strip engine-internal partition-record extensions
-            # (__spec_id, __seq): they are commit bookkeeping, and
-            # leaving __seq in would split identical partition tuples
-            # by the commit that added each file
-            return {k: v for k, v in pv.items()
-                    if not k.startswith("__")}
-
-        if fmt == "delta":
-            from .sources.delta import resolve_snapshot
-            return sorted(
-                (rel, _user(pv)) for rel, pv in
-                resolve_snapshot(self.spark, path).files.items())
-        if fmt == "iceberg":
-            from .sources.iceberg import resolve_snapshot
-            return sorted(
-                (os.path.relpath(p, path), _user(pv))
-                for p, pv in resolve_snapshot(path).files)
-        raise ValueError(f"not a lakehouse table: {path}")
+        codec = self._lake_codec(path)
+        # strip engine-internal partition-record extensions (__spec_id,
+        # __seq): they are commit bookkeeping, and leaving __seq in would
+        # split identical partition tuples by the commit that added each
+        # file
+        return [(rel, {k: v for k, v in pv.items() if not k.startswith("__")})
+                for rel, pv in codec.files(path,
+                                           codec.at(self.spark, path, None))]
 
     _META_FNS = ("table_history", "table_files", "table_snapshot",
                  "table_partitions", "table_manifests", "table_refs",
@@ -3178,10 +3057,8 @@ class Engine:
             # SqlSetApprox: ALTER TABLE ... DISABLE APPROXIMATE STATS
             # flips this dataset's ANALYZE to exact NDV
             path = target.strip("'")
-            fmt = self._lake_format(path)
-            from .sources import lake_dml
+            codec = codec_of(path)
             try:
-                codec = fmt and lake_dml.codec(fmt)
                 props = (codec.properties(codec.at(self.spark, path, None))
                          if codec else {})
             except Exception:  # noqa: BLE001
@@ -4578,8 +4455,8 @@ class Engine:
         def repl(m: sqltext.Match) -> str:
             kw, path = m.group(1), m.group(2)
             mode, arg = m.group(3), m.group(4) or m.group(5)
-            fmt = self._lake_format(path)
-            if fmt is None:
+            codec = codec_of(path)
+            if codec is None:
                 # raw file/folder query (the reference's
                 # dfs."/path" direct promotion: SELECT over plain
                 # parquet dirs and csv/json/parquet files with format
@@ -4601,7 +4478,7 @@ class Engine:
                 # global USE must not break unversioned tables (stated
                 # deviation).
                 use = self._use_version_in.get(path) or self._use_version
-                if use is not None and fmt == "iceberg":
+                if use is not None and self._is_iceberg(path):
                     kind, name = use
                     if kind == "commit":
                         version = int(name) if name.isdigit() else None
@@ -4615,7 +4492,7 @@ class Engine:
             if mode is not None and mode.lower() == "snapshot":
                 version = int(arg)
             elif mode is not None and mode.lower() in ("branch", "tag"):
-                if fmt != "iceberg":
+                if not self._is_iceberg(path):
                     raise ValueError(
                         f"AT {mode.upper()} needs an Iceberg table "
                         f"(refs live in its metadata): {path}")
@@ -4627,42 +4504,20 @@ class Engine:
 
                 ts_ms = (int(arg) if arg.isdigit() else
                          int(datetime.fromisoformat(arg).timestamp() * 1000))
-                from .sources.delta import resolve_version_at
-                from .sources.iceberg import resolve_snapshot_at
-
-                version = (resolve_version_at(path, ts_ms)
-                           if fmt == "delta"
-                           else resolve_snapshot_at(path, ts_ms))
+                version = codec.version_at(path, ts_ms)
             bindings = self._safe_equality_bindings(query, path)
             # column names come from the TABLE METADATA (one metaData
             # action / metadata.json read), never from a snapshot
             # resolve — at millions of files, replaying the log just to
             # list columns is the driver bottleneck the distributed
             # planner exists to avoid.  The (possibly empty) binding set
-            # then goes through plan_*_scan, which switches to the
-            # DataFrame metadata path above the file-count threshold.
-            if fmt == "delta":
-                import json as _json
-
-                from .sources.delta import (_latest_metadata_action,
-                                            plan_delta_scan)
-                md = _latest_metadata_action(path, version)
-                cols = ({f["name"] for f in _json.loads(
-                    md["schemaString"])["fields"]}
-                    if md.get("schemaString") else set())
-                df, _, _ = plan_delta_scan(
-                    self.spark, path,
-                    {c: v for c, v in bindings.items() if c in cols},
-                    version=version)
-            else:
-                from .sources.iceberg import (_snapshot_meta,
-                                              plan_iceberg_scan)
-                cols = set(_snapshot_meta(
-                    path, version).schema.fieldNames())
-                df, _, _ = plan_iceberg_scan(
-                    self.spark, path,
-                    {c: v for c, v in bindings.items() if c in cols},
-                    snapshot_id=version)
+            # then goes through the codec's scan planner, which switches
+            # to the DataFrame metadata path above the file-count
+            # threshold.
+            cols = codec.columns(path, version)
+            df = codec.scan(
+                self.spark, path,
+                {c: v for c, v in bindings.items() if c in cols}, version)
             # the view embeds a file set PRUNED for THIS query's
             # bindings — keying the name by (path, version) alone let a
             # concurrent query's re-registration swap a differently
@@ -4894,7 +4749,7 @@ class Engine:
             r"|drop\s+(?:branch|tag)\s+(\w+)"
             r"|merge\s+branch\s+(\w+)\s+into\s+(\w+))"
             r"\s+in\s+'([^']+)'\s*$", query, re.I)
-        if m and self._lake_format(m.group(7)) == "iceberg":
+        if m and self._is_iceberg(m.group(7)):
             from .sources.iceberg import (create_iceberg_ref,
                                           drop_iceberg_ref,
                                           merge_iceberg_branch)
@@ -4918,7 +4773,7 @@ class Engine:
             r"\s*alter\s+(?:branch|tag)\s+(\w+)\s+assign\s+"
             r"(branch|tag|ref|snapshot)\s+'?(\w+)'?\s+in\s+'([^']+)'\s*$",
             query, re.I)
-        if m and self._lake_format(m.group(4)) == "iceberg":
+        if m and self._is_iceberg(m.group(4)):
             from .sources.iceberg import assign_iceberg_ref
 
             sid = assign_iceberg_ref(m.group(4), m.group(1),
@@ -4942,7 +4797,7 @@ class Engine:
         m = re.match(
             r"\s*select\s+count\s*\(\s*\*\s*\)(?:\s+as\s+(\w+))?"
             r"\s+from\s+'([^']+)'\s*$", query, re.I)
-        if (m and self._lake_format(m.group(2))
+        if (m and codec_of(m.group(2))
                 and not self._use_version
                 and m.group(2) not in self._use_version_in):
             n = self._count_from_metadata(m.group(2))
@@ -5045,8 +4900,8 @@ class Engine:
                 action, path, pred = "UPDATE", m.group(5), m.group(7)
             else:
                 action, path, pred = "MERGE", m.group(9), None
-            fmt = self._lake_format(path)
-            if fmt is not None:
+            codec = codec_of(path)
+            if codec is not None:
                 df = self.sql(f"select * from '{path}'")
                 if pred:
                     df = df.where(pred)
@@ -5056,7 +4911,7 @@ class Engine:
                                "files; merge-on-read commits delete "
                                "metadata instead)"),
                     ("target", path),
-                    ("format", fmt),
+                    ("format", codec.name),
                     ("predicate", pred or ""),
                     ("hit_scan_plan", plan[:4000]),
                 ]
@@ -5073,7 +4928,7 @@ class Engine:
             verb, path = m.group(1).upper().split()[0], m.group(2)
             rows = [("action", f"{verb} (dry-run: nothing committed)"),
                     ("target", path),
-                    ("format", self._lake_format(path) or "path")]
+                    ("format", getattr(codec_of(path), "name", "path"))]
             sel = re.search(r"\b(select\b.+)$", stmt, re.I | re.S)
             if sel:  # the data-producing half plans read-only
                 rows.append(("source_plan",
@@ -5096,23 +4951,12 @@ class Engine:
         file lacks a numRecords stat or merge-on-read deletes make the
         metadata count unsound (equality deletes can't be counted
         without scanning)."""
-        fmt = self._lake_format(path)
-        if fmt == "delta":
-            from .sources.delta import resolve_snapshot
-
-            snap = resolve_snapshot(self.spark, path)
-            if snap.dvs:
-                return None
-            entries = [(rel, snap.stats.get(rel)) for rel in snap.files]
-        else:
-            from .sources.iceberg import resolve_snapshot
-
-            snap = resolve_snapshot(path)
-            if snap.deletes or snap.pos_deletes:
-                return None
-            entries = [(p, snap.stats.get(p)) for p, _ in snap.files]
+        codec = codec_of(path)
+        stats = codec.file_stats(codec.at(self.spark, path, None))
+        if stats is None:
+            return None
         total = 0
-        for _, st in entries:
+        for st in stats:
             if not st or "numRecords" not in st:
                 return None
             total += int(st["numRecords"])

@@ -298,6 +298,20 @@ def pred_implies(a, b) -> bool:
     return False
 
 
+def unsignable_reason(measures) -> str | None:
+    """Why a signed change fold cannot maintain `measures` (None: it
+    can): every measure must be signable, and a COUNT(*) must detect
+    groups whose rows were all deleted (COUNT(col) can be 0 while rows
+    remain)."""
+    if {m.kind for m in measures} & {"min", "max", "ndv"}:
+        return ("min/max/ndv measures cannot be maintained under deletes "
+                "(an HLL sketch has no subtraction)")
+    if not any(m.kind == "count" and m.col == "*" for m in measures):
+        return ("no COUNT(*) measure to detect groups whose rows were "
+                "all deleted")
+    return None
+
+
 @dataclass
 class Reflection:
     name: str
@@ -1159,20 +1173,9 @@ class ReflectionStore:
 
     @staticmethod
     def _check_signable(refl: Reflection) -> None:
-        kinds = {m.kind for m in refl.measures}
-        if kinds & {"min", "max", "ndv"}:
-            raise ValueError(
-                "min/max/ndv measures cannot be maintained under "
-                "deletes (an HLL sketch has no subtraction); use "
-                "snapshot_incremental_refresh (append-only) or a "
-                "full refresh")
-        # specifically count(*): count(col) can legitimately be 0 while
-        # rows remain, so it cannot detect fully-emptied groups
-        if not any(m.kind == "count" and m.col == "*"
-                   for m in refl.measures):
-            raise ValueError(
-                "CDF refresh needs a COUNT(*) measure to detect groups "
-                "whose rows were all deleted")
+        reason = unsignable_reason(refl.measures)
+        if reason is not None:
+            raise ValueError(reason)
 
     def _fold_signed_changes(self, refl: Reflection, ch: DataFrame,
                              head) -> int:
@@ -1254,23 +1257,22 @@ class ReflectionStore:
         refresh method (`IncrementalUpdateServiceUtils.java:46`,
         REFRESH_METHOD snapshot diff; append-only contract).  Returns
         the number of new rows folded in."""
-        from ..sources.delta import is_delta_table
-        from ..sources.delta import read_delta_incremental, resolve_snapshot
-        from ..sources.iceberg import (read_iceberg_incremental,
-                                       resolve_snapshot as ice_resolve)
+        from ..sources import delta
+        from ..sources.iceberg import read_iceberg_incremental
+        from ..sources.lake_dml import codec_of
 
         refl = self._reflections[refl_name]
-        if is_delta_table(table_path):
-            head = resolve_snapshot(self.spark, table_path).version
+        codec = codec_of(table_path)
+        head = codec.at(self.spark, table_path, None).version
+        if codec is delta.DML:
             base = refl.base_version if refl.base_version is not None else -1
             if head == base:
                 return 0
-            new_rows = read_delta_incremental(
+            new_rows = delta.read_delta_incremental(
                 self.spark, table_path,
                 from_version=base if base >= 0 else 0,
                 to_version=head) if base >= 0 else None
         else:
-            head = ice_resolve(table_path).snapshot_id
             base = refl.base_version
             if head == base:
                 return 0
@@ -1279,12 +1281,7 @@ class ReflectionStore:
                 to_snapshot=head) if base is not None else None)
         if new_rows is None:
             # first refresh: full build from the table head
-            from ..sources.delta import read_delta
-            from ..sources.iceberg import read_iceberg
-
-            src = (read_delta(self.spark, table_path)
-                   if is_delta_table(table_path)
-                   else read_iceberg(self.spark, table_path))
+            src = codec.read(self.spark, table_path)
             for f in refl.filters:
                 src = src.where(f)
             self._full_refresh(refl, src)

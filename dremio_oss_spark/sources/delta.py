@@ -75,10 +75,6 @@ def resolve_version_at(path: str, timestamp_ms: int) -> int:
     return best
 
 
-def is_delta_table(path: str) -> bool:
-    return os.path.isdir(os.path.join(path, _LOG_DIR))
-
-
 def _commit_files(path: str) -> list[tuple[int, str]]:
     """(version, path) of JSON commits, version order."""
     log = os.path.join(path, _LOG_DIR)
@@ -1877,7 +1873,29 @@ def _referenced(spark: SparkSession, table: str, version: int) -> set[str]:
                if dv.get("storageType") == "p"]}
 
 
-# The lake_dml codec: what Delta alone decides for DML and maintenance.
+def _manifests(table: str) -> list[tuple[str, str, int]]:
+    """(file name, kind, bytes) of the JSON commits and checkpoints in
+    the log (the `lake_dml` codec's `manifests`)."""
+    log = os.path.join(table, _LOG_DIR)
+    rows = []
+    for fn in sorted(os.listdir(log)):
+        kind = ("commit" if fn.endswith(".json") and fn[:-5].isdigit()
+                else "checkpoint" if fn.endswith(".parquet") else None)
+        if kind:
+            rows.append((fn, kind, os.path.getsize(os.path.join(log, fn))))
+    return rows
+
+
+def _columns(table: str, version: int | None) -> set[str]:
+    """Column names at `version` from the metaData action alone (the
+    `lake_dml` codec's `columns`)."""
+    md = _latest_metadata_action(table, version)
+    return ({f["name"] for f in json.loads(md["schemaString"])["fields"]}
+            if md.get("schemaString") else set())
+
+
+# The lake_dml codec: what Delta alone decides for DML, maintenance and
+# the engine's other lake statements.
 DML = lake_dml.Codec(
     resolve=lambda spark, table, _parent: resolve_snapshot(spark, table),
     mode=lambda snap, _verb: (
@@ -1891,7 +1909,7 @@ DML = lake_dml.Codec(
     ops={"delete": "DELETE", "update": "UPDATE", "merge": "MERGE",
          "optimize": "OPTIMIZE", "truncate": "TRUNCATE"},
     at=resolve_snapshot,
-    files=lambda _table, snap: sorted(snap.files),
+    files=lambda _table, snap: sorted(snap.files.items()),
     properties=lambda snap: snap.config,
     # a commit's age is its log file's mtime
     versions=lambda _spark, table: [
@@ -1902,6 +1920,25 @@ DML = lake_dml.Codec(
     expire=lambda _table, _kept: None,
     restore=_restore,
     log_dirs=(_LOG_DIR, "_change_data"),
+    name="delta",
+    read=read_delta,
+    # the writer is looked up at call time, so a wrapper installed on
+    # the module attribute sees every write
+    write=lambda *a, **kw: write_delta(*a, **kw),
+    partitioning=lambda snap: [(c, c) for c in snap.partition_cols],
+    file_stats=lambda snap: (None if snap.dvs else
+                             [snap.stats.get(rel) for rel in snap.files]),
+    alter=alter_delta,
+    change_column=change_delta_column,
+    set_properties=set_delta_properties,
+    rewrite_manifests=rewrite_manifests_delta,
+    history=lambda table: [(h["version"], h["operation"], h["timestamp"])
+                           for h in delta_history(table)],
+    manifests=_manifests,
+    version_at=resolve_version_at,
+    columns=_columns,
+    scan=lambda spark, table, equality, version: plan_delta_scan(
+        spark, table, equality, version=version)[0],
 )
 
 optimize_delta = partial(lake_dml.optimize, DML)

@@ -46,10 +46,6 @@ from . import lake_dml
 _STATUS_DELETED = 2
 
 
-def is_iceberg_table(path: str) -> bool:
-    return os.path.isdir(os.path.join(path, "metadata"))
-
-
 def _metadata_file(path: str) -> str:
     md = os.path.join(path, "metadata")
     hint = os.path.join(md, "version-hint.text")
@@ -1986,7 +1982,22 @@ def read_iceberg_incremental(spark: SparkSession, table: str,
     return _apply_mor_deletes(spark, df, snap_to)
 
 
-# The lake_dml codec: what Iceberg alone decides for DML and maintenance.
+def _manifests(table: str) -> list[tuple[str, str, int]]:
+    """(file name, kind, bytes) of the manifest lists, manifests and
+    metadata files (the `lake_dml` codec's `manifests`)."""
+    md = os.path.join(table, "metadata")
+    rows = []
+    for fn in sorted(os.listdir(md)):
+        kind = ("manifest_list" if fn.startswith("snap-")
+                else "manifest" if fn.endswith(".avro")
+                else "metadata" if fn.endswith(".json") else None)
+        if kind:
+            rows.append((fn, kind, os.path.getsize(os.path.join(md, fn))))
+    return rows
+
+
+# The lake_dml codec: what Iceberg alone decides for DML, maintenance and
+# the engine's other lake statements.
 DML = lake_dml.Codec(
     resolve=_dml_snapshot,
     mode=lambda snap, verb: snap.properties.get(f"write.{verb}.mode",
@@ -1999,8 +2010,8 @@ DML = lake_dml.Codec(
          "optimize": "replace", "truncate": "delete"},
     at=lambda _spark, table, snapshot_id: resolve_snapshot(table,
                                                            snapshot_id),
-    files=lambda table, snap: sorted(os.path.relpath(p, table)
-                                     for p, _ in snap.files),
+    files=lambda table, snap: sorted((os.path.relpath(p, table), pv)
+                                     for p, pv in snap.files),
     properties=lambda snap: snap.properties,
     versions=lambda _spark, table: sorted(
         (s["snapshot-id"], s.get("timestamp-ms", 0))
@@ -2013,6 +2024,32 @@ DML = lake_dml.Codec(
     expire=_expire,
     restore=_restore,
     log_dirs=("metadata",),
+    name="iceberg",
+    read=read_iceberg,
+    # the writer is looked up at call time, so a wrapper installed on
+    # the module attribute sees every write
+    write=lambda *a, **kw: write_iceberg(*a, **kw),
+    partitioning=lambda snap: [
+        (pf["source"], pf["source"] if pf["transform"] == "identity"
+         else f"{pf['transform']}({pf['source']})")
+        for pf in snap.spec_fields],
+    file_stats=lambda snap: (
+        None if snap.deletes or snap.pos_deletes
+        else [snap.stats.get(p) for p, _ in snap.files]),
+    alter=lambda _spark, table, **kw: alter_iceberg(table, **kw),
+    change_column=change_iceberg_column,
+    set_properties=lambda _spark, table, props: set_iceberg_properties(
+        table, props),
+    rewrite_manifests=lambda _spark, table: rewrite_manifests_iceberg(table),
+    history=lambda table: [
+        (h["snapshot_id"], h["operation"], h["timestamp_ms"])
+        for h in iceberg_history(table)],
+    manifests=_manifests,
+    version_at=resolve_snapshot_at,
+    columns=lambda table, version: set(
+        _snapshot_meta(table, version).schema.fieldNames()),
+    scan=lambda spark, table, equality, version: plan_iceberg_scan(
+        spark, table, equality, snapshot_id=version)[0],
 )
 
 optimize_iceberg = partial(lake_dml.optimize, DML)

@@ -45,8 +45,8 @@ Maintenance half of the contract (reference: `OptimizeHandler.java`,
 - `at(spark, table, version)` -> the snapshot at `version` (None: the
   current one); an unknown version raises an error naming the table
   and the id.
-- `files(table, snapshot)` -> its live data files, table-relative,
-  sorted.
+- `files(table, snapshot)` -> `(table-relative file, partition
+  values)` of each live data file, sorted by file.
 - `properties(snapshot)` -> its table properties (`dremio.cluster_by`,
   `dremio.localsort` pick the OPTIMIZE layout).
 - `versions(spark, table)` -> `(version, timestamp_ms)` of every
@@ -62,6 +62,42 @@ Maintenance half of the contract (reference: `OptimizeHandler.java`,
   commit after `current` that restates `target`'s files, delete marks
   and schema.
 - `log_dirs` -> top-level directories the file sweep never enters.
+
+Statement half of the contract: the engine's other lake statements
+(reads, CTAS/INSERT, ALTER, the metadata table functions) call these
+and never branch on the format (reference: one format plugin per table
+format, `IcebergFormatPlugin` and `DeltaLakeFormatPlugin`, picked
+through one registration table, `FormatCreator.java`):
+
+- `name` -> "delta" or "iceberg" (SHOW CREATE TABLE's USING clause,
+  the `format` column of `table_snapshot` and VACUUM CATALOG).
+- `read(spark, table)` -> the current snapshot's rows, deletes applied.
+- `write(spark, df, table, mode=, partition_by=)` -> version: the
+  format's writer (`write_delta`, `write_iceberg`), looked up by module
+  attribute at call time so a wrapper installed on it sees the call.
+- `partitioning(snapshot)` -> `(source column, rendered field)` of
+  each partition field (`p`, `bucket[4](k)`).
+- `file_stats(snapshot)` -> each live data file's stats dict (None for
+  a file without one), or None when delete marks make a count from
+  metadata unsound.
+- `alter(spark, table, add=, drop=)`, `change_column(spark, table,
+  col, new_name, new_type)`, `set_properties(spark, table, props)`
+  (a None value unsets) and `rewrite_manifests(spark, table)`: the
+  metadata-only statements.
+- `history(table)` -> `(version, operation, timestamp_ms)` of every
+  commit the table keeps, oldest first.
+- `manifests(table)` -> `(file name, kind, bytes)` of the metadata
+  files behind the current state.
+- `version_at(table, timestamp_ms)` -> the last version at or before
+  that instant.
+- `columns(table, version)` -> the column names at `version`, from
+  the table metadata alone (no log replay, no manifest read).
+- `scan(spark, table, equality, version)` -> the rows at `version`,
+  with the live files pruned by `column -> value` equality bindings.
+
+`codec_of(path)` is the one rule for which format a path holds: a
+`_delta_log` directory is Delta, a `metadata/version-hint.text` file is
+Iceberg, anything else is no lake table.
 
 Fold rule: a copy-on-write commit that removes every live data file
 drops the table's delete marks with them (the rewritten files are read
@@ -128,13 +164,40 @@ class Codec:
     expire: Callable
     restore: Callable
     log_dirs: tuple
+    name: str
+    read: Callable
+    write: Callable
+    partitioning: Callable
+    file_stats: Callable
+    alter: Callable
+    change_column: Callable
+    set_properties: Callable
+    rewrite_manifests: Callable
+    history: Callable
+    manifests: Callable
+    version_at: Callable
+    columns: Callable
+    scan: Callable
 
 
 def codec(fmt: str) -> Codec:
     """The codec of a lake format name, "delta" or "iceberg"."""
     from . import delta, iceberg
 
-    return {"delta": delta.DML, "iceberg": iceberg.DML}[fmt]
+    for c in (delta.DML, iceberg.DML):
+        if c.name == fmt:
+            return c
+    raise ValueError(f"unsupported table format {fmt!r}")
+
+
+def codec_of(path: str) -> Codec | None:
+    """The codec of the lake table at `path`, or None when the path is
+    no lake table (module docstring)."""
+    if os.path.isdir(os.path.join(path, "_delta_log")):
+        return codec("delta")
+    if os.path.exists(os.path.join(path, "metadata", "version-hint.text")):
+        return codec("iceberg")
+    return None
 
 
 def _src_expr(expr: str, alias: str = "s") -> str:
@@ -204,7 +267,7 @@ def hit_files(codec: Codec, table: str, snap, rows: DataFrame) -> list[str]:
      .observe(obs, F.collect_set("__file").alias("files"))
      .write.format("noop").mode("overwrite").save())
     path_of = {os.path.basename(rel): rel
-               for rel in codec.files(table, snap)}
+               for rel, _ in codec.files(table, snap)}
     names = obs.get["files"]
     unknown = sorted(set(names) - path_of.keys())
     if unknown:
@@ -505,7 +568,7 @@ def optimize(codec: Codec, spark: SparkSession, table: str,
     OPTIMIZE ZORDER design."""
     snap = codec.resolve(spark, table, parent_snapshot)
     if where is None:
-        hits = codec.files(table, snap)
+        hits = [rel for rel, _ in codec.files(table, snap)]
     else:
         hits = hit_files(codec, table, snap, codec.live(
             spark, table, snap, True).where(where))
@@ -543,7 +606,8 @@ def truncate(codec: Codec, spark: SparkSession, table: str) -> int:
     if codec.cdf(snap):
         return delete(codec, spark, table, "true", COW)
     return codec.rewrite(spark, table, snap, codec.ops["truncate"],
-                         codec.files(table, snap), None, None, None)
+                         [rel for rel, _ in codec.files(table, snap)],
+                         None, None, None)
 
 
 def rollback(codec: Codec, spark: SparkSession, table: str,

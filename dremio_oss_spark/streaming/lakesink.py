@@ -135,7 +135,8 @@ def stream_upsert_delta(stream: DataFrame, table: str, keys: list[str],
     cardinality rule requires a unique source."""
     from pyspark.sql import functions as F
 
-    from ..sources.delta import is_delta_table, merge_into_delta, write_delta
+    from ..sources.delta import DML, merge_into_delta, write_delta
+    from ..sources.lake_dml import codec_of
 
     spark = stream.sparkSession
     n_batches = {"n": 0}
@@ -152,7 +153,7 @@ def stream_upsert_delta(stream: DataFrame, table: str, keys: list[str],
               [F.lit(1)]))
         uniq = (batch_df.withColumn("__rn", F.row_number().over(w))
                 .where(F.col("__rn") == 1).drop("__rn"))
-        if is_delta_table(table):
+        if codec_of(table) is DML:
             merge_into_delta(spark, table, uniq, on=keys)
         else:
             write_delta(spark, uniq, table)

@@ -154,6 +154,10 @@ def test_lakehouse_sql_dml_statements(spark, tmp_path):
     write_iceberg(spark, df, t2, partition_by=["p"])
     eng.sql(f"DELETE FROM '{t2}' WHERE k >= 18")
     eng.sql(f"UPDATE '{t2}' SET v = 7 WHERE k = 1")
+    eng.sql(f"ALTER TABLE '{t2}' ADD COLUMNS (tag string, w decimal(10,2))")
+    assert set(read_iceberg(spark, t2).columns) == {"k", "p", "v", "tag", "w"}
+    eng.sql(f"ALTER TABLE '{t2}' DROP COLUMN tag")
+    assert set(read_iceberg(spark, t2).columns) == {"k", "p", "v", "w"}
     eng.sql(f"OPTIMIZE TABLE '{t2}'")
     eng.sql(f"VACUUM TABLE '{t2}'")
     cur = read_iceberg(spark, t2)
@@ -203,6 +207,20 @@ def test_metadata_table_functions_and_rollback(spark, tmp_path):
     s1 = write_iceberg(spark, df, t2, partition_by=["p"])
     eng.sql(f"DELETE FROM '{t2}' WHERE k >= 25")
     assert read_iceberg(spark, t2).count() == 25
+    hist = eng.table_history(t2).collect()
+    assert [h["operation"] for h in hist] == ["overwrite", "delete"]
+    parts = eng.sql(
+        f"select * from table(table_partitions('{t2}')) order by partition"
+    ).collect()
+    assert len(parts) == 3 and all(r["n_files"] == 1 for r in parts)
+    files = eng.sql(
+        f"select * from table(table_files('{t2}'))").collect()
+    assert len(files) == 3 and all(f["size_bytes"] > 0 for f in files)
+    mans = eng.sql(
+        f"select * from table(table_manifests('{t2}'))").collect()
+    assert {m["kind"] for m in mans} == {"manifest_list", "manifest",
+                                         "metadata"}
+    assert sum(m["kind"] == "manifest_list" for m in mans) == 2
     eng.sql(f"ROLLBACK TABLE '{t2}' TO SNAPSHOT '{s1}'")
     assert read_iceberg(spark, t2).count() == 30
     snap2 = eng.sql(
@@ -516,30 +534,31 @@ def test_lake_select_prunes_from_where_equality(spark, tmp_path):
 
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources.delta import write_delta
+    from dremio_oss_spark.sources.iceberg import write_iceberg
 
     eng = Engine(spark)
-    t = str(tmp_path / "d")
     df = spark.range(1000).select(
         F.col("id").alias("k"),
         (F.col("id") / 100).cast("long").alias("p"),
         F.col("id").cast("double").alias("v"))
-    write_delta(spark, df.repartitionByRange(8, "k"), t,
-                partition_by=["p"])
-
-    r = eng.sql(f"select count(*) as c, sum(v) as s from '{t}' "
-                "where k = 137").collect()[0]
-    assert (r["c"], r["s"]) == (1, 137.0)
-    # float literal on an int partition column — numeric pv compare
-    assert eng.sql(f"select count(*) as c from '{t}' "
-                   "where p = 3.0").collect()[0]["c"] == 100
-    # OR disables pruning; result still exact
-    assert eng.sql(f"select count(*) as c from '{t}' "
-                   "where k = 3 or k = 500").collect()[0]["c"] == 2
-    # JOIN disables pruning; result still exact
     spark.createDataFrame([(0,), (1,)], "p long").createOrReplaceTempView(
         "prune_ps")
-    assert eng.sql(f"select count(*) as c from '{t}' join prune_ps "
-                   "using (p) where v >= 0").collect()[0]["c"] == 200
+    for write in (write_delta, write_iceberg):
+        t = str(tmp_path / write.__name__)
+        write(spark, df.repartitionByRange(8, "k"), t, partition_by=["p"])
+
+        r = eng.sql(f"select count(*) as c, sum(v) as s from '{t}' "
+                    "where k = 137").collect()[0]
+        assert (r["c"], r["s"]) == (1, 137.0)
+        # float literal on an int partition column — numeric pv compare
+        assert eng.sql(f"select count(*) as c from '{t}' "
+                       "where p = 3.0").collect()[0]["c"] == 100
+        # OR disables pruning; result still exact
+        assert eng.sql(f"select count(*) as c from '{t}' "
+                       "where k = 3 or k = 500").collect()[0]["c"] == 2
+        # JOIN disables pruning; result still exact
+        assert eng.sql(f"select count(*) as c from '{t}' join prune_ps "
+                       "using (p) where v >= 0").collect()[0]["c"] == 200
 
 
 def test_merge_statement_column_assignments(spark, tmp_path):
@@ -797,6 +816,7 @@ def test_external_query_sql_form_and_lake_describe(spark, tmp_path):
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources.delta import write_delta
     from dremio_oss_spark.sources.external import ExternalSource
+    from dremio_oss_spark.sources.iceberg import write_iceberg
 
     eng = Engine(spark)
     src = ExternalSource(
@@ -817,13 +837,14 @@ def test_external_query_sql_form_and_lake_describe(spark, tmp_path):
     finally:
         src.close()
 
-    t = str(tmp_path / "d")
     df = spark.createDataFrame([(1, 0, 1.0)], "k long, p long, v double")
-    write_delta(spark, df, t, partition_by=["p"])
-    desc = {r["col_name"]: (r["data_type"], r["comment"])
-            for r in eng.describe_table(t).collect()}
-    assert desc["k"][0] == "bigint"
-    assert desc["p"][1] == "partition key"
+    for write in (write_delta, write_iceberg):
+        t = str(tmp_path / write.__name__)
+        write(spark, df, t, partition_by=["p"])
+        desc = {r["col_name"]: (r["data_type"], r["comment"])
+                for r in eng.describe_table(t).collect()}
+        assert desc["k"][0] == "bigint"
+        assert desc["p"][1] == "partition key"
 
     # sys.materializations reflects the reflection store's footprint
     spark.range(50).selectExpr("id as k", "id * 2 as v") \
@@ -1124,7 +1145,8 @@ def test_count_star_answers_from_metadata(spark, tmp_path):
 
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources.delta import delete_from_delta, write_delta
-    from dremio_oss_spark.sources.iceberg import write_iceberg
+    from dremio_oss_spark.sources.iceberg import (delete_from_iceberg,
+                                                  write_iceberg)
 
     eng = Engine(spark)
     dt = str(tmp_path / "d")
@@ -1150,6 +1172,11 @@ def test_count_star_answers_from_metadata(spark, tmp_path):
         f"select count(*) as n from '{it}' where k < 10").first()["n"] == 10
     assert eng.last_count_from_metadata is None
 
+    # position deletes invalidate it on Iceberg too
+    delete_from_iceberg(spark, it, "k >= 25", mode="merge-on-read")
+    assert eng.sql(f"select count(*) as n from '{it}'").first()["n"] == 25
+    assert eng.last_count_from_metadata is None
+
 
 def test_explain_plan_for_dml_is_dry_run(spark, tmp_path):
     """EXPLAIN PLAN FOR <DML> (parserImpls.ftl SqlExplainQueryDML)
@@ -1159,17 +1186,21 @@ def test_explain_plan_for_dml_is_dry_run(spark, tmp_path):
 
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources.delta import read_delta, write_delta
+    from dremio_oss_spark.sources.iceberg import read_iceberg, write_iceberg
 
     eng = Engine(spark)
-    t = str(tmp_path / "t")
-    write_delta(spark, spark.range(20).select(F.col("id").alias("k")), t)
+    for fmt, write, read in (("delta", write_delta, read_delta),
+                             ("iceberg", write_iceberg, read_iceberg)):
+        t = str(tmp_path / fmt)
+        write(spark, spark.range(20).select(F.col("id").alias("k")), t)
 
-    out = {r["aspect"]: r["detail"] for r in eng.sql(
-        f"EXPLAIN PLAN FOR DELETE FROM '{t}' WHERE k < 5").collect()}
-    assert out["format"] == "delta" and "DELETE" in out["action"]
-    assert "k < 5" in out["predicate"]
-    assert "Scan" in out["hit_scan_plan"] or "FileScan" in out["hit_scan_plan"]
-    assert read_delta(spark, t).count() == 20  # nothing executed
+        out = {r["aspect"]: r["detail"] for r in eng.sql(
+            f"EXPLAIN PLAN FOR DELETE FROM '{t}' WHERE k < 5").collect()}
+        assert out["format"] == fmt and "DELETE" in out["action"]
+        assert "k < 5" in out["predicate"]
+        assert ("Scan" in out["hit_scan_plan"]
+                or "FileScan" in out["hit_scan_plan"])
+        assert read(spark, t).count() == 20  # nothing executed
 
     q = eng.sql("EXPLAIN PLAN FOR select 1 as x").first()
     assert q["aspect"] == "plan" and "Project" in q["detail"]
@@ -1658,32 +1689,36 @@ def test_merge_using_path_and_subquery(spark, tmp_path):
 
     from dremio_oss_spark.engine import Engine
     from dremio_oss_spark.sources.delta import read_delta, write_delta
+    from dremio_oss_spark.sources.iceberg import read_iceberg, write_iceberg
 
     eng = Engine(spark)
-    t = str(tmp_path / "t")
-    s = str(tmp_path / "s")
-    write_delta(spark, spark.range(10).select(
-        F.col("id").alias("k"), F.col("id").cast("double").alias("v")), t)
-    write_delta(spark, spark.createDataFrame(
-        [(2, 22.0), (50, 500.0)], "k long, v double"), s)
+    for write, read in ((write_delta, read_delta),
+                        (write_iceberg, read_iceberg)):
+        t = str(tmp_path / write.__name__ / "t")
+        s = str(tmp_path / write.__name__ / "s")
+        write(spark, spark.range(10).select(
+            F.col("id").alias("k"), F.col("id").cast("double").alias("v")),
+            t)
+        write(spark, spark.createDataFrame(
+            [(2, 22.0), (50, 500.0)], "k long, v double"), s)
 
-    # USING '<path>'
-    eng.sql(f"MERGE INTO '{t}' USING '{s}' ON k = k "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *")
-    cur = read_delta(spark, t)
-    assert cur.count() == 11
-    assert cur.where("k = 2").collect()[0]["v"] == 22.0
-    assert cur.where("k = 50").count() == 1
+        # USING '<path>'
+        eng.sql(f"MERGE INTO '{t}' USING '{s}' ON k = k "
+                "WHEN MATCHED THEN UPDATE SET * "
+                "WHEN NOT MATCHED THEN INSERT *")
+        cur = read(spark, t)
+        assert cur.count() == 11
+        assert cur.where("k = 2").collect()[0]["v"] == 22.0
+        assert cur.where("k = 50").count() == 1
 
-    # USING (subquery)
-    eng.sql(f"MERGE INTO '{t}' USING "
-            f"(select k, v * 10 as v from '{s}') src ON k = k "
-            "WHEN MATCHED THEN UPDATE SET *")
-    cur = read_delta(spark, t)
-    assert cur.count() == 11
-    assert cur.where("k = 2").collect()[0]["v"] == 220.0
-    assert cur.where("k = 50").collect()[0]["v"] == 5000.0
+        # USING (subquery)
+        eng.sql(f"MERGE INTO '{t}' USING "
+                f"(select k, v * 10 as v from '{s}') src ON k = k "
+                "WHEN MATCHED THEN UPDATE SET *")
+        cur = read(spark, t)
+        assert cur.count() == 11
+        assert cur.where("k = 2").collect()[0]["v"] == 220.0
+        assert cur.where("k = 50").collect()[0]["v"] == 5000.0
 
 
 def test_merge_user_source_alias(spark, tmp_path):

@@ -201,11 +201,8 @@ def test_delta_reader_partitions_checkpoint_history(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from dremio_oss_spark.sources.delta import (
-        delta_history,
-        is_delta_table,
-        read_delta,
-    )
+    from dremio_oss_spark.sources.delta import delta_history, read_delta
+    from dremio_oss_spark.sources.lake_dml import codec_of
 
     t = str(tmp_path / "dt")
     os.makedirs(os.path.join(t, "_delta_log"))
@@ -239,7 +236,7 @@ def test_delta_reader_partitions_checkpoint_history(spark, tmp_path):
         {"add": {"path": fb, "partitionValues": {"k": "b"}, "size": 1,
                  "modificationTime": 0, "dataChange": True}},
     ])
-    assert is_delta_table(t)
+    assert codec_of(t).name == "delta"
     got = {(r["id"], r["k"], r["v"]) for r in read_delta(spark, t).collect()}
     assert got == {(1, "a", 10), (2, "a", 20), (3, "b", 30)}
 
@@ -280,6 +277,32 @@ def test_delta_reader_partitions_checkpoint_history(spark, tmp_path):
     assert hist[1]["operation"] == "DELETE"
 
 
+def test_codec_of_refuses_plain_parquet_dirs(spark, tmp_path):
+    """One rule decides which lake format a path holds: a `_delta_log`
+    directory is Delta, a `metadata/version-hint.text` file is Iceberg.
+    A plain parquet directory is neither, with or without a `metadata/`
+    subdirectory, so lake statements leave it alone."""
+    import os
+
+    from dremio_oss_spark.engine import Engine
+    from dremio_oss_spark.sources.lake_dml import codec_of
+
+    plain = str(tmp_path / "plain")
+    spark.range(3).write.parquet(plain)
+    assert codec_of(plain) is None
+
+    with_md = str(tmp_path / "with_md")
+    spark.range(3).write.parquet(with_md)
+    os.makedirs(os.path.join(with_md, "metadata"))
+    assert codec_of(with_md) is None
+
+    eng = Engine(spark)
+    for path in (plain, with_md):
+        assert eng._lake_statement(f"DELETE FROM '{path}'") is None
+        with pytest.raises(ValueError, match="not a lakehouse table"):
+            eng.table_snapshot(path)
+
+
 def test_iceberg_reader_partitions_snapshots_history(spark, tmp_path):
     """Iceberg metadata reader: vN.metadata.json + Avro manifest list +
     manifests, identity partition values, snapshot time travel, history
@@ -289,11 +312,8 @@ def test_iceberg_reader_partitions_snapshots_history(spark, tmp_path):
     import os
 
     from dremio_oss_spark.sources.avro_codec import write_avro_file
-    from dremio_oss_spark.sources.iceberg import (
-        iceberg_history,
-        is_iceberg_table,
-        read_iceberg,
-    )
+    from dremio_oss_spark.sources.iceberg import iceberg_history, read_iceberg
+    from dremio_oss_spark.sources.lake_dml import codec_of
 
     t = str(tmp_path / "it")
     os.makedirs(os.path.join(t, "metadata"))
@@ -390,7 +410,7 @@ def test_iceberg_reader_partitions_snapshots_history(spark, tmp_path):
     with open(os.path.join(t, "metadata", "version-hint.text"), "w") as fh:
         fh.write("2")
 
-    assert is_iceberg_table(t)
+    assert codec_of(t).name == "iceberg"
     head = {(r["id"], r["v"], r["k"]) for r in read_iceberg(spark, t).collect()}
     assert head == {(1, 10, "a"), (2, 20, "a")}  # partition b tombstoned
     v1 = {(r["id"], r["k"]) for r in read_iceberg(spark, t, snapshot_id=1).collect()}
