@@ -1909,8 +1909,7 @@ class Engine:
         """Why a path reflection's refresh cannot fold the table's change
         rows (None: it can).  The fold needs signable measures
         (SUM/COUNT with a COUNT(*)), one table, a base version, and a
-        change source: Iceberg derives one from its snapshots, Delta
-        needs `delta.enableChangeDataFeed`."""
+        table that hands out its changes (the codec's `no_feed`)."""
         from .plans.reflections import unsignable_reason
 
         if getattr(refl, "joins", ()) or not hasattr(refl, "measures"):
@@ -1920,11 +1919,7 @@ class Engine:
             return reason
         if refl.base_version is None:
             return "no base version"
-        codec = codec_of(path)
-        if (codec.name == "delta"
-                and not codec.cdf(codec.at(self.spark, path, None))):
-            return "delta.enableChangeDataFeed is not set"
-        return None
+        return codec_of(path).no_feed(self.spark, path)
 
     def _refresh_path_reflection(self, store, refl, path: str) -> None:
         """Commit-driven refresh of a path-anchored reflection: fold the
@@ -1938,10 +1933,7 @@ class Engine:
         reason = self._fold_blocker(refl, path)
         if reason is None:
             try:
-                if codec_of(path).name == "delta":
-                    store.cdf_incremental_refresh(refl.name, path)
-                else:
-                    store.changelog_incremental_refresh(refl.name, path)
+                store.snapshot_incremental_refresh(refl.name, path)
                 refl.stale = False
                 refl.refresh_mode, refl.refresh_reason = "incremental", None
                 return

@@ -1048,6 +1048,46 @@ class ReflectionStore:
             refl.watermark = wm
             self._write_meta(refl)
 
+    def _merge_partials(self, refl: Reflection, rows: DataFrame,
+                        partials, keep: F.Column | None = None) -> int:
+        """Merge `partials(rows)` into the current materialization as its
+        next generation, and return the number of `rows`.
+
+        One pass over `rows`: their count rides the merge write as an
+        observed metric instead of a separate count() scan.  Zero rows
+        discard the staged rewrite (the existing partials regrouped, an
+        identity), so the refresh stays metadata-only: no generation
+        bump, no plan-cache invalidation.  Under a sort layout,
+        repartitionByRange's sampling pass re-executes the child inside
+        the same execution and would count twice, so the rows are
+        counted first.  `keep` filters the merged groups."""
+        obs = None
+        if refl.sort_by:
+            n = rows.count()
+            if n == 0:
+                return 0
+        else:
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            rows = rows.observe(obs, F.count(F.lit(1)).alias("n"))
+        delta = partials(rows)
+        existing = self._read_data(self._data_dir(refl))
+        merged = existing.unionByName(delta).groupBy(*refl.dims).agg(
+            *[_ROLLUP[m.kind](F.col(m.name)).alias(m.name)
+              for m in refl.measures])
+        if keep is not None:
+            merged = merged.where(keep)
+        new_dir, old_g = self._stage_data(
+            refl, lambda p: self._write_data(refl, merged, p))
+        if obs is not None:
+            n = int(obs.get["n"])
+            if n == 0:
+                self._forget(new_dir)
+                return 0
+        self._commit_staged(refl, old_g)
+        return n
+
     def incremental_refresh(self, refl_name: str, source: DataFrame) -> int:
         """Append-based refresh: aggregate only rows past the watermark,
         then merge partials with the existing materialization
@@ -1056,16 +1096,13 @@ class ReflectionStore:
         if not refl.watermark_col:
             raise ValueError("reflection has no watermark column")
         new_rows = source.where(F.col(refl.watermark_col) > F.lit(refl.watermark))
-        # One pass over the new rows: the folded-row count AND the new
-        # watermark ride the merge write as observed metrics instead of
-        # separate count()/max() scans (same shape as
-        # _fold_signed_changes; gated off under a sort layout, whose
-        # range-sampling pass would double-count).  The watermark
+        # The new watermark rides the merge write as an observed metric
+        # too (not under a sort layout: see _merge_partials).  It
         # observes the PRE-FILTER frame: when any filtered row folds,
-        # max(source rows > old wm) == max(source) — the value the old
-        # separate max() scan stored; on n == 0 the old watermark is
-        # kept, exactly as before.
-        obs_wm = obs = None
+        # max(source rows > old wm) == max(source).  Zero folded rows
+        # KEEP the stored watermark: max(source) could sit below it for
+        # a narrower source, and re-folding the gap would double-count.
+        obs_wm = None
         if not refl.sort_by:
             from pyspark.sql import Observation
 
@@ -1074,255 +1111,83 @@ class ReflectionStore:
                 obs_wm, F.max(F.col(refl.watermark_col)).alias("wm"))
         for f in refl.filters:
             new_rows = new_rows.where(f)
-        if not refl.sort_by:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_rows = new_rows.observe(
-                obs, F.count(F.lit(1)).alias("n"))
-        else:
-            n_new = new_rows.count()
-            if n_new == 0:
-                return 0
-        delta = self._aggregate(new_rows, refl)
-        existing = self._read_data(self._data_dir(refl))
-        merged = existing.unionByName(delta).groupBy(*refl.dims).agg(
-            *[
-                _ROLLUP[m.kind](F.col(m.name)).alias(m.name)
-                for m in refl.measures
-            ]
-        )
-        if obs is not None:
-            # stage, then consult the observed count: zero new rows
-            # discards the staged (identical) rewrite — metadata-only,
-            # like the old count()-first early exit — and KEEPS the
-            # stored watermark (max(source) here could sit BELOW it
-            # for a narrower source and re-folding the gap later would
-            # double-count); nonzero commits the new generation
-            new_dir, old_g = self._stage_data(
-                refl, lambda p: self._write_data(refl, merged, p))
-            n_new = int(obs.get["n"])
-            if n_new == 0:
-                self._forget(new_dir)
-                return 0
-            self._commit_staged(refl, old_g)
-            wm = obs_wm.get["wm"]
-        else:
-            self._publish_data(
-                refl, lambda p: self._write_data(refl, merged, p))
-            wm = source.agg(F.max(refl.watermark_col)).collect()[0][0]
-        refl.watermark = wm
+        n_new = self._merge_partials(
+            refl, new_rows, lambda rows: self._aggregate(rows, refl))
+        if n_new == 0:
+            return 0
+        refl.watermark = (
+            obs_wm.get["wm"] if obs_wm is not None else
+            source.agg(F.max(refl.watermark_col)).collect()[0][0])
         self._write_meta(refl)
         self._stamp(refl)
         return n_new
 
-    def cdf_incremental_refresh(self, refl_name: str,
-                                table_path: str) -> int:
-        """CDC-driven incremental refresh over a CDF-enabled Delta
-        table: unlike append-only snapshot refresh, this maintains the
-        materialization under DELETE/UPDATE/MERGE too, by folding SIGNED
-        partials from the change feed — insert/update_postimage rows add
-        to the aggregates, delete/update_preimage rows subtract.
+    def snapshot_incremental_refresh(self, refl_name: str,
+                                     table_path: str) -> int:
+        """Fold a lake table's row changes since the version the
+        materialization was built at (`refl.base_version`) into it, and
+        advance that version to the table's head: the reference's
+        snapshot-diff incremental refresh
+        (`IncrementalUpdateServiceUtils.java:46`).  The table's codec
+        hands out the changes (`lake_dml` change-feed contract), so the
+        fold is the same on Delta and Iceberg, and reads only the files
+        the commits since then touched, never the whole table.
 
-        Contract: measures must be signable (SUM/COUNT — MIN/MAX can't
-        be maintained under deletes without the base rows) and must
-        include a COUNT so fully-emptied groups are detectable and
-        dropped.  Returns the number of change rows folded in.
-
-        Scale: reads ONLY the cdc files of the new commits (log
-        metadata lists them) — the base table is never rescanned, which
-        at 100 TB is the difference between a CDC-sized job and a full
-        rebuild."""
-        from ..sources.delta import read_delta_cdf, resolve_snapshot
-
-        refl = self._reflections[refl_name]
-        self._check_signable(refl)
-        head = resolve_snapshot(self.spark, table_path).version
-        if refl.base_version is None:
-            # Folding from version 0 would re-apply the table's entire
-            # change history on top of an already-built materialization,
-            # double-counting every group (same guard as the Iceberg twin).
-            raise ValueError("set refl.base_version to the Delta version the "
-                             "materialization was built at")
-        start = int(refl.base_version) + 1
-        if start > head:
-            return 0
-        ch = read_delta_cdf(self.spark, table_path, start, head)
-        return self._fold_signed_changes(refl, ch, head)
-
-    def changelog_incremental_refresh(self, refl_name: str,
-                                      table_path: str) -> int:
-        """Iceberg twin of cdf_incremental_refresh, fed by the
-        changelog scan: inserts add, deletes subtract.  COW carryover
-        rows (the same row emitted as delete AND insert) cancel exactly
-        in the signed fold, so the maintenance stays correct without
-        row lineage.  Same SUM/COUNT-only contract."""
-        from ..sources.iceberg import read_iceberg_changes, resolve_snapshot
+        The fold is SIGNED: inserted and post-image rows add to the
+        partials, deleted and pre-image rows subtract.  A copy-on-write
+        rewrite's carryover rows (deleted and re-inserted unchanged)
+        cancel exactly.  So measures must be signable (SUM/COUNT; MIN,
+        MAX and NDV cannot be maintained under deletes), with a
+        COUNT(*) that drops groups whose rows were all deleted.
+        Returns the number of change rows folded; no new commit folds
+        nothing, returns 0 and still stamps the refresh."""
+        from ..sources.lake_dml import codec_of
 
         refl = self._reflections[refl_name]
-        self._check_signable(refl)
-        head = resolve_snapshot(table_path).snapshot_id
-        start = refl.base_version
-        if start is None:
-            raise ValueError("set refl.base_version to the snapshot the "
-                             "materialization was built at")
-        if int(start) == head:
-            return 0
-        ch = read_iceberg_changes(self.spark, table_path, int(start), head)
-        return self._fold_signed_changes(refl, ch, head)
-
-    @staticmethod
-    def _check_signable(refl: Reflection) -> None:
         reason = unsignable_reason(refl.measures)
         if reason is not None:
             raise ValueError(reason)
-
-    def _fold_signed_changes(self, refl: Reflection, ch: DataFrame,
-                             head) -> int:
-        for f in refl.filters:
-            ch = ch.where(f)
-        # One pass over the change feed: the change-row count rides the
-        # fold's own execution as an observed metric instead of a
-        # separate ch.count() scan — at CDC scale that halves the feed
-        # reads (and locally removes one fixed-cost job per refresh).
-        # Gated off when the materialization layout needs a range sort:
-        # repartitionByRange's sampling pass re-executes the child plan
-        # inside the same execution and would double-count the metric.
-        obs = None
-        if not refl.sort_by:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            ch = ch.observe(obs, F.count(F.lit(1)).alias("n"))
-        else:
-            n_changes = ch.count()
-            if n_changes == 0:
-                refl.base_version = head
-                self._write_meta(refl)
-                self._stamp(refl)  # verified current against the head
-                return 0
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1)).otherwise(F.lit(-1))
-        aggs = []
-        count_name = None
-        for m in refl.measures:
-            if m.kind == "count":
-                if m.col == "*":
-                    count_name = m.name
+        if refl.base_version is None:
+            # folding from the table's first version would re-apply its
+            # whole history on top of a built materialization
+            raise ValueError("set refl.base_version to the version the "
+                             "materialization was built at")
+        codec = codec_of(table_path)
+        head = codec.at(self.spark, table_path, None).version
+        n = 0
+        if head != int(refl.base_version):
+            ch = codec.changes(self.spark, table_path, int(refl.base_version),
+                               head)
+            for f in refl.filters:
+                ch = ch.where(f)
+            sign = F.when(
+                F.col("_change_type").isin("insert", "update_postimage"),
+                F.lit(1)).otherwise(F.lit(-1))
+            aggs = []
+            for m in refl.measures:
+                if m.kind == "sum":
+                    aggs.append(F.sum(m.column.cast("decimal(28,4)") * sign)
+                                .alias(m.name))
+                elif m.col == "*":
                     aggs.append(F.sum(sign).alias(m.name))
                 else:  # null-aware: only non-null values carry a delta
                     aggs.append(F.sum(
                         sign * m.column.isNotNull().cast("long"))
                         .alias(m.name))
-            else:  # sum
-                aggs.append(
-                    F.sum(m.column.cast("decimal(28,4)") * sign)
-                    .alias(m.name))
-        delta = ch.groupBy(*self._group_keys(refl)).agg(*aggs)
-        existing = self._read_data(self._data_dir(refl))
-        merged = (existing.unionByName(delta).groupBy(*refl.dims).agg(
-            *[_ROLLUP[m.kind](F.col(m.name)).alias(m.name)
-              for m in refl.measures])
-            .where(F.col(count_name) > 0))
-        if obs is not None:
-            # stage the merged write, then consult the observed change
-            # count that rode it: zero matching changes discards the
-            # staged (provably identical — existing regrouped is an
-            # identity, every stored group keeps count(*) > 0) rewrite
-            # and the refresh stays metadata-only, exactly like the old
-            # count()-first early exit; nonzero flips the generation.
-            new_dir, old_g = self._stage_data(
-                refl, lambda p: self._write_data(refl, merged, p))
-            n_changes = int(obs.get["n"])
-            if n_changes == 0:
-                self._forget(new_dir)
-            else:
-                self._commit_staged(refl, old_g)
-        else:
-            self._publish_data(
-                refl, lambda p: self._write_data(refl, merged, p))
-        refl.base_version = head
-        self._write_meta(refl)
-        self._stamp(refl)
-        return n_changes
-
-    def snapshot_incremental_refresh(self, refl_name: str,
-                                     table_path: str) -> int:
-        """Snapshot-based incremental refresh over a LAKEHOUSE table:
-        aggregate only the files added since the reflection's recorded
-        snapshot/version (snapshot diff — `read_*_incremental`), merge
-        partials into the materialization, advance the recorded
-        snapshot.  This is the reference's Iceberg-based incremental
-        refresh method (`IncrementalUpdateServiceUtils.java:46`,
-        REFRESH_METHOD snapshot diff; append-only contract).  Returns
-        the number of new rows folded in."""
-        from ..sources import delta
-        from ..sources.iceberg import read_iceberg_incremental
-        from ..sources.lake_dml import codec_of
-
-        refl = self._reflections[refl_name]
-        codec = codec_of(table_path)
-        head = codec.at(self.spark, table_path, None).version
-        if codec is delta.DML:
-            base = refl.base_version if refl.base_version is not None else -1
-            if head == base:
-                return 0
-            new_rows = delta.read_delta_incremental(
-                self.spark, table_path,
-                from_version=base if base >= 0 else 0,
-                to_version=head) if base >= 0 else None
-        else:
-            base = refl.base_version
-            if head == base:
-                return 0
-            new_rows = (read_iceberg_incremental(
-                self.spark, table_path, from_snapshot=base,
-                to_snapshot=head) if base is not None else None)
-        if new_rows is None:
-            # first refresh: full build from the table head
-            src = codec.read(self.spark, table_path)
-            for f in refl.filters:
-                src = src.where(f)
-            self._full_refresh(refl, src)
+            n = self._merge_partials(
+                refl, ch,
+                lambda rows: rows.groupBy(*self._group_keys(refl)).agg(*aggs),
+                keep=F.col(Measure("count", "*").name) > 0)
             refl.base_version = head
             self._write_meta(refl)
-            return -1  # full build marker
-        for f in refl.filters:
-            new_rows = new_rows.where(f)
-        if not refl.sort_by:
-            # one pass: count rides the merge write (see
-            # _fold_signed_changes); zero new rows discards the staged
-            # (identical) rewrite so a no-op refresh stays metadata-only
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_rows = new_rows.observe(
-                obs, F.count(F.lit(1)).alias("n"))
-            delta = self._aggregate(new_rows, refl)
-            existing = self._read_data(self._data_dir(refl))
-            merged = existing.unionByName(delta).groupBy(*refl.dims).agg(
-                *[_ROLLUP[m.kind](F.col(m.name)).alias(m.name)
-                  for m in refl.measures])
-            new_dir, old_g = self._stage_data(
-                refl, lambda p: self._write_data(refl, merged, p))
-            n_new = int(obs.get["n"])
-            if n_new == 0:
-                self._forget(new_dir)
-            else:
-                self._commit_staged(refl, old_g)
-        elif (n_new := new_rows.count()):
-            delta = self._aggregate(new_rows, refl)
-            existing = self._read_data(self._data_dir(refl))
-            merged = existing.unionByName(delta).groupBy(*refl.dims).agg(
-                *[_ROLLUP[m.kind](F.col(m.name)).alias(m.name)
-                  for m in refl.measures])
-            self._publish_data(
-                refl, lambda p: self._write_data(refl, merged, p))
-        refl.base_version = head
-        self._write_meta(refl)
         self._stamp(refl)
-        return n_new
+        return n
+
+    # perfbench/tracing.py wraps these two names, looked up in this
+    # class's __dict__, so deleting them would make every traced
+    # benchmark run raise KeyError; they stay bound to the one fold.
+    cdf_incremental_refresh = snapshot_incremental_refresh
+    changelog_incremental_refresh = snapshot_incremental_refresh
 
     def _write_meta(self, refl: Reflection) -> None:
         with open(os.path.join(refl.path, "meta.json"), "w") as f:

@@ -1840,29 +1840,6 @@ def change_delta_column(spark: SparkSession, table: str, col: str,
                        partition_by=snap.partition_cols)
 
 
-def read_delta_incremental(spark: SparkSession, table: str,
-                           from_version: int,
-                           to_version: int | None = None) -> DataFrame:
-    """Incremental scan: rows in files ADDED between two versions
-    (exclusive of `from_version`, inclusive of `to_version`).
-
-    This is the snapshot-diff primitive behind append-based incremental
-    reflection refresh (reference
-    `IncrementalUpdateServiceUtils.java:46`): for append-only history
-    the result is exactly the new rows; a COW rewrite surfaces the
-    rewritten files' rows (the refresh contract is append-only — same
-    as the reference's).  Plan cost is O(new files), never a rescan of
-    the table."""
-    before = set(resolve_snapshot(spark, table, from_version).files)
-    snap_to = resolve_snapshot(spark, table, to_version)
-    new_files = {rel: pv for rel, pv in snap_to.files.items()
-                 if rel not in before}
-    if not new_files:
-        return meta_df(spark, [], snap_to.schema)
-    return _scan_with_partition_values(
-        spark, table, snap_to.schema, snap_to.partition_cols, new_files)
-
-
 def _referenced(spark: SparkSession, table: str, version: int) -> set[str]:
     """Realpaths of the data files and deletion-vector files `version`
     reads (the `lake_dml` codec's `referenced`)."""
@@ -1920,6 +1897,11 @@ DML = lake_dml.Codec(
     expire=lambda _table, _kept: None,
     restore=_restore,
     log_dirs=(_LOG_DIR, "_change_data"),
+    changes=lambda spark, table, v0, v1: read_delta_cdf(
+        spark, table, v0 + 1, v1),
+    no_feed=lambda spark, table: (
+        None if _cdf_enabled(resolve_snapshot(spark, table))
+        else "delta.enableChangeDataFeed is not set"),
     name="delta",
     read=read_delta,
     # the writer is looked up at call time, so a wrapper installed on

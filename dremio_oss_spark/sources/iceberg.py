@@ -1958,30 +1958,6 @@ def iceberg_history(table: str) -> list[dict]:
     ]
 
 
-def read_iceberg_incremental(spark: SparkSession, table: str,
-                             from_snapshot: int,
-                             to_snapshot: int | None = None) -> DataFrame:
-    """Incremental scan between snapshots: rows in data files present at
-    `to_snapshot` but not at `from_snapshot` — the Iceberg
-    snapshot-diff the reference's incremental reflection refresh reads
-    (`IncrementalUpdateServiceUtils.java:46`; append-only contract).
-    O(new files) scan; current-snapshot deletes apply."""
-    before = {os.path.realpath(p)
-              for p, _ in resolve_snapshot(table, from_snapshot).files}
-    snap_to = resolve_snapshot(table, to_snapshot)
-    new_files = {p: pv for p, pv in snap_to.files
-                 if os.path.realpath(p) not in before}
-    if not new_files:
-        return meta_df(spark, [], snap_to.schema)
-    from .delta import _scan_with_partition_values
-
-    has_pos = bool(snap_to.pos_deletes)
-    df = _scan_with_partition_values(
-        spark, table, snap_to.schema, snap_to.partition_cols, new_files,
-        keep_file=has_pos or _eq_seq_aware(snap_to), keep_pos=has_pos)
-    return _apply_mor_deletes(spark, df, snap_to)
-
-
 def _manifests(table: str) -> list[tuple[str, str, int]]:
     """(file name, kind, bytes) of the manifest lists, manifests and
     metadata files (the `lake_dml` codec's `manifests`)."""
@@ -2024,6 +2000,8 @@ DML = lake_dml.Codec(
     expire=_expire,
     restore=_restore,
     log_dirs=("metadata",),
+    changes=read_iceberg_changes,
+    no_feed=lambda _spark, _table: None,
     name="iceberg",
     read=read_iceberg,
     # the writer is looked up at call time, so a wrapper installed on

@@ -63,6 +63,21 @@ Maintenance half of the contract (reference: `OptimizeHandler.java`,
   and schema.
 - `log_dirs` -> top-level directories the file sweep never enters.
 
+Change-feed half of the contract (reference: Dremio folds a table's
+changes since the materialization's snapshot into a reflection,
+`IncrementalUpdateServiceUtils.java:46`):
+
+- `changes(spark, table, from_version, to_version)` -> the row changes
+  of the commits after `from_version` up to `to_version`: the table's
+  columns plus `_change_type`, where `insert` and `update_postimage`
+  rows add and `delete` and `update_preimage` rows subtract.  Delta
+  reads its change data feed (`read_delta_cdf`, whose own start
+  version is inclusive); Iceberg derives the rows from the snapshot
+  diff and its delete files (`read_iceberg_changes`).
+- `no_feed(spark, table)` -> why the table hands out no `changes` at
+  its current version (None: it does): "delta.enableChangeDataFeed is
+  not set" on a Delta table without the change data feed.
+
 Statement half of the contract: the engine's other lake statements
 (reads, CTAS/INSERT, ALTER, the metadata table functions) call these
 and never branch on the format (reference: one format plugin per table
@@ -164,6 +179,8 @@ class Codec:
     expire: Callable
     restore: Callable
     log_dirs: tuple
+    changes: Callable
+    no_feed: Callable
     name: str
     read: Callable
     write: Callable

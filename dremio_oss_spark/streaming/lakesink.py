@@ -103,10 +103,11 @@ def stream_delta_cdf(spark: SparkSession, table: str) -> DataFrame:
     they land (delta-spark's readChangeFeed in streaming mode).
 
     The file source checkpoints which cdc files it has consumed, so a
-    downstream CDC pipeline (the natural feed for cdf_incremental_refresh
-    or an upsert sink on another table) resumes exactly where it left
-    off.  Pure appends emit no cdc files — an append-heavy CDC consumer
-    pairs this with the add-derived inserts of batch read_delta_cdf."""
+    downstream CDC pipeline (an upsert sink on another table) resumes
+    exactly where it left off.  The reflection fold reads the batch
+    feed instead (`read_delta_cdf`, the Delta codec's `changes`).  Pure
+    appends emit no cdc files — an append-heavy CDC consumer pairs this
+    with the add-derived inserts of batch read_delta_cdf."""
     from ..sources.delta import resolve_snapshot
 
     snap = resolve_snapshot(spark, table)

@@ -365,38 +365,38 @@ def test_partial_reflection_requires_query_filter(spark, tmp_path):
 
 
 def test_snapshot_incremental_refresh_lake_tables(spark, tmp_path):
-    """Snapshot-based incremental refresh (the reference's Iceberg
-    snapshot-diff refresh method): first call builds full, later calls
-    aggregate ONLY files added since the recorded snapshot and merge
-    partials; a no-change table refreshes for free."""
+    """The lake fold over an append-only history (the reference's
+    snapshot-diff refresh method): it folds ONLY the rows of files
+    added since the recorded version, on Delta and Iceberg alike; a
+    no-change table refreshes for free; an unset base version raises
+    instead of re-folding the whole history."""
+    import pytest
     from pyspark.sql import functions as F
 
     from dremio_oss_spark.plans import Measure
     from dremio_oss_spark.plans.reflections import ReflectionStore
-    from dremio_oss_spark.sources.delta import (
-        read_delta_incremental, write_delta)
-    from dremio_oss_spark.sources.iceberg import (
-        read_iceberg_incremental, write_iceberg)
+    from dremio_oss_spark.sources import delta, iceberg
 
     store = ReflectionStore(spark, str(tmp_path / "refl"))
     t = str(tmp_path / "d")
     df = spark.range(100).select(
         (F.col("id") % 5).alias("g"), F.col("id").cast("double").alias("v"))
-    write_delta(spark, df, t)
+    delta.write_delta(spark, df, t, enable_cdf=True)
 
     refl = store.create_aggregation_reflection(
-        "by_g", spark.read.parquet(*[]) if False else
-        spark.createDataFrame([], df.schema), "tbl", ["g"],
+        "by_g", delta.read_delta(spark, t), "tbl", ["g"],
         [Measure("sum", "v"), Measure("count", "*")])
-    assert store.snapshot_incremental_refresh("by_g", t) == -1  # full build
+    with pytest.raises(ValueError, match="base_version"):
+        store.snapshot_incremental_refresh("by_g", t)
+    v0 = refl.base_version = delta.DML.at(spark, t, None).version
     mat = store.load_materialization("by_g")
     assert mat.agg(F.sum("count_all")).collect()[0][0] == 100
 
     # append 50 rows -> only those fold in
     extra = spark.range(100, 150).select(
         (F.col("id") % 5).alias("g"), F.col("id").cast("double").alias("v"))
-    write_delta(spark, extra, t, mode="append")
-    assert read_delta_incremental(spark, t, from_version=0).count() == 50
+    v1 = delta.write_delta(spark, extra, t, mode="append")
+    assert delta.DML.changes(spark, t, v0, v1).count() == 50
     assert store.snapshot_incremental_refresh("by_g", t) == 50
     mat = store.load_materialization("by_g")
     assert mat.agg(F.sum("count_all")).collect()[0][0] == 150
@@ -405,17 +405,16 @@ def test_snapshot_incremental_refresh_lake_tables(spark, tmp_path):
     # no new commits -> zero-cost refresh
     assert store.snapshot_incremental_refresh("by_g", t) == 0
 
-    # iceberg side: incremental reader sees exactly the appended rows
+    # iceberg side: the change feed holds exactly the appended rows
     t2 = str(tmp_path / "i")
-    s1 = write_iceberg(spark, df, t2)
-    write_iceberg(spark, extra, t2, mode="append")
-    inc = read_iceberg_incremental(spark, t2, from_snapshot=s1)
-    assert inc.count() == 50
+    s1 = iceberg.write_iceberg(spark, df, t2)
+    s2 = iceberg.write_iceberg(spark, extra, t2, mode="append")
+    assert iceberg.DML.changes(spark, t2, s1, s2).count() == 50
     refl2 = store.create_aggregation_reflection(
-        "by_g2", spark.createDataFrame([], df.schema), "tbl2", ["g"],
+        "by_g2", iceberg.read_iceberg(spark, t2), "tbl2", ["g"],
         [Measure("count", "*")])
-    assert store.snapshot_incremental_refresh("by_g2", t2) == -1
-    write_iceberg(spark, extra, t2, mode="append")
+    refl2.base_version = s2
+    iceberg.write_iceberg(spark, extra, t2, mode="append")
     assert store.snapshot_incremental_refresh("by_g2", t2) == 50
     mat2 = store.load_materialization("by_g2")
     assert mat2.agg(F.sum("count_all")).collect()[0][0] == 200
@@ -449,9 +448,9 @@ def test_find_match_prefers_cheapest_covering(spark, tmp_path):
 
 def test_cdf_incremental_refresh_handles_deletes_and_updates(spark, tmp_path):
     """CDC-driven reflection maintenance: after DELETE/UPDATE/MERGE on a
-    CDF-enabled base table, folding signed change partials reproduces a
-    from-scratch aggregation exactly; emptied groups disappear; min/max
-    measures and count-less shapes are rejected."""
+    CDF-enabled Delta table, the lake fold of its signed change partials
+    reproduces a from-scratch aggregation exactly; emptied groups
+    disappear; min/max measures and count-less shapes are rejected."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -483,7 +482,7 @@ def test_cdf_incremental_refresh_handles_deletes_and_updates(spark, tmp_path):
         spark, t,
         spark.createDataFrame([(1, 1, 7.0), (900, 2, 50.0)],
                               "k long, g long, v double"), on=["k"])
-    n = store.cdf_incremental_refresh("agg", t)
+    n = store.snapshot_incremental_refresh("agg", t)
     assert n > 0
 
     got = {r["g"]: (float(r["sum_v"]), int(r["count_all"]))
@@ -495,7 +494,7 @@ def test_cdf_incremental_refresh_handles_deletes_and_updates(spark, tmp_path):
     assert 3 not in got  # emptied group dropped
 
     # idempotent when no new commits
-    assert store.cdf_incremental_refresh("agg", t) == 0
+    assert store.snapshot_incremental_refresh("agg", t) == 0
 
     # unset base_version must raise, not silently re-fold history from v0
     unset = store.create_aggregation_reflection(
@@ -503,7 +502,7 @@ def test_cdf_incremental_refresh_handles_deletes_and_updates(spark, tmp_path):
         [Measure("sum", "v"), Measure("count", "*")])
     assert unset.base_version is None
     with pytest.raises(ValueError, match="base_version"):
-        store.cdf_incremental_refresh("unset", t)
+        store.snapshot_incremental_refresh("unset", t)
 
     # contract errors
     bad = store.create_aggregation_reflection(
@@ -511,7 +510,7 @@ def test_cdf_incremental_refresh_handles_deletes_and_updates(spark, tmp_path):
                                                     Measure("count", "*")])
     bad.base_version = 0
     with pytest.raises(ValueError, match="min/max"):
-        store.cdf_incremental_refresh("mm", t)
+        store.snapshot_incremental_refresh("mm", t)
     # a COUNT partial is no longer omittable: creation ALWAYS adds the
     # implicit count(*) measure, so the signed CDF fold can elect
     # emptied groups on any reflection
@@ -520,11 +519,11 @@ def test_cdf_incremental_refresh_handles_deletes_and_updates(spark, tmp_path):
     assert any(m.kind == "count" and m.col == "*"
                for m in nocount.measures)
     nocount.base_version = 0
-    store.cdf_incremental_refresh("nc", t)  # folds cleanly
+    store.snapshot_incremental_refresh("nc", t)  # folds cleanly
 
 
 def test_changelog_incremental_refresh_iceberg(spark, tmp_path):
-    """Iceberg CDC maintenance: the signed fold over the changelog scan
+    """Iceberg CDC maintenance: the lake fold over the changelog scan
     reproduces a from-scratch aggregate after MOR and COW deletes —
     carryover delete+insert pairs from COW rewrites cancel exactly."""
     from pyspark.sql import functions as F
@@ -555,7 +554,7 @@ def test_changelog_incremental_refresh_iceberg(spark, tmp_path):
     delete_from_iceberg(spark, t, "g = 3", mode="merge-on-read")
     delete_from_iceberg(spark, t, "k = 0")  # COW rewrite with carryovers
 
-    n = store.changelog_incremental_refresh("agg", t)
+    n = store.snapshot_incremental_refresh("agg", t)
     assert n > 0
     got = {r["g"]: (float(r["sum_v"]), int(r["count_all"]))
            for r in store.load_materialization("agg").collect()}
@@ -564,7 +563,7 @@ def test_changelog_incremental_refresh_iceberg(spark, tmp_path):
                   F.sum("v").alias("s"), F.count("*").alias("c")).collect()}
     assert got == expect
     assert 3 not in got
-    assert store.changelog_incremental_refresh("agg", t) == 0
+    assert store.snapshot_incremental_refresh("agg", t) == 0
 
 
 def test_plan_tree_substitution_soundness(spark):
@@ -938,18 +937,20 @@ def test_cdf_refresh_requires_count_star(spark, tmp_path):
     import pytest as _pytest
 
     from dremio_oss_spark.plans import Measure, ReflectionStore
-    from dremio_oss_spark.plans.reflections import Reflection
+    from dremio_oss_spark.plans.reflections import (Reflection,
+                                                    unsignable_reason)
 
     store = ReflectionStore(spark, str(tmp_path / "refl"))
     bad = Reflection("b", "t", ("g",),
                      (Measure("sum", "v"), Measure("count", "v")),
                      str(tmp_path / "b"))
+    store._reflections["b"] = bad
     with _pytest.raises(ValueError, match="COUNT"):
-        store._check_signable(bad)
+        store.snapshot_incremental_refresh("b", str(tmp_path))
     good = Reflection("g", "t", ("g",),
                       (Measure("count", "*"), Measure("count", "v")),
                       str(tmp_path / "g"))
-    store._check_signable(good)  # count(*) present: fine
+    assert unsignable_reason(good.measures) is None  # count(*) present
 
 
 def test_reflection_auto_refresh_on_commit(spark, tmp_path):
@@ -1332,7 +1333,7 @@ def test_expression_measure_incremental_and_cdc(spark, tmp_path):
         measures=[Measure("sum", expr), Measure("count", "*")])
     refl.base_version = 0
     delete_from_delta(spark, t, "k >= 80")
-    assert store2.cdf_incremental_refresh("em2", t) > 0
+    assert store2.snapshot_incremental_refresh("em2", t) > 0
     df2, sub2 = store2.execute(
         AggQuery(table="t2", dims=("g",),
                  measures=(Measure("sum", expr),)), None)
@@ -2243,9 +2244,9 @@ def test_ndv_measure_sketch_lifecycle(spark, tmp_path):
     est = df_all.collect()[0][Measure("ndv", "u").name]
     assert abs(est - 20000) <= 20000 * 0.03
 
-    # the signed CDF fold must refuse ndv measures
+    # the signed lake fold must refuse ndv measures
     with _pytest.raises(ValueError, match="ndv"):
-        store._check_signable(refl)
+        store.snapshot_incremental_refresh(refl.name, str(tmp_path))
 
 
 def test_external_reflection_validation_and_restore(spark):
@@ -3329,35 +3330,36 @@ def test_auto_refresh_due_conf(spark):
 
 
 def test_snapshot_incremental_refresh_stamps(spark, tmp_path):
-    """A successful snapshot-diff incremental refresh must re-stamp
-    last_refresh_ms like the full-refresh and CDF paths do — otherwise
-    the reflection appears DUE/EXPIRED right after refreshing
-    (advisor-found r10)."""
+    """A successful lake fold must re-stamp last_refresh_ms like the
+    full-refresh path does — otherwise the reflection appears
+    DUE/EXPIRED right after refreshing (advisor-found r10)."""
     from pyspark.sql import functions as F
 
     from dremio_oss_spark.plans import Measure
     from dremio_oss_spark.plans.reflections import ReflectionStore
-    from dremio_oss_spark.sources.delta import write_delta
+    from dremio_oss_spark.sources.delta import (read_delta,
+                                                resolve_snapshot,
+                                                write_delta)
 
     store = ReflectionStore(spark, str(tmp_path / "refl"))
     t = str(tmp_path / "d")
     df = spark.range(20).select(
         (F.col("id") % 2).alias("g"),
         F.col("id").cast("double").alias("v"))
-    write_delta(spark, df, t)
-    store.create_aggregation_reflection(
-        "st_r", spark.createDataFrame([], df.schema), "st_tbl", ["g"],
+    write_delta(spark, df, t, enable_cdf=True)
+    refl = store.create_aggregation_reflection(
+        "st_r", read_delta(spark, t), "st_tbl", ["g"],
         [Measure("count", "*")])
-    store.snapshot_incremental_refresh("st_r", t)  # full build
-    refl = store._reflections["st_r"]
+    refl.base_version = resolve_snapshot(spark, t).version
     write_delta(spark, df, t, mode="append")
     refl.last_refresh_ms = 0  # pretend ancient
     assert store.snapshot_incremental_refresh("st_r", t) == 20
     assert refl.last_refresh_ms > 0, \
-        "merge branch must _stamp like the CDF path"
+        "merge branch must _stamp like the full-refresh path"
     # the zero-new fast path also counts as a successful refresh
     refl.last_refresh_ms = 0
     assert store.snapshot_incremental_refresh("st_r", t) == 0
+    assert refl.last_refresh_ms > 0
     store.drop("st_r")
 
 
